@@ -27,7 +27,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,6 +34,9 @@ from high_volume_market_data_pipeline_spark.similarity.knn import (
     IVFIndex,
     IVFPQIndex,
     PQIndex,
+    _assign_cells,
+    _corpus,
+    pq_encode,
 )
 from high_volume_market_data_pipeline_spark.sinks.history import (
     ConcurrentCommitError,
@@ -680,49 +682,6 @@ def load_ivf_pq_index(
     return IVFPQIndex(centroids, codebooks, coded)
 
 
-def _with_cell(df, centroids: "np.ndarray", vec_col: str, id_col: str):
-    """(id, cv, _nv, cell) for new vectors: L2-normalize, assign each to
-    its nearest stored centroid (same euclidean-on-unit-vectors rule the
-    k-means fit and the query-side probe use). One Arrow batch matmul;
-    the centroid matrix rides the task closure — model-scale, like the
-    codebooks."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    from high_volume_market_data_pipeline_spark.functions.vectors import (
-        as_double,
-    )
-    from high_volume_market_data_pipeline_spark.similarity.knn import (
-        _normalize_rows,
-    )
-
-    c2 = (centroids**2).sum(axis=1)
-
-    @pandas_udf("int")
-    def _assign(vs: pd.Series) -> pd.Series:
-        X = _normalize_rows(np.asarray(vs.tolist(), dtype=np.float64))
-        # argmin ‖x−c‖² = argmin ‖c‖² − 2x·c (‖x‖² is a per-row constant)
-        d = c2[None, :] - 2.0 * (X @ centroids.T)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    unit = pandas_udf(
-        lambda vs: pd.Series(
-            list(_normalize_rows(np.asarray(vs.tolist(), dtype=np.float64)))
-        ),
-        "array<double>",
-    )
-    base = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    )
-    return base.select(
-        "neighbor_id",
-        "cv",
-        unit(F.col("cv")).alias("_nv"),
-        _assign(F.col("cv")).alias("cell"),
-    )
-
-
 def append_to_ivf_index(
     spark: SparkSession,
     root: str,
@@ -737,9 +696,7 @@ def append_to_ivf_index(
     as append_to_pq_index. Cell balance degrades only if the data
     distribution drifts; re-train offline via build_ivf_index + save."""
     def derive(centroids, codebooks, coded):
-        new_rows = _with_cell(new_vectors, centroids, vec_col, id_col).select(
-            "neighbor_id", "cv", "cell"
-        )
+        new_rows = _assign_cells(_corpus(new_vectors, id_col, vec_col), centroids)
         if skip_existing_ids:
             new_rows = new_rows.join(
                 coded.select("neighbor_id"), "neighbor_id", "left_anti"
@@ -761,22 +718,10 @@ def append_to_ivf_pq_index(
     PQ-encode the CELL RESIDUAL with the stored codebooks (the exact
     encode rule build_ivf_pq_index applies), commit as a new paired
     version."""
-    from pyspark.sql import functions as F
-
-    from high_volume_market_data_pipeline_spark.similarity.knn import (
-        pq_encode,
-    )
 
     def derive(centroids, codebooks, coded):
-        assigned = _with_cell(new_vectors, centroids, vec_col, id_col)
-        cent_df = spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
-            "cell int, centroid array<double>",
-        )
-        resid = assigned.join(F.broadcast(cent_df), "cell").select(
-            "neighbor_id",
-            "cell",
-            F.zip_with("_nv", "centroid", lambda x, y: x - y).alias("resid"),
+        resid = _assign_cells(
+            _corpus(new_vectors, id_col, vec_col), centroids, residual=True
         )
         new_coded = pq_encode(
             resid, codebooks, vec_col="resid", normalize=False
@@ -822,22 +767,10 @@ def append_to_pq_index(
     distribution drifts from the training sample; a periodic full
     ``build_pq_index`` + save is the re-train, committed as just another
     version. Returns the new coded-table version."""
-    from high_volume_market_data_pipeline_spark.functions.vectors import (
-        as_double,
-    )
-    from high_volume_market_data_pipeline_spark.similarity.knn import (
-        pq_encode,
-    )
-    from pyspark.sql import functions as F
 
     def derive(centroids, codebooks, coded):
         new_coded = pq_encode(
-            new_vectors.select(
-                F.col(id_col).alias("neighbor_id"),
-                as_double(F.col(vec_col)).alias("cv"),
-            ),
-            codebooks,
-            vec_col="cv",
+            _corpus(new_vectors, id_col, vec_col), codebooks, vec_col="cv"
         ).select("neighbor_id", "pq_codes")
         if skip_existing_ids:
             new_coded = new_coded.join(

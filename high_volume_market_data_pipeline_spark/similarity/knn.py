@@ -1,17 +1,36 @@
-"""Approximate/exact nearest-neighbor search over an embedding column.
+"""Exact and approximate nearest-neighbor search over an embedding column.
 
-Two tiers (driver mandate):
-- ``brute_force_knn``: exact cosine top-k — broadcast the (small) query set
-  against the corpus, score every pair, per-query top-k via window. The
-  correctness baseline; at scale the corpus never shuffles (queries are the
-  broadcast side) and top-k prunes before any collect.
-- ``lsh_bucketed_knn``: random-hyperplane (sign-LSH) bucketing — corpus and
-  queries bucketed by sign-bit key; candidate scoring only within a bucket
-  (multi-probe: queries also probe 1-bit-flip neighbors to cut misses).
-  The 100 TB path: shuffle is keyed by bucket, quadratic work is per-bucket.
+Every search runs ONE pipeline (``_search``): collect the query batch on
+the driver (ids + row-normalized matrix, model-scale like the codebooks
+and centroids), let the family's CANDIDATE STAGE emit scored
+(query_id, neighbor_id, _score) rows, and rank the global top-k
+(``_rank_topk``). Candidate rows ship one query-id long, never a query
+vector: the query matrix rides the task closure of the shared scorers —
 
-Hyperplanes are derived deterministically from md5 (seeded), so results are
-reproducible run-to-run and testable without a stored model.
+- ``_scan_topr``: one Arrow scan over the index, scoring every query
+  against each batch and keeping only the batch's top-r per query;
+- ``_qid_score``: a per-row pandas UDF that looks each row's query up by
+  id (exact cosine via ``_exact_cosine``, or the IVF-PQ ADC score).
+
+The families differ only in their candidate stage:
+
+- ``brute_force_knn``: every corpus row (dense scan), or the SQL-exact
+  expression crossJoin whose cosines the oracle hashes;
+- ``lsh_bucketed_knn``: sign-LSH buckets, multi-probe, OR over tables;
+- ``ivf_knn``: the probed k-means cells (``_cell_candidates``);
+- ``pq_knn``: an ADC scan over PQ codes, then ``_rerank`` (shortlist →
+  exact cosine on full vectors);
+- ``ivf_pq_knn``: probed cells scored by residual ADC, then ``_rerank``.
+
+Index builds share the one Lloyd loop (``_lloyd``) and the one
+nearest-centroid assignment (``_assign_cells``, also used by the
+index_store appends so build and append place a vector identically).
+Unit vectors have one rule, numpy ``_normalize_rows``, on every fit,
+build, append and query path: the Spark-expression form measured no
+faster on the builds, and as the input of the assignment pandas UDF on
+the append path it does not plan at all (Spark 4.1 INTERNAL_ERROR).
+Hyperplanes are derived deterministically from md5 (seeded), so results
+are reproducible run-to-run and testable without a stored model.
 """
 
 from __future__ import annotations
@@ -41,40 +60,15 @@ _MAX_CLOSURE_QUERIES = 100_000
 _CLOSURE_BUDGET_BYTES = 128 << 20
 
 
-def _model_scoped_shuffle(df: DataFrame):
-    """Context manager: scope shuffle sizing (and AQE) to ``df``'s own
-    scan layout for the EAGER model-building regions (quantizer fits,
-    code-table checkpoints). An index build over a metadata-scale corpus
-    otherwise runs its handful of shuffles at the session's cores×3
-    partitions — with AQE additionally materializing every exchange as
-    its own Spark job — and the per-task/per-job fixed cost dwarfs the
-    model-sized data (same r13 finding as dedup/incremental and
-    dedup/clustering). A 100 TB corpus has input splits ≥ the session
-    conf, leaves both knobs untouched, and keeps AQE's skew handling.
-    Lazy SEARCH paths are unaffected: this only wraps code that
-    materializes inside the builder."""
-    from high_volume_market_data_pipeline_spark.operators.layout import (
-        data_scoped_shuffle,
-    )
-
-    return data_scoped_shuffle(df.sparkSession, df.rdd.getNumPartitions())
-
-
 def _build_vector_kernels():
     """The numpy helpers every executor-shipped kernel in this family
     calls, built as <locals> closures so cloudpickle ships their BODIES
-    into the UDF/mapInArrow closures (the NOTES cwd-portability rule: a
-    module-level def pickles by reference and Python workers — which
-    inherit the driver cwd — would have to re-import this repo package).
-    They may reference only numpy/pandas and closure constants."""
+    into the UDF, Arrow-scan and grouped-map closures (the NOTES
+    cwd-portability rule: a module-level def pickles by reference and
+    Python workers — which inherit the driver cwd — would have to
+    re-import this repo package). They may reference only numpy/pandas
+    and closure constants."""
     budget_default = _CLOSURE_BUDGET_BYTES
-
-    def _cosine_batch(qv: pd.Series, cv: pd.Series) -> pd.Series:
-        a = np.asarray(qv.tolist(), dtype=np.float64)
-        b = np.asarray(cv.tolist(), dtype=np.float64)
-        num = np.einsum("ij,ij->i", a, b)
-        den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-        return pd.Series(num / den)
 
     def _normalize_rows(X: np.ndarray) -> np.ndarray:
         n = np.linalg.norm(X, axis=1, keepdims=True)
@@ -129,22 +123,53 @@ def _build_vector_kernels():
             cs.append(S[qi][sel])
         return np.concatenate(qs), np.concatenate(ns), np.concatenate(cs)
 
-    return _cosine_batch, _normalize_rows, _query_chunks, _per_batch_topr
+    def _lloyd(X: np.ndarray, init: np.ndarray, iters: int) -> np.ndarray:
+        """Lloyd k-means from the caller's initial centers — the one loop
+        behind the IVF coarse quantizer (driver) and every PQ subspace
+        (executor). Cross-term distances: ‖x‖² is loop-invariant, so each
+        iteration is one (n, k) matrix — the naive (X[:,None]−cent)²
+        broadcast materializes (n, k, d). The clusters an assignment
+        leaves empty are reseeded farthest-first to DISTINCT points (a
+        stable argsort over each point's distance to its nearest
+        center), so two empty clusters never collapse onto one point."""
+        cent = init.copy()
+        x2 = (X**2).sum(axis=1)
+        for _ in range(iters):
+            d2 = x2[:, None] + (cent**2).sum(axis=1)[None, :] - 2.0 * (X @ cent.T)
+            assign = d2.argmin(axis=1)
+            empty = []
+            for ci in range(len(cent)):
+                members = X[assign == ci]
+                if len(members):
+                    cent[ci] = members.mean(axis=0)
+                else:
+                    empty.append(ci)
+            if empty:
+                far = np.argsort(-d2.min(axis=1), kind="stable")
+                cent[empty] = X[far[: len(empty)]]
+        return cent
+
+    return _normalize_rows, _query_chunks, _per_batch_topr, _lloyd
 
 
-_cosine_batch, _normalize_rows, _query_chunks, _per_batch_topr = (
-    _build_vector_kernels()
-)
+_normalize_rows, _query_chunks, _per_batch_topr, _lloyd = _build_vector_kernels()
+
+
+def _corpus(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The (neighbor_id, cv double[]) frame every index and scan reads."""
+    return df.select(
+        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
+    )
 
 
 def _query_matrix(q: DataFrame) -> tuple["np.ndarray", "np.ndarray"]:
     """Collect a (id, vector) query BATCH to the driver as (ids,
     row-normalized float64 matrix) — model-scale metadata, exactly like
     the ANN codebooks and k-means centroids the index builds already
-    collect. The payoff of the closure kernels below: a candidate row
-    ships ONE int64 query id instead of a 64-double query vector (the
-    crossJoin form measured ~4 GB of duplicated qv at the 200k×40 tier).
-    Guarded so nobody points it at a query TABLE.
+    collect. The payoff of the closure kernels: a candidate row ships ONE
+    int64 query id instead of a 64-double query vector (the crossJoin
+    form measured ~4 GB of duplicated qv at the 200k×40 tier). Guarded
+    so nobody points it at a query TABLE.
 
     Requires an INTEGRAL, UNIQUE id column: every closure path keys
     scores by int64 query id (``searchsorted`` lookups and int equality
@@ -176,22 +201,179 @@ def _query_matrix(q: DataFrame) -> tuple["np.ndarray", "np.ndarray"]:
     return qids, _normalize_rows(mat)
 
 
-def _rank_topk(cand: DataFrame, k: int, score_col: str = "_cos") -> DataFrame:
-    """Global (query_id, -score, neighbor_id) rank over a candidate frame
-    that is already per-batch pruned — rows entering the shuffle are
-    O(n_batches · nq · k), never corpus-sized."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(score_col), "neighbor_id"
-    )
+def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Global (query_id, -_score, neighbor_id) rank over a candidate frame
+    that is already pruned per batch or per probe — rows entering the
+    shuffle are O(candidates), never corpus × queries. Also the PQ
+    families' ADC shortlist cut (same tie rule)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("_score"), "neighbor_id")
     return (
         cand.withColumn("knn_rank", F.row_number().over(w))
         .filter(F.col("knn_rank") <= k)
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.col(score_col), 6).alias("cosine"),
+            F.round(F.col("_score"), 6).alias("cosine"),
             "knn_rank",
         )
+    )
+
+
+def _search(queries: DataFrame, k: int, id_col: str, vec_col: str, candidates):
+    """The one search pipeline: driver query batch → the family's
+    ``candidates(qids, Q)`` stage (scored (query_id, neighbor_id, _score)
+    rows) → global top-k. An empty batch returns the empty result
+    without planning the candidate stage."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    )
+    qids, Q = _query_matrix(q)
+    if len(qids) == 0:
+        return q.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, cosine double, knn_rank int"
+        )
+    return _rank_topk(candidates(qids, Q), k)
+
+
+def _scan_topr(
+    index: DataFrame,
+    qids: "np.ndarray",
+    r: int,
+    batch_scorer,
+    live_matrices: int = 1,
+    budget_bytes: int | None = None,
+) -> DataFrame:
+    """The scan scorer: one Arrow pass over ``index`` (neighbor_id +
+    payload columns) that scores EVERY query against each Arrow batch and
+    emits only the batch's top-``r`` per query, so nothing corpus ×
+    queries is materialized or shuffled. ``batch_scorer(pdf)`` returns
+    ``score(s, e)`` → the (e−s, B) score matrix of query rows s:e.
+    Queries are chunked so each in-flight matrix stays under the byte
+    budget; ``live_matrices`` is how many (chunk, B) matrices the
+    scorer holds live at once."""
+    import pyarrow as pa
+
+    def scan(batches):
+        for b in batches:
+            pdf = b.to_pandas()
+            if not len(pdf):
+                continue
+            ids = pdf["neighbor_id"].to_numpy().astype(np.int64)
+            score = batch_scorer(pdf)
+            rows = live_matrices * len(ids)
+            for s, e in _query_chunks(len(qids), rows, budget_bytes):
+                S = score(s, e)
+                S[qids[s:e, None] == ids[None, :]] = -np.inf  # self-pairs
+                qa, na, ca = _per_batch_topr(qids[s:e], ids, S, r)
+                yield pa.RecordBatch.from_pydict(
+                    {"query_id": qa, "neighbor_id": na, "_score": ca}
+                )
+
+    # ids declared NOT NULL (the scan never emits a null): otherwise a
+    # join above infers null-guard filters on one use of a search frame
+    # and not on another (result vs its recall twin), and the two copies
+    # stop sharing one reused exchange — two extra Spark jobs per query.
+    return index.mapInArrow(
+        scan, "query_id long not null, neighbor_id long not null, _score double"
+    )
+
+
+def _qid_score(qids: "np.ndarray", score, *cols) -> F.Column:
+    """The row scorer: a pandas UDF over (query_id, *cols) that maps each
+    row's query id to its row in the driver batch (one searchsorted per
+    Arrow batch) and returns ``score(idx, *col_series)``."""
+    from pyspark.sql.functions import pandas_udf
+
+    order = np.argsort(qids)
+    sorted_ids = qids[order]
+
+    @pandas_udf("double")
+    def _by_qid(qid: pd.Series, *vals: pd.Series) -> pd.Series:
+        idx = order[np.searchsorted(sorted_ids, qid.to_numpy().astype(np.int64))]
+        return pd.Series(score(idx, *vals))
+
+    return _by_qid(F.col("query_id"), *cols)
+
+
+def _exact_cosine(qids: "np.ndarray", Q: "np.ndarray") -> F.Column:
+    """Exact cosine of each row's ``cv`` against its query (float64 sum
+    order differs from the expression fold only in last-ulp digits —
+    ranking-safe; only brute_force_knn's default path is hash-gated)."""
+    return _qid_score(
+        qids,
+        lambda idx, cv: np.einsum(
+            "bd,bd->b",
+            Q[idx],
+            _normalize_rows(np.asarray(cv.tolist(), dtype=np.float64)),
+        ),
+        F.col("cv"),
+    )
+
+
+def _probe_join(
+    index: DataFrame, probes: DataFrame, keys, score: F.Column
+) -> DataFrame:
+    """Candidate pairs of a probe-table family: the index rows sharing a
+    key with the driver-built (broadcast) probe rows, self-pairs dropped,
+    scored by ``score``."""
+    return (
+        index.join(F.broadcast(probes), keys)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", score.alias("_score"))
+    )
+
+
+def _cell_candidates(
+    coded: DataFrame,
+    qids: "np.ndarray",
+    Q: "np.ndarray",
+    centroids: "np.ndarray",
+    n_probe: int,
+    score: F.Column,
+) -> DataFrame:
+    """The IVF families' candidate stage: probe each query's ``n_probe``
+    nearest cells on the DRIVER (deterministic (d2, cell) order), then
+    join the cell-keyed index to the probe rows. A vector lives in
+    exactly ONE cell, so the (query, neighbor) pairs are unique.
+
+    The probed-cell set is known driver-side, so it is also pushed as a
+    STATIC IN-filter ahead of the join: on a persisted index (coded table
+    hive-partitioned by cell — save_ivf_index) this becomes a
+    PartitionFilter at the scan and unprobed cells are never read — the
+    storage regime where growing n_cells genuinely pays (see ivf_knn's
+    sizing rule). Logically redundant with the equi-join; harmless on an
+    in-RAM localCheckpoint. (Spark's dynamic partition pruning does NOT
+    fire here: the probe side is a local relation with no selective scan
+    predicate, so we prune statically.)"""
+    d2 = ((Q[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
+    cells_ix = np.arange(centroids.shape[0])
+    probe_rows = [
+        (int(qids[qi]), int(cell))
+        for qi in range(len(qids))
+        for cell in np.lexsort((cells_ix, d2[qi]))[:n_probe]
+    ]
+    probed = coded.sparkSession.createDataFrame(
+        probe_rows, "query_id long, cell int"
+    )
+    coded = coded.filter(F.col("cell").isin(sorted({c for _, c in probe_rows})))
+    return _probe_join(coded, probed, "cell", score)
+
+
+def _rerank(
+    adc: DataFrame,
+    refine: int,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    qids: "np.ndarray",
+    Q: "np.ndarray",
+) -> DataFrame:
+    """The PQ families' shared tail: cut each query's ADC candidates to a
+    ``refine`` shortlist, then re-score it exactly against the full
+    vectors — only refine·|queries| full-vector rows are read."""
+    shortlist = _rank_topk(adc, refine).select("query_id", "neighbor_id")
+    return shortlist.join(_corpus(corpus, id_col, vec_col), "neighbor_id").select(
+        "query_id", "neighbor_id", _exact_cosine(qids, Q).alias("_score")
     )
 
 
@@ -207,61 +389,40 @@ def brute_force_knn(
     """Exact top-k: (query_id, neighbor_id, cosine, knn_rank), excluding
     self-matches; rank ties broken by neighbor id (deterministic).
 
-    ``vectorized=True`` runs a mapInArrow scan over the CORPUS ONLY with
-    the normalized query matrix as a task closure: one (nq, B) matmul per
-    Arrow batch, per-batch top-k, then a global rank over nq·k·n_batches
-    rows. Nothing corpus×queries is ever materialized — the crossJoin
-    form shipped every candidate row with its 64-double query vector
-    (~4 GB duplicated at 200k×40) and shuffled the full score table into
-    the rank window. Much faster, but numpy's float64 sum order differs
-    from the expression fold in last-ulp digits, so use it ONLY where
-    cosine VALUES are not driver-hashed (the recall twins inside the ANN
-    queries); the default expression scorer stays bit-identical to the
-    SQL oracle."""
+    ``vectorized=True`` makes the candidate stage a dense ``_scan_topr``
+    over the CORPUS ONLY with the normalized query matrix as a task
+    closure: one (nq, B) matmul per Arrow batch, per-batch top-k, then a
+    global rank over nq·k·n_batches rows. Nothing corpus×queries is ever
+    materialized — the crossJoin form shipped every candidate row with
+    its 64-double query vector (~4 GB duplicated at 200k×40) and shuffled
+    the full score table into the rank window. Much faster, but numpy's
+    float64 sum order differs from the expression fold in last-ulp
+    digits, so use it ONLY where cosine VALUES are not driver-hashed (the
+    recall twins inside the ANN queries); the default expression scorer
+    stays bit-identical to the SQL oracle."""
+    c = _corpus(corpus, id_col, vec_col)
+    if vectorized:
+
+        def candidates(qids, Q):
+            def dense(pdf):
+                Xt = _normalize_rows(
+                    np.asarray(pdf["cv"].tolist(), dtype=np.float64)
+                ).T
+                return lambda s, e: Q[s:e] @ Xt  # cosine of normalized rows
+
+            return _scan_topr(c, qids, k, dense, budget_bytes=budget_bytes)
+
+        return _search(queries, k, id_col, vec_col, candidates)
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    if vectorized:
-        import pyarrow as pa
-
-        qids, Q = _query_matrix(q)
-        if len(qids) == 0:
-            return c.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine double, knn_rank int"
-            )
-
-        def scan(batches):
-            for b in batches:
-                pdf = b.to_pandas()
-                if not len(pdf):
-                    continue
-                X = np.asarray(pdf["cv"].tolist(), dtype=np.float64)
-                ids = pdf["neighbor_id"].to_numpy().astype(np.int64)
-                Xn = _normalize_rows(X).T
-                # chunk queries so the (chunk, B) score matrix stays
-                # under the byte budget regardless of admitted nq
-                for s, e in _query_chunks(len(qids), len(ids), budget_bytes):
-                    S = Q[s:e] @ Xn  # cosine of normalized rows
-                    S[qids[s:e, None] == ids[None, :]] = -np.inf  # self
-                    qa, na, ca = _per_batch_topr(qids[s:e], ids, S, k)
-                    yield pa.RecordBatch.from_pydict(
-                        {"query_id": qa, "neighbor_id": na, "_cos": ca}
-                    )
-
-        cand = c.mapInArrow(
-            scan, "query_id long, neighbor_id long, _cos double"
-        )
-        return _rank_topk(cand, k)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("_cos"),
+            cosine_similarity(F.col("qv"), F.col("cv")).alias("_score"),
         )
     )
     return _rank_topk(scored, k)
@@ -421,15 +582,8 @@ def lsh_bucketed_knn(
     n_tables · (n_planes+1) · n/2^n_planes — raise n_planes as the corpus
     grows (keeping per-bucket lists small) and spend the savings on tables.
     Each table is one bucket-keyed equi-join; only (query_id, neighbor_id,
-    cos) triples cross the dedup shuffle, never the vectors.
+    score) triples cross the dedup shuffle, never the vectors.
     """
-    c0 = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    )
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
     if n_planes is None:
         # default = the scale-safe rule, not a constant: one plane per
         # corpus doubling past 1024 rows/bucket. At 200k vectors the old
@@ -484,80 +638,43 @@ def lsh_bucketed_knn(
         buckets = bits.reshape(len(a), tables, n_planes) @ weights
         return pd.Series(buckets.astype(np.int32).tolist())
 
-    c = c0.withColumn("_bkts", _all_buckets(F.col("cv")))
-    q = q0.withColumn("_bkts", _all_buckets(F.col("qv")))
-    c_keys = [
-        F.struct(F.lit(t).alias("tbl"), F.col("_bkts")[t].alias("bucket"))
-        for t in range(tables)
-    ]
-    c = c.select(
-        "neighbor_id", "cv", F.explode(F.array(*c_keys)).alias("_tb")
-    ).select("neighbor_id", "cv", "_tb.tbl", "_tb.bucket")
-    q_keys = []
-    for t in range(tables):
-        base = F.col("_bkts")[t]
-        q_keys.append(F.struct(F.lit(t).alias("tbl"), base.alias("bucket")))
-        if multi_probe:
-            q_keys += [
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    base.bitwiseXOR(F.lit(1 << p)).alias("bucket"),
-                )
-                for p in range(n_planes)
-            ]
-    q = q.select(
-        "query_id", F.explode(F.array(*q_keys)).alias("_tb")
-    ).select("query_id", "_tb.tbl", "_tb.bucket")
-    # Candidate scoring is the hot loop (candidates ≈ tables·probes·
-    # queries·bucket_size pairs), so it is Arrow-vectorized like the
-    # bucketing AND closure-keyed: the probe rows carry only (query_id,
-    # tbl, bucket) — the query MATRIX rides the task closure and each
-    # batch scores via one gather+einsum. Shipping qv on every candidate
-    # row was the old cost (64 doubles × candidates). Float64 sum order
-    # differs from the expression fold only in last-ulp digits —
-    # irrelevant to ranking and to this query's rows-only/recall grading;
-    # brute_force_knn keeps the expression scorer because its cosine
-    # VALUES are driver-hashed.
-    qids, Qn = _query_matrix(q0.select("query_id", "qv"))
-    if len(qids) == 0:
-        return c0.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, knn_rank int"
+    def candidates(qids, Q):
+        c = _corpus(corpus, id_col, vec_col).withColumn(
+            "_bkts", _all_buckets(F.col("cv"))
         )
-    qorder = np.argsort(qids)
-    qids_sorted = qids[qorder]
+        c_keys = [
+            F.struct(F.lit(t).alias("tbl"), F.col("_bkts")[t].alias("bucket"))
+            for t in range(tables)
+        ]
+        c = c.select(
+            "neighbor_id", "cv", F.explode(F.array(*c_keys)).alias("_tb")
+        ).select("neighbor_id", "cv", "_tb.tbl", "_tb.bucket")
+        q_keys = []
+        for t in range(tables):
+            base = F.col("_bkts")[t]
+            q_keys.append(F.struct(F.lit(t).alias("tbl"), base.alias("bucket")))
+            if multi_probe:
+                q_keys += [
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        base.bitwiseXOR(F.lit(1 << p)).alias("bucket"),
+                    )
+                    for p in range(n_planes)
+                ]
+        q = queries.select(
+            F.col(id_col).alias("query_id"),
+            _all_buckets(as_double(F.col(vec_col))).alias("_bkts"),
+        ).select("query_id", F.explode(F.array(*q_keys)).alias("_tb"))
+        q = q.select("query_id", "_tb.tbl", "_tb.bucket")
+        # Score BEFORE deduping: a duplicate candidate costs one extra
+        # vectorized dot map-side, but deduping first would push the
+        # vectors themselves through the dropDuplicates shuffle — only
+        # (query_id, neighbor_id, _score) triples may cross it.
+        return _probe_join(
+            c, q, ["tbl", "bucket"], _exact_cosine(qids, Q)
+        ).dropDuplicates(["query_id", "neighbor_id"])
 
-    @pandas_udf("double")
-    def _cos_by_qid(qid_s: pd.Series, cv_s: pd.Series) -> pd.Series:
-        qarr = qid_s.to_numpy().astype(np.int64)
-        idx = qorder[np.searchsorted(qids_sorted, qarr)]
-        X = _normalize_rows(np.asarray(cv_s.tolist(), dtype=np.float64))
-        return pd.Series(np.einsum("bd,bd->b", Qn[idx], X))
-
-    # Score BEFORE deduping: a duplicate candidate costs one extra
-    # vectorized dot map-side, but deduping first would push the vectors
-    # themselves through the dropDuplicates shuffle — only (query_id,
-    # neighbor_id, _cos) triples may cross it.
-    scored = (
-        c.join(F.broadcast(q), ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos_by_qid(F.col("query_id"), F.col("cv")).alias("_cos"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), "neighbor_id")
-    return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            "knn_rank",
-        )
-    )
+    return _search(queries, k, id_col, vec_col, candidates)
 
 
 class IVFIndex(NamedTuple):
@@ -612,90 +729,121 @@ def _fit_sample(
     return df
 
 
-def _lloyd_fit(
-    X: "np.ndarray", k: int, seed: int, iters: int
+def _fit_coarse(
+    c: DataFrame,
+    n_cells: int,
+    seed: int,
+    fit_fraction: float | None,
+    points_per_cell: int | None,
+    n_rows: int | None = None,
 ) -> "np.ndarray":
-    """Deterministic seeded Lloyd k-means on a DRIVER-resident sample —
-    the coarse-quantizer fit (r13; was a Spark-ML KMeans fit whose
-    kmeans|| init + per-iteration jobs cost ~1.2 s per index build for a
-    few-thousand-row sample that fits in one numpy matrix). Same
-    arithmetic as fit_pq_codebooks' per-subspace ``_fit_one``: seeded
-    choice init over rows sorted by id (the caller sorts), cross-term
-    distance form, empty clusters reseeded to the farthest point. Cell
-    quality needs only rough balance (recall is governed by n_probe, not
-    centroid polish) — the recall-floor tests pin the contract.
+    """The coarse quantizer of both IVF builds, fitted on the DRIVER: the
+    ``_fit_sample`` of the (neighbor_id, cv) corpus ``c`` is collected as
+    an id-ordered, row-normalized matrix (ordered so the matrix — hence
+    the seeded init — is independent of Spark's collect order), seeded by
+    k-means++ (``_kmeanspp``) and refined by 15 iterations of the shared
+    ``_lloyd`` loop. Cells only need rough balance (FAISS uses 10-25
+    iterations on samples; recall is governed by n_probe, not centroid
+    polish) — the recall-floor tests pin the contract. Measured against
+    exact top-5 on the random sf0.01 embeddings (ANN's worst case):
+    k-means++ @ 15 iterations reads recall 0.725 (full fit) / 0.65
+    (0.3-sampled fit) vs 0.50-0.60 for uniform or farthest-first inits —
+    the sweep is recorded in OPTIMIZATION_r13.md §2.
 
-    Init is seeded k-means++ (D²-weighted over the id-sorted sample —
-    deterministic given the same sample and seed; the same family
-    kmeans|| approximates). Measured against exact top-5 on the random
-    sf0.01 embeddings (ANN's worst case): k-means++ @ 15 iterations
-    reads recall 0.725 (full fit) / 0.65 (0.3-sampled fit) vs 0.50-0.60
-    for uniform or farthest-first inits — the sweep is recorded in
-    OPTIMIZATION_r13.md §2."""
-    rng = np.random.RandomState(seed)
-    k_eff = min(k, len(X))
-    x2 = (X**2).sum(axis=1)
-    first = int(rng.randint(len(X)))
-    chosen = [first]
-    d2min = np.maximum(x2 + x2[first] - 2.0 * (X @ X[first]), 0.0)
-    for _ in range(1, k_eff):
-        tot = d2min.sum()
-        if tot <= 0:  # all remaining points coincide with a center
-            nxt = int(rng.randint(len(X)))
-        else:
-            nxt = int(rng.choice(len(X), p=d2min / tot))
-        chosen.append(nxt)
-        d2 = np.maximum(x2 + x2[nxt] - 2.0 * (X @ X[nxt]), 0.0)
-        d2min = np.minimum(d2min, d2)
-    cent = X[chosen].copy()
-    for _ in range(iters):
-        d2 = x2[:, None] + (cent**2).sum(axis=1)[None, :] - 2.0 * (X @ cent.T)
-        assign = d2.argmin(axis=1)
-        for ci in range(k_eff):
-            members = X[assign == ci]
-            if len(members):
-                cent[ci] = members.mean(axis=0)
-            else:  # reseed an empty cluster to the farthest point
-                cent[ci] = X[d2.min(axis=1).argmax()]
-    return cent
+    The collect is bounded like the query batch: at most
+    ``_MAX_CLOSURE_QUERIES`` + 1 rows ever reach the driver (one top-n
+    job — each task keeps only its lowest ids), and a sample over the
+    bound raises instead of pulling a corpus-sized ``fit_fraction`` or
+    ``points_per_cell=None`` fit into driver memory. An empty sample
+    (tiny corpus) falls back to the full corpus, mirroring _fit_sample's
+    guard without its probe job."""
+    sample = _fit_sample(
+        c,
+        "neighbor_id",
+        fit_fraction,
+        points_per_cell * n_cells if points_per_cell is not None else None,
+        n_rows=n_rows,
+        probe_empty=False,
+    )
 
+    def take(df):
+        rows = (
+            df.select("neighbor_id", "cv")
+            .orderBy("neighbor_id")
+            .limit(_MAX_CLOSURE_QUERIES + 1)
+            .collect()
+        )
+        if len(rows) > _MAX_CLOSURE_QUERIES:
+            raise ValueError(
+                f"quantizer fit sample exceeds the driver-collect bound "
+                f"({_MAX_CLOSURE_QUERIES} rows); lower fit_fraction or "
+                "points_per_cell"
+            )
+        return rows
 
-def _collect_fit_matrix(
-    sample: DataFrame, full: DataFrame, id_col: str, vec_col: str
-) -> "np.ndarray":
-    """Collect a fit sample to the driver as a row-sorted float64 matrix
-    (sorted by id so the matrix — hence the seeded init — is independent
-    of Spark's nondeterministic collect order). Falls back to the full
-    input when the sample is empty (tiny corpus), mirroring
-    _fit_sample's guard without its probe job."""
-    rows = sample.select(id_col, vec_col).collect()
-    if not rows and sample is not full:
-        rows = full.select(id_col, vec_col).collect()
+    rows = take(sample)
+    if not rows and sample is not c:
+        rows = take(c)
     if not rows:
         raise ValueError("cannot fit a coarse quantizer on an empty corpus")
-    rows.sort(key=lambda r: r[0])
-    return np.asarray([r[1] for r in rows], dtype=np.float64)
+    X = _normalize_rows(np.asarray([r[1] for r in rows], dtype=np.float64))
+    return _lloyd(X, X[_kmeanspp(X, min(n_cells, len(X)), seed)], iters=15)
+
+
+def _kmeanspp(X: "np.ndarray", k: int, seed: int) -> list[int]:
+    """k DISTINCT row indices of ``X``, D²-weighted (k-means++) after a
+    seeded uniform first pick. A picked row's weight is pinned to exactly
+    zero (the cross-term distance to itself can round above zero), and
+    when every remaining row coincides with a center (weights sum to
+    zero) the pick is uniform over the rows not yet picked."""
+    rng = np.random.RandomState(seed)
+    x2 = (X**2).sum(axis=1)
+    chosen = [int(rng.randint(len(X)))]
+    d2min = np.full(len(X), np.inf)
+    while True:
+        last = chosen[-1]
+        d2min = np.minimum(
+            d2min, np.maximum(x2 + x2[last] - 2.0 * (X @ X[last]), 0.0)
+        )
+        d2min[chosen] = 0.0
+        if len(chosen) == k:
+            return chosen
+        tot = d2min.sum()
+        if tot <= 0:
+            free = np.setdiff1d(np.arange(len(X)), chosen)
+            chosen.append(int(free[rng.randint(len(free))]))
+        else:
+            chosen.append(int(rng.choice(len(X), p=d2min / tot)))
 
 
 def _assign_cells(
-    df: DataFrame, centroids: "np.ndarray", nv_col: str = "_nv"
+    df: DataFrame, centroids: "np.ndarray", residual: bool = False
 ) -> DataFrame:
-    """Append ``cell`` = index of the nearest centroid to the (already
-    L2-normalized) ``nv_col`` — one Arrow batch matmul per task, the
-    same argmin arithmetic as index_store._with_cell's append-side
-    assignment so build and append place identical vectors identically."""
+    """Append ``cell`` = index of the centroid nearest to the unit vector
+    of ``cv`` — the one assignment index builds AND index_store appends
+    run, so an appended vector lands where a build would put it. With
+    ``residual``, also append ``resid`` = unit vector − its centroid (what
+    IVF-PQ quantizes). One Arrow batch matmul per task; the centroid
+    matrix rides the closure (model-scale)."""
     from pyspark.sql.functions import pandas_udf
 
     c2 = (centroids**2).sum(axis=1)
 
-    @pandas_udf("int")
-    def _cell(vs: pd.Series) -> pd.Series:
-        X = np.asarray(vs.tolist(), dtype=np.float64)
+    @pandas_udf("cell int, resid array<double>")
+    def _nearest(vs: pd.Series) -> pd.DataFrame:
+        X = _normalize_rows(np.asarray(vs.tolist(), dtype=np.float64))
         # argmin ‖x−c‖² = argmin ‖c‖² − 2x·c (‖x‖² is a per-row constant)
-        d = c2[None, :] - 2.0 * (X @ centroids.T)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        cell = (c2[None, :] - 2.0 * (X @ centroids.T)).argmin(axis=1)
+        return pd.DataFrame(
+            {
+                "cell": cell.astype(np.int32),
+                "resid": list(X - centroids[cell]) if residual else None,
+            }
+        )
 
-    return df.withColumn("cell", _cell(F.col(nv_col)))
+    out = df.withColumn("_near", _nearest(F.col("cv")))
+    extra = ["_near.cell", "_near.resid"] if residual else ["_near.cell"]
+    return out.select(*df.columns, *extra)
 
 
 def build_ivf_index(
@@ -719,46 +867,16 @@ def build_ivf_index(
     the full fit). Every vector is still ASSIGNED; only the Lloyd
     iterations read the sample.
 
-    r13: the fit is the driver-side deterministic numpy Lloyd
-    (``_lloyd_fit``) over the collected sample — the sample is
-    driver-sized BY DESIGN (points_per_cell · n_cells ≈ thousands of
-    rows, the same scale ivf_knn already collects for query probing), so
-    the former Spark-ML KMeans fit (kmeans|| init + one job per Lloyd
-    iteration, ~1.2 s per build) was pure orchestration. Assignment of
-    the FULL corpus stays distributed (one Arrow matmul per batch,
-    identical arithmetic to the append path's _with_cell)."""
-    from high_volume_market_data_pipeline_spark.functions.expr import bind_once
-
-    def norm(v):
-        # bind the norm scalar once per row — inlined, the aggregate would
-        # re-run per vector ELEMENT (O(d²) per vector; see functions/expr.py)
-        length = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, y: a + y * y))
-        return bind_once(
-            length, lambda n: F.transform(v, lambda x: x / n)
-        )
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("_nv", norm(F.col("cv")))
-    # Persist the featurized corpus: the sample collect reads it once and
-    # the inverted-list assignment once more — uncached, each pass would
-    # recompute the normalization expressions.
-    c = c.persist()
-    # Coarse quantizer: a handful of Lloyd iterations is enough — cells
-    # only need to be roughly balanced, not converged (FAISS uses 10-25 on
-    # samples; recall is governed by n_probe, not centroid polish).
-    fit_input = _fit_sample(
-        c,
-        "neighbor_id",
-        fit_fraction,
-        points_per_cell * n_cells if points_per_cell is not None else None,
-        probe_empty=False,
-    )
-    X = _collect_fit_matrix(fit_input, c, "neighbor_id", "_nv")
-    cent_np = _lloyd_fit(X, n_cells, seed, iters=15)
-    inverted = _assign_cells(c, cent_np).select("neighbor_id", "cv", "cell")
-    inverted = inverted.localCheckpoint(eager=True)
+    The fit is the driver-side deterministic numpy k-means
+    (``_fit_coarse``) over the collected sample — driver-sized BY DESIGN
+    (points_per_cell · n_cells ≈ thousands of rows, and bounded).
+    Assignment of the FULL corpus stays distributed (``_assign_cells``,
+    the same kernel the append path runs)."""
+    # Persisted: the sample collect reads the corpus once and the
+    # inverted-list assignment once more.
+    c = _corpus(corpus, id_col, vec_col).persist()
+    cent_np = _fit_coarse(c, n_cells, seed, fit_fraction, points_per_cell)
+    inverted = _assign_cells(c, cent_np).localCheckpoint(eager=True)
     c.unpersist()
     return IVFIndex(cent_np, inverted)
 
@@ -798,14 +916,10 @@ def ivf_knn(
     keep n_cells small. ``tools/bench_ann_tier.py`` keeps the √n preset
     as a labeled anti-pattern row next to the default.
 
-    The search side probes cells on the DRIVER over the collected query
-    batch (centroids are model-scale), so candidate rows carry one
-    query-id long, never a duplicated query vector; scoring is the
-    closure-matrix cosine (one gather per Arrow batch). Pass a prebuilt
-    ``index`` (build_ivf_index) to amortize the k-means fit across query
-    batches."""
-    from pyspark.sql.functions import pandas_udf
-
+    The candidate stage is ``_cell_candidates`` (driver-side cell probe,
+    static cell pruning) scored by the exact closure cosine. Pass a
+    prebuilt ``index`` (build_ivf_index) to amortize the k-means fit
+    across query batches."""
     if index is None:
         index = build_ivf_index(
             corpus,
@@ -815,60 +929,13 @@ def ivf_knn(
             seed=seed,
             fit_fraction=fit_fraction,
         )
-    cent_np, inverted = index.centroids, index.coded
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("qv"),
-    )
-    qids, Qn = _query_matrix(q)
-    if len(qids) == 0:
-        return inverted.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, knn_rank int"
+    def candidates(qids, Q):
+        return _cell_candidates(
+            index.coded, qids, Q, index.centroids, n_probe, _exact_cosine(qids, Q)
         )
-    spark = inverted.sparkSession
-    d2 = ((Qn[:, None, :] - cent_np[None, :, :]) ** 2).sum(axis=2)
-    cells_ix = np.arange(cent_np.shape[0])
-    probe_rows = [
-        (int(qids[qi]), int(cell))
-        for qi in range(len(qids))
-        for cell in np.lexsort((cells_ix, d2[qi]))[:n_probe]
-    ]
-    probed = spark.createDataFrame(probe_rows, "query_id long, cell int")
-    # The probed-cell set is known DRIVER-SIDE, so push it as a STATIC
-    # IN-filter ahead of the join: on a persisted index (coded table
-    # hive-partitioned by cell — save_ivf_index) this becomes a
-    # PartitionFilter at the scan and unprobed cells are never read —
-    # the storage regime where growing n_cells genuinely pays (see the
-    # sizing rule above). Logically redundant with the equi-join;
-    # harmless on an in-RAM localCheckpoint. (Spark's dynamic partition
-    # pruning does NOT fire here: the probe side is a local relation
-    # with no selective scan predicate, so we prune statically.)
-    inverted = inverted.filter(
-        F.col("cell").isin(sorted({c for _, c in probe_rows}))
-    )
 
-    qorder = np.argsort(qids)
-    qids_sorted = qids[qorder]
-
-    @pandas_udf("double")
-    def _cos_by_qid(qid_s: pd.Series, cv_s: pd.Series) -> pd.Series:
-        qarr = qid_s.to_numpy().astype(np.int64)
-        idx = qorder[np.searchsorted(qids_sorted, qarr)]
-        X = _normalize_rows(np.asarray(cv_s.tolist(), dtype=np.float64))
-        return pd.Series(np.einsum("bd,bd->b", Qn[idx], X))
-
-    scored = (
-        inverted.join(F.broadcast(probed), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos_by_qid(F.col("query_id"), F.col("cv")).alias("_cos"),
-        )
-        # a vector lives in exactly ONE cell ⇒ (query, neighbor) unique
-    )
-    return _rank_topk(scored, k)
+    return _search(queries, k, id_col, vec_col, candidates)
 
 
 def fit_pq_codebooks(
@@ -907,28 +974,34 @@ def fit_pq_codebooks(
     collect to the driver (ivf_knn collects its k-means centers the same
     way). The fit itself is distributed: one posexplode fans every sampled
     vector into its m subvectors, and ``applyInPandas`` over the subspace
-    key runs the m independent Lloyd loops in parallel — one shuffle of
-    the (sampled) training set, no per-iteration Spark round trips.
+    key runs the m independent Lloyd loops (``_lloyd``) in parallel — one
+    shuffle of the (sampled) training set, no per-iteration Spark round
+    trips.
 
     Determinism: the per-group frame is sorted by vector id before a
-    seeded ``RandomState`` picks the initial centers, because Spark gives
-    no row-order guarantee inside a group; empty clusters reseed to the
-    farthest point (deterministic argmax). ``fit_fraction`` trains on an
-    md5-bucket sample (FAISS-style ~thousands of vectors per subspace
-    suffice) while encoding still covers every vector."""
+    seeded ``RandomState`` picks the initial centers (uniform, without
+    replacement), because Spark gives no row-order guarantee inside a
+    group. ``fit_fraction`` trains on an md5-bucket sample (FAISS-style
+    ~thousands of vectors per subspace suffice) while encoding still
+    covers every vector."""
     if dim % m_subspaces:
         raise ValueError(f"dim {dim} not divisible by m={m_subspaces}")
     dsub = dim // m_subspaces
-    from high_volume_market_data_pipeline_spark.functions.expr import bind_once
-    from high_volume_market_data_pipeline_spark.functions.vectors import norm
+    from pyspark.sql.functions import pandas_udf
 
-    raw = as_double(F.col(vec_col))
+    from high_volume_market_data_pipeline_spark.operators.layout import (
+        data_scoped_shuffle,
+    )
+
+    v = as_double(F.col(vec_col))
     if normalize:
-        v = bind_once(  # bind the norm scalar once (see ivf_knn's norm())
-            norm(raw), lambda n: F.transform(raw, lambda x: x / n)
-        )
-    else:
-        v = raw
+
+        @pandas_udf("array<double>")
+        def _unit(vs: pd.Series) -> pd.Series:
+            X = np.asarray(vs.tolist(), dtype=np.float64)
+            return pd.Series(list(_normalize_rows(X)))
+
+        v = _unit(v)
     c = corpus.select(F.col(id_col).alias("_id"), v.alias("v"))
     c = _fit_sample(
         c,
@@ -951,21 +1024,7 @@ def fit_pq_codebooks(
         )
         rng = np.random.RandomState(seed + sub_id)
         k = min(n_codes, len(X))
-        cent = X[rng.choice(len(X), size=k, replace=False)].copy()
-        # ‖x‖² is loop-invariant; per iteration only ‖c‖² − 2X·Cᵀ moves.
-        # The cross-term form keeps the working set at one (n, k) matrix —
-        # the naive (X[:,None]−cent)² broadcast materializes (n, k, d),
-        # d× larger, and WAS the dominant build cost before sampling.
-        x2 = (X**2).sum(axis=1)
-        for _ in range(iters):
-            d2 = x2[:, None] + (cent**2).sum(axis=1)[None, :] - 2.0 * (X @ cent.T)
-            assign = d2.argmin(axis=1)
-            for ci in range(k):
-                members = X[assign == ci]
-                if len(members):
-                    cent[ci] = members.mean(axis=0)
-                else:  # reseed an empty cluster to the farthest point
-                    cent[ci] = X[d2.min(axis=1).argmax()]
+        cent = _lloyd(X, X[rng.choice(len(X), size=k, replace=False)], iters)
         return pd.DataFrame(
             {
                 "sub_id": sub_id,
@@ -980,10 +1039,11 @@ def fit_pq_codebooks(
     cb = np.zeros((m_subspaces, n_codes, dsub), dtype=np.float64)
     filled = np.zeros(m_subspaces, dtype=np.int64)
     # The fit's ONE shuffle moves a sampled, model-scale training set
-    # into m groups — scope its sizing to the corpus' scan layout
-    # (_model_scoped_shuffle) so a small corpus doesn't pay cores×3
-    # partitions (mostly empty) for m=8 groups of rows.
-    with _model_scoped_shuffle(corpus):
+    # into m groups — scope its sizing (and AQE) to the corpus' own scan
+    # layout so a small corpus doesn't pay cores×3 partitions (mostly
+    # empty) for m=8 groups of rows; a 100 TB corpus has input splits ≥
+    # the session conf and keeps both knobs untouched.
+    with data_scoped_shuffle(corpus.sparkSession, corpus.rdd.getNumPartitions()):
         rows = fitted.collect()  # m·k rows: the model, not data
     for row in rows:
         cb[row["sub_id"], row["code"]] = row["centroid"]
@@ -1068,15 +1128,10 @@ def build_pq_index(
         seed=seed,
         fit_fraction=fit_fraction,
     )
-    coded = pq_encode(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("cv"),
-        ),
-        cb,
-        vec_col="cv",
-    ).select("neighbor_id", "pq_codes")
-    return PQIndex(cb, coded.localCheckpoint(eager=True))
+    coded = pq_encode(_corpus(corpus, id_col, vec_col), cb, vec_col="cv")
+    return PQIndex(
+        cb, coded.select("neighbor_id", "pq_codes").localCheckpoint(eager=True)
+    )
 
 
 def pq_knn(
@@ -1101,20 +1156,17 @@ def pq_knn(
     Scale story: the scan that scores 100 TB of embeddings reads the code
     column (m ints, dictionary-encoded) instead of the float array — 32×
     less I/O — and the exact re-rank reads full vectors for ``refine``
-    rows per query via an id equi-join. The scan is the production ADC
-    kernel: the per-query lookup table LUT[q,j,code] = q_subⱼ·c[j,code]
-    is one einsum over the driver-collected query batch, shipped to tasks
-    as a closure; each Arrow batch then scores ALL queries with one
-    gather+sum and emits only its top ``refine`` — no corpus×queries
-    materialization, no per-row Python, and the rank shuffle sees
-    n_batches·nq·refine rows, not |corpus|·nq. Pass a prebuilt ``index``
-    (build_pq_index) to amortize fit+encode across query batches — the
-    default fits per call for API compatibility. Approximate ⇒ register
-    rows-only, with recall asserted in tests like the other families."""
-    import pyarrow as pa
-
-    from pyspark.sql.functions import pandas_udf
-
+    rows per query via an id equi-join (``_rerank``). The candidate stage
+    is the production ADC kernel on the shared ``_scan_topr``: the
+    per-query lookup table LUT[q,j,code] = q_subⱼ·c[j,code] is one einsum
+    over the driver-collected query batch, shipped to tasks as a closure;
+    each Arrow batch then scores ALL queries with one gather+sum and
+    emits only its top ``refine`` — no corpus×queries materialization, no
+    per-row Python, and the rank shuffle sees n_batches·nq·refine rows,
+    not |corpus|·nq. Pass a prebuilt ``index`` (build_pq_index) to
+    amortize fit+encode across query batches — the default fits per call
+    for API compatibility. Approximate ⇒ register rows-only, with recall
+    asserted in tests like the other families."""
     if index is None:
         index = build_pq_index(
             corpus,
@@ -1126,65 +1178,33 @@ def pq_knn(
             seed=seed,
             fit_fraction=fit_fraction,
         )
-    cb, coded = index.codebooks, index.coded
+    cb = index.codebooks
     m, _, dsub = cb.shape
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    qids, Q = _query_matrix(q)
-    if len(qids) == 0:
-        return coded.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, knn_rank int"
-        )
-    # (nq, m, n_codes): the classic ADC LUT, one per query
-    lut = np.einsum("qjd,jkd->qjk", Q.reshape(len(Q), m, dsub), cb)
+    def candidates(qids, Q):
+        # (nq, m, n_codes): the classic ADC LUT, one per query
+        lut = np.einsum("qjd,jkd->qjk", Q.reshape(len(Q), m, dsub), cb)
 
-    def scan(batches):
-        for b in batches:
-            pdf = b.to_pandas()
-            if not len(pdf):
-                continue
+        def adc(pdf):
             C = np.asarray(pdf["pq_codes"].tolist(), dtype=np.int64)  # (B,m)
-            ids = pdf["neighbor_id"].to_numpy().astype(np.int64)
-            # Chunked like the brute-force scan, but the PQ gather is
-            # accumulated PER SUBSPACE: a single fancy-index
-            # lut[s:e, arange(m), C] would materialize a (chunk, B, m)
-            # intermediate — m× the stated budget — before its .sum.
-            # Per-subspace, at most TWO (chunk, B) matrices are ever live
-            # (the S accumulator + one gather temp), so chunks are sized
-            # against 2·B rows to keep the true peak at the budget.
-            for s, e in _query_chunks(len(qids), 2 * len(ids)):
-                # S[q,b] = Σⱼ LUT[q, j, C[b,j]]
+
+            def score(s, e):
+                # S[q,b] = Σⱼ LUT[q, j, C[b,j]], accumulated PER SUBSPACE:
+                # one fancy-index lut[s:e, arange(m), C] would materialize a
+                # (chunk, B, m) intermediate — m× the budget — before its
+                # sum. At most TWO (chunk, B) matrices are ever live (the
+                # accumulator + one gather temp), hence live_matrices=2.
                 S = lut[s:e, 0, C[:, 0]]  # fancy index ⇒ already a fresh array
                 for j in range(1, m):
                     S += lut[s:e, j, C[:, j]]
-                S[qids[s:e, None] == ids[None, :]] = -np.inf  # self-pairs
-                qa, na, ca = _per_batch_topr(qids[s:e], ids, S, refine)
-                yield pa.RecordBatch.from_pydict(
-                    {"query_id": qa, "neighbor_id": na, "_adc": ca}
-                )
+                return S
 
-    cand = coded.mapInArrow(
-        scan, "query_id long, neighbor_id long, _adc double"
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("_adc"), "neighbor_id")
-    shortlist = (
-        cand.withColumn("_r", F.row_number().over(w_adc))
-        .filter(F.col("_r") <= refine)
-        .select("query_id", "neighbor_id")
-    )
-    # exact re-rank: full vectors only for refine·|queries| rows
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    exact_cos = pandas_udf(_cosine_batch, "double")(F.col("qv"), F.col("cv"))
-    rescored = (
-        shortlist.join(full, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", exact_cos.alias("_cos"))
-    )
-    return _rank_topk(rescored, k)
+            return score
+
+        shortlist = _scan_topr(index.coded, qids, refine, adc, live_matrices=2)
+        return _rerank(shortlist, refine, corpus, id_col, vec_col, qids, Q)
+
+    return _search(queries, k, id_col, vec_col, candidates)
 
 
 class IVFPQIndex(NamedTuple):
@@ -1218,56 +1238,25 @@ def build_ivf_pq_index(
     coarse quantizer here; fit_pq_codebooks applies its own
     points_per_code target to the residual codebooks).
 
-    r13: the coarse fit is the driver-side deterministic numpy Lloyd on
-    the collected (driver-sized by design) sample — see build_ivf_index;
-    corpus-scale work (assignment, residuals, encode) stays distributed."""
-    from high_volume_market_data_pipeline_spark.functions.expr import bind_once
-    from high_volume_market_data_pipeline_spark.functions.vectors import norm
-
-    spark = corpus.sparkSession
-
-    def unit(col: F.Column) -> F.Column:
-        return bind_once(
-            norm(col), lambda n: F.transform(col, lambda x: x / n)
-        )
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        unit(as_double(F.col(vec_col))).alias("_nv"),
-    ).persist()
+    The coarse fit is the driver-side deterministic numpy Lloyd on the
+    collected (driver-sized by design) sample — see build_ivf_index;
+    corpus-scale work (assignment, residuals, encode) stays distributed
+    in ``_assign_cells`` and ``pq_encode``, the kernels the append path
+    runs too."""
+    c = _corpus(corpus, id_col, vec_col).persist()
     # One corpus count serves BOTH sampled fits: the residual frame below
-    # is a 1:1 transform of c, so its row count is c's — pre-r12 each
-    # _fit_sample ran its own count job, and the residual one re-paid the
-    # assignment+join to count rows it could know for free (guide §1.2).
+    # is a 1:1 transform of c, so its row count is c's.
     n_corpus = c.count() if fit_fraction is None else None
-    fit_input = _fit_sample(
-        c,
-        "neighbor_id",
-        fit_fraction,
-        points_per_cell * n_cells if points_per_cell is not None else None,
-        n_rows=n_corpus,
-        probe_empty=False,
+    cent_np = _fit_coarse(
+        c, n_cells, seed, fit_fraction, points_per_cell, n_rows=n_corpus
     )
-    X = _collect_fit_matrix(fit_input, c, "neighbor_id", "_nv")
-    cent_np = _lloyd_fit(X, n_cells, seed, iters=15)
-    inverted = _assign_cells(c, cent_np).select("neighbor_id", "_nv", "cell")
-
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(cent_np)],
-        "cell int, centroid array<double>",
-    )
-
     # residual encode: PQ codebooks fitted on (x − centroid), not raw x.
     # Persisted: three consumers (the codebook fit's sample scan, its
     # Lloyd input, and the final encode) would otherwise each re-run the
-    # cell assignment + centroid join + subtraction.
+    # cell assignment.
     resid = (
-        inverted.join(F.broadcast(cent_df), "cell")
-        .select(
-            "neighbor_id",
-            "cell",
-            F.zip_with("_nv", "centroid", lambda x, y: x - y).alias("resid"),
-        )
+        _assign_cells(c, cent_np, residual=True)
+        .select("neighbor_id", "cell", "resid")
         .persist()
     )
     cb = fit_pq_codebooks(
@@ -1315,19 +1304,14 @@ def ivf_pq_knn(
     At 100 TB: candidate I/O = (probed cells' share of the corpus) ×
     (m code-ints per row) — both factors independently tunable
     (n_cells ~ √n, code budget m·log2(n_codes) bits) — then ``refine``
-    full-vector reads per query for the exact re-rank. The search side is
-    all model-scale driver math plus ONE equi-join: cell probing runs on
-    the driver over the collected query batch (centroids are n_cells
-    rows — the same metadata the build already collects), candidate rows
-    ship (query_id, cell, q·centroid scalar, codes) — never a query or
-    centroid VECTOR — and the ADC score is a per-batch LUT gather:
+    full-vector reads per query for the exact re-rank. The candidate
+    stage is IVF's ``_cell_candidates`` with the ADC score as the row
+    scorer: candidate rows ship (query_id, cell, codes) — never a query
+    or centroid VECTOR — and the score is a per-batch LUT gather plus the
+    closure's q·centroid table:
     cos(q, centroid + decode(codes)) = q·centroid + Σⱼ LUT[q,j,codeⱼ].
     Pass a prebuilt ``index`` (build_ivf_pq_index) to amortize the fit
     across query batches."""
-    import pyarrow as pa  # noqa: F401  (parity with pq_knn's arrow path)
-
-    from pyspark.sql.functions import pandas_udf
-
     if index is None:
         index = build_ivf_pq_index(
             corpus,
@@ -1340,81 +1324,25 @@ def ivf_pq_knn(
             seed=seed,
             fit_fraction=fit_fraction,
         )
-    cent_np, cb, coded = index.centroids, index.codebooks, index.coded
+    cent_np, cb = index.centroids, index.codebooks
     m, _, dsub = cb.shape
+    subspaces = np.arange(m)[None, :]
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    qids, Qn = _query_matrix(q)
-    if len(qids) == 0:
-        return coded.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, knn_rank int"
-        )
-    spark = coded.sparkSession
-    # driver-side cell probe: (nq, n_cells) distances, deterministic
-    # (d2, cell) order — same rule the old crossJoin window used
-    d2 = ((Qn[:, None, :] - cent_np[None, :, :]) ** 2).sum(axis=2)
-    qdotc = Qn @ cent_np.T
-    probe_rows = []
-    cells_ix = np.arange(cent_np.shape[0])
-    for qi in range(len(qids)):
-        for cell in np.lexsort((cells_ix, d2[qi]))[:n_probe]:
-            probe_rows.append(
-                (int(qids[qi]), int(cell), float(qdotc[qi, cell]))
-            )
-    probed = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, _qdotc double"
-    )
-    # static probed-cell pruning — see ivf_knn: a PartitionFilter on the
-    # persisted cell-partitioned code table, a no-op filter in RAM
-    coded = coded.filter(
-        F.col("cell").isin(sorted({c for _, c, _ in probe_rows}))
-    )
+    def candidates(qids, Q):
+        # per-query residual LUT + q·centroid table (model-scale closures)
+        lut = np.einsum("qjd,jkd->qjk", Q.reshape(len(Q), m, dsub), cb)
+        qdotc = Q @ cent_np.T
 
-    # per-query residual LUT, shipped as a task closure (model-scale)
-    lut = np.einsum("qjd,jkd->qjk", Qn.reshape(len(Qn), m, dsub), cb)
-    qorder = np.argsort(qids)
-    qids_sorted = qids[qorder]
+        def adc(idx, cell, codes):
+            C = np.asarray(codes.tolist(), dtype=np.int64)  # (B, m)
+            S = lut[idx[:, None], subspaces, C].sum(axis=1)
+            return S + qdotc[idx, cell.to_numpy()]
 
-    @pandas_udf("double")
-    def _adc(qid_s: pd.Series, qdotc_s: pd.Series, codes: pd.Series) -> pd.Series:
-        qarr = qid_s.to_numpy().astype(np.int64)
-        idx = qorder[np.searchsorted(qids_sorted, qarr)]
-        C = np.asarray(codes.tolist(), dtype=np.int64)  # (B, m)
-        qd = qdotc_s.to_numpy().astype(np.float64)
-        S = lut[idx[:, None], np.arange(m)[None, :], C].sum(axis=1) + qd
-        return pd.Series(S)
+        score = _qid_score(qids, adc, F.col("cell"), F.col("pq_codes"))
+        shortlist = _cell_candidates(index.coded, qids, Q, cent_np, n_probe, score)
+        return _rerank(shortlist, refine, corpus, id_col, vec_col, qids, Q)
 
-    cand = (
-        coded.join(F.broadcast(probed), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc(F.col("query_id"), F.col("_qdotc"), F.col("pq_codes")).alias(
-                "_adc"
-            ),
-        )
-        # no dropDuplicates: a vector lives in exactly ONE cell, so the
-        # (query, neighbor) pairs from the probed-cell join are unique
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("_adc"), "neighbor_id")
-    shortlist = (
-        cand.withColumn("_r", F.row_number().over(w_adc))
-        .filter(F.col("_r") <= refine)
-        .select("query_id", "neighbor_id")
-    )
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    exact_cos = pandas_udf(_cosine_batch, "double")(F.col("qv"), F.col("cv"))
-    rescored = (
-        shortlist.join(full, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", exact_cos.alias("_cos"))
-    )
-    return _rank_topk(rescored, k)
+    return _search(queries, k, id_col, vec_col, candidates)
 
 
 def with_recall_at_k(ann: DataFrame, exact: DataFrame) -> DataFrame:

@@ -4,6 +4,9 @@ quality on the planted duplicates, simhash hamming locality."""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
 from pyspark.sql import functions as F
 
 from high_volume_market_data_pipeline_spark.catalog import load_table
@@ -926,3 +929,59 @@ def test_blocked_ngram_jaccard_fused_matches_two_phase(spark):
         .collect()
     )
     assert fused == two_phase and len(fused) > 0
+
+
+def test_lloyd_reseeds_each_empty_cluster_to_a_distinct_point():
+    """Numpy-only contract of the shared Lloyd loop: when one assignment
+    leaves SEVERAL clusters empty, each is reseeded to a different point,
+    farthest-first from its nearest center (reseeding all of them to the
+    single farthest point collapses them into duplicate centers that the
+    next iteration cannot separate)."""
+    from high_volume_market_data_pipeline_spark.similarity.knn import _lloyd
+
+    X = np.array([[0.0, 0.0], [0.1, 0.0], [5.0, 0.0], [10.0, 0.0], [11.0, 0.0]])
+    # centers 1 and 2 are far from every point: both empty after round 1
+    init = np.array([[0.0, 0.0], [100.0, 0.0], [200.0, 0.0], [10.5, 0.0]])
+    cent = _lloyd(X, init, iters=1)
+    assert len(np.unique(cent, axis=0)) == len(cent)
+    # farthest (x=5, d²=25) then next-farthest (x=10 — ties with x=11 at
+    # d²=0.25 resolve to the lower index)
+    np.testing.assert_array_equal(cent[1], X[2])
+    np.testing.assert_array_equal(cent[2], X[3])
+    np.testing.assert_array_equal(init[1], [100.0, 0.0])  # input untouched
+
+
+def test_kmeanspp_never_picks_an_index_twice():
+    """k-means++ init returns k DISTINCT rows, including when duplicate
+    points drive every remaining D² weight to zero (the uniform fallback
+    must draw from the rows not yet picked), and is seed-deterministic."""
+    from high_volume_market_data_pipeline_spark.similarity.knn import _kmeanspp
+
+    X = np.array([[0.0, 0.0]] * 3 + [[1.0, 0.0]] * 3)
+    for seed in range(20):
+        for k in (3, 5, 6):
+            picks = _kmeanspp(X, k, seed)
+            assert len(picks) == k and len(set(picks)) == k, (seed, picks)
+    assert _kmeanspp(X, 5, 7) == _kmeanspp(X, 5, 7)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda emb, knn: knn.build_ivf_index(emb, fit_fraction=0.9),
+        lambda emb, knn: knn.build_ivf_index(emb, points_per_cell=None),
+        lambda emb, knn: knn.build_ivf_pq_index(emb, points_per_cell=None),
+    ],
+    ids=["ivf_fit_fraction", "ivf_full_fit", "ivf_pq_full_fit"],
+)
+def test_quantizer_fit_collect_is_bounded(spark, monkeypatch, build):
+    """The coarse-quantizer fit collects its sample to the driver; a
+    sample larger than the driver-collect bound (here: the whole corpus
+    via fit_fraction=0.9 or points_per_cell=None, against a bound shrunk
+    to 10 rows) must raise instead of pulling the corpus to the driver."""
+    from high_volume_market_data_pipeline_spark.similarity import knn
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    monkeypatch.setattr(knn, "_MAX_CLOSURE_QUERIES", 10)
+    with pytest.raises(ValueError, match="driver-collect bound"):
+        build(emb, knn)

@@ -331,14 +331,19 @@ def test_ivf_index_append_assigns_stored_centroids(spark, tmp_path):
     # replay converges
     assert append_to_ivf_index(spark, root, rest) == 2
     assert load_ivf_index(spark, root).coded.count() == n_total
+    # build/append identity: re-appending the BUILD vectors (id skip off)
+    # must place every one in exactly the cell the build gave it
+    append_to_ivf_index(spark, root, first, skip_existing_ids=False)
+    _assert_reappend_matches_build(load_ivf_index(spark, root).coded, first, "cell")
 
 
 def test_ivf_pq_index_append_residual_encode(spark, tmp_path):
     """IVF-PQ add(): appended vectors are residual-encoded with the
-    STORED codebooks against their assigned stored centroid — the code a
-    fresh append produces for a vector must EQUAL the code a full build
-    would give it under the same model (encode is deterministic given
-    (centroids, codebooks))."""
+    STORED codebooks against their assigned stored centroid — the
+    (cell, code) a fresh append produces for a vector must EQUAL what the
+    build gave it under the same model (build and append run the same
+    assignment + encode kernels); asserted per id by re-appending the
+    build vectors."""
     from high_volume_market_data_pipeline_spark.similarity import (
         append_to_ivf_pq_index,
         build_ivf_pq_index,
@@ -370,6 +375,24 @@ def test_ivf_pq_index_append_residual_encode(spark, tmp_path):
         index=new,
     )
     assert out.count() > 0
+    append_to_ivf_pq_index(spark, root, first, skip_existing_ids=False)
+    _assert_reappend_matches_build(
+        load_ivf_pq_index(spark, root).coded, first, "cell", "pq_codes"
+    )
+
+
+def _assert_reappend_matches_build(coded, build_vectors, *cols):
+    """Every build vector now has two rows — its build row and its
+    re-appended row — and they carry identical ``cols``."""
+    ids = build_vectors.select(build_vectors["vec_id"].alias("neighbor_id"))
+    by_id: dict = {}
+    for r in coded.join(ids, "neighbor_id").collect():
+        by_id.setdefault(r["neighbor_id"], []).append(
+            tuple(tuple(r[c]) if isinstance(r[c], list) else r[c] for c in cols)
+        )
+    assert len(by_id) == build_vectors.count()
+    for nid, got in by_id.items():
+        assert len(got) == 2 and got[0] == got[1], (nid, got)
 
 
 def test_head_load_pins_to_newest_paired_snapshot(spark, tmp_path):

@@ -7,6 +7,8 @@ shuffle, loses pushdown, or drops a broadcast fails CI — not production.
 
 from __future__ import annotations
 
+import json
+import os
 import re
 
 import pytest
@@ -340,3 +342,39 @@ def test_runtime_bloom_filter_prunes_selective_join(spark):
     assert pruned_count == orders.join(
         cust, orders.o_custkey == cust.c_custkey
     ).count()
+
+
+# Spark job counts are exact and repeatable for a fixed plan, so they gate
+# orchestration regressions that a wall-clock bench only blurs. Budgets are
+# the counts tools/job_probe.py measured before the ANN search pipeline was
+# unified, in this suite's session shape (8 shuffle partitions:
+# SPARK_GRAFT_CPUS=2 SPARK_GRAFT_SF_DIR=<sf0.001> python tools/job_probe.py
+# plans/job_budget/knn_tier1.json <queries>); the counts read the same at
+# sf0.01.
+_JOB_BUDGET = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "plans", "job_budget", "knn_tier1.json",
+)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_lsh_bucketed",
+        "knn_ivf_cells",
+        "knn_pq_adc",
+        "knn_ivf_pq",
+        "knn_pq_persisted",
+    ],
+)
+def test_knn_job_count_within_budget(spark, name):
+    with open(_JOB_BUDGET) as fh:
+        budget = max(json.load(fh)["queries"][name]["jobs"])
+
+    def n_jobs():
+        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+
+    j0 = n_jobs()
+    QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    jobs = n_jobs() - j0
+    assert jobs <= budget, f"{name}: {jobs} Spark jobs, budget {budget}"
