@@ -282,10 +282,11 @@ class TableStreamReader(DataSourceStreamReader):
         #   _cursor   — newest offset this runner has planned or committed
         #   _probe    — newest offset latestOffset has RETURNED (keeps the
         #               window monotonic across triggers)
-        #   _floor    — highest batch START the engine has handed to
-        #               partitions(); everything at or below it is known
-        #               emitted, so a replayed range never re-emits those
-        #               versions within this runner's lifetime
+        #   _floor    — highest START of a non-empty range the engine has
+        #               handed to partitions(); everything at or below it
+        #               is known emitted, so a replayed range never
+        #               re-emits those versions within this runner's
+        #               lifetime
         #   _revealed — highest offset the ENGINE has revealed (via
         #               initialOffset / partitions / commit, or the
         #               admission_dir file persisted by a prior runner).
@@ -550,9 +551,9 @@ class TableStreamReader(DataSourceStreamReader):
         self, start: dict, end: dict
     ) -> Sequence[TableFilesPartition]:
         v_start, v_end = int(start["version"]), int(end["version"])
-        # rate-limit bookkeeping: the engine only hands out ranges whose
-        # start is committed, so start is a safe emitted-floor and end a
-        # safe admission cursor even when this batch is a restart replay
+        # rate-limit bookkeeping: the engine only hands out logged
+        # offsets, so end is a safe admission cursor even when this batch
+        # is a restart replay (the emitted-floor is tracked below)
         self._cursor = max(self._cursor, v_start, v_end)
         self._reveal(max(v_start, v_end))
         if self.admission_dir:
@@ -560,7 +561,13 @@ class TableStreamReader(DataSourceStreamReader):
             # so a restart's admission seed is never below the commit log
             self._persist_high_water(max(v_start, v_end))
         lo = max(v_start, self._floor)
-        self._floor = max(self._floor, v_start)
+        if v_end > v_start:
+            # Only a non-empty range proves its start committed. A restart
+            # whose last logged batch never planned first probes the
+            # degenerate range (end, end), then replays (start, end);
+            # raising the floor to that probe's start would plan the
+            # replay empty and drop its versions for good.
+            self._floor = max(self._floor, v_start)
         ms = self._manifest_map(min_version=max(0, lo))
         out: list[TableFilesPartition] = []
         for v in range(lo + 1, v_end + 1):

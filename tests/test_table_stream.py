@@ -626,6 +626,41 @@ def test_reader_lifecycle_soak_mixed_commits_and_restarts(spark, tmp_path):
     assert len(emitted) == len(set(emitted))  # exactly once, no dupes
 
 
+def test_restart_probe_range_does_not_drop_the_replay(spark, tmp_path):
+    """A query stopped after logging batch N's offset but before planning
+    it restarts with the call sequence partitions(end, end) then the
+    replay partitions(start, end). The degenerate probe must not raise
+    the emitted-floor: the replay still emits version N exactly once."""
+    from high_volume_market_data_pipeline_spark.sources.table_datasource import (
+        TableStreamReader,
+    )
+
+    t = VersionedParquetTable(str(tmp_path / "probe"))
+    t.write(spark.createDataFrame([(0, "d0")], "id long, s string"))
+    for i in range(1, 7):
+        t.append(spark.createDataFrame([(i, f"d{i}")], "id long, s string"))
+
+    def emit(reader, start, end):
+        return [
+            i
+            for p in reader.partitions({"version": start}, {"version": end})
+            for batch in reader.read(p)
+            for i in batch.column(0).to_pylist()
+        ]
+
+    adm = str(tmp_path / "adm")
+    first = TableStreamReader(
+        {"root": t.root, "max_versions_per_batch": "1", "admission_dir": adm}
+    )
+    assert emit(first, 4, 5) == [5]
+    # restart: the logged-but-unplanned batch (5, 6] is probed, then replayed
+    restarted = TableStreamReader(
+        {"root": t.root, "max_versions_per_batch": "1", "admission_dir": adm}
+    )
+    assert emit(restarted, 6, 6) == []
+    assert emit(restarted, 5, 6) == [6]
+
+
 def _run_bounded(
     spark, root, out, ckpt, opts, stop_rows, max_batches=None, timeout=120
 ):
