@@ -16,7 +16,11 @@ Differences from the reference, on purpose:
   collect of the partition set, K2 note in sinks/writers.py);
 - the maintenance step (compaction + clustering) is parquet-native
   (sinks/maintenance.py) since Delta is optional;
-- every stage returns its DataFrame so tests can assert intermediate state.
+- every stage returns its DataFrame so tests can assert intermediate state;
+- silver is not pinned in memory: the reference cached it to collect its
+  partition set (main_pipeline.py:278-281), which this plan never needs,
+  and Z-order and gold both re-read silver from disk, so a cache would
+  only recompute the dedup pipeline to fill blocks nobody reads.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from high_volume_market_data_pipeline_spark.operators.aggregates import grouped_agg
 from high_volume_market_data_pipeline_spark.operators.dedup import dedup_keep_latest
@@ -158,6 +163,18 @@ def _gold_stats(silver: DataFrame, top_k: int) -> DataFrame:
     ).orderBy("partition_date")
 
 
+def _export_report(
+    spark: SparkSession, paths: MedallionPaths, schema: StructType
+) -> None:
+    """CSV report of the WHOLE gold table, sorted by date. The re-read
+    takes the schema the gold frame already has, so no footer job runs to
+    infer it; the sort + bounded take is a single job (write_single_csv)."""
+    write_single_csv(
+        spark.read.schema(schema).parquet(paths.gold).orderBy("partition_date"),
+        paths.report_csv,
+    )
+
+
 def run_gold(
     spark: SparkSession, paths: MedallionPaths, top_k: int = 10
 ) -> DataFrame:
@@ -182,7 +199,7 @@ def run_gold(
     compact_output(gold).write.mode("overwrite").partitionBy(
         "partition_date"
     ).parquet(paths.gold)
-    write_single_csv(spark.read.parquet(paths.gold).orderBy("partition_date"), paths.report_csv)
+    _export_report(spark, paths, gold.schema)
     return gold
 
 
@@ -212,10 +229,7 @@ def run_gold_incremental(
     write_partition_scoped_overwrite(
         compact_output(gold), paths.gold, "partition_date"
     )
-    write_single_csv(
-        spark.read.parquet(paths.gold).orderBy("partition_date"),
-        paths.report_csv,
-    )
+    _export_report(spark, paths, gold.schema)
     return gold
 
 
@@ -236,9 +250,7 @@ def run_medallion(
     timings["bronze"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    silver = run_silver(spark, paths, bronze_df=bronze)
-    # cache barrier (L3): pin silver before maintenance/gold re-derivation
-    silver.cache().count()
+    run_silver(spark, paths, bronze_df=bronze)
     timings["silver"] = time.perf_counter() - t0
 
     if optimize_silver:
@@ -257,5 +269,4 @@ def run_medallion(
     t0 = time.perf_counter()
     run_gold(spark, paths)
     timings["gold"] = time.perf_counter() - t0
-    silver.unpersist()
     return timings

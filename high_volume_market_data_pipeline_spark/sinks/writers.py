@@ -57,14 +57,14 @@ def write_single_csv(
     materializes on the driver. Both are final-report paths — a single
     file is inherently single-writer and only sane for small outputs.
 
-    The size probe uses ``limit(n+1).count()`` so the full input is
-    computed at most once: the probe stops scanning after n+1 rows instead
-    of materializing (and then recomputing) the whole frame."""
-    small = (
-        df.limit(via_pandas_max_rows + 1).count() <= via_pandas_max_rows
-    )
-    if small:
-        df.toPandas().to_csv(path, index=False)
+    One bounded take, ``limit(n+1).toPandas()``, both sizes the input and
+    collects it: at most n+1 rows reach the driver, and on a sorted input
+    it plans as a single top-n job (TakeOrderedAndProject), with no range
+    sample for the sort. Only when it comes back with more than n rows is
+    the input computed again, by the K5 write."""
+    head = df.limit(via_pandas_max_rows + 1).toPandas()
+    if len(head) <= via_pandas_max_rows:
+        head.to_csv(path, index=False)
         return
     tmp = path + "_tmpdir"
     df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)

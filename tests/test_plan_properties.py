@@ -14,7 +14,7 @@ import re
 import pytest
 
 from high_volume_market_data_pipeline_spark.queries import QUERIES
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_job_mark
 
 
 def _plan(spark, name: str) -> str:
@@ -351,10 +351,15 @@ def test_runtime_bloom_filter_prunes_selective_join(spark):
 # SPARK_GRAFT_CPUS=2 SPARK_GRAFT_SF_DIR=<sf0.001> python tools/job_probe.py
 # plans/job_budget/knn_tier1.json <queries>); the counts read the same at
 # sf0.01.
-_JOB_BUDGET = os.path.join(
+_JOB_BUDGETS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans", "job_budget", "knn_tier1.json",
+    "plans", "job_budget",
 )
+
+
+def _budget(name: str) -> dict:
+    with open(os.path.join(_JOB_BUDGETS, name)) as fh:
+        return json.load(fh)
 
 
 @pytest.mark.parametrize(
@@ -368,13 +373,33 @@ _JOB_BUDGET = os.path.join(
     ],
 )
 def test_knn_job_count_within_budget(spark, name):
-    with open(_JOB_BUDGET) as fh:
-        budget = max(json.load(fh)["queries"][name]["jobs"])
+    budget = max(_budget("knn_tier1.json")["queries"][name]["jobs"])
 
-    def n_jobs():
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
-    j0 = n_jobs()
+    j0 = spark_job_mark(spark)
     QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    jobs = n_jobs() - j0
+    jobs = spark_job_mark(spark) - j0
     assert jobs <= budget, f"{name}: {jobs} Spark jobs, budget {budget}"
+
+
+def test_medallion_job_count_within_budget(spark, tmp_path):
+    """One small backfill (bronze, silver merge, Z-order, gold, CSV) runs
+    no more Spark jobs than plans/job_budget/medallion_tier1.json allows:
+    no silver cache pin, no gold schema inference, a one-job CSV take."""
+    from pyspark.sql import functions as F
+
+    from high_volume_market_data_pipeline_spark.plans.medallion import (
+        run_medallion,
+    )
+    from high_volume_market_data_pipeline_spark.sources.generator import (
+        generate_market_data,
+    )
+
+    budget = _budget("medallion_tier1.json")["jobs"]
+    source = generate_market_data(spark, n_coins=20, days=2, seed=1)
+    j0 = spark_job_mark(spark)
+    run_medallion(
+        spark, source, str(tmp_path / "lake"),
+        ingestion_time=F.to_timestamp(F.lit("2024-06-01 00:00:00")),
+    )
+    jobs = spark_job_mark(spark) - j0
+    assert jobs <= budget, f"run_medallion: {jobs} Spark jobs, budget {budget}"

@@ -32,8 +32,15 @@ DEFAULT_TARGETS = [
 ]
 
 
-def _n_jobs(spark) -> int:
-    return spark._jsparkSession.sparkContext().statusStore().jobsList(None).size()
+def _job_mark(spark) -> int:
+    """Id of the newest recorded Spark job (-1 before any); counts are mark
+    deltas, as in tests/conftest.py ``spark_job_mark``. The status store's
+    size stops growing once ``spark.ui.retainedJobs`` jobs have run, so a
+    size delta undercounts in a long session; job ids only grow."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
 
 
 def main() -> None:
@@ -51,13 +58,13 @@ def main() -> None:
             runs, jobs = [], []
             for i in range(3):
                 spark.sparkContext.setJobDescription(f"probe:{name} run {i+1}")
-                j0 = _n_jobs(spark)
+                j0 = _job_mark(spark)
                 t0 = time.perf_counter()
                 QUERIES[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 runs.append(round(time.perf_counter() - t0, 3))
-                jobs.append(_n_jobs(spark) - j0)
+                jobs.append(_job_mark(spark) - j0)
                 spark.sparkContext.setJobDescription(None)
             result["queries"][name] = {
                 "runs": runs,
