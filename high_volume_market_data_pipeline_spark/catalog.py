@@ -30,27 +30,32 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one testdata table (S7: spark.read.parquet).
-
-    ``events.ts`` has shipped in two physical encodings across testdata
-    generations: TIMESTAMP(NANOS) (vectorized reader rejects it → read
-    nanos-as-long and truncate to micros) and TIMESTAMP(MICROS) without
-    isAdjustedToUTC (Spark reads TIMESTAMP_NTZ, which disallows long casts
-    and differs from every downstream operator's LTZ assumption). Both are
-    normalized here to a session-TZ (UTC) TimestampType so operators and
-    DuckDB oracles agree; keep the normalization at read time, not in the
-    session config.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` as a session-TZ (UTC) TimestampType, so operators and
+    DuckDB oracles agree. Parquet TIMESTAMP(NANOS) arrives as ``bigint``
+    nanos (``build_session`` sets ``nanosAsLong``) and is truncated to
+    micros; TIMESTAMP(MICROS) without isAdjustedToUTC arrives as
+    TIMESTAMP_NTZ, which disallows long casts and breaks every
+    downstream operator's LTZ assumption."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Parquet scan of one testdata table (S7: spark.read.parquet), with
+    ``events.ts`` normalized by ``normalize_event_ts``.
+
+    The testdata ships ``ts`` as TIMESTAMP(MICROS). A TIMESTAMP(NANOS)
+    file reads on a session from ``build_session``; any other session
+    reads it only if it sets ``spark.sql.legacy.parquet.nanosAsLong``
+    itself (the vectorized reader rejects NANOS otherwise).
+    """
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def load_tables(
@@ -73,9 +78,6 @@ def register_catalog_tables(
     parquet locations → verified SHOW TABLES. Works against the default
     in-memory catalog or a configured Hive metastore alike
     (session.build_metastore_session for the persistent Derby-backed one)."""
-    # events.parquet is TIMESTAMP(NANOS): schema inference at CREATE TABLE
-    # needs the same legacy conf load_table uses.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
     for name in TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")

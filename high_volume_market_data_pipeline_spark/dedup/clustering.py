@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from high_volume_market_data_pipeline_spark.operators.layout import (
+    data_scoped_shuffle,
+)
+
 
 def _stat_barrier(df: DataFrame) -> DataFrame:
     """Lineage AND statistics barrier for iterative DataFrame loops.
@@ -88,99 +92,88 @@ def connected_components(
     # Size every graph shuffle to the GRAPH, not the session: each round
     # pays per-partition task overhead on a frame of |V| rows, so a small
     # pair graph on a 96-partition session wastes ~all its time on empty
-    # tasks. ~250k pairs per partition; restore the session conf at the end.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    target = max(8, min(int(prev_parts), n_pairs // 250_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    if target < int(prev_parts):
-        # Below-session-scale graph: adaptive re-planning has nothing to
-        # adapt (shuffles are floor-sized), but under AQE every exchange
-        # materializes as its own Spark job, and in an iterative loop the
-        # per-job driver round-trip dominates (same finding as
-        # dedup/incremental r13). Session-scale graphs keep AQE on.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # tasks. ~250k pairs per partition; below session scale the scope also
+    # turns AQE off, whose per-exchange jobs dominate an iterative loop.
     try:
-        # No .distinct() here: min-label propagation is idempotent under
-        # duplicate edges (min of a multiset), callers pass deduped pairs
-        # (lsh_candidate_pairs dropDuplicates), and id_a < id_b rules out
-        # self-loops — a distinct would add a full edge-set shuffle for
-        # nothing.
-        edges = (
-            pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-            .union(
-                pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+        with data_scoped_shuffle(spark, n_pairs // 250_000 + 1) as target:
+            # No .distinct() here: min-label propagation is idempotent under
+            # duplicate edges (min of a multiset), callers pass deduped pairs
+            # (lsh_candidate_pairs dropDuplicates), and id_a < id_b rules out
+            # self-loops — a distinct would add a full edge-set shuffle for
+            # nothing.
+            src, dst = F.col(src_col), F.col(dst_col)
+            edges = (
+                pairs.select(src.alias("src"), dst.alias("dst"))
+                .union(pairs.select(dst.alias("src"), src.alias("dst")))
+                # cache COMPACT: the union inherits the pair pipeline's
+                # parallelism (~2x its cache partitions), and every loop round
+                # re-scans this cache — one task per cached partition per
+                # round. Graph-sized partitioning caps that at the same
+                # target the shuffles use.
+                .repartition(target)
+                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            # cache COMPACT: the union inherits the pair pipeline's
-            # parallelism (~2x its cache partitions), and every loop round
-            # re-scans this cache — one task per cached partition per
-            # round. Graph-sized partitioning caps that at the same
-            # target the shuffles use.
-            .repartition(target)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # Round 1 fused into seeding: with identity labels, the propagated
-        # label is just least(self, min neighbor) — one shuffle, no join.
-        labels = edges.groupBy("src").agg(
-            F.least(F.first("src"), F.min("dst")).alias("component")
-        ).withColumnRenamed("src", "id")
-        labels = _stat_barrier(labels)
-        for _ in range(max_iterations):
-            nbr_min = (
-                edges.join(labels, edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            proposed = labels.join(nbr_min, labels.id == nbr_min.src, "left").select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_component", "component"),
-                ).alias("component"),
-                F.col("component").alias("_old"),
-            )
-            # Path halving: relabel by the label's own label. Labels are
-            # always vertex ids inside the same component and only ever
-            # decrease, so the jump is safe — and it is what turns a
-            # depth-d chain into O(log d) rounds.
-            parent = proposed.select(
-                F.col("id").alias("component"),
-                F.col("component").alias("_plabel"),
-            )
-            proposed = proposed.join(parent, "component", "left").select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("_plabel", "component"),
-                ).alias("component"),
-                "_old",
-            )
-            # Lazy barrier: the convergence count below is the action
-            # that materializes it — one job per round, not two; the
-            # barrier also resets plan statistics (see _stat_barrier).
-            proposed = _stat_barrier(proposed)
-            changed = (
-                proposed.filter(F.col("component") != F.col("_old")).limit(1).count()
-            )
-            labels = proposed.drop("_old")
-            if changed == 0:
-                break
-        else:
-            # Exhausting the budget without a fixed point means some
-            # component still carries ≥2 labels — a keep-one-per-component
-            # consumer would then keep multiple copies of the same dup
-            # cluster with no signal. Diameters over max_iterations are
-            # real on chain-shaped near-dup graphs; fail loudly so the
-            # caller raises the budget instead of silently under-deduping.
+            # Round 1 fused into seeding: with identity labels, the propagated
+            # label is just least(self, min neighbor) — one shuffle, no join.
+            labels = edges.groupBy("src").agg(
+                F.least(F.first("src"), F.min("dst")).alias("component")
+            ).withColumnRenamed("src", "id")
+            labels = _stat_barrier(labels)
+            for _ in range(max_iterations):
+                nbr_min = (
+                    edges.join(labels, edges.dst == labels.id)
+                    .groupBy("src")
+                    .agg(F.min("component").alias("nbr_component"))
+                )
+                proposed = labels.join(
+                    nbr_min, labels.id == nbr_min.src, "left"
+                ).select(
+                    "id",
+                    F.least(
+                        F.col("component"),
+                        F.coalesce("nbr_component", "component"),
+                    ).alias("component"),
+                    F.col("component").alias("_old"),
+                )
+                # Path halving: relabel by the label's own label. Labels are
+                # always vertex ids inside the same component and only ever
+                # decrease, so the jump is safe — and it is what turns a
+                # depth-d chain into O(log d) rounds.
+                parent = proposed.select(
+                    F.col("id").alias("component"),
+                    F.col("component").alias("_plabel"),
+                )
+                proposed = proposed.join(parent, "component", "left").select(
+                    "id",
+                    F.least(
+                        F.col("component"),
+                        F.coalesce("_plabel", "component"),
+                    ).alias("component"),
+                    "_old",
+                )
+                # Lazy barrier: the convergence count below is the action
+                # that materializes it — one job per round, not two; the
+                # barrier also resets plan statistics (see _stat_barrier).
+                proposed = _stat_barrier(proposed)
+                moved = proposed.filter(F.col("component") != F.col("_old"))
+                changed = moved.limit(1).count()
+                labels = proposed.drop("_old")
+                if changed == 0:
+                    break
+            else:
+                # Exhausting the budget without a fixed point means some
+                # component still carries ≥2 labels — a keep-one-per-component
+                # consumer would then keep multiple copies of the same dup
+                # cluster with no signal. Diameters over max_iterations are
+                # real on chain-shaped near-dup graphs; fail loudly so the
+                # caller raises the budget instead of silently under-deduping.
+                edges.unpersist()
+                raise RuntimeError(
+                    f"connected_components did not converge within "
+                    f"{max_iterations} iterations; raise max_iterations "
+                    "(component diameter exceeds the label-propagation budget)"
+                )
             edges.unpersist()
-            raise RuntimeError(
-                f"connected_components did not converge within "
-                f"{max_iterations} iterations; raise max_iterations "
-                "(component diameter exceeds the label-propagation budget)"
-            )
-        edges.unpersist()
     finally:
         pairs.unpersist()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return labels

@@ -235,18 +235,10 @@ class SignatureStore:
 
         spark = new_docs.sparkSession
         caches: list[DataFrame] = []
-        # Size every post-signature shuffle to the BATCH, not the session
-        # (the connected_components precedent, guide §2.2): the increment
-        # runs ~a dozen shuffle stages over key/signature rows that are
-        # micro-batch-sized, and on a cores×3 session each pays ~30 empty
-        # task launches — and with AQE on, one Spark job per exchange
-        # (measured ~30 jobs per micro-batch increment vs ~10 static).
-        # The signature md5 compute itself is scan-side
-        # (ensure_parallelism's fan-out) and unaffected by this knob. The
-        # target follows the input's own scan layout — thousands of
-        # splits at 100 TB leave the session conf and AQE in charge; a
-        # micro-batch drops to the floor. Restored before returning, so
-        # the caller's own actions plan under the session conf.
+        # Size every post-signature shuffle to the BATCH, not the session:
+        # the increment runs ~a dozen shuffle stages over micro-batch-sized
+        # key/signature rows (measured ~30 jobs per increment under AQE vs
+        # ~10 static). The signature md5 compute is scan-side and unaffected.
         try:
             with data_scoped_shuffle(
                 spark, new_docs.rdd.getNumPartitions()

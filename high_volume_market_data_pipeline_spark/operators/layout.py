@@ -7,10 +7,13 @@ exchange (silver_to_gold_crypto_stats.py:67-69); coalesce(1) on tiny outputs
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from high_volume_market_data_pipeline_spark.session import scoped_conf
 
 
 def copartition_by(df: DataFrame, columns: Sequence[str], n: int | None = None) -> DataFrame:
@@ -34,38 +37,34 @@ def materialize(df: DataFrame) -> DataFrame:
     return df
 
 
-def data_scoped_shuffle(spark, input_partitions: int, floor: int = 8):
-    """L4 (r13): context manager that sizes shuffle partitions to the
-    DATA for an eager, below-session-scale region, and turns AQE off for
-    it (with floor-sized shuffles nothing can skew and nothing needs
-    re-planning, but under AQE every exchange materializes as its own
-    Spark job — at micro-batch/model scale the per-job driver round-trip
-    IS the cost; measured on the r13 lifecycle rows: 77→42 and 35→16
-    jobs per run). ``input_partitions`` is the input's own scan layout —
-    thousands of splits at 100 TB leave the session conf and AQE
-    untouched, so the scoping is scale-adaptive, never a local-mode
-    constant. Both settings are restored on exit; only wrap code that
-    MATERIALIZES inside the region (a lazily returned frame plans at
-    whatever conf its consumer runs under)."""
-    from contextlib import contextmanager
+@contextmanager
+def data_scoped_shuffle(spark, input_partitions: int) -> Iterator[int]:
+    """L4: size shuffle partitions to the DATA for an eager region below
+    session scale; yields the partition count in effect.
 
-    @contextmanager
-    def scope():
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        target = max(floor, min(int(prev_parts), input_partitions))
-        changed = target < int(prev_parts)
-        if changed:
-            spark.conf.set("spark.sql.shuffle.partitions", str(target))
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            if changed:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-    return scope()
+    The target is ``max(8, min(session, input_partitions))``. Only when it
+    is below the session's count are shuffle partitions lowered to it and
+    AQE turned off, through ``session.scoped_conf``: with floor-sized
+    shuffles nothing can skew, but under AQE every exchange runs as its
+    own Spark job, and at micro-batch or model scale the per-job driver
+    round-trip is the cost (the r13 lifecycle rows: 77→42 and 35→16 jobs
+    per run). ``input_partitions`` is the input's own scan layout, so an
+    input with session-scale splits leaves the conf untouched. Only wrap
+    code that MATERIALIZES inside the region: a lazily returned frame
+    plans under whatever conf its consumer runs with."""
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    target = max(8, min(session, input_partitions))
+    if target >= session:
+        yield session
+        return
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(target),
+            "spark.sql.adaptive.enabled": "false",
+        },
+    ):
+        yield target
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -409,21 +409,10 @@ def session_chains_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup/clustering.py) — that recursion would need set semantics to
     terminate. This query is the acyclic case the feature handles today;
     both engines run the same recursion, so it is fully oracle-backed."""
-    # Both recursion guards are data-reachable for this shape, so both are
-    # sized FROM THE INPUT (only upward — a caller's larger setting is
-    # never shrunk), not from a blanket constant:
-    #   - cteRecursionRowLimit counts TOTAL rows across the recursion;
-    #     this recursion emits exactly one row per event, so the need is
-    #     |events| (default 1M dies at ≥1M events — observed at sf1).
-    #   - cteRecursionLevelLimit (default 100) bounds iteration count;
-    #     depth here equals the LONGEST session's event count, and a user
-    #     with >100 events spaced <2h apart is plausible event data — the
-    #     limit must track max-events-per-user, not stay at 100.
-    # Sizing from the input keeps the defaults armed for any OTHER
-    # recursion in the session (a non-linear runaway still trips its own
-    # guards); the one count job below is a cheap keyed agg. The confs
-    # must outlive this function (the returned DataFrame executes later),
-    # so they are set, not scoped-and-restored.
+    # Both recursion guards are reachable by the data, so the query text
+    # sizes them from the input and the session's guards stay as they are:
+    # depth = the longest session's event count (MAX RECURSION LEVEL), rows
+    # = one per event (the LIMIT, which replaces the session row limit).
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts"
     )
@@ -436,10 +425,6 @@ def session_chains_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     total, longest = int(sizes["total"] or 0), int(sizes["longest"] or 0)
     row_need = max(1_000_000, 2 * total)
     level_need = max(100, longest + 8)
-    if int(spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000")) < row_need:
-        spark.conf.set("spark.sql.cteRecursionRowLimit", str(row_need))
-    if int(spark.conf.get("spark.sql.cteRecursionLevelLimit", "100")) < level_need:
-        spark.conf.set("spark.sql.cteRecursionLevelLimit", str(level_need))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_prev = F.unix_micros(F.col("ts")) - F.unix_micros(
         F.lag("ts").over(w)
@@ -461,16 +446,18 @@ def session_chains_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DataFrame templating instead of temp views: no session-global name
     # to collide with, the frames stay plan-scoped to this query
     return spark.sql(
-        """
-        WITH RECURSIVE chain(user_id, root_id, event_id, depth) AS (
-          SELECT user_id, event_id, event_id, 1 FROM {roots}
+        f"""
+        WITH RECURSIVE chain(user_id, root_id, event_id, depth)
+        MAX RECURSION LEVEL {level_need} AS (
+          SELECT user_id, event_id, event_id, 1 FROM {{roots}}
           UNION ALL
           SELECT c.user_id, c.root_id, e.dst, c.depth + 1
-          FROM chain c JOIN {edges} e ON e.src = c.event_id
+          FROM chain c JOIN {{edges}} e ON e.src = c.event_id
         )
         SELECT user_id, root_id AS session_start_event_id, event_id,
                CAST(depth AS BIGINT) AS chain_pos
-        FROM chain ORDER BY user_id, session_start_event_id, chain_pos
+        FROM (SELECT * FROM chain LIMIT {row_need})
+        ORDER BY user_id, session_start_event_id, chain_pos
         """,
         roots=roots,
         edges=edges,

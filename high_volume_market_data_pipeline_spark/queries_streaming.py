@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from high_volume_market_data_pipeline_spark.catalog import normalize_event_ts
 from high_volume_market_data_pipeline_spark.registry import query
 from high_volume_market_data_pipeline_spark.streaming import (
     interval_join_streams,
@@ -32,7 +33,7 @@ _DEC = "decimal(18,4)"
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream over the events table (nanos→micros conversion as in
+    """File-stream over the events table (``ts`` normalized as in
     catalog.load_table; streams need the explicit schema up front).
 
     The file-stream source requires a DIRECTORY; the testdata table is a
@@ -48,15 +49,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stage, "events.parquet")
     if not os.path.exists(link):
         os.symlink(path, link)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(path).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(stage)
-    ts_type = dict(sdf.dtypes).get("ts")
-    if ts_type == "bigint":
-        sdf = sdf.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
+    return normalize_event_ts(spark.readStream.schema(raw_schema).parquet(stage))
 
 
 @query(
@@ -764,21 +758,13 @@ def stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in coded_tbl.history(spark).collect()
         ]
         idx = load_pq_index(spark, root)
-        from high_volume_market_data_pipeline_spark.operators.layout import (
-            data_scoped_shuffle,
-        )
-
-        # the search count is an INTERNAL action over a corpus-scale
-        # candidate set — size its shuffles to the corpus' scan layout
-        # (r13; no-op when the corpus has session-scale splits)
-        with data_scoped_shuffle(spark, emb.rdd.getNumPartitions()):
-            searched = pq_knn(
-                emb.filter(F.col("vec_id") >= 300).limit(5),
-                emb,
-                k=3,
-                n_codes=16,
-                index=idx,
-            ).count()
+        searched = pq_knn(
+            emb.filter(F.col("vec_id") >= 300).limit(5),
+            emb,
+            k=3,
+            n_codes=16,
+            index=idx,
+        ).count()
         out = spark.createDataFrame(
             [(v, op, n) for v, op, n in versions]
             + [(-1, "SEARCHED_ROWS", searched)],
@@ -859,19 +845,13 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in coded_tbl.history(spark).collect()
         ]
         idx = load_ivf_index(spark, root)
-        from high_volume_market_data_pipeline_spark.operators.layout import (
-            data_scoped_shuffle,
-        )
-
-        # internal search action — corpus-layout-scoped like the PQ twin
-        with data_scoped_shuffle(spark, emb.rdd.getNumPartitions()):
-            searched = ivf_knn(
-                emb.filter(F.col("vec_id") >= 300).limit(5),
-                emb,
-                k=3,
-                n_cells=8,
-                index=idx,
-            ).count()
+        searched = ivf_knn(
+            emb.filter(F.col("vec_id") >= 300).limit(5),
+            emb,
+            k=3,
+            n_cells=8,
+            index=idx,
+        ).count()
         out = spark.createDataFrame(
             [(v, op, n) for v, op, n in versions]
             + [(-1, "SEARCHED_ROWS", searched)],

@@ -12,6 +12,9 @@ fan-out and join strategy; locally they keep plans representative of what a
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -89,12 +92,13 @@ def build_session(
         # Parquet scans: allow pruning+pushdown to do their job at scale.
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", _ADVISORY_PARTITION_BYTES)
-        # Recursive-CTE guards (cteRecursionRowLimit / cteRecursionLevelLimit)
-        # stay at engine defaults here: a blanket raise would disarm the
-        # runaway backstop for EVERY recursion in the session. Queries whose
-        # recursion volume is input-proportional size the guards from their
-        # own input instead (session_chains_recursive raises both limits
-        # proportional to its event/session counts, only upward).
+        # TIMESTAMP(NANOS) parquet reads as long nanos (the vectorized
+        # reader rejects it); catalog.normalize_event_ts truncates to micros.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Recursive-CTE guards stay at engine defaults: a blanket raise would
+        # disarm the runaway backstop for EVERY recursion in the session.
+        # Input-proportional recursions state their own bounds in the query
+        # text (session_chains_recursive).
         # Quieter driver
         .config("spark.ui.enabled", "false")
     )
@@ -103,6 +107,48 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_scope_lock = threading.Lock()
+# (session, key) -> (value before the first live scope, [(scope, value)])
+_live_scopes: dict = {}
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set ``settings`` in the session conf for the body, then put back what
+    was there; a key with no explicit setting before is unset again.
+
+    The package's only writer of ``spark.conf``. Scopes nest and may
+    interleave across threads (``foreachBatch`` handlers run on callback
+    threads): the newest live scope's value is in effect, and the last
+    scope on a key to leave restores its baseline. Conf is session-wide,
+    so a concurrent query plans under the newest scope. The lock covers
+    only this bookkeeping and the conf writes, never a Spark action."""
+    conf, jsession, token = spark.conf, spark._jsparkSession, object()
+    try:
+        with _scope_lock:
+            for key, value in settings.items():
+                baseline = conf.get(key, None)
+                conf.set(key, value)
+                live = _live_scopes.setdefault((jsession, key), (baseline, []))
+                live[1].append((token, value))
+        yield
+    finally:
+        with _scope_lock:
+            for key in settings:
+                if (jsession, key) not in _live_scopes:
+                    continue  # entry failed at or before this key
+                baseline, frames = _live_scopes[(jsession, key)]
+                frames[:] = [f for f in frames if f[0] is not token]
+                if frames:
+                    conf.set(key, frames[-1][1])
+                    continue
+                del _live_scopes[(jsession, key)]
+                if baseline is None:
+                    conf.unset(key)
+                else:
+                    conf.set(key, baseline)
 
 
 def build_metastore_session(

@@ -1038,11 +1038,8 @@ def fit_pq_codebooks(
     )
     cb = np.zeros((m_subspaces, n_codes, dsub), dtype=np.float64)
     filled = np.zeros(m_subspaces, dtype=np.int64)
-    # The fit's ONE shuffle moves a sampled, model-scale training set
-    # into m groups — scope its sizing (and AQE) to the corpus' own scan
-    # layout so a small corpus doesn't pay cores×3 partitions (mostly
-    # empty) for m=8 groups of rows; a 100 TB corpus has input splits ≥
-    # the session conf and keeps both knobs untouched.
+    # The fit's ONE shuffle moves a model-scale training set into m groups:
+    # size it to the corpus' scan layout, not cores×3 mostly empty tasks.
     with data_scoped_shuffle(corpus.sparkSession, corpus.rdd.getNumPartitions()):
         rows = fitted.collect()  # m·k rows: the model, not data
     for row in rows:

@@ -14,6 +14,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from high_volume_market_data_pipeline_spark.session import scoped_conf
+
+# State-store instances per stateful query: each partition pays a store
+# open/commit/snapshot EVERY micro-batch, so state partitioning tracks
+# STATE SIZE, not cluster cores (measured here: 96 partitions = 7.4 s,
+# 8 partitions = 1.3 s for the same tiny aggregation). It is fixed at the
+# first checkpoint for the life of the query.
+_STATE_PARTITIONS = 8
+
 # Stats of the most recent run_to_memory_sink stream run in this process:
 # {"micro_batches": n, "input_rows": n}. bench.py reads this after each
 # query so the committed bench rows carry micro-batch counts and rows/sec
@@ -57,18 +66,10 @@ def run_to_memory_sink(
     sdf: DataFrame,
     output_mode: str = "complete",
     query_name: str | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a memory
-    sink; return the materialized result as a batch DataFrame.
-
-    ``state_partitions`` bounds the number of state-store instances: a
-    stateful query pays per-partition store open/commit/snapshot EVERY
-    micro-batch, so state partitioning must track STATE SIZE, not cluster
-    cores (measured here: 96 partitions = 7.4 s, 8 partitions = 1.3 s for
-    the same tiny aggregation). Production jobs with wide keyspaces raise
-    it — it is fixed at the first checkpoint for the life of the query.
-    The session's shuffle-partition conf is restored after the run.
+    sink; return the materialized result as a batch DataFrame. State runs
+    on ``_STATE_PARTITIONS`` shuffle partitions, scoped to the run.
 
     Memory sink is a test/verification surface only — production sinks are
     foreachBatch/parquet (streaming/sink.py). The unique query name keeps
@@ -76,10 +77,9 @@ def run_to_memory_sink(
     """
     spark = sdf.sparkSession
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS)}
+    ):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -89,8 +89,6 @@ def run_to_memory_sink(
         )
         q.awaitTermination()
         _record_stream_stats(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 

@@ -85,13 +85,8 @@ def stream_append_index(
             data_scoped_shuffle,
         )
 
-        # Batch-scope shuffle sizing + AQE for the append (r13; same
-        # data-sized rule as streaming/incremental.py's bridge): a
-        # micro-batch append's encode + id anti-join otherwise plans at
-        # the session's cores×3 shuffle partitions with one AQE job per
-        # exchange, and at micro-batch size the per-job/per-task fixed
-        # cost dominates. Corpus-scale batches (input splits ≥ session
-        # conf) leave both knobs untouched.
+        # Batch-scope shuffle sizing + AQE for the append's encode + id
+        # anti-join, as streaming/incremental.py's bridge does.
         with data_scoped_shuffle(spark, batch_df.rdd.getNumPartitions()):
             appender(
                 spark,

@@ -392,7 +392,8 @@ def test_session_chains_survive_sessions_longer_than_level_limit(
     high-volume event data; Spark's cteRecursionLevelLimit default (100)
     would abort the whole query on it. The query must size the level
     guard from max-events-per-user (and the row guard from |events|), so
-    a 150-event session walks to depth 150."""
+    a 150-event session walks to depth 150, and leave the session's
+    guards as they were."""
     import datetime
 
     from high_volume_market_data_pipeline_spark.queries_analytics import (
@@ -413,6 +414,11 @@ def test_session_chains_survive_sessions_longer_than_level_limit(
         rows, "user_id long, event_id long, ts timestamp"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
 
+    limits = (
+        "spark.sql.cteRecursionLevelLimit",
+        "spark.sql.cteRecursionRowLimit",
+    )
+    limits_before = [spark.conf.get(k, None) for k in limits]
     out = session_chains_recursive(spark, str(tmp_path))
     got = out.groupBy("user_id", "session_start_event_id").agg(
         F.max("chain_pos").alias("depth")
@@ -423,3 +429,5 @@ def test_session_chains_survive_sessions_longer_than_level_limit(
     }
     assert depths == {(7, 0): 150, (7, 900): 1, (8, 901): 1}
     assert out.count() == 152  # one row per event, nothing truncated
+    # the guards are sized in the query text, not raised session-wide
+    assert [spark.conf.get(k, None) for k in limits] == limits_before

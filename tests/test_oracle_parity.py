@@ -16,6 +16,7 @@ from .conftest import SF_DIR, assert_matches_oracle
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, oracle):
+    conf_before = dict(spark.conf.getAll)
     df = QUERIES[name](spark, SF_DIR)
     if name in ORACLE_SQL:
         assert_matches_oracle(df, oracle, ORACLE_SQL[name])
@@ -23,6 +24,8 @@ def test_query_matches_oracle(name, spark, oracle):
         # rows-only smoke: runs and yields a stable schema
         assert df.columns
         df.collect()
+    # every query leaves the session conf as it found it
+    assert dict(spark.conf.getAll) == conf_before
 
 
 def test_entry_smoke(spark):

@@ -306,22 +306,16 @@ def test_runtime_bloom_filter_prunes_selective_join(spark):
     from pyspark.sql import functions as F
 
     from high_volume_market_data_pipeline_spark.catalog import load_table
+    from high_volume_market_data_pipeline_spark.session import scoped_conf
 
-    conf = spark.conf
-    saved = {
-        k: conf.get(k)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        conf.set(
+    with scoped_conf(
+        spark,
+        {
             "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "1KB",
-        )
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            "applicationSideScanSizeThreshold": "1KB",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         cust = load_table(spark, SF_DIR, "customer").filter(
             F.col("c_mktsegment") == "BUILDING"
         )
@@ -331,9 +325,6 @@ def test_runtime_bloom_filter_prunes_selective_join(spark):
         assert "might_contain" in plan, plan[:2000]
         assert "bloom_filter_agg" in plan, plan[:2000]
         pruned_count = j.count()
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
     # exactness: the bloom-pruned join returns exactly the plain join rows
     cust = load_table(spark, SF_DIR, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -346,11 +337,12 @@ def test_runtime_bloom_filter_prunes_selective_join(spark):
 
 # Spark job counts are exact and repeatable for a fixed plan, so they gate
 # orchestration regressions that a wall-clock bench only blurs. Budgets are
-# the counts tools/job_probe.py measured before the ANN search pipeline was
-# unified, in this suite's session shape (8 shuffle partitions:
-# SPARK_GRAFT_CPUS=2 SPARK_GRAFT_SF_DIR=<sf0.001> python tools/job_probe.py
-# plans/job_budget/knn_tier1.json <queries>); the counts read the same at
-# sf0.01.
+# counts measured in this suite's session shape (8 shuffle partitions):
+# knn_tier1.json before the ANN search pipeline was unified
+# (SPARK_GRAFT_CPUS=2 SPARK_GRAFT_SF_DIR=<sf0.001> python tools/job_probe.py
+# plans/job_budget/knn_tier1.json <queries>; the counts read the same at
+# sf0.01), conf_scoped_tier1.json before session conf was scoped through
+# session.scoped_conf.
 _JOB_BUDGETS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "plans", "job_budget",
@@ -362,18 +354,15 @@ def _budget(name: str) -> dict:
         return json.load(fh)
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "knn_lsh_bucketed",
-        "knn_ivf_cells",
-        "knn_pq_adc",
-        "knn_ivf_pq",
-        "knn_pq_persisted",
-    ],
-)
+_QUERY_BUDGETS = {
+    **_budget("knn_tier1.json")["queries"],
+    **_budget("conf_scoped_tier1.json")["queries"],
+}
+
+
+@pytest.mark.parametrize("name", list(_QUERY_BUDGETS))
 def test_knn_job_count_within_budget(spark, name):
-    budget = max(_budget("knn_tier1.json")["queries"][name]["jobs"])
+    budget = max(_QUERY_BUDGETS[name]["jobs"])
 
     j0 = spark_job_mark(spark)
     QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()

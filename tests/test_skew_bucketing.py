@@ -10,6 +10,7 @@ from high_volume_market_data_pipeline_spark.operators.skew import (
     salted_grouped_agg,
     salted_join,
 )
+from high_volume_market_data_pipeline_spark.session import scoped_conf
 from high_volume_market_data_pipeline_spark.sinks.bucketed import (
     drop_table,
     read_table,
@@ -100,24 +101,22 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     orders = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
     li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     ta, tb = "t_bucket_orders", "t_bucket_lineitem"
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # Disable broadcast: at test scale Catalyst would broadcast the tiny
+    # tables and skip the bucketed path entirely; at real scale both
+    # sides exceed any broadcast threshold and bucketing is what's left.
     try:
-        # Disable broadcast: at test scale Catalyst would broadcast the tiny
-        # tables and skip the bucketed path entirely; at real scale both
-        # sides exceed any broadcast threshold and bucketing is what's left.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed_table(orders, ta, ["o_orderkey"], 4, sort_cols=["o_orderkey"])
-        write_bucketed_table(li, tb, ["l_orderkey"], 4, sort_cols=["l_orderkey"])
-        joined = read_table(spark, ta).join(
-            read_table(spark, tb),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        # sanity: join actually returns rows
-        assert joined.limit(5).count() > 0
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            write_bucketed_table(orders, ta, ["o_orderkey"], 4, sort_cols=["o_orderkey"])
+            write_bucketed_table(li, tb, ["l_orderkey"], 4, sort_cols=["l_orderkey"])
+            joined = read_table(spark, ta).join(
+                read_table(spark, tb),
+                F.col("o_orderkey") == F.col("l_orderkey"),
+            )
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+            assert "Bucketed: true" in plan, plan
+            # sanity: join actually returns rows
+            assert joined.limit(5).count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         drop_table(spark, ta)
         drop_table(spark, tb)

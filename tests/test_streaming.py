@@ -12,6 +12,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from high_volume_market_data_pipeline_spark.session import scoped_conf
 from high_volume_market_data_pipeline_spark.streaming import (
     read_parquet_stream,
     run_to_memory_sink,
@@ -229,12 +230,13 @@ def test_transform_with_state_matches_legacy_api(spark, tmp_path):
     ev.filter(F.col("user_id") % 2 == 1).coalesce(1).write.parquet(
         stream_dir + "/f1.parquet"
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": "org.apache.spark."
+            "sql.execution.streaming.state.RocksDBStateStoreProvider",
+        },
+    ):
         sdf = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -243,11 +245,6 @@ def test_transform_with_state_matches_legacy_api(spark, tmp_path):
         out = run_to_memory_sink(
             running_user_totals_tws(sdf), output_mode="append"
         ).collect()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     final = {}
     for r in out:
         cur = final.get(r["user_id"])
@@ -527,26 +524,24 @@ def test_rate_micro_batch_source_drives_tumbling_windows(spark):
         [F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_v")],
     )
     name = f"rate_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql(f"SELECT * FROM {name}").collect()
-            if len(rows) >= 3:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + 60
+            rows = []
+            while time.time() < deadline:
+                rows = spark.sql(f"SELECT * FROM {name}").collect()
+                if len(rows) >= 3:
+                    break
+                time.sleep(0.5)
+        finally:
+            q.stop()
     assert len(rows) >= 3
     # batch k rows are values [10k, 10k+10) stamped at minute k:
     # each window holds exactly its batch, sum = 10*(100k+...)= arithmetic
