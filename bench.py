@@ -1,13 +1,26 @@
-"""Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: run registered queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line with per-query wall-clock seconds.
 
-Queries execute through the `noop` sink so the full plan runs distributed
+Usage: python bench.py [--plans DIR] [query ...]
+
+With no query names every registered query runs. Each row is the median of
+3 runs through the `noop` sink, so the full plan runs distributed
 (scan → shuffle → agg) without driver-collect overhead distorting timings.
+Everything else a row reports is read, outside the timed region, from what
+Spark records for the session anyway (the UI may be off):
+
+- ``jobs``: Spark jobs per run, as ``session.job_mark`` deltas;
+- ``stream_stats``: micro-batches per run and input rows of every stream
+  the query ran, from a StreamingQueryListener on the session;
+- ``--plans DIR``: ``DIR/<query>.txt`` holds, for the query's last run, the
+  description, call site and final formatted physical plan of every SQL
+  execution newer than the run's watermark in the SQL status store.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -17,15 +30,131 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from high_volume_market_data_pipeline_spark.queries import QUERIES  # noqa: E402
-from high_volume_market_data_pipeline_spark.session import build_session  # noqa: E402
+from high_volume_market_data_pipeline_spark.session import (  # noqa: E402
+    build_session,
+    job_mark,
+)
+
+RUNS = 3
+
+
+class StreamProgress:
+    """Input rows of every micro-batch any stream on ``spark`` reports."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.spark = spark
+        self.batches: list[int] = []
+        batches = self.batches
+
+        class _Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
+
+            def onQueryProgress(self, event):
+                batches.append(event.progress.numInputRows)
+
+            def onQueryTerminated(self, event):
+                pass
+
+        self._listener = _Listener()
+        spark.streams.addListener(self._listener)
+
+    def close(self) -> None:
+        self.spark.streams.removeListener(self._listener)
+
+
+def _executions(spark):
+    """The SQL status store's executions, oldest first."""
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def _newest_execution(spark) -> int:
+    execs = _executions(spark)
+    n = execs.size()
+    return execs.apply(n - 1).executionId() if n else -1
+
+
+def _plans_since(spark, mark: int) -> list[str]:
+    """Description, call site and final formatted physical plan of every
+    SQL execution with an id above ``mark``, oldest first."""
+    execs = _executions(spark)
+    out = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= mark:
+            break
+        call = (e.details() or "").split("\n", 1)[0]
+        out.append(
+            f"== execution {e.executionId()}: {e.description()} ==\n"
+            f"-- {call}\n{e.physicalPlanDescription()}"
+        )
+    return out[::-1]
+
+
+def _cpu_stat() -> list[int]:
+    # (user nice system idle iowait irq softirq steal ...) jiffies
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:]]
+
+
+def measure(
+    spark, progress: StreamProgress, name: str, sf_dir: str,
+    plans: bool = False,
+) -> dict:
+    """Run query ``name`` ``RUNS`` times through the noop sink. Returns
+    per-run ``secs``, ``jobs``, host ``steal`` and ``busy`` percent and, when
+    any stream ran, ``micro_batches`` per run and the last run's
+    ``input_rows``; with ``plans``, the last run's SQL ``plans`` as text."""
+    row: dict = {"secs": [], "jobs": [], "steal": [], "busy": []}
+    for i in range(RUNS):
+        j0 = job_mark(spark)  # drains the listener bus
+        del progress.batches[:]
+        last = i == RUNS - 1
+        sql_mark = _newest_execution(spark) if plans and last else None
+        # Label the run so its jobs and plans can be attributed to it.
+        spark.sparkContext.setJobDescription(f"bench:{name} run {i + 1}")
+        cpu0 = _cpu_stat()
+        start = time.perf_counter()
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        row["secs"].append(time.perf_counter() - start)
+        cpu1 = _cpu_stat()
+        spark.sparkContext.setJobDescription(None)
+        row["jobs"].append(job_mark(spark) - j0)
+        d = [a - b for a, b in zip(cpu1, cpu0)]
+        tot = max(1, sum(d))
+        # steal is field 8 of /proc/stat's cpu line; sandboxed or older
+        # /proc implementations may expose fewer fields — telemetry
+        # degradation must never fail the benchmark
+        steal = 100.0 * d[7] / tot if len(d) > 7 else 0.0
+        row["steal"].append(round(steal, 2))
+        row["busy"].append(round(100.0 * (d[0] + d[2]) / tot, 1))
+        if progress.batches:
+            row.setdefault("micro_batches", []).append(len(progress.batches))
+            row["input_rows"] = int(sum(progress.batches))
+        if sql_mark is not None:
+            row["plans"] = _plans_since(spark, sql_mark)
+    return row
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", metavar="query",
+                    help="registered query names (default: all)")
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write DIR/<query>.txt with the last run's SQL plans")
+    args = ap.parse_args()
+    unknown = sorted(set(args.queries) - set(QUERIES))
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    names = args.queries or sorted(QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     spark = build_session(app_name="hvmdp-bench")
-    timings: dict[str, float] = {}
     try:
         # JVM/codegen warmup on the smallest query so per-query numbers
         # reflect steady state, not first-job session setup.
@@ -50,74 +179,39 @@ def main() -> None:
         # (index ingest, incremental dedup) were the only single-run rows
         # left, i.e. exactly the ones where a one-off stall is least
         # distinguishable from a regression. stream_* rows additionally
-        # record micro-batch counts + rows/sec (streaming/ingest.
-        # LAST_STREAM_STATS), which make churn (same work, different
-        # batching) and regression (same batching, more seconds)
-        # separable in the artifact.
-        from high_volume_market_data_pipeline_spark.streaming import (
-            ingest as _stream_ingest,
-        )
-
-        def _cpu_stat() -> list[int]:
-            # (user nice system idle iowait irq softirq steal ...) jiffies
-            with open("/proc/stat") as fh:
-                return [int(x) for x in fh.readline().split()[1:]]
-
+        # record micro-batch counts + rows/sec, which make churn (same
+        # work, different batching) and regression (same batching, more
+        # seconds) separable in the artifact. Per-run host steal%/busy%
+        # make ambient interference windows visible in the artifact.
+        progress = StreamProgress(spark)
+        timings: dict[str, float] = {}
         run_log: dict[str, list[float]] = {}
-        # Per-run host-health telemetry (r12): three recorded rounds now
-        # show multi-minute ambient interference windows inflating a
-        # contiguous band of rows 3-5x while bracketing sentinels read
-        # healthy — per-row steal%/busy% makes those windows visible IN
-        # the artifact instead of needing solo re-probes to litigate each
-        # mover. Additive keys only; timings methodology unchanged.
+        jobs: dict[str, list[int]] = {}
         steal_log: dict[str, list[float]] = {}
         busy_log: dict[str, list[float]] = {}
         stream_stats: dict[str, dict] = {}
-        for name in sorted(QUERIES):
-            runs: list[float] = []
-            batches: list[int] = []
-            input_rows = None
-            while len(runs) < 3:
-                _stream_ingest.LAST_STREAM_STATS = None
-                # Label the run (guide §1.5) so UI/eventlog analysis can
-                # attribute jobs to queries; thread-local, zero cost.
-                spark.sparkContext.setJobDescription(
-                    f"bench:{name} run {len(runs) + 1}"
-                )
-                cpu0 = _cpu_stat()
-                start = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - start)
-                cpu1 = _cpu_stat()
-                d = [a - b for a, b in zip(cpu1, cpu0)]
-                tot = max(1, sum(d))
-                # steal is field 8 of /proc/stat's cpu line; sandboxed or
-                # older /proc implementations may expose fewer fields —
-                # telemetry degradation must never fail the benchmark
-                steal = 100.0 * d[7] / tot if len(d) > 7 else 0.0
-                steal_log.setdefault(name, []).append(round(steal, 2))
-                busy_log.setdefault(name, []).append(
-                    round(100.0 * (d[0] + d[2]) / tot, 1)
-                )
-                spark.sparkContext.setJobDescription(None)
-                stats = _stream_ingest.LAST_STREAM_STATS
-                if stats:
-                    batches.append(stats["micro_batches"])
-                    input_rows = stats["input_rows"]
-            t = sorted(runs)[len(runs) // 2]  # median
+        for name in names:
+            row = measure(
+                spark, progress, name, sf_dir, plans=bool(args.plans)
+            )
+            t = sorted(row["secs"])[len(row["secs"]) // 2]  # median
             timings[name] = round(t, 3)
-            run_log[name] = [round(r, 3) for r in runs]
+            run_log[name] = [round(r, 3) for r in row["secs"]]
+            jobs[name] = row["jobs"]
+            steal_log[name] = row["steal"]
+            busy_log[name] = row["busy"]
             if name.startswith("stream_"):
                 entry: dict = {"runs": run_log[name]}
-                if batches:
-                    entry["micro_batches"] = batches
-                if input_rows is not None:
-                    entry["input_rows"] = input_rows
+                if "micro_batches" in row:
+                    entry["micro_batches"] = row["micro_batches"]
+                    entry["input_rows"] = row["input_rows"]
                     if t > 0:
-                        entry["rows_per_sec"] = round(input_rows / t, 1)
+                        entry["rows_per_sec"] = round(row["input_rows"] / t, 1)
                 stream_stats[name] = entry
+            if args.plans:
+                os.makedirs(args.plans, exist_ok=True)
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                    fh.write("\n\n".join(row["plans"]))
         total = round(sum(timings.values()), 3)
         # headline keys LAST: the driver records only the TAIL of stdout
         # (2000 chars), so the summary must sit at the end of the line to
@@ -127,6 +221,7 @@ def main() -> None:
                 {
                     "queries": timings,
                     "runs": run_log,
+                    "jobs": jobs,
                     "host_steal_pct": steal_log,
                     "host_busy_pct": busy_log,
                     "stream_stats": stream_stats,

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -88,6 +90,15 @@ class SignatureStore:
     ):
         if k % bands != 0:
             raise ValueError("k must be divisible by bands")
+        if urlparse(path).scheme:
+            # os.walk lists nothing under s3a://, hdfs://, ...: the row
+            # count reads 0, so every increment takes the full-store pass
+            warnings.warn(
+                f"SignatureStore {path}: a path with a URI scheme cannot "
+                "be listed locally, so every increment takes the "
+                "full-store pass",
+                stacklevel=2,
+            )
         self.path = path
         self.k = k
         self.bands = bands
@@ -113,30 +124,34 @@ class SignatureStore:
 
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
-    def _write_sidecar(self, rows: int) -> None:
+    def _write_sidecar(self, rows: int, files: int) -> None:
         tmp = self._sidecar_path() + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"rows": int(rows)}, fh)
+            json.dump({"rows": int(rows), "files": int(files)}, fh)
         os.replace(tmp, self._sidecar_path())
 
-    def _physical_rows(self) -> int:
-        """Store row count for the scope-vs-full decision — the SIDECAR
-        maintained by bootstrap/append (one json read, no Spark job, no
-        footer walk). A store written before the sidecar existed (or by
-        an external writer) pays ONE full footer walk and re-seeds it;
-        pre-r13 this walked every parquet footer on EVERY increment —
-        O(total files) driver work per micro-batch, quadratic over a
-        continuous-ingest stream's lifetime. The count only gates which
-        of two result-identical branches runs, so a sidecar an external
-        writer failed to bump costs performance, never correctness."""
+    def _physical_rows(self, files: list[str] | None = None) -> int:
+        """Store row count for the scope-vs-full decision, from the sidecar
+        bootstrap and appends maintain (one json read, no Spark job, no
+        footer walk). ``files`` is a listing of the store the caller
+        already took. The sidecar records the file count it describes;
+        when the live count differs (an external writer, an append that
+        landed without bumping the sidecar) or the sidecar is missing,
+        ONE footer walk reseeds it. The count only gates which of two
+        result-identical branches runs, so a stale count costs
+        performance, never correctness."""
+        if files is None:
+            files = self._list_parquet_files()
         try:
             with open(self._sidecar_path()) as fh:
-                return int(json.load(fh)["rows"])
-        except (OSError, ValueError, KeyError):
+                side = json.load(fh)
+            if int(side["files"]) == len(files):
+                return int(side["rows"])
+        except (OSError, ValueError, KeyError, TypeError):
             pass
-        rows = self._footer_rows(self._list_parquet_files())
+        rows = self._footer_rows(files)
         try:
-            self._write_sidecar(rows)
+            self._write_sidecar(rows, len(files))
         except OSError:
             pass  # read-only store: fall back to walking next time
         return rows
@@ -185,7 +200,8 @@ class SignatureStore:
         banded.write.mode("overwrite").parquet(self.path)
         # seed the row-count sidecar: one footer pass over the files just
         # written (bootstrap-only; increments maintain it incrementally)
-        self._write_sidecar(self._footer_rows(self._list_parquet_files()))
+        files = self._list_parquet_files()
+        self._write_sidecar(self._footer_rows(files), len(files))
 
     def dedup_increment(
         self,
@@ -269,9 +285,6 @@ class SignatureStore:
     ) -> tuple[DataFrame, DataFrame]:
         from pyspark import StorageLevel
 
-        from high_volume_market_data_pipeline_spark.functions.plandump import (
-            dump_plan,
-        )
         from high_volume_market_data_pipeline_spark.operators.layout import (
             ensure_parallelism,
         )
@@ -370,8 +383,10 @@ class SignatureStore:
         # set and replay convergence — are byte-identical in both
         # branches (pinned by
         # tests/test_dedup_similarity.py::test_scoped_store_probe_equivalence).
+        files_before = self._list_parquet_files()
+        store_rows = self._physical_rows(files_before)
         scope_store = (
-            self._physical_rows() >= self.scope_store_min_rows
+            store_rows >= self.scope_store_min_rows
             and n_batch_docs <= self.scope_batch_max_docs
         )
         if scope_store:
@@ -424,7 +439,6 @@ class SignatureStore:
             "matched_id",
             F.round(eq / F.lit(float(self.k)), 6).alias("est_jaccard"),
         ).filter(F.col("est_jaccard") >= threshold)
-        dump_plan(scored, "incremental_store_probe")
         # deterministic report row: best match (max jaccard, min id) wins
         w = Window.partitionBy("doc_id").orderBy(
             F.col("est_jaccard").desc(), F.col("matched_id")
@@ -489,7 +503,6 @@ class SignatureStore:
         ledger = ledger_parts[0]
         for part in ledger_parts[1:]:
             ledger = ledger.unionByName(part)
-        dump_plan(ledger, "incremental_admission_ledger")
         ledger = ledger.localCheckpoint(eager=True)
 
         loser_ids = (
@@ -522,18 +535,17 @@ class SignatureStore:
             1, -(-n_batch_docs * self.bands // self._STORE_ROWS_PER_FILE)
         )
         to_append = to_append.repartition(n_files)
-        dump_plan(to_append, "incremental_append_hygiene")
-        files_before = set(self._list_parquet_files())
-        prior_rows = self._physical_rows()
         to_append.write.mode("append").parquet(self.path)
         # maintain the row-count sidecar: footer-read ONLY the files this
         # append created (guide §6 — metadata instead of data I/O; the
         # listing is one os.walk, the footers are O(files just written))
-        new_files = [
-            f for f in self._list_parquet_files() if f not in files_before
-        ]
+        before = set(files_before)
+        new_files = [f for f in self._list_parquet_files() if f not in before]
         try:
-            self._write_sidecar(prior_rows + self._footer_rows(new_files))
+            self._write_sidecar(
+                store_rows + self._footer_rows(new_files),
+                len(files_before) + len(new_files),
+            )
         except OSError:
             pass
 

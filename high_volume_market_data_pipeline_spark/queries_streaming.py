@@ -25,9 +25,6 @@ from high_volume_market_data_pipeline_spark.streaming import (
     streaming_dedup,
     tumbling_window_agg,
 )
-from high_volume_market_data_pipeline_spark.streaming.ingest import (
-    _record_stream_stats,
-)
 
 _DEC = "decimal(18,4)"
 
@@ -354,7 +351,6 @@ def stream_quality_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=os.path.join(scratch, "ckpt"),
     )
     q.awaitTermination()
-    _record_stream_stats(q)
     ledger = spark.read.parquet(ledger_path)
     return (
         ledger.groupBy("rule")
@@ -403,7 +399,6 @@ def stream_distinct_sketch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=os.path.join(scratch, "ckpt"),
         )
         q.awaitTermination()
-        _record_stream_stats(q)
         from high_volume_market_data_pipeline_spark.sinks.history import (
             VersionedParquetTable,
         )
@@ -613,7 +608,6 @@ def stream_incremental_dedup_admission(
             threshold=0.9,
         )
         q.awaitTermination()
-        _record_stream_stats(q)
         from high_volume_market_data_pipeline_spark.streaming.incremental import (
             read_ledger,
         )
@@ -742,7 +736,6 @@ def stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             sdf, root, checkpoint=os.path.join(scratch, "ckpt")
         )
         q.awaitTermination()
-        _record_stream_stats(q)
 
         coded_tbl = VersionedParquetTable(os.path.join(root, "coded"))
         # Per-version cardinality from the manifest's n_rows (parquet
@@ -829,7 +822,6 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             family="ivf",
         )
         q.awaitTermination()
-        _record_stream_stats(q)
 
         coded_tbl = VersionedParquetTable(os.path.join(root, "coded"))
         # Per-version cardinality from the manifest's n_rows (parquet

@@ -181,6 +181,21 @@ def build_metastore_session(
     )
 
 
+def job_mark(spark: SparkSession) -> int:
+    """Id of the newest Spark job the driver has recorded, -1 before any.
+
+    Count jobs as the difference of two marks, never as the size of the
+    status store: the store keeps only ``spark.ui.retainedJobs`` jobs and
+    trims the oldest in batches, so once a session has run that many its
+    size stops growing. Job ids only grow. The listener bus is drained
+    first, so the jobs (and stream progress) of an action that has just
+    returned are already recorded."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
 def stop_session(spark: SparkSession) -> None:
     """Stop the session (reference force_stop, spark_manager.py:304-326)."""
     try:

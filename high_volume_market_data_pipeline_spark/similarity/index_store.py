@@ -565,11 +565,6 @@ def _commit_append(
         )
         delta, params = derive(centroids, codebooks, coded)
         params = {**params, "parent_version": coded_head}
-        from high_volume_market_data_pipeline_spark.functions.plandump import (
-            dump_plan,
-        )
-
-        dump_plan(delta, f"index_append_delta_{operation.lower()}")
         try:
             _append_coded(
                 delta, root, operation, params, version=target,

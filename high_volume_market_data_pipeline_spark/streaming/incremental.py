@@ -219,10 +219,9 @@ def compact_ledger(
     PartitionFilters) through localCheckpoint — Spark refuses to
     overwrite a path it is concurrently reading, and old ledger
     partitions are micro-batch-sized by construction. Run it from
-    maintenance (e.g. alongside SignatureStore.compact()), not
-    concurrently with a stream that may still REPLAY one of the target
-    partitions — the keep_last_batches horizon exists to keep live and
-    compacted partitions disjoint.
+    maintenance, not concurrently with a stream that may still REPLAY
+    one of the target partitions — the keep_last_batches horizon exists
+    to keep live and compacted partitions disjoint.
 
     Returns {"compacted_partitions", "files_before", "files_after"}."""
     path = f"{out_root}/{leaf}"

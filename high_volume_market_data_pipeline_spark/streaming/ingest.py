@@ -8,7 +8,6 @@ giving deterministic end-state runs for the correctness gate.
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,30 +21,6 @@ from high_volume_market_data_pipeline_spark.session import scoped_conf
 # 8 partitions = 1.3 s for the same tiny aggregation). It is fixed at the
 # first checkpoint for the life of the query.
 _STATE_PARTITIONS = 8
-
-# Stats of the most recent run_to_memory_sink stream run in this process:
-# {"micro_batches": n, "input_rows": n}. bench.py reads this after each
-# query so the committed bench rows carry micro-batch counts and rows/sec
-# — trigger-scheduling churn (same work, different batching) is then
-# distinguishable from a real regression (same batching, more seconds);
-# two rounds of verdicts re-litigated stream wall-clock noise without it.
-LAST_STREAM_STATS: "dict | None" = None
-
-
-def _record_stream_stats(q) -> None:
-    global LAST_STREAM_STATS
-    try:
-        progs = []
-        for p in q.recentProgress:
-            progs.append(p if isinstance(p, dict) else json.loads(p.json))
-        LAST_STREAM_STATS = {
-            "micro_batches": len(progs),
-            "input_rows": int(
-                sum(p.get("numInputRows") or 0 for p in progs)
-            ),
-        }
-    except Exception:  # noqa: BLE001 — telemetry only, never fail the run
-        LAST_STREAM_STATS = None
 
 
 def read_parquet_stream(
@@ -88,7 +63,6 @@ def run_to_memory_sink(
             .start()
         )
         q.awaitTermination()
-        _record_stream_stats(q)
     return spark.table(name)
 
 

@@ -38,21 +38,6 @@ def spark():
     spark.stop()
 
 
-def spark_job_mark(spark) -> int:
-    """Id of the newest Spark job the driver has recorded, -1 before any.
-
-    Count jobs as the difference of two marks, never as the size of the
-    status store: the store keeps only ``spark.ui.retainedJobs`` jobs and
-    trims the oldest in batches, so once a session has run that many its
-    size stops growing and a size delta can no longer exceed a budget.
-    Job ids only grow. The listener bus is drained first, so the jobs of
-    an action that has just returned are already recorded."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)  # newest first
-    return jobs.apply(0).jobId() if jobs.size() else -1
-
-
 @pytest.fixture(scope="session")
 def oracle():
     con = duckdb.connect()

@@ -739,10 +739,12 @@ def test_store_row_count_sidecar_no_per_increment_walk(spark, tmp_path):
     it just wrote). An increment must never re-walk every parquet footer
     in the store — that was O(total files) driver work per micro-batch,
     quadratic over a continuous-ingest stream's lifetime. A store whose
-    sidecar is missing (external writer, pre-r13 layout) pays one
-    reseeding walk and is exact again."""
+    sidecar is missing (external writer, pre-r13 layout) or records a
+    file count the store no longer has (an append that did not bump it)
+    pays one reseeding walk and is exact again."""
     import os
     import unittest.mock as mock
+    import warnings
 
     from high_volume_market_data_pipeline_spark.dedup import SignatureStore
 
@@ -758,6 +760,8 @@ def test_store_row_count_sidecar_no_per_increment_walk(spark, tmp_path):
         walks.append(len(files))
         return orig(self, files)
 
+    with open(store._sidecar_path()) as fh:
+        pre_append_sidecar = fh.read()
     with mock.patch.object(SignatureStore, "_footer_rows", counting):
         store.dedup_increment(
             docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 30))
@@ -775,6 +779,19 @@ def test_store_row_count_sidecar_no_per_increment_walk(spark, tmp_path):
     # sidecar lost (external writer): one reseeding walk, then exact
     os.remove(store._sidecar_path())
     assert store._physical_rows() == store.read(spark).count()
+
+    # append landed, sidecar not bumped: the file count differs, so it
+    # reseeds instead of serving the stale row count
+    with open(store._sidecar_path(), "w") as fh:
+        fh.write(pre_append_sidecar)
+    assert store._physical_rows() == store.read(spark).count()
+
+    # a path os.walk cannot list warns once, when the store is made
+    with pytest.warns(UserWarning, match="URI scheme"):
+        remote = SignatureStore("s3a://bucket/sigs")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert remote._physical_rows() == 0
 
 
 def test_store_probe_applies_bucket_guard_and_replay_converges(

@@ -19,7 +19,7 @@ import numpy as np
 import pytest
 
 from high_volume_market_data_pipeline_spark.catalog import load_table
-from tests.conftest import spark_job_mark
+from high_volume_market_data_pipeline_spark.session import job_mark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -1093,9 +1093,9 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
     assert mv["operation"] == "PQ_APPEND"
 
     # (b) pyarrow load: no Spark job, content identical to the Spark read
-    j0 = spark_job_mark(spark)
+    j0 = job_mark(spark)
     _, codebooks = _load_model_arrays(spark, root, v)
-    assert spark_job_mark(spark) == j0  # driver-side metadata/footer reads only
+    assert job_mark(spark) == j0  # driver-side metadata/footer reads only
     rows = model_t.read(spark, version=v).collect()
     cb_rows = sorted(
         ((r["i"], r["j"], r["vec"]) for r in rows if r["part"] == "codebook")

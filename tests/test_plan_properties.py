@@ -14,7 +14,8 @@ import re
 import pytest
 
 from high_volume_market_data_pipeline_spark.queries import QUERIES
-from tests.conftest import SF_DIR, spark_job_mark
+from high_volume_market_data_pipeline_spark.session import job_mark
+from tests.conftest import SF_DIR
 
 
 def _plan(spark, name: str) -> str:
@@ -338,11 +339,12 @@ def test_runtime_bloom_filter_prunes_selective_join(spark):
 # Spark job counts are exact and repeatable for a fixed plan, so they gate
 # orchestration regressions that a wall-clock bench only blurs. Budgets are
 # counts measured in this suite's session shape (8 shuffle partitions):
-# knn_tier1.json before the ANN search pipeline was unified
-# (SPARK_GRAFT_CPUS=2 SPARK_GRAFT_SF_DIR=<sf0.001> python tools/job_probe.py
-# plans/job_budget/knn_tier1.json <queries>; the counts read the same at
-# sf0.01), conf_scoped_tier1.json before session conf was scoped through
-# session.scoped_conf.
+# knn_tier1.json after the ANN search pipeline was unified
+# (SPARK_GRAFT_CPUS=2 SPARK_GRAFT_SF_DIR=<sf0.001> python bench.py <queries>
+# reproduces the shape and prints each row's per-run "jobs"),
+# conf_scoped_tier1.json before session conf was scoped through
+# session.scoped_conf, stream_tier1.json over 7 runs (stream rows can vary
+# by one job between runs).
 _JOB_BUDGETS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "plans", "job_budget",
@@ -357,6 +359,7 @@ def _budget(name: str) -> dict:
 _QUERY_BUDGETS = {
     **_budget("knn_tier1.json")["queries"],
     **_budget("conf_scoped_tier1.json")["queries"],
+    **_budget("stream_tier1.json")["queries"],
 }
 
 
@@ -364,9 +367,9 @@ _QUERY_BUDGETS = {
 def test_knn_job_count_within_budget(spark, name):
     budget = max(_QUERY_BUDGETS[name]["jobs"])
 
-    j0 = spark_job_mark(spark)
+    j0 = job_mark(spark)
     QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    jobs = spark_job_mark(spark) - j0
+    jobs = job_mark(spark) - j0
     assert jobs <= budget, f"{name}: {jobs} Spark jobs, budget {budget}"
 
 
@@ -385,10 +388,10 @@ def test_medallion_job_count_within_budget(spark, tmp_path):
 
     budget = _budget("medallion_tier1.json")["jobs"]
     source = generate_market_data(spark, n_coins=20, days=2, seed=1)
-    j0 = spark_job_mark(spark)
+    j0 = job_mark(spark)
     run_medallion(
         spark, source, str(tmp_path / "lake"),
         ingestion_time=F.to_timestamp(F.lit("2024-06-01 00:00:00")),
     )
-    jobs = spark_job_mark(spark) - j0
+    jobs = job_mark(spark) - j0
     assert jobs <= budget, f"run_medallion: {jobs} Spark jobs, budget {budget}"

@@ -6,8 +6,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from high_volume_market_data_pipeline_spark.session import job_mark
 from high_volume_market_data_pipeline_spark.sinks.writers import write_single_csv
-from tests.conftest import spark_job_mark
 
 N_ROWS = 40
 
@@ -28,9 +28,9 @@ def _sorted_report(spark, tmp_path):
 def test_pandas_branch_is_one_job_in_order(spark, tmp_path):
     df = _sorted_report(spark, tmp_path)
     out = str(tmp_path / "report.csv")
-    j0 = spark_job_mark(spark)
+    j0 = job_mark(spark)
     write_single_csv(df, out)
-    assert spark_job_mark(spark) - j0 == 1
+    assert job_mark(spark) - j0 == 1
     got = pd.read_csv(out)
     assert list(got.columns) == ["k", "v", "d"]
     assert list(got.k) == list(range(N_ROWS - 1, -1, -1))

@@ -662,26 +662,34 @@ def test_restart_probe_range_does_not_drop_the_replay(spark, tmp_path):
 
 
 def _run_bounded(
-    spark, root, out, ckpt, opts, stop_rows, max_batches=None, timeout=120
+    spark, root, out, ckpt, opts, landed, stop_rows, max_batches=None,
+    timeout=120,
 ):
     """Run a rate-limited table_stream with a foreachBatch parquet sink
-    until ``stop_rows`` rows were emitted (or ``max_batches`` non-empty
-    batches landed — the mid-catch-up crash point); returns the non-empty
-    batch sizes."""
+    until ``landed`` holds ``stop_rows`` rows (or ``max_batches`` non-empty
+    batches landed in this run — the mid-catch-up crash point).
+
+    ``landed`` maps batch id to rows and is shared by every run of one
+    stream. The sink is idempotent: batch N overwrites
+    ``out/batch_id=N``, so a stop that lands mid-write, and the replay of
+    batch N after a restart, leave it once and count it once, while a
+    version re-emitted under a NEW batch id still lands twice. Readers
+    drop the ``batch_id`` partition column."""
     import time
 
     reader = spark.readStream.format("table_stream").option("root", root)
     for k, v in opts.items():
         reader = reader.option(k, v)
-    sizes = []
+    this_run = []
 
     def sink(batch_df, batch_id):
         rows = batch_df.collect()
         if rows:
             batch_df.sparkSession.createDataFrame(
                 rows, batch_df.schema
-            ).write.mode("append").parquet(out)
-            sizes.append(len(rows))
+            ).write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
+            landed[batch_id] = len(rows)
+            this_run.append(batch_id)
 
     q = (
         reader.load()
@@ -693,14 +701,13 @@ def _run_bounded(
     try:
         deadline = time.time() + timeout
         while time.time() < deadline:
-            if sum(sizes) >= stop_rows:
+            if sum(landed.values()) >= stop_rows:
                 break
-            if max_batches is not None and len(sizes) >= max_batches:
+            if max_batches is not None and len(this_run) >= max_batches:
                 break
             time.sleep(0.1)
     finally:
         q.stop()
-    return sizes
 
 
 def test_double_restart_mid_catchup_exactly_once(spark, tmp_path):
@@ -721,16 +728,16 @@ def test_double_restart_mid_catchup_exactly_once(spark, tmp_path):
     adm = str(tmp_path / "adm")
     os.makedirs(out)
     opts = {"max_versions_per_batch": "1", "admission_dir": adm}
-    all_sizes = []
+    landed = {}
     # run 1: crash after ~3 bounded batches; runs 2-3: restart mid-backlog
-    all_sizes += _run_bounded(spark, t.root, out, ckpt, opts, 12, 3)
-    all_sizes += _run_bounded(spark, t.root, out, ckpt, opts, 12, 3)
-    all_sizes += _run_bounded(
-        spark, t.root, out, ckpt, opts, 12 - sum(all_sizes)
+    _run_bounded(spark, t.root, out, ckpt, opts, landed, 12, 3)
+    _run_bounded(spark, t.root, out, ckpt, opts, landed, 12, 3)
+    _run_bounded(spark, t.root, out, ckpt, opts, landed, 12)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out).drop("batch_id").collect()
     )
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
     assert got == [(i, f"d{i}") for i in range(12)]  # exactly once
-    assert max(all_sizes) <= 1  # every batch bounded, restarts included
+    assert max(landed.values()) <= 1  # every batch bounded, restarts too
 
 
 def test_restart_without_admission_dir_is_unbounded_but_safe(
@@ -750,14 +757,17 @@ def test_restart_without_admission_dir_is_unbounded_but_safe(
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     os.makedirs(out)
     opts = {"max_versions_per_batch": "2"}
-    _run_bounded(spark, t.root, out, ckpt, opts, 5)
+    landed = {}
+    _run_bounded(spark, t.root, out, ckpt, opts, landed, 5)
     for i in range(5, 11):
         t.append(spark.createDataFrame([(i, f"d{i}")], "id long, s string"))
-    sizes = _run_bounded(spark, t.root, out, ckpt, opts, 6)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    _run_bounded(spark, t.root, out, ckpt, opts, landed, 11)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out).drop("batch_id").collect()
+    )
     assert got == [(i, f"d{i}") for i in range(11)]  # exactly once
     # safe fallback shape: one head catch-up batch, nothing duplicated
-    assert sum(sizes) == 6
+    assert sum(landed.values()) == 11
 
 
 def test_max_bytes_per_trigger_bounds_by_size(spark, tmp_path):
@@ -790,11 +800,14 @@ def test_max_bytes_per_trigger_bounds_by_size(spark, tmp_path):
         "max_bytes_per_trigger": str(int(2.5 * one)),
         "admission_dir": str(tmp_path / "adm"),
     }
-    sizes = _run_bounded(spark, t.root, out, ckpt, opts, 9)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    landed = {}
+    _run_bounded(spark, t.root, out, ckpt, opts, landed, 9)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out).drop("batch_id").collect()
+    )
     assert got == [(i, f"d{i}") for i in range(9)]  # exactly once
-    assert max(sizes) <= 2  # ~2 versions per byte budget, never the lot
-    assert len(sizes) >= 4
+    assert max(landed.values()) <= 2  # ~2 versions per byte budget
+    assert len(landed) >= 4
 
 
 def test_drain_bounded_catchup_and_incremental_reuse(spark, tmp_path):
