@@ -282,17 +282,17 @@ def knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
+        load_index,
         pq_knn,
-        save_pq_index,
+        save_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _N_QUERIES)
     scratch = tempfile.mkdtemp(prefix="hvmdp_pq_index_")
     try:
-        save_pq_index(build_pq_index(emb), os.path.join(scratch, "pq"))
-        loaded = load_pq_index(spark, os.path.join(scratch, "pq"))
+        save_index(build_pq_index(emb), os.path.join(scratch, "pq"))
+        loaded = load_index(spark, os.path.join(scratch, "pq"))
         ann = pq_knn(q, emb, k=_K, index=loaded)
         # recall twin: ranking-only, the Arrow scorer is safe (not hashed)
         exact = brute_force_knn(q, emb, k=_K, vectorized=True)

@@ -683,16 +683,12 @@ def _two_batch_arrivals(arriving: DataFrame, scratch: str) -> str:
     return arrivals
 
 
-@query(
-    "stream_pq_index_ingest",
-    oracle=_INGEST_ORACLE.format(build_op="PQ_CODED", append_op="PQ_APPEND"),
-)
-def stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous vector-store ingestion
-    (streaming/vector_ingest.stream_append_pq_index): train + persist a
-    PQ index on the first 300 embeddings, stream the rest in two
-    micro-batches (each an atomic versioned append encoded with the
-    STORED codebooks — FAISS train/add separation), then search the
+def _index_ingest(spark: SparkSession, sf_dir: str, build, search) -> DataFrame:
+    """The body of the ``stream_*_index_ingest`` rows: train + persist
+    ``build(seed)`` on the first 300 embeddings, stream the rest in two
+    micro-batches through ``vector_ingest.stream_append_index`` (each an
+    atomic versioned append encoded with the STORED model — FAISS
+    train/add separation), then ``search(queries, corpus, index)`` the
     final loaded index. Returns one row per index version (operation +
     coded-table cardinality at that version) plus a searched-rows
     summary row — the commit trail IS the contract: v0 build, one append
@@ -707,32 +703,30 @@ def stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from high_volume_market_data_pipeline_spark.catalog import load_table
     from high_volume_market_data_pipeline_spark.similarity import (
-        build_pq_index,
-        load_pq_index,
-        pq_knn,
-        save_pq_index,
+        load_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.sinks.history import (
         VersionedParquetTable,
     )
     from high_volume_market_data_pipeline_spark.streaming.vector_ingest import (
-        stream_append_pq_index,
+        stream_append_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     seed = emb.filter(F.col("vec_id") < 300)
     arriving = emb.filter(F.col("vec_id") >= 300)
-    scratch = tempfile.mkdtemp(prefix="hvmdp_vec_ingest_")
+    scratch = tempfile.mkdtemp(prefix="hvmdp_index_ingest_")
     try:
-        root = os.path.join(scratch, "pq")
-        save_pq_index(build_pq_index(seed, n_codes=16), root)
+        root = os.path.join(scratch, "index")
+        save_index(build(seed), root)
         arrivals = _two_batch_arrivals(arriving, scratch)
         sdf = (
             spark.readStream.schema(arriving.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(arrivals)
         )
-        q = stream_append_pq_index(
+        q = stream_append_index(
             sdf, root, checkpoint=os.path.join(scratch, "ckpt")
         )
         q.awaitTermination()
@@ -750,13 +744,10 @@ def stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for r in coded_tbl.history(spark).collect()
         ]
-        idx = load_pq_index(spark, root)
-        searched = pq_knn(
+        searched = search(
             emb.filter(F.col("vec_id") >= 300).limit(5),
             emb,
-            k=3,
-            n_codes=16,
-            index=idx,
+            load_index(spark, root),
         ).count()
         out = spark.createDataFrame(
             [(v, op, n) for v, op, n in versions]
@@ -769,89 +760,48 @@ def stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
+    "stream_pq_index_ingest",
+    oracle=_INGEST_ORACLE.format(build_op="PQ_CODED", append_op="PQ_APPEND"),
+)
+def stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Continuous vector-store ingestion into a PQ index: each micro-batch
+    is encoded with the STORED codebooks (``_index_ingest``)."""
+    from high_volume_market_data_pipeline_spark.similarity import (
+        build_pq_index,
+        pq_knn,
+    )
+
+    return _index_ingest(
+        spark,
+        sf_dir,
+        lambda seed: build_pq_index(seed, n_codes=16),
+        lambda q, emb, idx: pq_knn(q, emb, k=3, n_codes=16, index=idx),
+    )
+
+
+@query(
     "stream_ivf_index_ingest",
     oracle=_INGEST_ORACLE.format(
         build_op="IVF_CODED", append_op="IVF_APPEND"
     ),
 )
 def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous ingestion into the CELL-PARTITIONED IVF index
-    (streaming/vector_ingest.stream_append_index, family='ivf'): train +
-    persist on the first 300 embeddings, stream the rest in two
-    micro-batches — each batch is assigned to STORED centroids (no
-    refit) and CAS-committed as a hive-partitioned delta onto the coded
-    table, so the storage-pruned search family keeps its layout through
-    continuous ingest. Returns the commit trail (operation + coded
-    cardinality per version) plus a searched-rows summary row, like the
-    PQ twin.
-
-    Full oracle: md5-bucketed micro-batch membership
-    (``_two_batch_arrivals``) makes the commit trail SQL-replayable."""
-    import shutil
-    import tempfile
-
-    from high_volume_market_data_pipeline_spark.catalog import load_table
+    """Continuous ingestion into the CELL-PARTITIONED IVF index: each
+    micro-batch is assigned to STORED centroids (no refit) and
+    CAS-committed as a hive-partitioned delta onto the coded table, so
+    the storage-pruned search family keeps its layout through continuous
+    ingest (``_index_ingest``)."""
     from high_volume_market_data_pipeline_spark.similarity import (
         build_ivf_index,
         ivf_knn,
-        load_ivf_index,
-        save_ivf_index,
-    )
-    from high_volume_market_data_pipeline_spark.sinks.history import (
-        VersionedParquetTable,
-    )
-    from high_volume_market_data_pipeline_spark.streaming.vector_ingest import (
-        stream_append_index,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    seed = emb.filter(F.col("vec_id") < 300)
-    arriving = emb.filter(F.col("vec_id") >= 300)
-    scratch = tempfile.mkdtemp(prefix="hvmdp_ivf_ingest_")
-    try:
-        root = os.path.join(scratch, "ivf")
-        save_ivf_index(build_ivf_index(seed, n_cells=8), root)
-        arrivals = _two_batch_arrivals(arriving, scratch)
-        sdf = (
-            spark.readStream.schema(arriving.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(arrivals)
-        )
-        q = stream_append_index(
-            sdf, root, checkpoint=os.path.join(scratch, "ckpt"),
-            family="ivf",
-        )
-        q.awaitTermination()
-
-        coded_tbl = VersionedParquetTable(os.path.join(root, "coded"))
-        # Per-version cardinality from the manifest's n_rows (parquet
-        # footers summed at commit time) — one metadata probe per version
-        # instead of a chain-union read + count() Spark job per version
-        # (3 jobs here; equal values by construction, see row_count).
-        versions = [
-            (
-                int(r["version"]),
-                r["operation"],
-                coded_tbl.row_count(spark, version=int(r["version"])),
-            )
-            for r in coded_tbl.history(spark).collect()
-        ]
-        idx = load_ivf_index(spark, root)
-        searched = ivf_knn(
-            emb.filter(F.col("vec_id") >= 300).limit(5),
-            emb,
-            k=3,
-            n_cells=8,
-            index=idx,
-        ).count()
-        out = spark.createDataFrame(
-            [(v, op, n) for v, op, n in versions]
-            + [(-1, "SEARCHED_ROWS", searched)],
-            "version long, operation string, n_rows long",
-        ).orderBy("version")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    return _index_ingest(
+        spark,
+        sf_dir,
+        lambda seed: build_ivf_index(seed, n_cells=8),
+        lambda q, emb, idx: ivf_knn(q, emb, k=3, n_cells=8, index=idx),
+    )
 
 
 @query(

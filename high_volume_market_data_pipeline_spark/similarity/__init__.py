@@ -1,17 +1,11 @@
 """Similarity search over embedding columns (driver north-star extension)."""
 
 from high_volume_market_data_pipeline_spark.similarity.index_store import (
-    append_to_ivf_index,
-    append_to_ivf_pq_index,
-    append_to_pq_index,
+    append_to_index,
     delete_from_index,
-    load_ivf_index,
-    load_ivf_pq_index,
-    load_pq_index,
+    load_index,
     purge_deleted,
-    save_ivf_index,
-    save_ivf_pq_index,
-    save_pq_index,
+    save_index,
 )
 from high_volume_market_data_pipeline_spark.similarity.knn import (
     IVFIndex,
@@ -32,9 +26,7 @@ from high_volume_market_data_pipeline_spark.similarity.knn import (
 )
 
 __all__ = [
-    "append_to_ivf_index",
-    "append_to_ivf_pq_index",
-    "append_to_pq_index",
+    "append_to_index",
     "IVFIndex",
     "IVFPQIndex",
     "PQIndex",
@@ -46,16 +38,12 @@ __all__ = [
     "fit_pq_codebooks",
     "ivf_knn",
     "ivf_pq_knn",
-    "load_ivf_index",
-    "load_ivf_pq_index",
-    "load_pq_index",
+    "load_index",
     "lsh_bucketed_knn",
     "pq_encode",
     "pq_knn",
     "purge_deleted",
     "random_hyperplane_buckets",
-    "save_ivf_index",
-    "save_ivf_pq_index",
-    "save_pq_index",
+    "save_index",
     "with_recall_at_k",
 ]

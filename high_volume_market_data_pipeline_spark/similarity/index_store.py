@@ -13,10 +13,16 @@ from any number of later sessions. This module writes each index as two
 
 — so an index update is a new VERSION (history/time-travel/vacuum apply
 verbatim: a nightly re-encode commits atomically while readers keep the
-old version), and ``load_*_index`` rebuilds the exact NamedTuple in a
+old version), and ``load_index`` rebuilds the exact NamedTuple in a
 fresh session. Model tables are a few thousand rows (n_cells + m·k) —
 collect is metadata-scale by construction; the coded table is never
 collected, it is read as parquet like any corpus.
+
+The family is never named by a caller: ``save_index``, ``load_index``
+and ``append_to_index`` read it from which model arrays exist
+(``_family``) — centroids alone are IVF (coded table partitioned by
+cell), codebooks alone are PQ, both are IVF-PQ — so a caller cannot
+append with a rule that disagrees with the stored model.
 
 No reference counterpart (beyond-reference ANN surface); the versioned
 commit machinery is sinks/history.py's Delta-emulation layer.
@@ -34,9 +40,8 @@ from high_volume_market_data_pipeline_spark.similarity.knn import (
     IVFIndex,
     IVFPQIndex,
     PQIndex,
-    _assign_cells,
     _corpus,
-    pq_encode,
+    _encode,
 )
 from high_volume_market_data_pipeline_spark.sinks.history import (
     ConcurrentCommitError,
@@ -126,23 +131,6 @@ def _load_model_arrays(
     return centroids, codebooks
 
 
-def _save_coded(
-    index_coded,
-    root: str,
-    operation: str,
-    parameters: dict | None = None,
-    version: int | None = None,
-    partition_by: str | None = None,
-) -> int:
-    return VersionedParquetTable(os.path.join(root, "coded")).write(
-        index_coded,
-        operation,
-        parameters or {},
-        version=version,
-        partition_by=partition_by,
-    )
-
-
 def _load_coded(spark: SparkSession, root: str, version: int | None = None):
     """The coded corpus at ``version`` MINUS tombstoned ids (see
     ``delete_from_index``): every loader/search and the append-side
@@ -198,7 +186,7 @@ def delete_from_index(spark: SparkSession, root: str, ids) -> int:
     O(deleted ids) — never a rewrite of a 100M-vector corpus. The rows
     stay physically present until ``purge_deleted`` (compaction-time
     filter, matching the chain-absorption design); re-appending a
-    tombstoned id clears its tombstone (``_commit_append``).
+    tombstoned id clears its tombstone (``append_to_index``).
 
     ``ids``: a DataFrame whose FIRST column is the id, or an iterable of
     ints. Returns the committed tombstone-table version.
@@ -272,7 +260,7 @@ def purge_deleted(spark: SparkSession, root: str) -> int | None:
     paired version, or None if the index has no active tombstones. Like a
     re-train, a purge must not run concurrently with appenders (it is a
     maintenance-window operation; the same quiescing contract as
-    save_*_index) — the append path's auto-purge honors that by running
+    save_index) — the append path's auto-purge honors that by running
     purge post-commit and treating a lost commit race as "skip, retry at
     a later append" (see ``_maybe_auto_purge``)."""
     t = _tombstone_table(root)
@@ -282,7 +270,7 @@ def purge_deleted(spark: SparkSession, root: str) -> int | None:
     if tomb_n == 0:
         return None
     dead = t.read(spark, version=tomb_v)
-    model_v, coded_head, target = _append_coords(root)
+    model_v, coded_head, target = _paired_versions(root)
     coded_t = VersionedParquetTable(os.path.join(root, "coded"))
     head_m = coded_t._resolve(coded_head, None)
     kept = coded_t.read(spark, version=coded_head).join(
@@ -349,18 +337,6 @@ def purge_deleted(spark: SparkSession, root: str) -> int | None:
 _AUTO_PURGE_TOMBSTONE_FRACTION = 0.1
 
 
-def _coded_head_rows(
-    spark: SparkSession, root: str, coded_head: int
-) -> int:
-    """Physical row count of the coded corpus at ``coded_head`` — from
-    the manifest's ``n_rows`` (metadata probe) when recorded, else one
-    count() for tables written before n_rows existed (their next commit
-    through write()/fold records it and retires the fallback)."""
-    return VersionedParquetTable(os.path.join(root, "coded")).row_count(
-        spark, version=coded_head
-    )
-
-
 def _maybe_auto_purge(spark: SparkSession, root: str) -> "int | None":
     """Run ``purge_deleted`` when the active-tombstone fraction crosses
     ``_AUTO_PURGE_TOMBSTONE_FRACTION``. Called from the append commit
@@ -373,45 +349,18 @@ def _maybe_auto_purge(spark: SparkSession, root: str) -> "int | None":
     _, n_dead = _tombstone_head_count(spark, t)
     if n_dead == 0:
         return None
-    _, coded_head, _ = _append_coords(root)
-    n_corpus = _coded_head_rows(spark, root, coded_head)
+    # the manifest's n_rows (a metadata probe); tables written before
+    # n_rows existed fall back to one count()
+    _, coded_head, _ = _paired_versions(root)
+    n_corpus = VersionedParquetTable(os.path.join(root, "coded")).row_count(
+        spark, version=coded_head
+    )
     if n_dead < _AUTO_PURGE_TOMBSTONE_FRACTION * max(n_corpus, 1):
         return None
     try:
         return purge_deleted(spark, root)
     except ConcurrentCommitError:
         return None  # a rival commit owns the next version; retry later
-
-
-def _pin_version(root: str, version: int | None) -> int | None:
-    """Resolve the version BOTH tables are loaded at. An explicit version
-    passes through (missing pieces raise, as they should). ``None`` pins
-    to the NEWEST VERSION PRESENT IN BOTH TABLES: the two commits in
-    save_*/append_* are not one transaction, so a crash or lost commit
-    race between them can leave the tables diverged — and a head-of-each
-    load would then pair NEW model arrays with the OLD coded table (for
-    a rebuild, codes decoded against the wrong codebooks: silently wrong
-    neighbors, not an error). The set intersection, not min(heads),
-    because crash sequences can leave HOLES: a crashed re-train (model
-    head = N+1) followed by an append that died between its coded and
-    model commits leaves coded versions {…, N, N+2} — min(heads) = N+1
-    names a coded version that never existed and every head load would
-    raise until the next successful append."""
-    if version is not None:
-        return version
-    mv = set(VersionedParquetTable(os.path.join(root, "model")).versions())
-    cv = set(VersionedParquetTable(os.path.join(root, "coded")).versions())
-    if not mv or not cv:
-        return None  # let the table read raise its own not-found error
-    paired = mv & cv
-    if not paired:
-        # both tables exist but share no version — loading head-of-each
-        # would pair codes with the wrong model, silently
-        raise FileNotFoundError(
-            f"no paired (model, coded) version at {root}: "
-            f"model has {sorted(mv)}, coded has {sorted(cv)}"
-        )
-    return max(paired)
 
 
 def _clear_tombstones_for(spark: SparkSession, root: str, delta) -> None:
@@ -468,34 +417,44 @@ _APPEND_RETRIES = 5
 _CODED_MAX_CHAIN = 16
 
 
-def _append_coords(root: str) -> tuple[int, int, int]:
-    """(model_load_version, coded_head, cas_target) for one append attempt.
+def _paired_versions(root: str) -> tuple[int, int, int]:
+    """(newest paired version, coded head, version past both heads): the
+    version readers pin to, and an append's model version, merge base
+    and CAS target.
+
+    The paired version is the NEWEST VERSION PRESENT IN BOTH TABLES: the
+    model and coded commits of a save or an append are not one
+    transaction, so a crash or lost commit race between them can leave
+    the tables diverged — and a head-of-each load would then pair NEW
+    model arrays with the OLD coded table (for a rebuild, codes decoded
+    against the wrong codebooks: silently wrong neighbors, not an
+    error). The set intersection, not min(heads), because crash
+    sequences can leave HOLES: a crashed re-train (model head = N+1)
+    followed by an append that died between its coded and model commits
+    leaves coded versions {…, N, N+2} — min(heads) = N+1 names a coded
+    version that never existed: every head load would raise until the
+    next successful append, and an append would encode its delta with
+    the orphan model and re-commit it as paired, silently.
 
     The merge base for an append is the CODED HEAD — never the paired
-    version a reader would pin to — because the coded chain is what two
-    appenders race on: deriving from anything older silently drops the
-    other writer's rows at commit time (the classic lost update). Model
-    arrays load at the newest PAIRED version — max(model ∩ coded), the
-    exact resolution ``_pin_version`` uses — NOT min(heads): a crashed
-    re-train (orphan model at N+1) followed by a crashed append (coded
-    {…, N, N+2}) makes min(heads) = N+1 select the orphan model, and an
-    append would then encode its delta with codebooks never paired with
-    the existing coded chain AND re-commit them as the paired model —
-    every pre-existing code would decode against the wrong codebooks
-    from then on, silently. The CAS target sits past BOTH heads so a
-    crashed re-train's orphan model version can never collide with an
-    append's pairing commit."""
+    version — because the coded chain is what two appenders race on:
+    deriving from anything older silently drops the other writer's rows
+    at commit time (the classic lost update). The CAS target sits past
+    BOTH heads so a crashed re-train's orphan model version can never
+    collide with an append's pairing commit."""
     mv = set(VersionedParquetTable(os.path.join(root, "model")).versions())
     cv = set(VersionedParquetTable(os.path.join(root, "coded")).versions())
     if not mv or not cv:
         raise FileNotFoundError(f"no persisted index at {root}")
     paired = mv & cv
     if not paired:
+        # both tables exist but share no version — loading head-of-each
+        # would pair codes with the wrong model, silently
         raise FileNotFoundError(
             f"no paired (model, coded) version at {root}: "
             f"model has {sorted(mv)}, coded has {sorted(cv)}"
         )
-    return max(paired), max(cv), max(max(mv), max(cv)) + 1
+    return max(paired), max(cv), max(mv | cv) + 1
 
 
 _DELTA_FILES = 4
@@ -512,7 +471,7 @@ def _append_coded(
 
     The delta is coalesced to ``_DELTA_FILES`` partitions first: an
     append is micro-batch-scale by contract (bulk loads go through the
-    save_* full snapshots, which keep natural parallelism), but a
+    save_index full snapshots, which keep natural parallelism), but a
     parallelism-width write turns a 500-row delta into 32 files and every
     LATER READ of the chain pays scan-task fan-out per delta dir —
     BENCH_CHAIN_r08 measures the one-file curve at ~4x less per-dir read
@@ -525,59 +484,147 @@ def _append_coded(
     )
 
 
-def _commit_append(
+def _family(
+    centroids: "np.ndarray | None", codebooks: "np.ndarray | None"
+) -> tuple[str, dict]:
+    """(operation prefix, model parameters) of the family the model
+    arrays make: centroids alone are IVF, codebooks alone PQ, both
+    IVF-PQ. The prefix names every commit (``_MODEL``, ``_CODED``,
+    ``_APPEND``)."""
+    params = {}
+    if centroids is not None:
+        params["n_cells"] = len(centroids)
+    if codebooks is not None:
+        m, n_codes, _ = codebooks.shape
+        params.update(m_subspaces=m, n_codes=n_codes)
+    if codebooks is None:
+        return "IVF", params
+    return ("PQ" if centroids is None else "IVF_PQ"), params
+
+
+def save_index(index: "IVFIndex | PQIndex | IVFPQIndex", root: str) -> int:
+    """Commit a built index (model arrays, then the coded table) as a new
+    paired version under ``root``; returns the committed coded-table
+    version. A re-train is just another save: readers pinned to an old
+    version keep it, but appenders must be quiesced first (the FAISS
+    offline-retrain contract).
+
+    The IVF families' coded tables are written PARTITIONED BY cell — the
+    disk layout the IVF argument rests on: a search probes n_probe cells,
+    and with cells as hive partitions the probe equi-join prunes
+    unprobed partitions at the scan (the "cells map to prunable storage
+    units" regime where growing n_cells actually pays — see ivf_knn's
+    sizing rule; pruning pinned in tests/test_index_store.py)."""
+    centroids = getattr(index, "centroids", None)
+    codebooks = getattr(index, "codebooks", None)
+    family, params = _family(centroids, codebooks)
+    _save_model_arrays(
+        index.coded.sparkSession, root, f"{family}_MODEL", params,
+        centroids=centroids, codebooks=codebooks,
+    )
+    return VersionedParquetTable(os.path.join(root, "coded")).write(
+        index.coded,
+        f"{family}_CODED",
+        {},
+        partition_by="cell" if centroids is not None else None,
+    )
+
+
+def load_index(
+    spark: SparkSession, root: str, version: int | None = None
+) -> "IVFIndex | PQIndex | IVFPQIndex":
+    """The index at ``version`` (default: the newest paired version) as
+    the NamedTuple its stored model arrays make, with the coded table in
+    the build's column order — partitioned reads surface ``cell`` LAST,
+    so loaded and live indexes are one schema."""
+    if version is None:
+        version = _paired_versions(root)[0]
+    centroids, codebooks = _load_model_arrays(spark, root, version)
+    coded = _load_coded(spark, root, version)
+    if codebooks is None:
+        return IVFIndex(centroids, coded.select("neighbor_id", "cv", "cell"))
+    if centroids is None:
+        return PQIndex(codebooks, coded)
+    return IVFPQIndex(
+        centroids, codebooks, coded.select("neighbor_id", "cell", "pq_codes")
+    )
+
+
+def append_to_index(
     spark: SparkSession,
     root: str,
-    operation: str,
-    derive,
-    partition_by: str | None = None,
-):
-    """Optimistic-concurrency append (the Delta commit-loop shape):
+    new_vectors,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    skip_existing_ids: bool = True,
+) -> int:
+    """FAISS ``add()``: encode NEW vectors with the STORED model (no
+    refit — the whole point of train/add separation; the same
+    ``knn._encode`` rule a build runs) and commit them as a new paired
+    (model, coded) version. Returns the new coded-table version. Readers
+    pinned to an old version are untouched; model CONTENT never changes
+    on append, so appended codes are comparable to existing ones by
+    construction. Quantization error and cell balance drift only if the
+    corpus distribution drifts from the training sample; a periodic full
+    build + ``save_index`` is the re-train, committed as just another
+    version.
+
+    ``skip_existing_ids`` drops arrivals whose id is already coded (one
+    id-only anti-join) — at-least-once ingest converges instead of
+    double-coding, and it is also what makes a commit-race retry
+    idempotent.
+
+    Optimistic concurrency (the Delta commit-loop shape):
 
     1. read (model arrays at the paired version, coded table at its head)
-    2. ``derive(centroids, codebooks, coded) -> (delta_df, params)`` —
-       the NEW coded rows only, already anti-joined against ``coded``
+    2. encode the delta, anti-joined against the coded head
     3. CAS-append the delta at max(heads)+1 — an explicit version, so a
        racer that landed first raises ConcurrentCommitError here; the
        commit writes O(delta) bytes (parent files are referenced, not
        rewritten)
     4. re-commit the unchanged model at the same number (pairing)
 
-    A lost CAS re-reads the new head and re-derives; the id anti-join
-    in every derive makes the retry converge (already-appended ids drop
-    out). Appends therefore serialize against appends; a concurrent
-    RE-TRAIN (save_*_index) still requires quiescing appenders — that is
-    the FAISS offline-retrain contract and is documented on each append.
-    Commit order is coded-then-model: between the two commits readers'
-    ``_pin_version`` min() resolves to the old paired snapshot, so no
-    reader ever pairs new codes with absent model rows."""
+    A lost CAS re-reads the new head and re-derives (already-appended ids
+    drop out), so concurrent appenders serialize and no appender's rows
+    are ever dropped; a concurrent RE-TRAIN (``save_index``) still
+    requires quiescing appenders. Commit order is coded-then-model:
+    between the two commits readers' head loads resolve to the old
+    paired snapshot, so no reader ever pairs new codes with absent model
+    rows."""
     for _ in range(_APPEND_RETRIES):
-        model_v, coded_head, target = _append_coords(root)
+        model_v, coded_head, target = _paired_versions(root)
         centroids, codebooks = _load_model_arrays(spark, root, model_v)
-        # the RAW coded table (tombstoned rows included): the
-        # skip_existing_ids anti-join must treat a tombstoned-but-still-
-        # physical id as EXISTING, or re-appending it would commit a
-        # second physical row for the same id (revive below then makes
-        # both visible — a duplicate). A deleted id becomes re-insertable
-        # after purge_deleted removes its rows.
-        coded = VersionedParquetTable(os.path.join(root, "coded")).read(
-            spark, version=coded_head
+        family, params = _family(centroids, codebooks)
+        delta = _encode(
+            _corpus(new_vectors, id_col, vec_col), centroids, codebooks
         )
-        delta, params = derive(centroids, codebooks, coded)
+        if skip_existing_ids:
+            # the RAW coded table (tombstoned rows included): the
+            # anti-join must treat a tombstoned-but-still-physical id as
+            # EXISTING, or re-appending it would commit a second physical
+            # row for the same id (revive below then makes both visible —
+            # a duplicate). A deleted id becomes re-insertable after
+            # purge_deleted removes its rows.
+            coded = VersionedParquetTable(os.path.join(root, "coded")).read(
+                spark, version=coded_head
+            )
+            delta = delta.join(
+                coded.select("neighbor_id"), "neighbor_id", "left_anti"
+            )
         params = {**params, "parent_version": coded_head}
+        operation = f"{family}_APPEND"
         try:
             _append_coded(
                 delta, root, operation, params, version=target,
-                parent_version=coded_head, partition_by=partition_by,
+                parent_version=coded_head,
+                partition_by="cell" if centroids is not None else None,
             )
         except ConcurrentCommitError:
             continue  # another appender won this version; re-derive on head
-        # Pairing commit: the model content is UNCHANGED on an append (the
-        # whole point of train/add separation), so re-pair via a
-        # manifest-only commit referencing the paired version's files.
-        # Pre-r12 this re-ran createDataFrame + a full parquet write of
-        # the identical arrays — one pure-overhead Spark job per
-        # micro-batch on the streaming-ingest hot path (guide §1.2).
+        # Pairing commit: the model content is UNCHANGED on an append, so
+        # re-pair via a manifest-only commit referencing the paired
+        # version's files — a full rewrite of the identical arrays would
+        # be one pure-overhead Spark job per streaming micro-batch.
         VersionedParquetTable(os.path.join(root, "model")).commit_ref(
             operation, params, version=target, parent_version=model_v
         )
@@ -588,193 +635,3 @@ def _commit_append(
         f"append at {root} lost {_APPEND_RETRIES} consecutive commit "
         "races; contention is too high for optimistic retry"
     )
-
-
-# -- public save/load per family -------------------------------------------
-
-
-def save_ivf_index(index: IVFIndex, root: str) -> int:
-    """Returns the committed coded-table version. The inverted lists are
-    written PARTITIONED BY cell — the disk layout the whole IVF family
-    argument rests on: a search probes n_probe cells, and with cells as
-    hive partitions the probe equi-join prunes unprobed partitions at
-    the scan (the "cells map to prunable storage units" regime where
-    growing n_cells actually pays — see ivf_knn's sizing rule; pruning
-    pinned in tests/test_index_store.py)."""
-    spark = index.coded.sparkSession
-    _save_model_arrays(
-        spark,
-        root,
-        "IVF_MODEL",
-        {"n_cells": len(index.centroids)},
-        centroids=index.centroids,
-    )
-    return _save_coded(index.coded, root, "IVF_CODED", partition_by="cell")
-
-
-def load_ivf_index(
-    spark: SparkSession, root: str, version: int | None = None
-) -> IVFIndex:
-    version = _pin_version(root, version)
-    centroids, _ = _load_model_arrays(spark, root, version)
-    # partitioned reads surface the partition column LAST — restore the
-    # build-side column order so loaded and live indexes are one schema
-    coded = _load_coded(spark, root, version).select(
-        "neighbor_id", "cv", "cell"
-    )
-    return IVFIndex(centroids, coded)
-
-
-def save_pq_index(index: PQIndex, root: str) -> int:
-    spark = index.coded.sparkSession
-    m, n_codes, _ = index.codebooks.shape
-    _save_model_arrays(
-        spark,
-        root,
-        "PQ_MODEL",
-        {"m_subspaces": m, "n_codes": n_codes},
-        codebooks=index.codebooks,
-    )
-    return _save_coded(index.coded, root, "PQ_CODED")
-
-
-def load_pq_index(
-    spark: SparkSession, root: str, version: int | None = None
-) -> PQIndex:
-    version = _pin_version(root, version)
-    _, codebooks = _load_model_arrays(spark, root, version)
-    return PQIndex(codebooks, _load_coded(spark, root, version))
-
-
-def save_ivf_pq_index(index: IVFPQIndex, root: str) -> int:
-    spark = index.coded.sparkSession
-    m, n_codes, _ = index.codebooks.shape
-    _save_model_arrays(
-        spark,
-        root,
-        "IVF_PQ_MODEL",
-        {
-            "n_cells": len(index.centroids),
-            "m_subspaces": m,
-            "n_codes": n_codes,
-        },
-        centroids=index.centroids,
-        codebooks=index.codebooks,
-    )
-    return _save_coded(
-        index.coded, root, "IVF_PQ_CODED", partition_by="cell"
-    )
-
-
-def load_ivf_pq_index(
-    spark: SparkSession, root: str, version: int | None = None
-) -> IVFPQIndex:
-    version = _pin_version(root, version)
-    centroids, codebooks = _load_model_arrays(spark, root, version)
-    coded = _load_coded(spark, root, version).select(
-        "neighbor_id", "cell", "pq_codes"
-    )
-    return IVFPQIndex(centroids, codebooks, coded)
-
-
-def append_to_ivf_index(
-    spark: SparkSession,
-    root: str,
-    new_vectors,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    skip_existing_ids: bool = True,
-) -> int:
-    """FAISS ``add()`` for the IVF index: assign new vectors to their
-    nearest STORED centroid (no re-fit) and commit the grown inverted
-    lists as a new paired (model, coded) version. Same replay contract
-    as append_to_pq_index. Cell balance degrades only if the data
-    distribution drifts; re-train offline via build_ivf_index + save."""
-    def derive(centroids, codebooks, coded):
-        new_rows = _assign_cells(_corpus(new_vectors, id_col, vec_col), centroids)
-        if skip_existing_ids:
-            new_rows = new_rows.join(
-                coded.select("neighbor_id"), "neighbor_id", "left_anti"
-            )
-        return new_rows, {"n_cells": len(centroids)}
-
-    return _commit_append(spark, root, "IVF_APPEND", derive, partition_by="cell")
-
-
-def append_to_ivf_pq_index(
-    spark: SparkSession,
-    root: str,
-    new_vectors,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    skip_existing_ids: bool = True,
-) -> int:
-    """FAISS ``add()`` for IVF-PQ: assign to the nearest stored centroid,
-    PQ-encode the CELL RESIDUAL with the stored codebooks (the exact
-    encode rule build_ivf_pq_index applies), commit as a new paired
-    version."""
-
-    def derive(centroids, codebooks, coded):
-        resid = _assign_cells(
-            _corpus(new_vectors, id_col, vec_col), centroids, residual=True
-        )
-        new_coded = pq_encode(
-            resid, codebooks, vec_col="resid", normalize=False
-        ).select("neighbor_id", "cell", "pq_codes")
-        if skip_existing_ids:
-            new_coded = new_coded.join(
-                coded.select("neighbor_id"), "neighbor_id", "left_anti"
-            )
-        m, n_codes, _ = codebooks.shape
-        return new_coded, {
-            "n_cells": len(centroids),
-            "m_subspaces": m,
-            "n_codes": n_codes,
-        }
-
-    return _commit_append(
-        spark, root, "IVF_PQ_APPEND", derive, partition_by="cell"
-    )
-
-
-def append_to_pq_index(
-    spark: SparkSession,
-    root: str,
-    new_vectors,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    skip_existing_ids: bool = True,
-) -> int:
-    """FAISS ``add()``: encode NEW vectors with the STORED codebooks (no
-    refit — the whole point of train/add separation) and CAS-commit the
-    union as a new paired (model, coded) version via ``_commit_append``.
-    Readers pinned to an old version are untouched; codebook CONTENT
-    never changes on append (same codebooks ⇒ appended codes are
-    comparable to existing ones by construction). Concurrent appenders
-    serialize — a lost commit race re-derives from the winner's head, so
-    no appender's rows are ever dropped; a concurrent RE-TRAIN
-    (``save_pq_index``) still requires quiescing appenders first.
-
-    ``skip_existing_ids`` drops arrivals whose id is already coded (one
-    id-only anti-join — at-least-once ingest converges instead of
-    double-coding, and it is also what makes a commit-race retry
-    idempotent). Quantization error drifts only if the corpus
-    distribution drifts from the training sample; a periodic full
-    ``build_pq_index`` + save is the re-train, committed as just another
-    version. Returns the new coded-table version."""
-
-    def derive(centroids, codebooks, coded):
-        new_coded = pq_encode(
-            _corpus(new_vectors, id_col, vec_col), codebooks, vec_col="cv"
-        ).select("neighbor_id", "pq_codes")
-        if skip_existing_ids:
-            new_coded = new_coded.join(
-                coded.select("neighbor_id"), "neighbor_id", "left_anti"
-            )
-        m, n_codes, _ = codebooks.shape
-        return new_coded, {
-            "m_subspaces": m,
-            "n_codes": n_codes,
-        }
-
-    return _commit_append(spark, root, "PQ_APPEND", derive)

@@ -22,9 +22,10 @@ The families differ only in their candidate stage:
   exact cosine on full vectors);
 - ``ivf_pq_knn``: probed cells scored by residual ADC, then ``_rerank``.
 
-Index builds share the one Lloyd loop (``_lloyd``) and the one
-nearest-centroid assignment (``_assign_cells``, also used by the
-index_store appends so build and append place a vector identically).
+Index builds share the one Lloyd loop (``_lloyd``) and the one encode
+rule (``_encode``: nearest-centroid cell, PQ code, or both on the cell
+residual), also run by the index_store append so build and append place
+and code a vector identically.
 Unit vectors have one rule, numpy ``_normalize_rows``, on every fit,
 build, append and query path: the Spark-expression form measured no
 faster on the builds, and as the input of the assignment pandas UDF on
@@ -338,7 +339,7 @@ def _cell_candidates(
 
     The probed-cell set is known driver-side, so it is also pushed as a
     STATIC IN-filter ahead of the join: on a persisted index (coded table
-    hive-partitioned by cell — save_ivf_index) this becomes a
+    hive-partitioned by cell — index_store.save_index) this becomes a
     PartitionFilter at the scan and unprobed cells are never read — the
     storage regime where growing n_cells genuinely pays (see ivf_knn's
     sizing rule). Logically redundant with the equi-join; harmless on an
@@ -820,8 +821,7 @@ def _assign_cells(
     df: DataFrame, centroids: "np.ndarray", residual: bool = False
 ) -> DataFrame:
     """Append ``cell`` = index of the centroid nearest to the unit vector
-    of ``cv`` — the one assignment index builds AND index_store appends
-    run, so an appended vector lands where a build would put it. With
+    of ``cv`` (the assignment inside ``_encode``). With
     ``residual``, also append ``resid`` = unit vector − its centroid (what
     IVF-PQ quantizes). One Arrow batch matmul per task; the centroid
     matrix rides the closure (model-scale)."""
@@ -870,13 +870,13 @@ def build_ivf_index(
     The fit is the driver-side deterministic numpy k-means
     (``_fit_coarse``) over the collected sample — driver-sized BY DESIGN
     (points_per_cell · n_cells ≈ thousands of rows, and bounded).
-    Assignment of the FULL corpus stays distributed (``_assign_cells``,
-    the same kernel the append path runs)."""
+    Assignment of the FULL corpus stays distributed (``_encode``, the
+    same rule the append path runs)."""
     # Persisted: the sample collect reads the corpus once and the
     # inverted-list assignment once more.
     c = _corpus(corpus, id_col, vec_col).persist()
     cent_np = _fit_coarse(c, n_cells, seed, fit_fraction, points_per_cell)
-    inverted = _assign_cells(c, cent_np).localCheckpoint(eager=True)
+    inverted = _encode(c, cent_np, None).localCheckpoint(eager=True)
     c.unpersist()
     return IVFIndex(cent_np, inverted)
 
@@ -1090,6 +1090,31 @@ def pq_encode(
     return df.withColumn(out_col, _enc(as_double(F.col(vec_col))))
 
 
+def _encode(
+    c: DataFrame, centroids: "np.ndarray | None", codebooks: "np.ndarray | None"
+) -> DataFrame:
+    """The coded rows an index stores for the (neighbor_id, cv) frame
+    ``c`` under its model — the one encode rule every build and the
+    index_store append run, so an appended vector gets exactly the row a
+    build would give it. Centroids alone: IVF inverted-list rows
+    (neighbor_id, cv, cell). Codebooks alone: PQ codes of the unit vector
+    (neighbor_id, pq_codes). Both: IVF-PQ, PQ codes of the cell residual
+    (neighbor_id, cell, pq_codes); a frame that already carries ``cell``
+    and ``resid`` (the IVF-PQ build's persisted residual frame) is not
+    assigned a second time."""
+    if codebooks is None:
+        return _assign_cells(c, centroids)
+    if centroids is None:
+        return pq_encode(c, codebooks, vec_col="cv").select(
+            "neighbor_id", "pq_codes"
+        )
+    if "resid" not in c.columns:
+        c = _assign_cells(c, centroids, residual=True)
+    return pq_encode(c, codebooks, vec_col="resid", normalize=False).select(
+        "neighbor_id", "cell", "pq_codes"
+    )
+
+
 class PQIndex(NamedTuple):
     """A built PQ index: the driver-side codebooks plus the materialized
     code table (neighbor_id, pq_codes). Build ONCE, search many — the
@@ -1125,10 +1150,8 @@ def build_pq_index(
         seed=seed,
         fit_fraction=fit_fraction,
     )
-    coded = pq_encode(_corpus(corpus, id_col, vec_col), cb, vec_col="cv")
-    return PQIndex(
-        cb, coded.select("neighbor_id", "pq_codes").localCheckpoint(eager=True)
-    )
+    coded = _encode(_corpus(corpus, id_col, vec_col), None, cb)
+    return PQIndex(cb, coded.localCheckpoint(eager=True))
 
 
 def pq_knn(
@@ -1238,8 +1261,7 @@ def build_ivf_pq_index(
     The coarse fit is the driver-side deterministic numpy Lloyd on the
     collected (driver-sized by design) sample — see build_ivf_index;
     corpus-scale work (assignment, residuals, encode) stays distributed
-    in ``_assign_cells`` and ``pq_encode``, the kernels the append path
-    runs too."""
+    in ``_encode``, the rule the append path runs too."""
     c = _corpus(corpus, id_col, vec_col).persist()
     # One corpus count serves BOTH sampled fits: the residual frame below
     # is a 1:1 transform of c, so its row count is c's.
@@ -1268,10 +1290,7 @@ def build_ivf_pq_index(
         normalize=False,
         n_rows=n_corpus,
     )
-    coded = pq_encode(resid, cb, vec_col="resid", normalize=False).select(
-        "neighbor_id", "cell", "pq_codes"
-    )
-    coded = coded.localCheckpoint(eager=True)  # the persisted index
+    coded = _encode(resid, cent_np, cb).localCheckpoint(eager=True)
     resid.unpersist()
     c.unpersist()
     return IVFPQIndex(cent_np, cb, coded)

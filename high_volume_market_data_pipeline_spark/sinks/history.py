@@ -7,9 +7,16 @@ environment, so the same observable API is provided over plain parquet with
 a JSON manifest log — the layout Delta itself uses (data files + ordered
 commit log), minus transactions we cannot express without a JVM extension:
 
-    <root>/_log/<version>.json      one manifest per committed version
-    <root>/_v<version>_<attempt>/   immutable parquet dir (unique per
-                                    write attempt; manifests point at it)
+    <root>/_log/<version>.json          one manifest per committed version
+    <root>/_data/v<version>_<attempt>/  immutable parquet dir (unique per
+                                        write attempt; manifests point at it)
+
+The ``_data`` parent keeps snapshots out of a raw ``spark.read.parquet
+(root)`` (Spark skips ``_``-prefixed names), while the snapshot dir's own
+name does not start with ``_``: Spark ignores a READ PATH whose leaf is
+hidden and warns "All paths were ignored" on every such read. Tables
+written before ``_data`` keep their ``<root>/_v<version>_<attempt>``
+dirs; manifests store full paths, so those read as before.
 
 A ``write`` manifest references ONE full-snapshot dir; an ``append``
 manifest references its parent's dirs plus one new delta dir (the Delta
@@ -20,7 +27,7 @@ back into a single snapshot via ``write``.
 Commit protocol: write the snapshot dir first, then CREATE the manifest via
 a create-if-absent hard link of a temp file (os.link fails with EEXIST — a
 rename would silently replace a concurrent winner's manifest). A crashed or
-commit-losing writer leaves an orphan ``_v*`` dir (cleaned by ``vacuum``)
+commit-losing writer leaves an orphan snapshot dir (cleaned by ``vacuum``)
 but can never corrupt the current version — readers only follow manifests,
 and snapshot dirs are per-attempt so racers never overwrite each other's
 data. This also makes MERGE/OPTIMIZE through the table crash-safe: the
@@ -46,6 +53,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _LOG = "_log"
+_DATA = "_data"
 _MANIFEST_RE = re.compile(r"^(\d{8})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{8})\.checkpoint\.json$")
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -94,7 +102,7 @@ class VersionedParquetTable:
     # checkpoint_interval tail manifests, regardless of table age.
     checkpoint_interval = 10
 
-    # Unreferenced _v* dirs younger than this are NOT vacuumed: data dirs
+    # Unreferenced snapshot dirs younger than this are NOT vacuumed: data dirs
     # are written BEFORE their manifest commits, so a young orphan may be
     # an in-flight write whose manifest is about to land — deleting it
     # would poison the committed version (and, for append chains, every
@@ -335,7 +343,7 @@ class VersionedParquetTable:
         when that version already exists, so a caller that derived its
         write from version N can commit at N+1 and KNOW no other commit
         landed in between (the optimistic-concurrency pattern Delta uses;
-        see similarity/index_store append_*)."""
+        see similarity/index_store.append_to_index)."""
         if version is None:
             version = (self.latest_version() or 0) + 1 if self.exists() else 0
         # The snapshot dir carries a per-attempt suffix: two writers racing
@@ -343,9 +351,7 @@ class VersionedParquetTable:
         # the commit-losing attempt leaves an orphan dir (vacuum reclaims
         # it), never clobbers the winner's snapshot. Readers follow the
         # manifest's data_dir, so the name is free to be unique.
-        data_dir = os.path.join(
-            self.root, f"_v{version:08d}_{uuid.uuid4().hex[:8]}"
-        )
+        data_dir = self._new_data_dir(version)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
@@ -400,7 +406,7 @@ class VersionedParquetTable:
         ``parent_version`` pins which committed version the delta extends
         (default: the current head) — pass it together with ``version``
         when the caller must KNOW no other append slipped in between
-        (see similarity/index_store._commit_append).
+        (see similarity/index_store.append_to_index).
 
         ``max_chain`` bounds read fan-in for continuous ingest: when the
         parent already references that many dirs, THIS commit absorbs
@@ -464,9 +470,7 @@ class VersionedParquetTable:
             list(pschema.fields)
             + [f for f in df.schema.fields if f.name not in pnames]
         )
-        delta_dir = os.path.join(
-            self.root, f"_v{version:08d}_{uuid.uuid4().hex[:8]}"
-        )
+        delta_dir = self._new_data_dir(version)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
@@ -495,9 +499,7 @@ class VersionedParquetTable:
             # tables are exactly that) — so the fold costs one parent
             # read + write, same as the old merged rewrite, and later
             # reads open ≤ 2 dirs.
-            folded_dir = os.path.join(
-                self.root, f"_v{version:08d}_{uuid.uuid4().hex[:8]}"
-            )
+            folded_dir = self._new_data_dir(version)
             fw = self.read(spark, version=parent["version"]).write.mode(
                 "overwrite"
             )
@@ -627,6 +629,13 @@ class VersionedParquetTable:
                     }
                 )
         return bad
+
+    def _new_data_dir(self, version: int) -> str:
+        """A fresh snapshot dir for one write attempt at ``version`` (see
+        the module docstring for the layout)."""
+        return os.path.join(
+            self.root, _DATA, f"v{version:08d}_{uuid.uuid4().hex[:8]}"
+        )
 
     @staticmethod
     def _data_dirs(manifest: dict) -> list[str]:
@@ -1307,7 +1316,8 @@ class VersionedParquetTable:
         retain_hours: float | None = None,
     ) -> "VacuumResult":
         """Retire snapshot dirs older than the newest ``keep_last`` versions
-        (and stale orphan ``_v*`` dirs with no manifest). Time travel below
+        (and stale orphan snapshot dirs with no manifest, in ``_data/`` and
+        the legacy ``<root>/_v*`` layout). Time travel below
         the horizon stops working — same contract as Delta VACUUM.
 
         ``retain_hours`` is the Delta ``RETAIN N HOURS`` form: every
@@ -1383,14 +1393,21 @@ class VersionedParquetTable:
                 os.remove(mf)
                 retired.append(m["version"])
         cutoff = time.time() - grace
-        for d in os.listdir(self.root):
-            if not d.startswith("_v") or d in keep_dirs:
+        data = os.path.join(self.root, _DATA)
+        snapshot_dirs = [
+            os.path.join(self.root, d)
+            for d in os.listdir(self.root)
+            if d.startswith("_v")
+        ]
+        if os.path.isdir(data):
+            snapshot_dirs += [os.path.join(data, d) for d in os.listdir(data)]
+        for path in snapshot_dirs:
+            d = os.path.basename(path)
+            if d in keep_dirs:
                 continue
-            if d not in retired_dirs and self._newest_mtime(
-                os.path.join(self.root, d)
-            ) > cutoff:
+            if d not in retired_dirs and self._newest_mtime(path) > cutoff:
                 continue  # young orphan — possibly an in-flight append
-            shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+            shutil.rmtree(path, ignore_errors=True)
             removed_dirs.append(d)
         return VacuumResult(retired, removed_dirs)
 

@@ -9,8 +9,10 @@ With Delta absent, the observable effects are reproduced on parquet:
 - Z-ORDER → repartitionByRange + sortWithinPartitions on the cluster
   columns: parquet row-group min/max stats then give the same data-skipping
   effect for range predicates on those columns
-- VACUUM → removal of orphaned temp/merge dirs (parquet has no versioned
-  files to expire; the swap-based merge leaves only `__merge_*` temps)
+- VACUUM → removal of orphaned temp dirs (parquet has no versioned
+  files to expire; the swap-based rewrites — OPTIMIZE, Z-ORDER and the
+  sinks.merge MERGE — leave only `__opt_*` temps and `__old_*` parked
+  copies; older runs' merges left `__merge_*` temps)
 """
 
 from __future__ import annotations
@@ -33,8 +35,11 @@ def _swap_rewrite(
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(tmp)
-    # Same crash-safe promotion as the merge sink: old data is parked, not
-    # deleted, until the new table is in place.
+    # Crash-safe swap: park the old table aside BEFORE promoting the new
+    # one and delete it only after the promotion rename succeeded. A crash
+    # at any point leaves either the old table in place or the old copy in
+    # ``__old_*`` — never a state where the ``__opt_*`` temp is the only
+    # surviving copy (which vacuum_orphans would then delete: data loss).
     old = f"{path}__old_{uuid.uuid4().hex[:8]}"
     os.rename(path, old)
     try:

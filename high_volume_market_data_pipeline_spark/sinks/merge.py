@@ -17,9 +17,9 @@ atomic manifest rename, crash-safe by construction):
   time travel, restore, and vacuum all see the upsert like any other commit
   and a crashed merge can never corrupt the current version.
 - ``merge_upsert`` — plain-directory variant for bare parquet paths, using
-  a park-then-promote double-rename swap (crash leaves either the old table
-  or a recoverable ``__old_*`` copy, never a vacuum-able temp as the only
-  copy).
+  the maintenance operators' park-then-promote double-rename swap (crash
+  leaves either the old table or a recoverable ``__old_*`` copy, never a
+  vacuum-able temp as the only copy).
 
 ``delta-spark`` is not installable in this environment (install attempts
 are environment-prohibited; recorded in NOTES.md); a Delta MERGE branch
@@ -29,16 +29,15 @@ would be permanently-dead untestable code, so none is carried.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from high_volume_market_data_pipeline_spark.operators.dedup import dedup_keep_latest
 from high_volume_market_data_pipeline_spark.sinks.history import (
     VersionedParquetTable,
 )
+from high_volume_market_data_pipeline_spark.sinks.maintenance import _swap_rewrite
 
 _PRECEDENCE = "_merge_precedence"
 
@@ -89,45 +88,17 @@ def merge_upsert(
     partition_by: str | None = None,
 ) -> None:
     """Upsert ``source`` into the plain parquet table at ``target_path`` on
-    ``keys`` (directory swap; for versioned history use
-    ``merge_upsert_versioned``)."""
-    spark = source.sparkSession
-    _merge_parquet(spark, source, target_path, keys, order_col, partition_by)
-
-
-def _merge_parquet(
-    spark: SparkSession,
-    source: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_col: str,
-    partition_by: str | None,
-) -> None:
-    writer_cols = source.columns
-
-    def write_to(df: DataFrame, path: str) -> None:
-        w = df.select(*writer_cols).write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(path)
-
+    ``keys`` (``maintenance._swap_rewrite``'s crash-safe directory swap;
+    for versioned history use ``merge_upsert_versioned``)."""
     if not os.path.exists(target_path):
-        write_to(source, target_path)
+        writer = source.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(target_path)
         return
-    target = spark.read.parquet(target_path)
-    merged = merged_state(target, source, keys, order_col)
-    # Crash-safe swap: park the old table aside BEFORE promoting the new
-    # one and delete it only after the promotion rename succeeded. A crash
-    # at any point leaves either the old table in place or the old copy in
-    # ``__old_*`` — never a state where the ``__merge_*`` temp is the only
-    # surviving copy (which vacuum would then delete: data loss).
-    tmp = f"{target_path}__merge_{uuid.uuid4().hex[:8]}"
-    write_to(merged, tmp)
-    old = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    try:
-        os.rename(tmp, target_path)
-    except OSError:
-        os.rename(old, target_path)  # roll back; tmp left for vacuum
-        raise
-    shutil.rmtree(old)
+    _swap_rewrite(
+        source.sparkSession,
+        target_path,
+        lambda target: merged_state(target, source, keys, order_col),
+        partition_by,
+    )

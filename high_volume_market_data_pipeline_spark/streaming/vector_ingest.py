@@ -2,9 +2,10 @@
 the STORED model (PQ codebooks, IVF centroids, or both) and appended to
 the persisted index — the continuous-ingest shape of a production vector
 store (train once, add() forever, re-train offline when drift demands
-it). All three persisted families (pq / ivf / ivf_pq) share one bridge.
+it). The family comes from the stored model (``index_store``), so one
+bridge serves pq, ivf and ivf_pq indexes.
 
-foreachBatch bridges to ``index_store.append_to_*_index`` exactly the
+foreachBatch bridges to ``index_store.append_to_index`` exactly the
 way streaming dedup bridges to the batch SignatureStore: per-batch cost
 is the batch path's (one encode pass over the batch + one id anti-join
 against the coded table), state is the versioned parquet index itself —
@@ -15,12 +16,12 @@ version N never sees a half-written batch).
 Replay safety: ``skip_existing_ids`` makes a replayed batch a no-op at
 the id level, so at-least-once delivery converges — the ledger-style
 batch_id partitioning is unnecessary here because the id set IS the
-dedup key. Concurrent appenders are safe: ``append_to_pq_index``
+dedup key. Concurrent appenders are safe: ``append_to_index``
 CAS-commits at an explicit version derived from the coded head, so an
 interleaved writer loses the commit race LOUDLY and the retry
 re-derives its union from the winner's head (no lost update — pinned
 by the interleaved-append test in tests/test_index_store.py). Only a
-concurrent RE-TRAIN (save_pq_index) requires quiescing this stream
+concurrent RE-TRAIN (save_index) requires quiescing this stream
 first — the FAISS offline-retrain contract.
 
 No reference counterpart (beyond-reference ANN surface); composes the
@@ -34,51 +35,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from high_volume_market_data_pipeline_spark.similarity.index_store import (
-    append_to_ivf_index,
-    append_to_ivf_pq_index,
-    append_to_pq_index,
-    load_ivf_index,
-    load_ivf_pq_index,
-    load_pq_index,
+    append_to_index,
+    load_index,
 )
-
-# family -> (fail-fast loader, per-batch appender). One streaming bridge
-# serves all three persisted-index families: the appenders already share
-# the CAS/replay/absorption contract (index_store._commit_append), so the
-# stream layer differs only in which encode rule each batch runs.
-_FAMILIES = {
-    "pq": (load_pq_index, append_to_pq_index),
-    "ivf": (load_ivf_index, append_to_ivf_index),
-    "ivf_pq": (load_ivf_pq_index, append_to_ivf_pq_index),
-}
 
 
 def stream_append_index(
     sdf: DataFrame,
     index_root: str,
     checkpoint: str,
-    family: str = "pq",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Append an embedding stream to the persisted index at ``index_root``;
-    returns the started query. ``family`` picks the encode rule: ``pq``
-    (codebook encode), ``ivf`` (nearest stored-centroid cell assignment —
-    the storage-pruned family), ``ivf_pq`` (cell assignment + residual PQ).
-    The index must exist (``build_*_index`` + ``save_*_index`` first) —
-    requiring an explicit trained index beats silently fitting models on
-    whatever batch arrives first, which would quantize/partition the whole
-    corpus against a non-representative sample."""
-    try:
-        loader, appender = _FAMILIES[family]
-    except KeyError:
-        raise ValueError(
-            f"unknown index family {family!r}; one of {sorted(_FAMILIES)}"
-        ) from None
+    returns the started query. Each batch is encoded with the rule the
+    stored model makes (``index_store.append_to_index``). The index must
+    exist (``build_*_index`` + ``save_index`` first) — requiring an
+    explicit trained index beats silently fitting models on whatever
+    batch arrives first, which would quantize/partition the whole corpus
+    against a non-representative sample."""
     spark = sdf.sparkSession
     # fail fast, not at first batch: loading validates both tables exist
-    loader(spark, index_root)
+    load_index(spark, index_root)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from high_volume_market_data_pipeline_spark.operators.layout import (
@@ -88,7 +67,7 @@ def stream_append_index(
         # Batch-scope shuffle sizing + AQE for the append's encode + id
         # anti-join, as streaming/incremental.py's bridge does.
         with data_scoped_shuffle(spark, batch_df.rdd.getNumPartitions()):
-            appender(
+            append_to_index(
                 spark,
                 index_root,
                 batch_df,
@@ -103,25 +82,4 @@ def stream_append_index(
         .option("checkpointLocation", checkpoint)
         .trigger(**trigger_kwargs)
         .start()
-    )
-
-
-def stream_append_pq_index(
-    sdf: DataFrame,
-    index_root: str,
-    checkpoint: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """PQ-family shorthand for ``stream_append_index`` (kept as the
-    established call site name)."""
-    return stream_append_index(
-        sdf,
-        index_root,
-        checkpoint,
-        family="pq",
-        vec_col=vec_col,
-        id_col=id_col,
-        trigger=trigger,
     )

@@ -121,6 +121,27 @@ def test_crashed_writer_leaves_current_version_intact(spark, table):
     assert not os.path.exists(orphan)
 
 
+def test_snapshot_dirs_have_no_hidden_leaf(spark, table):
+    """Snapshot dirs (full writes, append deltas and chain folds) live
+    under the hidden ``_data`` parent, but their own names do not start
+    with ``_``: Spark skips a read path whose leaf is hidden and warns
+    "All paths were ignored" on each read of one. The parent still keeps
+    the snapshots out of a raw read of the table root."""
+    from pyspark.errors import AnalysisException
+
+    table.write(_df(spark, 5, "a"), "WRITE")
+    table.append(_df(spark, 3, "b"), "APPEND")
+    table.append(_df(spark, 2, "c"), "APPEND", max_chain=1)  # folds
+    dirs = {d for m in table._manifests() for d in table._data_dirs(m)}
+    assert len(dirs) == 4
+    for d in dirs:
+        assert os.path.dirname(d) == os.path.join(table.root, "_data")
+        assert not os.path.basename(d).startswith(("_", "."))
+    assert table.read(spark).count() == 10
+    with pytest.raises(AnalysisException):
+        spark.read.parquet(table.root).collect()
+
+
 def test_changes_classifies_insert_delete_update(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.sinks.history import (
         VersionedParquetTable,
@@ -1157,9 +1178,7 @@ def test_commit_ref_metadata_only(spark, table, tmp_path):
     table.append(_df(spark, 3, "b"), "APPEND")
 
     def dirs():
-        return {
-            d for d in os.listdir(table.root) if d.startswith("_v")
-        }
+        return set(os.listdir(os.path.join(table.root, "_data")))
 
     before = dirs()
     v2 = table.commit_ref("REPAIR", {"k": 1}, version=2, parent_version=1)

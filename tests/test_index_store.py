@@ -33,15 +33,15 @@ def test_ivf_index_roundtrip_identical_search(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.similarity import (
         build_ivf_index,
         ivf_knn,
-        load_ivf_index,
-        save_ivf_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter("vec_id < 5")
     idx = build_ivf_index(emb, n_cells=8)
-    save_ivf_index(idx, str(tmp_path / "ivf"))
-    loaded = load_ivf_index(spark, str(tmp_path / "ivf"))
+    save_index(idx, str(tmp_path / "ivf"))
+    loaded = load_index(spark, str(tmp_path / "ivf"))
     np.testing.assert_array_equal(idx.centroids, loaded.centroids)
     assert _rows(idx.coded) == _rows(loaded.coded)
     live = ivf_knn(q, emb, k=3, n_cells=8, index=idx)
@@ -52,16 +52,16 @@ def test_ivf_index_roundtrip_identical_search(spark, tmp_path):
 def test_pq_index_roundtrip_identical_search(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
+        load_index,
         pq_knn,
-        save_pq_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter("vec_id < 5")
     idx = build_pq_index(emb, m_subspaces=8, n_codes=16)
-    save_pq_index(idx, str(tmp_path / "pq"))
-    loaded = load_pq_index(spark, str(tmp_path / "pq"))
+    save_index(idx, str(tmp_path / "pq"))
+    loaded = load_index(spark, str(tmp_path / "pq"))
     np.testing.assert_array_equal(idx.codebooks, loaded.codebooks)
     assert _rows(idx.coded) == _rows(loaded.coded)
     live = pq_knn(q, emb, k=3, m_subspaces=8, n_codes=16, index=idx)
@@ -73,15 +73,15 @@ def test_ivf_pq_index_roundtrip_identical_search(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.similarity import (
         build_ivf_pq_index,
         ivf_pq_knn,
-        load_ivf_pq_index,
-        save_ivf_pq_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter("vec_id < 5")
     idx = build_ivf_pq_index(emb, n_cells=8, m_subspaces=8, n_codes=16)
-    save_ivf_pq_index(idx, str(tmp_path / "ivfpq"))
-    loaded = load_ivf_pq_index(spark, str(tmp_path / "ivfpq"))
+    save_index(idx, str(tmp_path / "ivfpq"))
+    loaded = load_index(spark, str(tmp_path / "ivfpq"))
     np.testing.assert_array_equal(idx.centroids, loaded.centroids)
     np.testing.assert_array_equal(idx.codebooks, loaded.codebooks)
     assert _rows(idx.coded) == _rows(loaded.coded)
@@ -90,24 +90,83 @@ def test_ivf_pq_index_roundtrip_identical_search(spark, tmp_path):
     assert _rows(live) == _rows(cold)
 
 
+@pytest.mark.parametrize(
+    "family, prefix, model_keys, part, columns, index_type",
+    [
+        ("ivf", "IVF", ["n_cells"], "cell",
+         ["neighbor_id", "cv", "cell"], "IVFIndex"),
+        ("pq", "PQ", ["m_subspaces", "n_codes"], None,
+         ["neighbor_id", "pq_codes"], "PQIndex"),
+        ("ivf_pq", "IVF_PQ", ["n_cells", "m_subspaces", "n_codes"], "cell",
+         ["neighbor_id", "cell", "pq_codes"], "IVFPQIndex"),
+    ],
+)
+def test_family_comes_from_the_stored_model(
+    spark, tmp_path, family, prefix, model_keys, part, columns, index_type
+):
+    """save → append → load names no family: each step reads it from the
+    model arrays, and the persisted format is the one every earlier
+    release wrote — operation names, parameter keys (in order),
+    partitioning and the loaded coded column order."""
+    from high_volume_market_data_pipeline_spark import similarity
+    from high_volume_market_data_pipeline_spark.sinks.history import (
+        VersionedParquetTable,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    build = {
+        "ivf": lambda d: similarity.build_ivf_index(d, n_cells=4),
+        "pq": lambda d: similarity.build_pq_index(d, m_subspaces=8, n_codes=8),
+        "ivf_pq": lambda d: similarity.build_ivf_pq_index(
+            d, n_cells=4, m_subspaces=8, n_codes=8
+        ),
+    }[family]
+    root = str(tmp_path / family)
+    similarity.save_index(build(emb.filter("vec_id % 2 = 0")), root)
+    similarity.append_to_index(spark, root, emb.filter("vec_id % 2 = 1"))
+    loaded = similarity.load_index(spark, root)
+
+    assert type(loaded).__name__ == index_type
+    assert loaded.coded.columns == columns
+    assert loaded.coded.count() == emb.count()
+    trail = {
+        t: [
+            (m["operation"], list(m["parameters"]), m["partition_by"])
+            for m in VersionedParquetTable(os.path.join(root, t))._manifests()
+        ]
+        for t in ("model", "coded")
+    }
+    append_keys = model_keys + ["parent_version"]
+    assert trail == {
+        "model": [
+            (f"{prefix}_MODEL", model_keys, None),
+            (f"{prefix}_APPEND", append_keys, None),
+        ],
+        "coded": [
+            (f"{prefix}_CODED", [], part),
+            (f"{prefix}_APPEND", append_keys, part),
+        ],
+    }
+
+
 def test_index_update_is_a_new_version(spark, tmp_path):
     """Re-encoding commits a new VERSION of the coded table; readers on
     the old version keep their snapshot (the atomic-nightly-rebuild
     contract the versioned store exists for)."""
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
-        save_pq_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     idx_v0 = build_pq_index(emb.filter("vec_id < 200"), m_subspaces=8, n_codes=16)
-    save_pq_index(idx_v0, str(tmp_path / "pq"))
+    save_index(idx_v0, str(tmp_path / "pq"))
     idx_v1 = build_pq_index(emb, m_subspaces=8, n_codes=16)
-    v1 = save_pq_index(idx_v1, str(tmp_path / "pq"))
+    v1 = save_index(idx_v1, str(tmp_path / "pq"))
     assert v1 == 1
-    old = load_pq_index(spark, str(tmp_path / "pq"), version=0)
-    new = load_pq_index(spark, str(tmp_path / "pq"), version=None)
+    old = load_index(spark, str(tmp_path / "pq"), version=0)
+    new = load_index(spark, str(tmp_path / "pq"), version=None)
     assert old.coded.count() == 200
     assert new.coded.count() == emb.count()
 
@@ -119,14 +178,14 @@ def test_pq_search_from_fresh_session_subprocess(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
         pq_knn,
-        save_pq_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter("vec_id < 5")
     idx = build_pq_index(emb, m_subspaces=8, n_codes=16)
     root = str(tmp_path / "pq")
-    save_pq_index(idx, root)
+    save_index(idx, root)
     expected = _rows(
         pq_knn(q, emb, k=3, m_subspaces=8, n_codes=16, index=idx).select(
             "query_id", "neighbor_id", "knn_rank"
@@ -137,13 +196,13 @@ import sys
 sys.path.insert(0, {REPO!r})
 from pyspark.sql import SparkSession
 from high_volume_market_data_pipeline_spark.catalog import load_table
-from high_volume_market_data_pipeline_spark.similarity import load_pq_index, pq_knn
+from high_volume_market_data_pipeline_spark.similarity import load_index, pq_knn
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.ui.enabled", "false")
          .config("spark.sql.shuffle.partitions", "8").getOrCreate())
 emb = load_table(spark, {SF_DIR!r}, "embeddings")
 q = emb.filter("vec_id < 5")
-idx = load_pq_index(spark, {root!r})
+idx = load_index(spark, {root!r})
 out = pq_knn(q, emb, k=3, m_subspaces=8, n_codes=16, index=idx)
 for r in out.select("query_id", "neighbor_id", "knn_rank").collect():
     print("ROW", r["query_id"], r["neighbor_id"], r["knn_rank"])
@@ -168,19 +227,19 @@ spark.stop()
 def test_load_missing_piece_raises(spark, tmp_path, bad):
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
-        save_pq_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings").limit(50)
     idx = build_pq_index(emb, m_subspaces=8, n_codes=16)
     root = str(tmp_path / "pq")
-    save_pq_index(idx, root)
+    save_index(idx, root)
     import shutil
 
     shutil.rmtree(os.path.join(root, bad))
     with pytest.raises(FileNotFoundError):
-        load_pq_index(spark, root).coded.count()
+        load_index(spark, root).coded.count()
 
 
 def test_pq_index_append_without_refit(spark, tmp_path):
@@ -189,11 +248,11 @@ def test_pq_index_append_without_refit(spark, tmp_path):
     new one is searchable and finds the appended vectors, and a replayed
     append (same ids) converges instead of double-coding."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_pq_index,
+        append_to_index,
         build_pq_index,
-        load_pq_index,
+        load_index,
         pq_knn,
-        save_pq_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -201,11 +260,11 @@ def test_pq_index_append_without_refit(spark, tmp_path):
     first = emb.filter("vec_id % 2 = 0")
     rest = emb.filter("vec_id % 2 = 1")
     root = str(tmp_path / "pq")
-    save_pq_index(build_pq_index(first, m_subspaces=8, n_codes=16), root)
+    save_index(build_pq_index(first, m_subspaces=8, n_codes=16), root)
 
-    v1 = append_to_pq_index(spark, root, rest)
+    v1 = append_to_index(spark, root, rest)
     assert v1 == 1
-    old, new = load_pq_index(spark, root, 0), load_pq_index(spark, root)
+    old, new = load_index(spark, root, 0), load_index(spark, root)
     np.testing.assert_array_equal(old.codebooks, new.codebooks)
     assert old.coded.count() == first.count()
     assert new.coded.count() == n_total
@@ -223,24 +282,24 @@ def test_pq_index_append_without_refit(spark, tmp_path):
     assert ids_in_results & {r["vec_id"] for r in rest.collect()}
 
     # replay: same arrivals again — id anti-join drops them all
-    v2 = append_to_pq_index(spark, root, rest)
+    v2 = append_to_index(spark, root, rest)
     assert v2 == 2
-    assert load_pq_index(spark, root).coded.count() == n_total
+    assert load_index(spark, root).coded.count() == n_total
 
 
-def test_stream_append_pq_index_converges_on_replay(spark, tmp_path):
+def test_stream_append_pq_converges_on_replay(spark, tmp_path):
     """Streaming vector-store ingest: arriving embeddings are encoded with
     the stored codebooks and appended as versioned commits; a full replay
     with a fresh checkpoint converges (id anti-join) instead of
     double-coding; appended vectors are searchable."""
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
+        load_index,
         pq_knn,
-        save_pq_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.streaming.vector_ingest import (
-        stream_append_pq_index,
+        stream_append_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -248,7 +307,7 @@ def test_stream_append_pq_index_converges_on_replay(spark, tmp_path):
     arriving = emb.filter("vec_id >= 300")
     n_total = emb.count()
     root = str(tmp_path / "pq")
-    save_pq_index(build_pq_index(seed, m_subspaces=8, n_codes=16), root)
+    save_index(build_pq_index(seed, m_subspaces=8, n_codes=16), root)
 
     arrivals = str(tmp_path / "arrivals")
     arriving.repartition(2).write.parquet(arrivals)
@@ -259,29 +318,29 @@ def test_stream_append_pq_index_converges_on_replay(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(arrivals)
         )
-        q = stream_append_pq_index(
+        q = stream_append_index(
             sdf, root, checkpoint=str(tmp_path / ckpt)
         )
         q.awaitTermination()
 
     run("ckpt1")
-    idx = load_pq_index(spark, root)
+    idx = load_index(spark, root)
     assert idx.coded.count() == n_total
     assert idx.coded.select("neighbor_id").distinct().count() == n_total
 
     # replay from scratch: same arrivals, fresh checkpoint — converges
     run("ckpt2")
-    assert load_pq_index(spark, root).coded.count() == n_total
+    assert load_index(spark, root).coded.count() == n_total
 
     # an appended vector's neighborhood is searchable
     q5 = emb.filter("vec_id >= 300 and vec_id < 305")
-    out = pq_knn(q5, emb, k=3, m_subspaces=8, n_codes=16, index=load_pq_index(spark, root))
+    out = pq_knn(q5, emb, k=3, m_subspaces=8, n_codes=16, index=load_index(spark, root))
     assert out.count() == 5 * 3
 
 
 def test_stream_append_requires_trained_index(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.streaming.vector_ingest import (
-        stream_append_pq_index,
+        stream_append_index,
     )
 
     from pyspark.errors import AnalysisException
@@ -293,7 +352,7 @@ def test_stream_append_requires_trained_index(spark, tmp_path):
     # fail-fast at start(), not at first batch; the exact exception type
     # depends on which piece is probed first (manifest log vs parquet dir)
     with pytest.raises((FileNotFoundError, AnalysisException)):
-        stream_append_pq_index(
+        stream_append_index(
             sdf, str(tmp_path / "missing_idx"), checkpoint=str(tmp_path / "c")
         )
 
@@ -303,11 +362,11 @@ def test_ivf_index_append_assigns_stored_centroids(spark, tmp_path):
     (model unchanged, paired version bump), the grown lists are
     searchable, and a replay converges."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_index,
+        append_to_index,
         build_ivf_index,
         ivf_knn,
-        load_ivf_index,
-        save_ivf_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -315,11 +374,11 @@ def test_ivf_index_append_assigns_stored_centroids(spark, tmp_path):
     first = emb.filter("vec_id % 2 = 0")
     rest = emb.filter("vec_id % 2 = 1")
     root = str(tmp_path / "ivf")
-    save_ivf_index(build_ivf_index(first, n_cells=8), root)
+    save_index(build_ivf_index(first, n_cells=8), root)
 
-    v1 = append_to_ivf_index(spark, root, rest)
+    v1 = append_to_index(spark, root, rest)
     assert v1 == 1
-    old, new = load_ivf_index(spark, root, 0), load_ivf_index(spark, root)
+    old, new = load_index(spark, root, 0), load_index(spark, root)
     np.testing.assert_array_equal(old.centroids, new.centroids)
     assert new.coded.count() == n_total
     # every appended row landed in a valid stored cell
@@ -330,12 +389,12 @@ def test_ivf_index_append_assigns_stored_centroids(spark, tmp_path):
     )
     assert out.count() > 0
     # replay converges
-    assert append_to_ivf_index(spark, root, rest) == 2
-    assert load_ivf_index(spark, root).coded.count() == n_total
+    assert append_to_index(spark, root, rest) == 2
+    assert load_index(spark, root).coded.count() == n_total
     # build/append identity: re-appending the BUILD vectors (id skip off)
     # must place every one in exactly the cell the build gave it
-    append_to_ivf_index(spark, root, first, skip_existing_ids=False)
-    _assert_reappend_matches_build(load_ivf_index(spark, root).coded, first, "cell")
+    append_to_index(spark, root, first, skip_existing_ids=False)
+    _assert_reappend_matches_build(load_index(spark, root).coded, first, "cell")
 
 
 def test_ivf_pq_index_append_residual_encode(spark, tmp_path):
@@ -346,11 +405,11 @@ def test_ivf_pq_index_append_residual_encode(spark, tmp_path):
     assignment + encode kernels); asserted per id by re-appending the
     build vectors."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_pq_index,
+        append_to_index,
         build_ivf_pq_index,
         ivf_pq_knn,
-        load_ivf_pq_index,
-        save_ivf_pq_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -359,11 +418,11 @@ def test_ivf_pq_index_append_residual_encode(spark, tmp_path):
     rest = emb.filter("vec_id % 2 = 1")
     root = str(tmp_path / "ivfpq")
     idx0 = build_ivf_pq_index(first, n_cells=8, m_subspaces=8, n_codes=16)
-    save_ivf_pq_index(idx0, root)
+    save_index(idx0, root)
 
-    v1 = append_to_ivf_pq_index(spark, root, rest)
+    v1 = append_to_index(spark, root, rest)
     assert v1 == 1
-    new = load_ivf_pq_index(spark, root)
+    new = load_index(spark, root)
     assert new.coded.count() == n_total
     np.testing.assert_array_equal(idx0.codebooks, new.codebooks)
     out = ivf_pq_knn(
@@ -376,9 +435,9 @@ def test_ivf_pq_index_append_residual_encode(spark, tmp_path):
         index=new,
     )
     assert out.count() > 0
-    append_to_ivf_pq_index(spark, root, first, skip_existing_ids=False)
+    append_to_index(spark, root, first, skip_existing_ids=False)
     _assert_reappend_matches_build(
-        load_ivf_pq_index(spark, root).coded, first, "cell", "pq_codes"
+        load_index(spark, root).coded, first, "cell", "pq_codes"
     )
 
 
@@ -406,8 +465,8 @@ def test_head_load_pins_to_newest_paired_snapshot(spark, tmp_path):
     snapshot."""
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
-        save_pq_index,
+        load_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _save_model_arrays,
@@ -416,7 +475,7 @@ def test_head_load_pins_to_newest_paired_snapshot(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     idx = build_pq_index(emb.limit(100), m_subspaces=8, n_codes=16)
     root = str(tmp_path / "pq")
-    save_pq_index(idx, root)
+    save_index(idx, root)
 
     # simulate a rebuild that committed its model, then died before the
     # coded commit: model head advances to v1, coded head stays v0
@@ -429,7 +488,7 @@ def test_head_load_pins_to_newest_paired_snapshot(spark, tmp_path):
         codebooks=other.codebooks,
     )
 
-    loaded = load_pq_index(spark, root)  # head load
+    loaded = load_index(spark, root)  # head load
     # must be the PAIRED v0 snapshot — the crashed writer's v1 codebooks
     # would decode v0's codes into garbage
     np.testing.assert_array_equal(loaded.codebooks, idx.codebooks)
@@ -446,8 +505,8 @@ def test_interleaved_appends_do_not_lose_updates(spark, tmp_path, monkeypatch):
     import high_volume_market_data_pipeline_spark.similarity.index_store as ist
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
-        save_pq_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -455,7 +514,7 @@ def test_interleaved_appends_do_not_lose_updates(spark, tmp_path, monkeypatch):
     a_rows = emb.filter("vec_id % 3 = 1")
     b_rows = emb.filter("vec_id % 3 = 2")
     root = str(tmp_path / "pq")
-    save_pq_index(build_pq_index(base, m_subspaces=8, n_codes=16), root)
+    save_index(build_pq_index(base, m_subspaces=8, n_codes=16), root)
 
     real_append = ist._append_coded
     state = {"injected": False, "collisions": 0}
@@ -467,7 +526,7 @@ def test_interleaved_appends_do_not_lose_updates(spark, tmp_path, monkeypatch):
         # lost A's rows before the CAS commit.
         if not state["injected"]:
             state["injected"] = True
-            ist.append_to_pq_index(spark, root, a_rows)
+            ist.append_to_index(spark, root, a_rows)
         try:
             return real_append(
                 df, root_, op, parameters, version, parent_version, **kw
@@ -477,10 +536,10 @@ def test_interleaved_appends_do_not_lose_updates(spark, tmp_path, monkeypatch):
             raise
 
     monkeypatch.setattr(ist, "_append_coded", racy_append)
-    ist.append_to_pq_index(spark, root, b_rows)  # writer B
+    ist.append_to_index(spark, root, b_rows)  # writer B
 
     assert state["collisions"] == 1  # B really did lose the race once
-    final = load_pq_index(spark, root)
+    final = load_index(spark, root)
     assert final.coded.count() == emb.count()  # nobody's rows dropped
     ids = {r["neighbor_id"] for r in final.coded.select("neighbor_id").collect()}
     assert {r["vec_id"] for r in a_rows.select("vec_id").collect()} <= ids
@@ -505,15 +564,15 @@ def test_persisted_ivf_search_prunes_cell_partitions(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.similarity import (
         build_ivf_index,
         ivf_knn,
-        load_ivf_index,
-        save_ivf_index,
+        load_index,
+        save_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter("vec_id < 3")
     live = build_ivf_index(emb, n_cells=8)
-    save_ivf_index(live, str(tmp_path / "ivf"))
-    loaded = load_ivf_index(spark, str(tmp_path / "ivf"))
+    save_index(live, str(tmp_path / "ivf"))
+    loaded = load_index(spark, str(tmp_path / "ivf"))
 
     res = ivf_knn(q, emb, k=3, n_probe=2, index=loaded)
     plan = res._sc._jvm.PythonSQLUtils.explainString(
@@ -538,8 +597,8 @@ def test_head_load_survives_version_holes(spark, tmp_path):
     default-version load."""
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        load_pq_index,
-        save_pq_index,
+        load_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _save_model_arrays,
@@ -551,7 +610,7 @@ def test_head_load_survives_version_holes(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     idx = build_pq_index(emb.limit(100), m_subspaces=8, n_codes=16)
     root = str(tmp_path / "pq")
-    save_pq_index(idx, root)  # paired v0
+    save_index(idx, root)  # paired v0
 
     # crashed re-train: model v1 committed, coded v1 never lands
     _save_model_arrays(
@@ -568,7 +627,7 @@ def test_head_load_survives_version_holes(spark, tmp_path):
         parent_version=0,
     )
     # model versions {0,1}, coded versions {0,2}: newest PAIRED is 0
-    loaded = load_pq_index(spark, root)
+    loaded = load_index(spark, root)
     np.testing.assert_array_equal(loaded.codebooks, idx.codebooks)
     assert loaded.coded.count() == 100
 
@@ -582,13 +641,13 @@ def test_append_loads_paired_model_not_orphan(spark, tmp_path):
     them as the paired model, silently corrupting every pre-existing
     code's decode from then on."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_pq_index,
+        append_to_index,
         build_pq_index,
-        load_pq_index,
-        save_pq_index,
+        load_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
-        _append_coords,
+        _paired_versions,
         _save_model_arrays,
     )
     from high_volume_market_data_pipeline_spark.sinks.history import (
@@ -598,7 +657,7 @@ def test_append_loads_paired_model_not_orphan(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     idx = build_pq_index(emb.filter("vec_id < 100"), m_subspaces=8, n_codes=16)
     root = str(tmp_path / "pq")
-    save_pq_index(idx, root)  # paired v0
+    save_index(idx, root)  # paired v0
 
     # crashed re-train: DIFFERENT codebooks at model v1, never paired
     orphan = np.roll(idx.codebooks, 1, axis=1)
@@ -617,13 +676,13 @@ def test_append_loads_paired_model_not_orphan(spark, tmp_path):
     )
     # model {0,1}, coded {0,2}: model loads at paired 0, merge base is the
     # coded head 2, CAS target clears both heads
-    assert _append_coords(root) == (0, 2, 3)
+    assert _paired_versions(root) == (0, 2, 3)
 
-    append_to_pq_index(
+    append_to_index(
         spark, root,
         emb.filter("vec_id >= 100 and vec_id < 120"),
     )
-    loaded = load_pq_index(spark, root)
+    loaded = load_index(spark, root)
     # the orphan codebooks were never promoted to paired
     np.testing.assert_array_equal(loaded.codebooks, idx.codebooks)
     assert loaded.coded.count() == 121  # 100 base + crashed row + 20 new
@@ -641,10 +700,8 @@ def test_stream_append_ivf_families_converge_on_replay(spark, tmp_path, family):
         build_ivf_pq_index,
         ivf_knn,
         ivf_pq_knn,
-        load_ivf_index,
-        load_ivf_pq_index,
-        save_ivf_index,
-        save_ivf_pq_index,
+        load_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.streaming.vector_ingest import (
         stream_append_index,
@@ -656,9 +713,9 @@ def test_stream_append_ivf_families_converge_on_replay(spark, tmp_path, family):
     n_total = emb.count()
     root = str(tmp_path / family)
     if family == "ivf":
-        save_ivf_index(build_ivf_index(seed, n_cells=8), root)
+        save_index(build_ivf_index(seed, n_cells=8), root)
     else:
-        save_ivf_pq_index(
+        save_index(
             build_ivf_pq_index(seed, n_cells=8, m_subspaces=8, n_codes=16),
             root,
         )
@@ -673,12 +730,11 @@ def test_stream_append_ivf_families_converge_on_replay(spark, tmp_path, family):
             .parquet(arrivals)
         )
         stream_append_index(
-            sdf, root, checkpoint=str(tmp_path / ckpt), family=family
+            sdf, root, checkpoint=str(tmp_path / ckpt)
         ).awaitTermination()
 
     run("ckpt1")
-    load = load_ivf_index if family == "ivf" else load_ivf_pq_index
-    idx = load(spark, root)
+    idx = load_index(spark, root)
     assert idx.coded.count() == n_total
     assert idx.coded.select("neighbor_id").distinct().count() == n_total
     # appended rows landed in stored cells only (no refit)
@@ -686,7 +742,7 @@ def test_stream_append_ivf_families_converge_on_replay(spark, tmp_path, family):
     assert cells <= set(range(8))
 
     run("ckpt2")  # replay from scratch: converges, no double-coding
-    assert load(spark, root).coded.count() == n_total
+    assert load_index(spark, root).coded.count() == n_total
 
     q5 = emb.filter("vec_id >= 300 and vec_id < 305")
     if family == "ivf":
@@ -698,17 +754,6 @@ def test_stream_append_ivf_families_converge_on_replay(spark, tmp_path, family):
     assert out.count() == 5 * 3
 
 
-def test_stream_append_index_rejects_unknown_family(spark, tmp_path):
-    from high_volume_market_data_pipeline_spark.streaming.vector_ingest import (
-        stream_append_index,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    sdf = spark.readStream.schema(emb.schema).parquet(str(tmp_path))
-    with pytest.raises(ValueError, match="unknown index family"):
-        stream_append_index(sdf, str(tmp_path / "x"), "c", family="hnsw")
-
-
 def test_delete_lifecycle_tombstone_search_purge(spark, tmp_path):
     """FAISS remove_ids parity over the persisted store: delete → every
     search/load excludes the id (tombstone anti-join, O(deleted), no
@@ -716,10 +761,10 @@ def test_delete_lifecycle_tombstone_search_purge(spark, tmp_path):
     the hive layout, and resets the tombstones → re-appending a deleted
     id revives it."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_index,
+        append_to_index,
         build_ivf_index,
         delete_from_index,
-        load_ivf_index,
+        load_index,
         purge_deleted,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
@@ -730,15 +775,15 @@ def test_delete_lifecycle_tombstone_search_purge(spark, tmp_path):
     root = str(tmp_path / "ivf")
     idx = build_ivf_index(emb.filter("vec_id < 150"), n_cells=4)
     from high_volume_market_data_pipeline_spark.similarity import (
-        save_ivf_index,
+        save_index,
     )
 
-    save_ivf_index(idx, root)
-    n0 = load_ivf_index(spark, root).coded.count()
+    save_index(idx, root)
+    n0 = load_index(spark, root).coded.count()
 
     # delete: loads exclude exactly those ids, rows stay on disk
     delete_from_index(spark, root, [3, 7, 11])
-    loaded = load_ivf_index(spark, root)
+    loaded = load_index(spark, root)
     assert loaded.coded.count() == n0 - 3
     assert loaded.coded.filter("neighbor_id in (3, 7, 11)").count() == 0
     # repeat-delete is idempotent (id-deduped tombstones)
@@ -760,7 +805,7 @@ def test_delete_lifecycle_tombstone_search_purge(spark, tmp_path):
     raw = coded_t.read(spark)  # tombstone-free raw read
     assert raw.count() == n0 - 3
     assert raw.filter("neighbor_id in (3, 7, 11)").count() == 0
-    loaded = load_ivf_index(spark, root)
+    loaded = load_index(spark, root)
     assert loaded.coded.count() == n0 - 3
 
     # delete again, then RE-APPEND one of the deleted ids while its rows
@@ -768,20 +813,20 @@ def test_delete_lifecycle_tombstone_search_purge(spark, tmp_path):
     # existing — committing a second physical row would duplicate it on
     # revive) and the id stays deleted until a purge
     delete_from_index(spark, root, [5, 9])
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id = 5"), skip_existing_ids=True
     )
-    loaded = load_ivf_index(spark, root)
+    loaded = load_index(spark, root)
     assert loaded.coded.filter("neighbor_id in (5, 9)").count() == 0
     assert _tombstone_table(root).read(spark).count() == 2
 
     # after a purge the id is re-insertable; its stale-free tombstone set
     # lets the new row surface exactly once
     purge_deleted(spark, root)
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id = 5"), skip_existing_ids=True
     )
-    loaded = load_ivf_index(spark, root)
+    loaded = load_index(spark, root)
     assert loaded.coded.filter("neighbor_id = 5").count() == 1
     assert loaded.coded.filter("neighbor_id = 9").count() == 0
 
@@ -789,11 +834,11 @@ def test_delete_lifecycle_tombstone_search_purge(spark, tmp_path):
     # the index) clears automatically when that id finally commits —
     # otherwise the fresh row would stay hidden forever
     delete_from_index(spark, root, [200])  # id 200 not in the index yet
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id = 200"), skip_existing_ids=True
     )
     assert _tombstone_table(root).read(spark).count() == 0
-    loaded = load_ivf_index(spark, root)
+    loaded = load_index(spark, root)
     assert loaded.coded.filter("neighbor_id = 200").count() == 1
 
     # search path: a deleted id can never be returned as a neighbor
@@ -812,11 +857,11 @@ def test_auto_purge_fires_on_tombstone_fraction(spark, tmp_path):
     n_tombstones=0, and _active_tombstones short-circuits to None (no
     read + anti-join on every later search)."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_index,
+        append_to_index,
         build_ivf_index,
         delete_from_index,
-        load_ivf_index,
-        save_ivf_index,
+        load_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _active_tombstones,
@@ -829,14 +874,14 @@ def test_auto_purge_fires_on_tombstone_fraction(spark, tmp_path):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "ap")
-    save_ivf_index(build_ivf_index(emb.filter("vec_id < 40"), n_cells=4), root)
+    save_index(build_ivf_index(emb.filter("vec_id < 40"), n_cells=4), root)
 
     dead_ids = list(range(10))  # 10/40 = 25% > 10% threshold
     delete_from_index(spark, root, dead_ids)
     assert _active_tombstones(spark, root) is not None
 
     # the next append crosses the threshold check and fires the purge
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id >= 40 and vec_id < 45"),
         skip_existing_ids=True,
     )
@@ -845,13 +890,13 @@ def test_auto_purge_fires_on_tombstone_fraction(spark, tmp_path):
     assert _active_tombstones(spark, root) is None  # metadata short-circuit
     raw = VersionedParquetTable(os.path.join(root, "coded")).read(spark)
     assert raw.filter("neighbor_id < 10").count() == 0  # physically gone
-    loaded = load_ivf_index(spark, root)
+    loaded = load_index(spark, root)
     assert loaded.coded.count() == 35  # 40 - 10 deleted + 5 appended
     # deleted ids are re-insertable now (purged, tombstones cleared)
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id = 3"), skip_existing_ids=True
     )
-    assert load_ivf_index(spark, root).coded.filter(
+    assert load_index(spark, root).coded.filter(
         "neighbor_id = 3"
     ).count() == 1
 
@@ -861,10 +906,10 @@ def test_small_tombstone_fraction_does_not_auto_purge(spark, tmp_path):
     delete stays O(deleted ids) and no corpus rewrite sneaks into the
     hot append path."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_index,
+        append_to_index,
         build_ivf_index,
         delete_from_index,
-        save_ivf_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _tombstone_head_count,
@@ -873,11 +918,11 @@ def test_small_tombstone_fraction_does_not_auto_purge(spark, tmp_path):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "np")
-    save_ivf_index(
+    save_index(
         build_ivf_index(emb.filter("vec_id < 150"), n_cells=4), root
     )
     delete_from_index(spark, root, [1, 2])  # 2/150 ~ 1.3% < 10%
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id >= 150 and vec_id < 155"),
         skip_existing_ids=True,
     )
@@ -893,11 +938,11 @@ def test_concurrent_delete_survives_revive_rewrite(spark, tmp_path,
     from, so the stale filtered set loses the race, re-derives against
     the new head, and the concurrent delete survives."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_index,
+        append_to_index,
         build_ivf_index,
         delete_from_index,
-        load_ivf_index,
-        save_ivf_index,
+        load_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.sinks.history import (
         VersionedParquetTable,
@@ -905,7 +950,7 @@ def test_concurrent_delete_survives_revive_rewrite(spark, tmp_path,
 
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "race")
-    save_ivf_index(
+    save_index(
         build_ivf_index(emb.filter("vec_id < 150"), n_cells=4), root
     )
     # a tombstone for an id with NO physical rows: appending id 300 must
@@ -923,7 +968,7 @@ def test_concurrent_delete_survives_revive_rewrite(spark, tmp_path,
         return real_write(self, df, operation, parameters, **kw)
 
     monkeypatch.setattr(VersionedParquetTable, "write", hooked)
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id = 300"), skip_existing_ids=True
     )
     monkeypatch.undo()
@@ -936,7 +981,7 @@ def test_concurrent_delete_survives_revive_rewrite(spark, tmp_path,
     alive = {r["neighbor_id"] for r in _active_tombstones(spark, root).collect()}
     assert 999 in alive  # the concurrent delete was NOT silently lost
     assert 300 not in alive  # the revive still landed
-    assert load_ivf_index(spark, root).coded.filter(
+    assert load_index(spark, root).coded.filter(
         "neighbor_id = 300"
     ).count() == 1
 
@@ -948,10 +993,10 @@ def test_auto_purge_probe_is_metadata_only(spark, tmp_path, monkeypatch):
     tombstone head manifest, corpus size from the coded head manifest's
     n_rows (recorded from parquet footers at commit time)."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_index,
+        append_to_index,
         build_ivf_index,
         delete_from_index,
-        save_ivf_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _maybe_auto_purge,
@@ -962,11 +1007,11 @@ def test_auto_purge_probe_is_metadata_only(spark, tmp_path, monkeypatch):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "meta")
-    save_ivf_index(
+    save_index(
         build_ivf_index(emb.filter("vec_id < 150"), n_cells=4), root
     )
     # every commit path records n_rows: the full save, then an append
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id >= 150 and vec_id < 160"),
         skip_existing_ids=True,
     )
@@ -999,12 +1044,12 @@ def test_purge_reset_race_retries_against_new_head(spark, tmp_path,
     (no auto-purge re-fire loop) while the racer's fresh delete
     survives."""
     from high_volume_market_data_pipeline_spark.similarity import (
-        append_to_ivf_index,
+        append_to_index,
         build_ivf_index,
         delete_from_index,
-        load_ivf_index,
+        load_index,
         purge_deleted,
-        save_ivf_index,
+        save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _active_tombstones,
@@ -1017,7 +1062,7 @@ def test_purge_reset_race_retries_against_new_head(spark, tmp_path,
 
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "resetrace")
-    save_ivf_index(
+    save_index(
         build_ivf_index(emb.filter("vec_id < 150"), n_cells=4), root
     )
     delete_from_index(spark, root, [3, 7, 11])
@@ -1050,10 +1095,10 @@ def test_purge_reset_race_retries_against_new_head(spark, tmp_path,
     # stale tombstones that would also re-fire auto-purge rewrites)
     raw = VersionedParquetTable(os.path.join(root, "coded")).read(spark)
     assert raw.filter("neighbor_id in (3, 7, 11)").count() == 0
-    append_to_ivf_index(
+    append_to_index(
         spark, root, emb.filter("vec_id = 3"), skip_existing_ids=True
     )
-    assert load_ivf_index(spark, root).coded.filter(
+    assert load_index(spark, root).coded.filter(
         "neighbor_id = 3"
     ).count() == 1
 
@@ -1069,8 +1114,8 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
 
     from high_volume_market_data_pipeline_spark.similarity import (
         build_pq_index,
-        save_pq_index,
-        append_to_pq_index,
+        save_index,
+        append_to_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _load_model_arrays,
@@ -1081,8 +1126,8 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "pairing")
-    save_pq_index(build_pq_index(emb.filter("vec_id < 150"), n_codes=8), root)
-    v = append_to_pq_index(
+    save_index(build_pq_index(emb.filter("vec_id < 150"), n_codes=8), root)
+    v = append_to_index(
         spark, root, emb.filter("vec_id >= 150 and vec_id < 170")
     )
     model_t = VersionedParquetTable(os.path.join(root, "model"))

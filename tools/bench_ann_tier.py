@@ -93,12 +93,12 @@ import sys, time
 sys.path.insert(0, {repo!r})
 from high_volume_market_data_pipeline_spark.catalog import load_table
 from high_volume_market_data_pipeline_spark.session import build_session
-from high_volume_market_data_pipeline_spark.similarity import load_pq_index, pq_knn
+from high_volume_market_data_pipeline_spark.similarity import load_index, pq_knn
 from pyspark.sql import functions as F
 spark = build_session(app_name="ann-cold-search")
 emb = load_table(spark, {sf_dir!r}, "embeddings")
 q = emb.filter(F.col("vec_id") < {n_queries})
-t0 = time.perf_counter(); idx = load_pq_index(spark, {index_root!r})
+t0 = time.perf_counter(); idx = load_index(spark, {index_root!r})
 t1 = time.perf_counter()
 pq_knn(q, emb, k=5, index=idx).write.format("noop").mode("overwrite").save()
 t2 = time.perf_counter()
@@ -165,11 +165,11 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from high_volume_market_data_pipeline_spark.catalog import load_table
 from high_volume_market_data_pipeline_spark.session import build_session
-from high_volume_market_data_pipeline_spark.similarity import ivf_knn, load_ivf_index
+from high_volume_market_data_pipeline_spark.similarity import ivf_knn, load_index
 spark = build_session(app_name="ann-cold-pruned")
 emb = load_table(spark, {sf_dir!r}, "embeddings")
 q = emb.filter(F.col("vec_id") < {n_queries})
-t0 = time.perf_counter(); idx = load_ivf_index(spark, {root!r})
+t0 = time.perf_counter(); idx = load_index(spark, {root!r})
 t1 = time.perf_counter()
 ivf_knn(q, emb, k=5, n_probe=4, index=idx).write.format("noop").mode("overwrite").save()
 t2 = time.perf_counter()
@@ -261,16 +261,16 @@ def main() -> None:
         import tempfile
 
         from high_volume_market_data_pipeline_spark.similarity.index_store import (
-            load_pq_index,
-            save_pq_index,
+            load_index,
+            save_index,
         )
 
         idx_scratch = tempfile.mkdtemp(prefix="hvmdp_annidx_")
         t0 = time.perf_counter()
-        save_pq_index(pq_idx, os.path.join(idx_scratch, "pq"))
+        save_index(pq_idx, os.path.join(idx_scratch, "pq"))
         pq_save_sec = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        pq_loaded = load_pq_index(spark, os.path.join(idx_scratch, "pq"))
+        pq_loaded = load_index(spark, os.path.join(idx_scratch, "pq"))
         pq_load_sec = round(time.perf_counter() - t0, 3)
 
         # the honest cross-node number: a SEPARATE process (fresh JVM, no
@@ -287,7 +287,7 @@ def main() -> None:
         # manifest references the parent's files), and the only
         # corpus-proportional term is the one-column id anti-join.
         from high_volume_market_data_pipeline_spark.similarity.index_store import (
-            append_to_pq_index,
+            append_to_index,
         )
 
         n_held = min(20_000, max(10, n // 10))
@@ -295,7 +295,7 @@ def main() -> None:
         append_root = os.path.join(idx_scratch, "pq_append")
         base = emb.filter(F.col("vec_id") >= n_held)
         t0 = time.perf_counter()
-        save_pq_index(build_pq_index(base), append_root)
+        save_index(build_pq_index(base), append_root)
         append_base_build_sec = round(time.perf_counter() - t0, 3)
         batch_secs = []
         for b in range(10):
@@ -304,11 +304,11 @@ def main() -> None:
                 & (F.col("vec_id") < (b + 1) * batch_sz)
             )
             t0 = time.perf_counter()
-            append_to_pq_index(spark, append_root, batch)
+            append_to_index(spark, append_root, batch)
             batch_secs.append(round(time.perf_counter() - t0, 3))
         # post-append freshness: queries drawn from the APPENDED ids must
         # search the updated head immediately
-        idx_after = load_pq_index(spark, append_root)
+        idx_after = load_index(spark, append_root)
         t0 = time.perf_counter()
         fresh = pq_knn(q, emb, k=K, index=idx_after)
         fresh.write.format("noop").mode("overwrite").save()
@@ -340,7 +340,7 @@ def main() -> None:
         t0 = time.perf_counter()
         delete_from_index(spark, append_root, dead_ids)
         delete_sec = round(time.perf_counter() - t0, 3)
-        idx_deleted = load_pq_index(spark, append_root)
+        idx_deleted = load_index(spark, append_root)
         t0 = time.perf_counter()
         sdel = pq_knn(q, emb, k=K, index=idx_deleted)
         sdel.write.format("noop").mode("overwrite").save()
@@ -352,7 +352,7 @@ def main() -> None:
         t0 = time.perf_counter()
         purge_deleted(spark, append_root)
         purge_sec = round(time.perf_counter() - t0, 3)
-        idx_purged = load_pq_index(spark, append_root)
+        idx_purged = load_index(spark, append_root)
         t0 = time.perf_counter()
         pq_knn(q, emb, k=K, index=idx_purged).write.format("noop").mode(
             "overwrite"
@@ -375,9 +375,7 @@ def main() -> None:
         # the partitioned layout exists for: probe 4/16 must read ~4/16
         # of the files, and the flat twin pays the full scan.
         from high_volume_market_data_pipeline_spark.similarity.index_store import (
-            _save_coded,
             _save_model_arrays,
-            save_ivf_index,
         )
         from high_volume_market_data_pipeline_spark.sinks.history import (
             VersionedParquetTable,
@@ -385,7 +383,7 @@ def main() -> None:
 
         part_root = os.path.join(idx_scratch, "ivf_part")
         flat_root = os.path.join(idx_scratch, "ivf_flat")
-        save_ivf_index(ivf_idx, part_root)
+        save_index(ivf_idx, part_root)
         _save_model_arrays(
             spark,
             flat_root,
@@ -393,10 +391,8 @@ def main() -> None:
             {"n_cells": len(ivf_idx.centroids)},
             centroids=ivf_idx.centroids,
         )
-        _save_coded(
-            ivf_idx.coded.select("neighbor_id", "cv", "cell"),
-            flat_root,
-            "IVF_CODED",
+        VersionedParquetTable(os.path.join(flat_root, "coded")).write(
+            ivf_idx.coded.select("neighbor_id", "cv", "cell"), "IVF_CODED"
         )
         # the probed-cell set for the subprocess's single query (vec_id 0),
         # replicated driver-side: nearest n_probe centroids of the
