@@ -42,6 +42,10 @@ from high_volume_market_data_pipeline_spark.dedup.minhash import (
     lsh_candidate_pairs,
     minhash_signature,
 )
+from high_volume_market_data_pipeline_spark.sinks.table_format import (
+    footer_rows,
+    parquet_files,
+)
 
 # Spark's parquet reader ignores underscore-prefixed files, so the sidecar
 # can live inside the store directory without affecting reads.
@@ -109,21 +113,6 @@ class SignatureStore:
     def _sidecar_path(self) -> str:
         return os.path.join(self.path, _ROW_COUNT_SIDECAR)
 
-    def _list_parquet_files(self) -> list[str]:
-        out = []
-        for dirpath, _, files in os.walk(self.path):
-            out.extend(
-                os.path.join(dirpath, f)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        return out
-
-    def _footer_rows(self, files: list[str]) -> int:
-        import pyarrow.parquet as pq
-
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
     def _write_sidecar(self, rows: int, files: int) -> None:
         tmp = self._sidecar_path() + ".tmp"
         with open(tmp, "w") as fh:
@@ -141,7 +130,7 @@ class SignatureStore:
         result-identical branches runs, so a stale count costs
         performance, never correctness."""
         if files is None:
-            files = self._list_parquet_files()
+            files = parquet_files(self.path)
         try:
             with open(self._sidecar_path()) as fh:
                 side = json.load(fh)
@@ -149,7 +138,7 @@ class SignatureStore:
                 return int(side["rows"])
         except (OSError, ValueError, KeyError, TypeError):
             pass
-        rows = self._footer_rows(files)
+        rows = footer_rows(files)
         try:
             self._write_sidecar(rows, len(files))
         except OSError:
@@ -200,8 +189,8 @@ class SignatureStore:
         banded.write.mode("overwrite").parquet(self.path)
         # seed the row-count sidecar: one footer pass over the files just
         # written (bootstrap-only; increments maintain it incrementally)
-        files = self._list_parquet_files()
-        self._write_sidecar(self._footer_rows(files), len(files))
+        files = parquet_files(self.path)
+        self._write_sidecar(footer_rows(files), len(files))
 
     def dedup_increment(
         self,
@@ -383,7 +372,7 @@ class SignatureStore:
         # set and replay convergence — are byte-identical in both
         # branches (pinned by
         # tests/test_dedup_similarity.py::test_scoped_store_probe_equivalence).
-        files_before = self._list_parquet_files()
+        files_before = parquet_files(self.path)
         store_rows = self._physical_rows(files_before)
         scope_store = (
             store_rows >= self.scope_store_min_rows
@@ -540,10 +529,10 @@ class SignatureStore:
         # append created (guide §6 — metadata instead of data I/O; the
         # listing is one os.walk, the footers are O(files just written))
         before = set(files_before)
-        new_files = [f for f in self._list_parquet_files() if f not in before]
+        new_files = [f for f in parquet_files(self.path) if f not in before]
         try:
             self._write_sidecar(
-                store_rows + self._footer_rows(new_files),
+                store_rows + footer_rows(new_files),
                 len(files_before) + len(new_files),
             )
         except OSError:

@@ -47,6 +47,10 @@ from high_volume_market_data_pipeline_spark.sinks.history import (
     ConcurrentCommitError,
     VersionedParquetTable,
 )
+from high_volume_market_data_pipeline_spark.sinks.table_format import (
+    data_dirs,
+    parquet_files,
+)
 
 
 def _save_model_arrays(
@@ -99,16 +103,11 @@ def _load_model_arrays(
     t = VersionedParquetTable(os.path.join(root, "model"))
     m = t._resolve(version, None)
     rows: list[dict] = []
-    for d in t._data_dirs(m):
-        for dirpath, _, files in os.walk(d):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    rows.extend(
-                        pq.read_table(
-                            os.path.join(dirpath, f),
-                            columns=["part", "i", "j", "vec"],
-                        ).to_pylist()
-                    )
+    for d in data_dirs(m):
+        for f in parquet_files(d):
+            rows.extend(
+                pq.read_table(f, columns=["part", "i", "j", "vec"]).to_pylist()
+            )
     cent_rows = sorted(
         ((r["i"], r["vec"]) for r in rows if r["part"] == "centroid")
     )

@@ -11,6 +11,10 @@ commit log), minus transactions we cannot express without a JVM extension:
     <root>/_data/v<version>_<attempt>/  immutable parquet dir (unique per
                                         write attempt; manifests point at it)
 
+The file names, the checkpoint chain and the rules for reading the log
+live in ``sinks/table_format``, which the table_stream source
+(``sources/table_datasource``) reads the log through as well.
+
 The ``_data`` parent keeps snapshots out of a raw ``spark.read.parquet
 (root)`` (Spark skips ``_``-prefixed names), while the snapshot dir's own
 name does not start with ``_``: Spark ignores a READ PATH whose leaf is
@@ -42,7 +46,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import uuid
 import warnings
@@ -52,11 +55,21 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_LOG = "_log"
-_DATA = "_data"
-_MANIFEST_RE = re.compile(r"^(\d{8})\.json$")
-_CHECKPOINT_RE = re.compile(r"^(\d{8})\.checkpoint\.json$")
-_LAST_CHECKPOINT = "_last_checkpoint"
+from high_volume_market_data_pipeline_spark.sinks.table_format import (
+    CHECKPOINT_RE,
+    DATA,
+    LAST_CHECKPOINT,
+    LOG,
+    MANIFEST_RE,
+    checkpoint_name,
+    chunks,
+    data_dirs,
+    footer_rows,
+    manifest_name,
+    parquet_files,
+    read_last_checkpoint,
+    tail_manifests,
+)
 
 
 class VacuumResult(NamedTuple):
@@ -148,7 +161,7 @@ class VersionedParquetTable:
 
     def __init__(self, root: str) -> None:
         self.root = root
-        self.log_dir = os.path.join(root, _LOG)
+        self.log_dir = os.path.join(root, LOG)
         # observability for tests/benches: log files opened by the most
         # recent _manifests() call (the checkpointing contract is that
         # this stays bounded by a constant as the table ages)
@@ -156,97 +169,29 @@ class VersionedParquetTable:
 
     # -- log plumbing -------------------------------------------------------
 
-    def _read_last_checkpoint(self) -> dict | None:
-        """The checkpoint the ``_last_checkpoint`` pointer names (with its
-        file name injected as ``_name``), or None. Any failure (missing /
-        torn pointer or checkpoint — both are rename-published, so torn
-        means external damage) falls back to a full log replay: the
-        checkpoint is a CACHE of the manifest log, never the source of
-        truth."""
-        ptr = os.path.join(self.log_dir, _LAST_CHECKPOINT)
-        try:
-            with open(ptr) as fh:
-                name = json.load(fh)["checkpoint"]
-            with open(os.path.join(self.log_dir, name)) as fh:
-                cp = json.load(fh)
-            cp["_name"] = name
-            self.last_log_files_opened += 2
-            return cp
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _tail_manifests(self, floor: int) -> list[dict]:
-        """Parse the loose manifest files with version > ``floor``,
-        ascending. A torn TRAILING manifest is a crashed commit on a
-        filesystem without hard links (the O_EXCL fallback makes the file
-        visible before its single write lands) — treated as never
-        committed so one torn commit cannot brick every later read of the
-        table. A torn manifest in the MIDDLE of the log means real
-        corruption: fail loudly."""
-        names = sorted(
-            f
-            for f in os.listdir(self.log_dir)
-            if _MANIFEST_RE.match(f) and int(f[:8]) > floor
-        )
-        out: list[dict] = []
-        for i, f in enumerate(names):
-            try:
-                with open(os.path.join(self.log_dir, f)) as fh:
-                    out.append(json.load(fh))
-                self.last_log_files_opened += 1
-            except (json.JSONDecodeError, ValueError) as exc:
-                if i == len(names) - 1:
-                    continue
-                raise RuntimeError(
-                    f"corrupt non-trailing manifest {f} at {self.root}; "
-                    "the commit log is damaged beyond a torn tail"
-                ) from exc
-        return out
+    def _opened(self, n: int) -> None:
+        self.last_log_files_opened += n
 
     def _chunks(self):
-        """Yield the log as (floor, manifests-ascending) chunks, NEWEST
-        FIRST: the loose tail above the latest checkpoint, then each
-        checkpoint chunk down the parent chain. Auto-checkpoints are
-        INCREMENTAL (they embed only the manifests above their parent's
-        floor plus a pointer to it — Delta-style full-state checkpoints
-        measured O(commits²/interval) cumulative write volume on a
-        continuously-ingesting table), so head reads stop after the first
-        chunk while history/time-travel walk as deep as they need. Any
-        damage in the chain (missing parent, cycle, garbage) falls back
-        to replaying every loose manifest file — checkpoints are caches;
-        the manifest files stay the source of truth."""
+        """The log as newest-first (floor, manifests) chunks
+        (``table_format.chunks``), counting the files it opens into
+        ``last_log_files_opened``."""
         self.last_log_files_opened = 0
-        if not os.path.isdir(self.log_dir):
-            return
-        try:
-            cp = self._read_last_checkpoint()
-            floor = cp["version"] if cp else -1
-            yield floor, self._tail_manifests(floor)
-            seen_floors = set()
-            while cp is not None:
-                pfloor = cp.get("floor", -1)
-                if pfloor in seen_floors or pfloor >= cp["version"]:
-                    raise ValueError("checkpoint chain cycle")
-                seen_floors.add(pfloor)
-                yield pfloor, list(cp["manifests"])
-                parent = cp.get("parent")
-                if parent is None:
-                    return
-                with open(os.path.join(self.log_dir, parent)) as fh:
-                    cp = json.load(fh)
-                cp["_name"] = parent
-                self.last_log_files_opened += 1
-        except RuntimeError:
-            raise  # non-trailing corruption: a replay would hit it too
-        except (OSError, ValueError, KeyError):
-            yield -1, self._tail_manifests(-1)
+        yield from chunks(self.log_dir, self._opened)
 
-    def _manifests(self) -> list[dict]:
+    def _manifests(self, limit: int | None = None) -> list[dict]:
+        """Committed manifests, ascending; with ``limit`` only the newest
+        ``limit``, and the chunk walk stops as soon as it has them."""
         by_version: dict[int, dict] = {}
         for _, chunk in self._chunks():
             for m in chunk:
                 by_version.setdefault(m["version"], m)
-        return [by_version[v] for v in sorted(by_version)]
+            if limit is not None and len(by_version) >= limit:
+                break
+        versions = sorted(by_version)
+        if limit is not None:
+            versions = versions[-limit:]
+        return [by_version[v] for v in versions]
 
     def checkpoint(self) -> str | None:
         """FOLD the whole manifest log into ONE full checkpoint and
@@ -281,7 +226,7 @@ class VersionedParquetTable:
         if not ms:
             return None
         head = ms[-1]["version"]
-        name = f"{head:08d}.checkpoint.json"
+        name = checkpoint_name(head)
         body = {"version": head, "manifests": ms}
         if parent is not None:
             body["parent"] = parent
@@ -293,11 +238,11 @@ class VersionedParquetTable:
         ptr_tmp = os.path.join(self.log_dir, f".ptmp_{uuid.uuid4().hex[:8]}")
         with open(ptr_tmp, "w") as fh:
             json.dump({"checkpoint": name}, fh)
-        os.replace(ptr_tmp, os.path.join(self.log_dir, _LAST_CHECKPOINT))
+        os.replace(ptr_tmp, os.path.join(self.log_dir, LAST_CHECKPOINT))
         if parent is None:
             # a full fold supersedes the whole chain — reclaim it now
             for f in os.listdir(self.log_dir):
-                m = _CHECKPOINT_RE.match(f)
+                m = CHECKPOINT_RE.match(f)
                 if m and f != name:
                     try:
                         os.unlink(os.path.join(self.log_dir, f))
@@ -367,7 +312,7 @@ class VersionedParquetTable:
             # footers (metadata-only): lets maintenance decisions (ANN
             # auto-purge fraction, chain-absorb sizing) read the corpus
             # size from the manifest instead of a count() scan
-            "n_rows": self._dir_num_rows(data_dir),
+            "n_rows": footer_rows(parquet_files(data_dir)),
             # recorded so layout-preserving rewrites (compact/restore)
             # can reproduce the snapshot's hive partitioning instead of
             # silently flattening it
@@ -429,7 +374,7 @@ class VersionedParquetTable:
         parent = self._resolve(parent_version, None)
         if version is None:
             version = (self.latest_version() or 0) + 1
-        parent_dirs = self._data_dirs(parent)
+        parent_dirs = data_dirs(parent)
         spark = df.sparkSession
         # Evolution check against the parent's RECORDED schema (Delta's
         # metaData action) — metadata-only; falling back to parquet
@@ -480,11 +425,8 @@ class VersionedParquetTable:
         # later read fail schema inference on that dir. An empty delta
         # (e.g. a fully-deduped replay) commits as a manifest pointing at
         # the parent's files only; the version still advances.
-        has_files = any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(delta_dir)
-            for f in fs
-        )
+        delta_files = parquet_files(delta_dir)
+        has_files = bool(delta_files)
         parameters = dict(parameters or {})
         if max_chain is not None and len(parent_dirs) >= max_chain:
             # Absorb the PARENT CHAIN into one folded snapshot dir while
@@ -507,21 +449,18 @@ class VersionedParquetTable:
                 fw = fw.partitionBy(partition_by)
             fw.parquet(folded_dir)
             parameters["absorbed_chain"] = len(parent_dirs)
-            data_dirs = [folded_dir] + ([delta_dir] if has_files else [])
+            dirs = [folded_dir] + ([delta_dir] if has_files else [])
             # the fold rewrote the whole corpus, so its footers ARE the
             # authoritative parent count — no dependence on the parent
             # manifest having recorded one
-            n_rows = self._dir_num_rows(folded_dir) + (
-                self._dir_num_rows(delta_dir) if has_files else 0
-            )
+            n_rows = footer_rows(parquet_files(folded_dir) + delta_files)
         else:
-            data_dirs = parent_dirs + ([delta_dir] if has_files else [])
+            dirs = parent_dirs + ([delta_dir] if has_files else [])
             # parent count + delta footers; a legacy parent without
             # n_rows leaves it unrecorded (readers fall back to count())
             # rather than paying an O(chain-files) footer walk here
             n_rows = (
-                parent["n_rows"]
-                + (self._dir_num_rows(delta_dir) if has_files else 0)
+                parent["n_rows"] + footer_rows(delta_files)
                 if parent.get("n_rows") is not None
                 else None
             )
@@ -530,7 +469,7 @@ class VersionedParquetTable:
             "timestamp": time.time(),
             "operation": operation,
             "parameters": parameters,
-            "data_dirs": data_dirs,
+            "data_dirs": dirs,
             "n_rows": n_rows,
             # dirs holding rows NEW at this version (vs rewrites of data
             # older versions already reference) — the streaming source's
@@ -578,7 +517,7 @@ class VersionedParquetTable:
             "timestamp": time.time(),
             "operation": operation,
             "parameters": parameters or {},
-            "data_dirs": self._data_dirs(parent),
+            "data_dirs": data_dirs(parent),
             "n_rows": parent.get("n_rows"),
             "fresh_dirs": [],
             "partition_by": parent.get("partition_by"),
@@ -617,9 +556,7 @@ class VersionedParquetTable:
             n = m.get("n_rows")
             if n is None:
                 continue
-            actual = sum(
-                self._dir_num_rows(d) for d in self._data_dirs(m)
-            )
+            actual = sum(footer_rows(parquet_files(d)) for d in data_dirs(m))
             if int(n) != actual:
                 bad.append(
                     {
@@ -634,33 +571,8 @@ class VersionedParquetTable:
         """A fresh snapshot dir for one write attempt at ``version`` (see
         the module docstring for the layout)."""
         return os.path.join(
-            self.root, _DATA, f"v{version:08d}_{uuid.uuid4().hex[:8]}"
+            self.root, DATA, f"v{version:08d}_{uuid.uuid4().hex[:8]}"
         )
-
-    @staticmethod
-    def _data_dirs(manifest: dict) -> list[str]:
-        """Every data dir a manifest references: append commits carry
-        ``data_dirs`` (parent chain + delta), full snapshots ``data_dir``."""
-        return list(manifest.get("data_dirs") or [manifest["data_dir"]])
-
-    @staticmethod
-    def _dir_num_rows(path: str) -> int:
-        """Row count of every parquet file under ``path``, summed from the
-        FOOTERS (pyarrow metadata reads — no data scan, no Spark job).
-        Feeds the manifest's ``n_rows``: O(files-just-written) metadata
-        I/O per commit, so maintenance code (e.g. the ANN store's
-        auto-purge fraction check) can size decisions against the table
-        without a count() scan on the hot path."""
-        import pyarrow.parquet as pq
-
-        total = 0
-        for dirpath, _, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(dirpath, f)
-                    ).metadata.num_rows
-        return total
 
     def _raise_occupied(self, final: str, version: int) -> None:
         """The CAS target is occupied. Distinguish a real winner (or a
@@ -718,7 +630,7 @@ class VersionedParquetTable:
         if not os.path.isdir(self.log_dir):
             return None
         names = sorted(
-            f for f in os.listdir(self.log_dir) if _MANIFEST_RE.match(f)
+            f for f in os.listdir(self.log_dir) if MANIFEST_RE.match(f)
         )
         if not names:
             return None
@@ -781,7 +693,7 @@ class VersionedParquetTable:
         # drop the winner's commit). The loser gets ConcurrentCommitError
         # and can re-derive against the new head; its snapshot dir is an
         # orphan until vacuum.
-        final = os.path.join(self.log_dir, f"{version:08d}.json")
+        final = os.path.join(self.log_dir, manifest_name(version))
         try:
             try:
                 os.link(tmp, final)
@@ -935,28 +847,20 @@ class VersionedParquetTable:
         file. Best effort: the commit above is already durable, so a
         checkpoint failure must not make the caller believe the commit
         failed (it would re-commit and hit ConcurrentCommitError on its
-        own version) — warn and move on; the next commit retries."""
-        # The pointer probe must not pollute last_log_files_opened: the
-        # counter is documented as "files opened by the most recent
-        # log-read call" and tests/benches read it right after a write
-        # path — restored in a finally so the warn path keeps the
-        # contract too.
-        saved = self.last_log_files_opened
+        own version) — warn and move on; the next commit retries. The
+        probe's opens go uncounted: ``last_log_files_opened`` describes
+        the most recent read, not this write-path probe."""
         try:
-            try:
-                self.last_log_files_opened = 0
-                cp = self._read_last_checkpoint()
-                floor = cp["version"] if cp else -1
-                if version - floor >= self.checkpoint_interval:
-                    chunk = self._tail_manifests(floor)
-                    if chunk:
-                        self._write_checkpoint(
-                            chunk,
-                            parent=cp["_name"] if cp else None,
-                            floor=floor,
-                        )
-            finally:
-                self.last_log_files_opened = saved
+            cp = read_last_checkpoint(self.log_dir)
+            floor = cp["version"] if cp else -1
+            if version - floor >= self.checkpoint_interval:
+                chunk = tail_manifests(self.log_dir, floor)
+                if chunk:
+                    self._write_checkpoint(
+                        chunk,
+                        parent=cp["_name"] if cp else None,
+                        floor=floor,
+                    )
         except Exception as exc:  # noqa: BLE001 — cache maintenance only
             warnings.warn(
                 f"checkpoint after version {version} at {self.root} "
@@ -997,17 +901,9 @@ class VersionedParquetTable:
         per snapshot. Chain length — and so the union width — is bounded
         by ``append(max_chain=...)``."""
         m = self._resolve(version, as_of_ts)
-        dirs = self._data_dirs(m)
-        out = spark.read.parquet(dirs[0])
-        for d in dirs[1:]:
-            # allowMissingColumns: merge-schema appends (see append()) may
-            # add or omit columns per delta dir; absent columns read null.
-            # Writes validate name/type compatibility, so this can never
-            # mask a typo — only honor a declared evolution.
-            out = out.unionByName(
-                spark.read.parquet(d), allowMissingColumns=True
-            )
-        return self._cast_partition_col(out, m)
+        return self._cast_partition_col(
+            self._read_dirs(spark, data_dirs(m), m["version"]), m
+        )
 
     @staticmethod
     def _cast_partition_col(out: DataFrame, m: dict) -> DataFrame:
@@ -1036,14 +932,19 @@ class VersionedParquetTable:
     def _read_dirs(
         self, spark: SparkSession, dirs: list[str], fallback_version: int
     ) -> DataFrame:
-        """Per-dir union of a SUBSET of a version's data dirs (same
-        one-scan-per-dir rule as ``read``). An empty subset still needs
-        the version's schema for the diff join, so it reads the version
-        under limit(0) — Catalyst collapses that to an empty relation."""
+        """One scan per dir of (a subset of) a version's data dirs, unioned
+        by name (see ``read``). An empty subset (``changes`` on shared
+        dirs) still needs the version's schema for the diff join, so it
+        reads the version under limit(0) — Catalyst collapses that to an
+        empty relation."""
         if not dirs:
             return self.read(spark, version=fallback_version).limit(0)
         out = spark.read.parquet(dirs[0])
         for d in dirs[1:]:
+            # allowMissingColumns: merge-schema appends (see append()) may
+            # add or omit columns per delta dir; absent columns read null.
+            # Writes validate name/type compatibility, so this can never
+            # mask a typo — only honor a declared evolution.
             out = out.unionByName(
                 spark.read.parquet(d), allowMissingColumns=True
             )
@@ -1060,15 +961,10 @@ class VersionedParquetTable:
 
         def inventory(m: dict) -> dict:
             inv: dict[str, set] = {}
-            for d in self._data_dirs(m):
-                for dirpath, _, files in os.walk(d):
-                    pqs = [f for f in files if f.endswith(".parquet")]
-                    if not pqs:
-                        continue
-                    rel = os.path.relpath(dirpath, d)
-                    inv.setdefault(rel, set()).update(
-                        os.path.join(dirpath, f) for f in pqs
-                    )
+            for d in data_dirs(m):
+                for f in parquet_files(d):
+                    rel = os.path.relpath(os.path.dirname(f), d)
+                    inv.setdefault(rel, set()).add(f)
             return inv
 
         a, b = inventory(pre_m), inventory(post_m)
@@ -1088,23 +984,9 @@ class VersionedParquetTable:
         is Delta's ``history(N)``: only the newest N commits, and — with
         the incremental checkpoint chain — the log walk STOPS as soon as
         it has them (``history(1)`` on a 100k-commit table parses one
-        chunk, not the chain)."""
-        if limit is None:
-            ms = list(reversed(self._manifests()))
-        else:
-            ms, seen = [], set()
-            for _, chunk in self._chunks():
-                for m in reversed(chunk):
-                    # racing auto-checkpoints can leave overlapping
-                    # chunks; first (newest) occurrence wins
-                    if m["version"] in seen:
-                        continue
-                    seen.add(m["version"])
-                    ms.append(m)
-                    if len(ms) >= limit:
-                        break
-                if len(ms) >= limit:
-                    break
+        chunk, not the chain). A ``limit`` below 1 raises ValueError."""
+        if limit is not None and limit < 1:
+            raise ValueError(f"history limit must be >= 1, got {limit}")
         rows = [
             (
                 m["version"],
@@ -1112,7 +994,7 @@ class VersionedParquetTable:
                 m["operation"],
                 json.dumps(m["parameters"], sort_keys=True),
             )
-            for m in ms
+            for m in reversed(self._manifests(limit))
         ]
         return spark.createDataFrame(
             rows, "version BIGINT, timestamp DOUBLE, operation STRING, parameters STRING"
@@ -1160,7 +1042,7 @@ class VersionedParquetTable:
         names there is no metadata signal for which partitions changed."""
         pre_m = self._resolve(v_from, None)
         post_m = self._resolve(v_to, None)
-        pre_dirs, post_dirs = self._data_dirs(pre_m), self._data_dirs(post_m)
+        pre_dirs, post_dirs = data_dirs(pre_m), data_dirs(post_m)
         shared = set(pre_dirs) & set(post_dirs)
         # the same recorded-type partition-column normalization read()
         # applies — a mixed raw/normalized pair would look like a retype
@@ -1347,9 +1229,12 @@ class VersionedParquetTable:
         gone); ``removed_dirs`` lists every snapshot dir removed, including
         commit-losing orphan attempt dirs whose parsed version number may
         match a kept, still-readable snapshot — conflating those two was a
-        false 'version retired' signal."""
+        false 'version retired' signal. A ``keep_last`` below 1 raises
+        ValueError (vacuum never retires the head)."""
         import shutil
 
+        if keep_last < 1:
+            raise ValueError(f"vacuum keep_last must be >= 1, got {keep_last}")
         grace = (
             self.orphan_grace_seconds
             if orphan_grace_seconds is None
@@ -1366,7 +1251,7 @@ class VersionedParquetTable:
                 if m["version"] in kept_v or m["timestamp"] >= cutoff_ts
             ]
         keep_dirs = {
-            os.path.basename(d) for m in kept for d in self._data_dirs(m)
+            os.path.basename(d) for m in kept for d in data_dirs(m)
         }
         keep_versions = {m["version"] for m in kept}
         retiring = [m for m in ms if m["version"] not in keep_versions]
@@ -1375,7 +1260,7 @@ class VersionedParquetTable:
         # a commit-losing writer's orphan dir can share a version number
         # with the winner's kept snapshot.
         retired_dirs = {
-            os.path.basename(d) for m in retiring for d in self._data_dirs(m)
+            os.path.basename(d) for m in retiring for d in data_dirs(m)
         } - keep_dirs
         removed_dirs: list[str] = []
         retired: list[int] = []
@@ -1388,12 +1273,12 @@ class VersionedParquetTable:
         if retiring and kept:
             self._write_checkpoint(kept)
         for m in retiring:
-            mf = os.path.join(self.log_dir, f"{m['version']:08d}.json")
+            mf = os.path.join(self.log_dir, manifest_name(m["version"]))
             if os.path.exists(mf):
                 os.remove(mf)
                 retired.append(m["version"])
         cutoff = time.time() - grace
-        data = os.path.join(self.root, _DATA)
+        data = os.path.join(self.root, DATA)
         snapshot_dirs = [
             os.path.join(self.root, d)
             for d in os.listdir(self.root)

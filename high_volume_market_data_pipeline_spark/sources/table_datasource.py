@@ -68,6 +68,13 @@ table age) and emits one InputPartition PER PARQUET FILE; executors read
 their own files with pyarrow and yield Arrow record batches zero-copy
 into Spark. Nothing data-sized ever crosses the planning process.
 
+The manifest log is read through ``sinks/table_format`` — the module
+that owns the on-disk format and that ``VersionedParquetTable`` itself
+reads through — so the source and the table cannot disagree on what is
+committed. Spark runs the plan-time methods in a fresh python process
+that cannot import this package; ``register_table_stream`` ships both
+modules by value, so neither may import any other repo module.
+
 Vacuum interacts like Delta: computing version v's new dirs needs
 manifest v-1, so the table's vacuum horizon must cover the stream's lag
 (a retired manifest raises with the vacuum hint rather than silently
@@ -82,7 +89,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -91,82 +97,31 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from high_volume_market_data_pipeline_spark.sinks.table_format import (
+    LOG,
+    chunks,
+    data_dirs,
+    parquet_files,
+)
+
 _PARTITIONING = "hive"
-
-# SELF-CONTAINED manifest-log reading. Spark runs a Python DataSource's
-# plan-time methods (schema / offsets / partitions) in a fresh "plan
-# runner" python process — NOT the driver — so this module may not import
-# anything from this repo package at runtime (the process inherits the
-# driver's cwd; see the NOTES cwd-portability rule). The reader therefore
-# parses the ON-DISK log format directly, the way Delta readers in other
-# engines parse the Delta log: pointer + checkpoint + post-checkpoint
-# tail, torn trailing manifest treated as uncommitted. Format owner:
-# sinks/history.py (_manifests / _read_last_checkpoint) — any format
-# change must land in both files; tests/test_table_stream.py pins the
-# agreement by streaming tables history.py wrote.
-_MANIFEST_RE = re.compile(r"^(\d{8})\.json$")
-
-
-def _tail_manifests(log_dir: str, floor: int) -> list[dict]:
-    names = sorted(
-        f
-        for f in os.listdir(log_dir)
-        if _MANIFEST_RE.match(f) and int(f[:8]) > floor
-    )
-    out: list[dict] = []
-    for i, f in enumerate(names):
-        try:
-            with open(os.path.join(log_dir, f)) as fh:
-                out.append(json.load(fh))
-        except (json.JSONDecodeError, ValueError):
-            if i == len(names) - 1:
-                continue  # torn trailing manifest: not committed yet
-            raise RuntimeError(
-                f"corrupt non-trailing manifest {f} at {log_dir}"
-            ) from None
-    return out
+_HIGH_WATER = "high_water.json"
 
 
 def _read_manifests(root: str, min_version: int = 0) -> dict[int, dict]:
-    """Manifests with version >= ``min_version`` (older ones may also be
-    returned — callers filter). Auto-checkpoints are INCREMENTAL since
-    r10 (a chunk above the parent checkpoint's floor + ``parent``
-    pointer; full folds carry no ``parent``): the walk descends the
-    chain only until it covers ``min_version``, so planning a tail batch
-    parses O(lag) metadata, not the table's whole history. Chain damage
-    falls back to replaying every loose manifest file — the checkpoint
-    is a cache; manifest files are the source of truth."""
-    log_dir = os.path.join(root, "_log")
-    if not os.path.isdir(log_dir):
-        return {}
-    try:
-        with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-            name = json.load(fh)["checkpoint"]
-        with open(os.path.join(log_dir, name)) as fh:
-            cp = json.load(fh)
-        out = {m["version"]: m for m in _tail_manifests(log_dir, cp["version"])}
-        seen_floors: set[int] = set()
-        while cp is not None:
-            floor = cp.get("floor", -1)
-            if floor in seen_floors or floor >= cp["version"]:
-                raise ValueError("checkpoint chain cycle")
-            seen_floors.add(floor)
-            for m in cp["manifests"]:
-                out.setdefault(m["version"], m)
-            parent = cp.get("parent")
-            if parent is None or floor < min_version:
-                break
-            with open(os.path.join(log_dir, parent)) as fh:
-                cp = json.load(fh)
-        return out
-    except RuntimeError:
-        raise  # non-trailing corruption: a replay would hit it too
-    except (OSError, ValueError, KeyError):
-        return {m["version"]: m for m in _tail_manifests(log_dir, -1)}
-
-
-def _manifest_dirs(manifest: dict) -> list[str]:
-    return list(manifest.get("data_dirs") or [manifest["data_dir"]])
+    """Manifests with version >= ``min_version``, and at least the head
+    (older ones may also be returned — callers filter). The log's
+    newest-first chunk walk (``sinks/table_format.chunks``, the same one
+    the table reads) stops at the first chunk whose floor is below
+    ``min_version``, so planning a tail batch parses O(lag) metadata,
+    not the table's whole history."""
+    out: dict[int, dict] = {}
+    for floor, chunk in chunks(os.path.join(root, LOG)):
+        for m in chunk:
+            out.setdefault(m["version"], m)
+        if floor < min_version and out:
+            break
+    return out
 
 
 def _resolve_starting_version(root: str, options: dict) -> int:
@@ -194,15 +149,6 @@ def _resolve_starting_version(root: str, options: dict) -> int:
             f"{root}; no version starts at or after it"
         )
     return min(eligible)
-
-
-def _parquet_files(d: str) -> list[str]:
-    out = []
-    for dirpath, _, files in os.walk(d):
-        out.extend(
-            os.path.join(dirpath, f) for f in files if f.endswith(".parquet")
-        )
-    return sorted(out)
 
 
 def _arrow_schema(dirs: list[str]):
@@ -342,12 +288,9 @@ class TableStreamReader(DataSourceStreamReader):
 
     # -- admission high-water persistence (admission_dir) -------------------
 
-    def _high_water_path(self) -> str:
-        return os.path.join(self.admission_dir, "high_water.json")
-
     def _load_high_water(self) -> "int | None":
         try:
-            with open(self._high_water_path()) as fh:
+            with open(os.path.join(self.admission_dir, _HIGH_WATER)) as fh:
                 return int(json.load(fh)["version"])
         except (OSError, ValueError, KeyError):
             return None
@@ -362,12 +305,7 @@ class TableStreamReader(DataSourceStreamReader):
         cur = self._load_high_water()
         if cur is not None and cur >= v:
             return
-        tmp = self._high_water_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": v}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._high_water_path())
+        _write_high_water(self.admission_dir, v)
 
     def _reveal(self, v: int) -> None:
         self._revealed = v if self._revealed is None else max(
@@ -375,9 +313,6 @@ class TableStreamReader(DataSourceStreamReader):
         )
 
     # -- offsets (plan runner, metadata-sized) -----------------------------
-
-    def _manifest_map(self, min_version: int = 0) -> dict[int, dict]:
-        return _read_manifests(self.root, min_version=min_version)
 
     def initialOffset(self) -> dict:
         # One version BELOW the starting snapshot: the first batch then
@@ -415,7 +350,7 @@ class TableStreamReader(DataSourceStreamReader):
         for bounded catch-up."""
         # head discovery needs only the newest chunk — a huge min_version
         # stops the chain walk right after it
-        ms = self._manifest_map(min_version=1 << 62)
+        ms = _read_manifests(self.root, min_version=1 << 62)
         # the monotonic floor: never return below a prior return or a
         # revealed engine offset, even on a transient empty log read
         known = max(
@@ -455,7 +390,7 @@ class TableStreamReader(DataSourceStreamReader):
             # oversized commit cannot stall the stream). Metadata-only:
             # lists + stats the candidate versions' new dirs, O(lag)
             # like partitions() itself.
-            ms_full = self._manifest_map(min_version=max(0, base))
+            ms_full = _read_manifests(self.root, min_version=max(0, base))
             f_budget = self.max_files_per_batch or (1 << 62)
             b_budget = self.max_bytes_per_trigger or (1 << 62)
             spent_f, spent_b, end = 0, 0, base
@@ -463,7 +398,7 @@ class TableStreamReader(DataSourceStreamReader):
                 files = [
                     f
                     for d in self._new_dirs(v, ms_full, base)
-                    for f in _parquet_files(d)
+                    for f in parquet_files(d)
                 ]
                 n, b = len(files), sum(os.path.getsize(f) for f in files)
                 if end > base and (
@@ -498,7 +433,7 @@ class TableStreamReader(DataSourceStreamReader):
                 "log (vacuumed?); the table's vacuum horizon must cover "
                 "the stream's lag"
             )
-        dirs = _manifest_dirs(ms[v])
+        dirs = data_dirs(ms[v])
         if v == self.starting_version and batch_start == v - 1:
             # the initial snapshot is emitted in full — but ONLY for the
             # batch that actually starts at it: a timestamp-resolved
@@ -513,7 +448,7 @@ class TableStreamReader(DataSourceStreamReader):
                 "manifest log (vacuumed?); cannot derive version "
                 f"{v}'s delta"
             )
-        parent = set(_manifest_dirs(ms[v - 1]))
+        parent = set(data_dirs(ms[v - 1]))
         fresh = [d for d in dirs if d not in parent]
         if parent - set(dirs) or (fresh and "data_dirs" not in ms[v]):
             # dirs were dropped (overwrite / compact / restore / chain
@@ -568,7 +503,7 @@ class TableStreamReader(DataSourceStreamReader):
             # raising the floor to that probe's start would plan the
             # replay empty and drop its versions for good.
             self._floor = max(self._floor, v_start)
-        ms = self._manifest_map(min_version=max(0, lo))
+        ms = _read_manifests(self.root, min_version=max(0, lo))
         out: list[TableFilesPartition] = []
         for v in range(lo + 1, v_end + 1):
             meta: tuple = (None, None)
@@ -577,7 +512,7 @@ class TableStreamReader(DataSourceStreamReader):
             for d in self._new_dirs(v, ms, v_start):
                 out.extend(
                     TableFilesPartition(f, d, *meta)
-                    for f in _parquet_files(d)
+                    for f in parquet_files(d)
                 )
         if not out:
             # Spark requires ≥1 partition per batch; an empty sentinel
@@ -634,6 +569,21 @@ class TableStreamReader(DataSourceStreamReader):
             yield pa.RecordBatch.from_arrays(arrays, schema=full)
 
 
+def _write_high_water(admission_dir: str, v: int) -> None:
+    """Publish ``v`` as the admission high-water: fsync'd, then renamed
+    into place. A torn file reads as "no high-water", and a reader that
+    finds none on a checkpoint with committed offsets seeds its window
+    from the starting version — the below-committed offset that re-emits
+    rows (module docstring)."""
+    path = os.path.join(admission_dir, _HIGH_WATER)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump({"version": v}, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
 class TableStreamDataSource(DataSource):
     @classmethod
     def name(cls):
@@ -674,7 +624,7 @@ class TableStreamDataSource(DataSource):
         else:
             from pyspark.sql.pandas.types import from_arrow_schema
 
-            st = from_arrow_schema(_arrow_schema(_manifest_dirs(head)))
+            st = from_arrow_schema(_arrow_schema(data_dirs(head)))
         if str(
             self.options.get("with_commit_version", "false")
         ).lower() in ("1", "true", "yes"):
@@ -708,17 +658,19 @@ def register_table_stream(spark) -> None:
     ``spark.readStream.format("table_stream").option("root", path)``
     tails the versioned table at ``path``.
 
-    The module registers itself for BY-VALUE pickling first: the reader
-    object (whose ``read`` runs executor-side) and its InputPartitions
-    live in this repo package, and by-reference pickling would require
-    Python workers — which inherit the driver's cwd — to re-import the
-    package (the NOTES cwd-portability rule). ``read`` itself touches
-    only pyarrow/pyspark at runtime; every repo-module import in this
-    file sits inside driver-only methods."""
+    This module and the log-format module it reads through
+    (``sinks/table_format``) register for BY-VALUE pickling first: the
+    plan-time methods run in a python process and ``read`` in Python
+    workers, both of which inherit the driver's cwd, and by-reference
+    pickling would require them to re-import the package (the NOTES
+    cwd-portability rule). Neither module imports any other repo module
+    at runtime."""
     from pyspark import cloudpickle
 
+    import high_volume_market_data_pipeline_spark.sinks.table_format as fmt
     import high_volume_market_data_pipeline_spark.sources.table_datasource as m
 
+    cloudpickle.register_pickle_by_value(fmt)
     cloudpickle.register_pickle_by_value(m)
     spark.dataSource.register(TableStreamDataSource)
 
@@ -798,6 +750,22 @@ def _checkpoint_committed_offset(checkpoint: str) -> "int | None":
     return None
 
 
+def _admission_dir(checkpoint: str) -> str:
+    """The admission_dir drain() pairs with ``checkpoint``. A checkpoint
+    that predates admission tracking (offsets exist, no high-water file)
+    is migrated by seeding the high-water from the checkpoint's own
+    offsets log — the newest planned offset is by construction
+    at-or-above the committed one."""
+    admission_dir = os.path.join(checkpoint, "_admission")
+    planned = _checkpoint_planned_offset(checkpoint)
+    if planned is not None and not os.path.exists(
+        os.path.join(admission_dir, _HIGH_WATER)
+    ):
+        os.makedirs(admission_dir, exist_ok=True)
+        _write_high_water(admission_dir, planned)
+    return admission_dir
+
+
 def drain(
     spark,
     root: str,
@@ -822,10 +790,8 @@ def drain(
     calls for exactly-once); ``options`` extra reader options
     (``max_versions_per_batch`` etc.). An ``admission_dir`` inside the
     checkpoint is supplied automatically so restarted drains stay
-    bounded; a checkpoint that predates admission tracking (offsets
-    exist, no high-water file) is migrated by seeding the high-water
-    from the checkpoint's own offsets log — the newest planned offset
-    is by construction at-or-above the committed one.
+    bounded (``_admission_dir`` migrates a checkpoint that predates
+    admission tracking).
 
     The target head is pinned AT CALL TIME: versions committed by a
     concurrent writer while the drain runs may or may not be emitted
@@ -849,16 +815,7 @@ def drain(
     opts = dict(options or {})
     opts["root"] = root
     if "admission_dir" not in opts:
-        admission_dir = os.path.join(checkpoint, "_admission")
-        hw_file = os.path.join(admission_dir, "high_water.json")
-        planned = _checkpoint_planned_offset(checkpoint)
-        if planned is not None and not os.path.exists(hw_file):
-            os.makedirs(admission_dir, exist_ok=True)
-            tmp = hw_file + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"version": planned}, fh)
-            os.replace(tmp, hw_file)
-        opts["admission_dir"] = admission_dir
+        opts["admission_dir"] = _admission_dir(checkpoint)
 
     reader = spark.readStream.format("table_stream")
     for k, v in opts.items():

@@ -747,6 +747,11 @@ def test_store_row_count_sidecar_no_per_increment_walk(spark, tmp_path):
     import warnings
 
     from high_volume_market_data_pipeline_spark.dedup import SignatureStore
+    from high_volume_market_data_pipeline_spark.dedup import incremental
+    from high_volume_market_data_pipeline_spark.sinks.table_format import (
+        footer_rows,
+        parquet_files,
+    )
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     store = SignatureStore(str(tmp_path / "sigs"))
@@ -754,19 +759,18 @@ def test_store_row_count_sidecar_no_per_increment_walk(spark, tmp_path):
     assert store._physical_rows() == store.read(spark).count()
 
     walks: list[int] = []
-    orig = SignatureStore._footer_rows
 
-    def counting(self, files):
+    def counting(files):
         walks.append(len(files))
-        return orig(self, files)
+        return footer_rows(files)
 
     with open(store._sidecar_path()) as fh:
         pre_append_sidecar = fh.read()
-    with mock.patch.object(SignatureStore, "_footer_rows", counting):
+    with mock.patch.object(incremental, "footer_rows", counting):
         store.dedup_increment(
             docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 30))
         )
-    n_store_files = len(store._list_parquet_files())
+    n_store_files = len(parquet_files(store.path))
     # the only footer reads during an increment cover the just-appended
     # files, never the whole store
     assert walks and all(w < n_store_files for w in walks), (

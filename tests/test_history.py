@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from high_volume_market_data_pipeline_spark.sinks.history import (
     VersionedParquetTable,
 )
+from high_volume_market_data_pipeline_spark.sinks.table_format import data_dirs
 
 
 @pytest.fixture()
@@ -132,7 +133,7 @@ def test_snapshot_dirs_have_no_hidden_leaf(spark, table):
     table.write(_df(spark, 5, "a"), "WRITE")
     table.append(_df(spark, 3, "b"), "APPEND")
     table.append(_df(spark, 2, "c"), "APPEND", max_chain=1)  # folds
-    dirs = {d for m in table._manifests() for d in table._data_dirs(m)}
+    dirs = {d for m in table._manifests() for d in data_dirs(m)}
     assert len(dirs) == 4
     for d in dirs:
         assert os.path.dirname(d) == os.path.join(table.root, "_data")
@@ -421,12 +422,12 @@ def test_append_commits_delta_files_only(spark, table):
     assert table.read(spark).count() == 8
     assert table.read(spark, version=0).count() == 5
 
-    dirs_v1 = table._data_dirs(table._resolve(1, None))
-    v0_dir = table._data_dirs(table._resolve(0, None))[0]
+    dirs_v1 = data_dirs(table._resolve(1, None))
+    v0_dir = data_dirs(table._resolve(0, None))[0]
     assert len(dirs_v1) == 2 and v0_dir in dirs_v1  # parent referenced
 
     table.append(_df(spark, 2, "c"))
-    assert len(table._data_dirs(table._resolve(2, None))) == 3
+    assert len(data_dirs(table._resolve(2, None))) == 3
     tags = {
         r["tag"] for r in table.read(spark).select("tag").distinct().collect()
     }
@@ -434,7 +435,7 @@ def test_append_commits_delta_files_only(spark, table):
 
     # compaction folds the chain back to one snapshot, same rows
     v3 = table.compact(spark)
-    assert len(table._data_dirs(table._resolve(v3, None))) == 1
+    assert len(data_dirs(table._resolve(v3, None))) == 1
     assert table.read(spark).count() == 10
 
 
@@ -466,7 +467,7 @@ def test_append_max_chain_absorbs_into_snapshot(spark, table):
     # parent + keeps its delta = 2, v4=3, v5 folds again = 2 — never
     # above the bound
     lens = [
-        len(table._data_dirs(table._resolve(v, None))) for v in range(6)
+        len(data_dirs(table._resolve(v, None))) for v in range(6)
     ]
     assert lens == [1, 2, 3, 2, 3, 2]
     fold = table._resolve(3, None)
@@ -475,7 +476,7 @@ def test_append_max_chain_absorbs_into_snapshot(spark, table):
     # parent chain's fold did not rewrite
     assert len(fold["fresh_dirs"]) == 1
     assert fold["fresh_dirs"][0] in fold["data_dirs"]
-    assert set(table._data_dirs(table._resolve(2, None))).isdisjoint(
+    assert set(data_dirs(table._resolve(2, None))).isdisjoint(
         fold["fresh_dirs"]
     )
     assert table.read(spark).count() == 9
@@ -506,7 +507,7 @@ def test_partitioned_append_chain_absorbs_and_compacts(spark, table):
     v = table.compact(spark)
     compacted = table._resolve(v, None)
     assert compacted.get("partition_by") == "p"  # layout preserved
-    ddir = table._data_dirs(compacted)[0]
+    ddir = data_dirs(compacted)[0]
     assert {d for d in os.listdir(ddir) if d.startswith("p=")} == {
         "p=0", "p=1"
     }
@@ -847,7 +848,7 @@ def test_checkpoint_chain_damage_falls_back_to_replay(spark, table):
     """Checkpoints are CACHES: deleting a mid-chain checkpoint file (or
     the pointer target) must degrade reads to a full manifest replay with
     identical results, never an error or a truncated history — and the
-    stream source's self-contained parser honors the same rule."""
+    stream source, reading through the same walk, agrees."""
     import json as _json
 
     for v in range(25):
@@ -894,6 +895,39 @@ def test_checkpoint_chain_damage_falls_back_to_replay(spark, table):
         _json.dump({"checkpoint": name}, fh)
     assert table.versions() == list(range(25))
     assert sorted(_read_manifests(table.root)) == list(range(25))
+
+    # a torn TRAILING manifest (crashed commit) is uncommitted to both
+    with open(os.path.join(table.log_dir, "00000025.json"), "w") as fh:
+        fh.write('{"version": 25, "time')
+    assert table.versions() == list(range(25))
+    assert sorted(_read_manifests(table.root)) == list(range(25))
+    assert max(_read_manifests(table.root, min_version=1 << 62)) == 24
+
+
+def test_vacuum_rejects_non_positive_keep_last(spark, table):
+    """keep_last=0 used to keep EVERY version (``ms[-0:]`` is the whole
+    list) and a negative value retired from the oldest end; both raise
+    before anything is deleted."""
+    for i in range(3):
+        table.write(_df(spark, i + 1, f"t{i}"), "WRITE")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            table.vacuum(keep_last=bad, orphan_grace_seconds=0.0)
+    assert table.versions() == [0, 1, 2]
+
+
+def test_history_rejects_non_positive_limit(spark, table):
+    """history(limit=0) used to return one row off a non-empty loose tail
+    and none right after a checkpoint; a limit below 1 now raises."""
+    for i in range(3):
+        table.write(_df(spark, i + 1, f"t{i}"), "WRITE")
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match="limit"):
+            table.history(spark, limit=bad)
+    assert [r["version"] for r in table.history(spark, limit=2).collect()] == [
+        2,
+        1,
+    ]
 
 
 def test_vacuum_retain_hours_keeps_time_window(spark, table):

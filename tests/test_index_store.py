@@ -1123,6 +1123,9 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.sinks.history import (
         VersionedParquetTable,
     )
+    from high_volume_market_data_pipeline_spark.sinks.table_format import (
+        data_dirs,
+    )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "pairing")
@@ -1134,7 +1137,7 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
     m0 = model_t._resolve(0, None)
     mv = model_t._resolve(v, None)
     # (a) pairing commit references the trained model's files verbatim
-    assert model_t._data_dirs(mv) == model_t._data_dirs(m0)
+    assert data_dirs(mv) == data_dirs(m0)
     assert mv["operation"] == "PQ_APPEND"
 
     # (b) pyarrow load: no Spark job, content identical to the Spark read

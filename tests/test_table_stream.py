@@ -2,11 +2,10 @@
 snapshot-then-tail semantics, structural change-commit skipping, restart
 from checkpoint, hive-partitioned deltas, and the vacuum-horizon error.
 
-The source parses the manifest-log format directly (it runs in Spark's
-python plan-runner process, which cannot import this package — see the
-module docstring), so these tests double as the format-agreement pin:
-every fixture is written by sinks/history.py and read back by the
-DataSource's own log parser.
+The source reads the manifest log through sinks/table_format, shipped by
+value into Spark's python plan-runner process (which cannot import this
+package — see the module docstring); every fixture is written by
+sinks/history.py and read back by the DataSource in that process.
 """
 
 from __future__ import annotations
@@ -861,6 +860,64 @@ def test_drain_bounded_catchup_and_incremental_reuse(spark, tmp_path):
     assert sorted(tuple(r) for r in spark.read.parquet(out).collect()) == [
         (i, f"d{i}") for i in range(11)
     ]  # exactly once across drains
+
+
+def test_drain_migrates_pre_admission_checkpoint(spark, tmp_path,
+                                                  monkeypatch):
+    """A checkpoint with committed offsets but no admission high-water
+    (written before drain() kept one) is seeded from its own offsets log
+    before the query starts: the seed is the newest planned offset, the
+    catch-up stays bounded, and no version is emitted twice."""
+    import json
+
+    from high_volume_market_data_pipeline_spark.sources import (
+        table_datasource as td,
+    )
+
+    register_table_stream(spark)
+    t = VersionedParquetTable(str(tmp_path / "mig"))
+    t.write(spark.createDataFrame([(0, "d0")], "id long, s string"))
+    for i in range(1, 6):
+        t.append(spark.createDataFrame([(i, f"d{i}")], "id long, s string"))
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    os.makedirs(out)
+    sizes = []
+
+    def sink(batch_df, batch_id):
+        rows = batch_df.collect()
+        if rows:
+            batch_df.sparkSession.createDataFrame(
+                rows, batch_df.schema
+            ).write.mode("append").parquet(out)
+            sizes.append(len(rows))
+
+    opts = {"max_versions_per_batch": "2"}
+    td.drain(spark, t.root, sink, ckpt, options=opts)
+    hw = os.path.join(ckpt, "_admission", "high_water.json")
+    os.unlink(hw)  # the pre-admission layout: offsets, no high-water
+    planned = td._checkpoint_planned_offset(ckpt)
+    assert planned == 5
+    for i in range(6, 10):
+        t.append(spark.createDataFrame([(i, f"d{i}")], "id long, s string"))
+
+    seeds = []
+    migrate = td._admission_dir
+
+    def seeding(checkpoint):
+        adm = migrate(checkpoint)
+        with open(hw) as fh:
+            seeds.append(json.load(fh)["version"])
+        return adm
+
+    sizes.clear()
+    monkeypatch.setattr(td, "_admission_dir", seeding)
+    td.drain(spark, t.root, sink, ckpt, options=opts)
+    assert seeds == [planned]
+    assert sizes and max(sizes) <= 2
+    assert sorted(tuple(r) for r in spark.read.parquet(out).collect()) == [
+        (i, f"d{i}") for i in range(10)
+    ]  # exactly once across the migration
 
 
 def test_stale_admission_dir_fails_loudly(spark, tmp_path):

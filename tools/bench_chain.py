@@ -32,6 +32,9 @@ from high_volume_market_data_pipeline_spark.session import build_session  # noqa
 from high_volume_market_data_pipeline_spark.sinks.history import (  # noqa: E402
     VersionedParquetTable,
 )
+from high_volume_market_data_pipeline_spark.sinks.table_format import (  # noqa: E402
+    data_dirs,
+)
 
 PROBE_LENGTHS = [1, 2, 4, 8, 16, 32, 64, 96, 128]
 BASE_ROWS = 20_000
@@ -88,9 +91,7 @@ def main() -> None:
                 rows[str(target)] = {
                     "read_count_sec": round(statistics.median(secs), 3),
                     "n_rows": n,
-                    "n_dirs": len(
-                        table._data_dirs(table._resolve(None, None))
-                    ),
+                    "n_dirs": len(data_dirs(table._resolve(None, None))),
                 }
                 print(f"# {tag} chain={target}: {rows[str(target)]}",
                       file=sys.stderr)
