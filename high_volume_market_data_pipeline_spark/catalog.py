@@ -1,6 +1,6 @@
 """Table loading for the driver's TPC-H-ish testdata (TESTDATA.md).
 
-Thin, declarative ``spark.read.parquet`` wrappers — filters/column pruning are
+Thin, declarative parquet-scan wrappers — filters/column pruning are
 left to Catalyst so pushdown reaches the scan (``PushedFilters`` /
 ``ReadSchema`` in .explain). Mirrors the reference's layer scans S6/S7
 (bronze_to_silver_crypto.py:55-58, check_bronze_data.py:21-22) generalized to
@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from high_volume_market_data_pipeline_spark.sources.readers import read_parquet
 
 TABLES = (
     "region",
@@ -46,7 +48,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one testdata table (S7: spark.read.parquet), with
+    """Parquet scan of one testdata table (S7: ``readers.read_parquet``,
+    which reuses Spark's inferred schema while the file is unchanged), with
     ``events.ts`` normalized by ``normalize_event_ts``.
 
     The testdata ships ``ts`` as TIMESTAMP(MICROS). A TIMESTAMP(NANOS)
@@ -54,7 +57,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reads it only if it sets ``spark.sql.legacy.parquet.nanosAsLong``
     itself (the vectorized reader rejects NANOS otherwise).
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return normalize_event_ts(df) if name == "events" else df
 
 

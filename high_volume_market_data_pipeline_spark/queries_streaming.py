@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from high_volume_market_data_pipeline_spark.catalog import normalize_event_ts
 from high_volume_market_data_pipeline_spark.registry import query
+from high_volume_market_data_pipeline_spark.sources.readers import read_parquet
 from high_volume_market_data_pipeline_spark.streaming import (
     interval_join_streams,
     run_to_memory_sink,
@@ -46,7 +47,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stage, "events.parquet")
     if not os.path.exists(link):
         os.symlink(path, link)
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     return normalize_event_ts(spark.readStream.schema(raw_schema).parquet(stage))
 
 

@@ -871,7 +871,12 @@ class VersionedParquetTable:
     # -- read path ----------------------------------------------------------
 
     def _resolve(self, version: int | None, as_of_ts: float | None) -> dict:
-        ms = self._manifests()
+        """The manifest of ``version``, of the newest version at or before
+        ``as_of_ts``, or of the head. The head walk stops at the first
+        non-empty chunk, like ``latest_version``; time travel walks the
+        whole chain."""
+        head_only = version is None and as_of_ts is None
+        ms = self._manifests(1 if head_only else None)
         if not ms:
             raise FileNotFoundError(f"no versions at {self.root}")
         if version is not None:

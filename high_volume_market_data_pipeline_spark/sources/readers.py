@@ -9,6 +9,8 @@ ingestion tier, never inside executors).
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,9 +75,57 @@ def json_strings_to_df(
     return parsed.select("j.*")
 
 
+# Session confs that change the schema Spark infers from a parquet footer.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+# absolute path -> (file stat + inference confs, schema Spark inferred)
+_inferred_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _inference_key(spark: SparkSession, path: str) -> tuple | None:
+    """What Spark's inferred schema for ``path`` depends on: the file's
+    identity and contents (inode, size, mtime, ctime) and the inference
+    confs. None when ``path`` is not one plain local file (a directory,
+    a glob, or nothing there: a URI fails ``stat``), which is never
+    cached."""
+    if any(c in path for c in "*?[]{}\\"):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _PARQUET_INFERENCE_CONFS)
+    return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns, confs)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S6/S7: parquet table scan (pruning/pushdown to Catalyst)."""
-    return spark.read.parquet(path)
+    """S6/S7: parquet table scan (pruning/pushdown to Catalyst).
+
+    Without a schema Spark runs a one-task job per read to infer one from
+    a file footer. For a single local file the schema Spark inferred is
+    kept and passed back to ``spark.read.schema`` while the file's stat
+    and the inference confs are unchanged, so a repeated scan of the same
+    file plans without a job. Spark stays the only inference rule; any
+    change to the key re-infers."""
+    # the key is taken before the read: a file that changes while Spark
+    # infers leaves an entry under its old stat, which no later read matches
+    key = _inference_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    abspath = os.path.abspath(path)
+    hit = _inferred_schemas.get(abspath)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _inferred_schemas[abspath] = (key, df.schema)
+    return df
 
 
 def read_json(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:

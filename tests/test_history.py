@@ -617,6 +617,31 @@ def test_checkpoint_thousand_commit_log_constant_opens(spark, table):
     assert table.versions() == list(range(1100))
 
 
+def test_head_resolve_stops_at_first_chunk(table):
+    """The head that read()/append()/commit_ref()/row_count()/compact()
+    resolve costs what latest_version() costs, not a walk down a
+    1,000-commit incremental checkpoint chain; time travel still reaches
+    the bottom of the chain."""
+    for v in range(1000):
+        table._commit_manifest(
+            {
+                "version": v,
+                "timestamp": float(v),
+                "operation": "WRITE",
+                "parameters": {},
+                "data_dir": f"/nope/_v{v:08d}_x",
+            },
+            v,
+        )
+    assert table._resolve(None, None)["version"] == 999
+    head_opens = table.last_log_files_opened
+    assert table.latest_version() == 999
+    assert head_opens == table.last_log_files_opened
+    assert table._resolve(3, None)["version"] == 3
+    assert table.last_log_files_opened > 10 * head_opens
+    assert table._resolve(None, 500.0)["version"] == 500
+
+
 def test_vacuum_folds_checkpoint_and_never_resurrects(spark, table):
     """vacuum() rewrites the checkpoint over the KEPT manifests before
     deleting anything: a stale checkpoint must never resurrect a retired

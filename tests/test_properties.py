@@ -229,42 +229,43 @@ def test_split_bucket_matches_python_md5(spark, ids):
 
 
 @settings(**_SETTINGS)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=(1 << 12) - 1),
-            st.integers(min_value=0, max_value=(1 << 12) - 1),
-        ),
-        min_size=1,
-        max_size=20,
-    )
-)
-def test_interleave_bits_matches_python_reference(spark, pairs):
+@given(st.data())
+def test_interleave_bits_matches_python_reference(spark, data):
     """Morton interleave is bit-exact vs a Python reference: output bit
     (b*n + i) equals bit b of input column i — the property Z-order
-    locality rests on."""
+    locality rests on — for 1 to 4 columns and widths up to a full long."""
     from high_volume_market_data_pipeline_spark.functions.zorder import (
         interleave_bits,
     )
 
-    rows = [(i, a, b) for i, (a, b) in enumerate(set(pairs))]
-    df = spark.createDataFrame(rows, "id long, a long, b long")
+    n, bits = data.draw(
+        st.sampled_from([(2, 12), (3, 12), (3, 21), (2, 31), (4, 5), (1, 7)])
+    )
+    values = st.integers(min_value=0, max_value=(1 << bits) - 1)
+    tuples = data.draw(
+        st.lists(st.tuples(*[values] * n), min_size=1, max_size=20)
+    )
+    cols = [f"c{i}" for i in range(n)]
+    rows = [(i, *t) for i, t in enumerate(set(tuples))]
+    df = spark.createDataFrame(
+        rows, ", ".join(["id long", *[f"{c} long" for c in cols]])
+    )
     got = {
         r["id"]: r["z"]
         for r in df.select(
-            "id", interleave_bits([F.col("a"), F.col("b")], 12).alias("z")
+            "id", interleave_bits([F.col(c) for c in cols], bits).alias("z")
         ).collect()
     }
 
-    def ref(a, b):
+    def ref(vs):
         z = 0
-        for bit in range(12):
-            z |= ((a >> bit) & 1) << (bit * 2)
-            z |= ((b >> bit) & 1) << (bit * 2 + 1)
+        for bit in range(bits):
+            for i, v in enumerate(vs):
+                z |= ((v >> bit) & 1) << (bit * n + i)
         return z
 
-    for i, a, b in rows:
-        assert got[i] == ref(a, b), (a, b, got[i], ref(a, b))
+    for i, *vs in rows:
+        assert got[i] == ref(vs), (n, bits, vs, got[i], ref(vs))
 
 
 @settings(**_SETTINGS)

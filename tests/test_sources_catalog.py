@@ -4,9 +4,13 @@ catalog registration (K6)."""
 from __future__ import annotations
 
 import json
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.types import (
+    BinaryType,
     DoubleType,
     StringType,
     StructField,
@@ -15,13 +19,18 @@ from pyspark.sql.types import (
 
 from high_volume_market_data_pipeline_spark.catalog import (
     TABLES,
+    load_table,
+    normalize_event_ts,
     register_catalog_tables,
 )
+from high_volume_market_data_pipeline_spark.session import job_mark, scoped_conf
+from high_volume_market_data_pipeline_spark.sources import readers
 from high_volume_market_data_pipeline_spark.sources.http_source import (
     fetch_paged_json,
 )
 from high_volume_market_data_pipeline_spark.sources.readers import (
     json_strings_to_df,
+    read_parquet,
     rows_to_df,
 )
 
@@ -302,3 +311,57 @@ def test_read_xml_rowtag_with_and_without_schema(spark, tmp_path):
     typed = read_xml(spark, str(p), row_tag="quote", schema=schema)
     assert typed.schema == schema
     assert typed.count() == 2
+
+
+def test_load_table_reuses_inferred_schema(spark):
+    """A second load of an unchanged table runs no footer-read job and
+    plans with the schema Spark inferred, nullability included."""
+    for name in TABLES:
+        path = os.path.join(SF_DIR, f"{name}.parquet")
+        first = load_table(spark, SF_DIR, name).schema
+        mark = job_mark(spark)
+        second = load_table(spark, SF_DIR, name).schema
+        assert job_mark(spark) == mark, name
+        plain = spark.read.parquet(path)
+        if name == "events":
+            plain = normalize_event_ts(plain)
+        assert second == first == plain.schema, name
+
+
+def test_read_parquet_reinfers_rewritten_file(spark, tmp_path):
+    """A file rewritten with an extra column reads with its new schema."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_read_parquet_reinfers_under_inference_conf(spark, tmp_path):
+    """An inference conf is part of the key: binaryAsString set through
+    scoped_conf reads a binary column as string, and as binary again once
+    the scope ends."""
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    assert read_parquet(spark, path).schema["b"].dataType == BinaryType()
+    with scoped_conf(spark, {"spark.sql.parquet.binaryAsString": "true"}):
+        df = read_parquet(spark, path)
+        assert df.schema["b"].dataType == StringType()
+        assert df.collect()[0]["b"] == "x"
+    assert read_parquet(spark, path).schema["b"].dataType == BinaryType()
+
+
+def test_read_parquet_directory_and_uri_not_cached(spark, tmp_path):
+    """A directory and a ``file:`` URI read as before, with no schema
+    kept for either."""
+    d = str(tmp_path / "dir")
+    spark.range(3).write.parquet(d)
+    f = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"id": [7]}), f)
+    uri = f"file://{f}"
+    assert sorted(r["id"] for r in read_parquet(spark, d).collect()) == [0, 1, 2]
+    assert [r["id"] for r in read_parquet(spark, uri).collect()] == [7]
+    assert d not in readers._inferred_schemas
+    assert f not in readers._inferred_schemas
