@@ -9,8 +9,11 @@ foreachBatch sinks in streaming/sink.py (exercised in tests/).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,17 +39,35 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The file-stream source requires a DIRECTORY; the testdata table is a
     single parquet file, so it is staged via symlink into a scratch dir
-    (a real deployment streams from an arrival directory anyway)."""
-    path = os.path.join(sf_dir, "events.parquet")
+    under ``tempfile.gettempdir()`` (a real deployment streams from an
+    arrival directory anyway). A stage link that points anywhere else —
+    dangling, or at another file — is replaced, and stages whose link
+    dangles (their table is gone) are removed."""
+    path = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    tmp = tempfile.gettempdir()
+    for old in glob.glob(os.path.join(tmp, "hvmdp_stream_*", "events.parquet")):
+        if os.path.lexists(old) and not os.path.exists(old):
+            try:
+                os.unlink(old)
+                os.rmdir(os.path.dirname(old))
+            except OSError:
+                pass
     # Stable digest (not builtin hash(): str hashes are salted per process,
-    # which would mint a fresh staging dir every run and defeat the reuse
-    # check below).
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    stage = os.path.join("/tmp", f"hvmdp_stream_{digest}")
+    # which would mint a fresh staging dir every run).
+    digest = hashlib.md5(os.path.dirname(path).encode()).hexdigest()[:12]
+    stage = os.path.join(tmp, f"hvmdp_stream_{digest}")
     os.makedirs(stage, exist_ok=True)
     link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
+    try:
+        current = os.readlink(link)
+    except OSError:  # absent, or not a link
+        current = None
+    if current != path:
+        # publish by rename: the hidden temp name is invisible to a file
+        # stream already listing the stage
+        tmp_link = os.path.join(stage, f".events.{uuid.uuid4().hex[:8]}")
+        os.symlink(path, tmp_link)
+        os.replace(tmp_link, link)
     raw_schema = read_parquet(spark, path).schema
     return normalize_event_ts(spark.readStream.schema(raw_schema).parquet(stage))
 

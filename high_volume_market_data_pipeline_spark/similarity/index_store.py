@@ -48,7 +48,6 @@ from high_volume_market_data_pipeline_spark.sinks.history import (
     VersionedParquetTable,
 )
 from high_volume_market_data_pipeline_spark.sinks.table_format import (
-    data_dirs,
     parquet_files,
 )
 
@@ -103,7 +102,7 @@ def _load_model_arrays(
     t = VersionedParquetTable(os.path.join(root, "model"))
     m = t._resolve(version, None)
     rows: list[dict] = []
-    for d in data_dirs(m):
+    for d in m["data_dirs"]:
         for f in parquet_files(d):
             rows.extend(
                 pq.read_table(f, columns=["part", "i", "j", "vec"]).to_pylist()
@@ -151,31 +150,18 @@ def _tombstone_table(root: str) -> VersionedParquetTable:
 
 def _active_tombstones(spark: SparkSession, root: str):
     """Currently-deleted ids as a (neighbor_id) DataFrame, or None when
-    the index has never seen a delete OR every delete has been purged
-    (the head manifest records ``n_tombstones``, so the empty case — a
-    long-lived index after purge_deleted — is a metadata probe, not a
-    read + anti-join on every search forever)."""
+    the index has never seen a delete OR every delete has been purged.
+    The tombstone table holds each deleted id once, so its ``row_count``
+    (the head manifest's ``n_rows``) is the active-tombstone count, and
+    the empty case — a long-lived index after purge_deleted — is a
+    metadata probe, not a read + anti-join on every search forever."""
     t = _tombstone_table(root)
-    if not t.exists():
-        return None
-    head = t._resolve(None, None)
-    if head.get("parameters", {}).get("n_tombstones") == 0:
+    if not t.exists() or t.row_count(spark) == 0:
         return None
     return t.read(spark)
 
 
 _TOMBSTONE_RETRIES = 5
-
-
-def _tombstone_head_count(spark: SparkSession, t: VersionedParquetTable):
-    """(head_version, active-tombstone count) — the count from the head
-    manifest's ``n_tombstones`` when recorded (metadata-only), else a
-    read (tombstone tables are deleted-id-sized by contract)."""
-    head = t._resolve(None, None)
-    n = head.get("parameters", {}).get("n_tombstones")
-    if n is None:
-        n = t.read(spark).count()
-    return head["version"], int(n)
 
 
 def delete_from_index(spark: SparkSession, root: str, ids) -> int:
@@ -220,15 +206,13 @@ def delete_from_index(spark: SparkSession, root: str, ids) -> int:
     # after its commit (the lost-delete race).
     for _ in range(_TOMBSTONE_RETRIES):
         if not t.exists():
-            n = dead.count()
             try:
-                return t.write(
-                    dead, "DELETE_IDS", {"n_tombstones": n}, version=0
-                )
+                return t.write(dead, "DELETE_IDS", version=0)
             except ConcurrentCommitError:
                 continue
-        head_v, head_n = _tombstone_head_count(spark, t)
-        # id-dedup against the current set: repeated deletes idempotent
+        head_v = t.latest_version()
+        # id-dedup against the current set: repeated deletes idempotent,
+        # and the table keeps one row per deleted id
         fresh = dead.join(
             t.read(spark, version=head_v), "neighbor_id", "left_anti"
         )
@@ -236,7 +220,6 @@ def delete_from_index(spark: SparkSession, root: str, ids) -> int:
             return t.append(
                 fresh,
                 "DELETE_IDS",
-                {"n_tombstones": head_n + fresh.count()},
                 version=head_v + 1,
                 parent_version=head_v,
                 max_chain=_CODED_MAX_CHAIN,
@@ -252,21 +235,21 @@ def delete_from_index(spark: SparkSession, root: str, ids) -> int:
 def purge_deleted(spark: SparkSession, root: str) -> int | None:
     """Physically drop tombstoned rows: commit coded-minus-tombstones as
     a new full snapshot (hive layout preserved), re-pair the model at the
-    same version, and reset the tombstone table to an empty snapshot with
-    ``n_tombstones: 0`` recorded — ``_active_tombstones`` short-circuits
-    on that manifest parameter, so searches after a purge pay a metadata
-    probe, not a read + anti-join against an empty table. Returns the new
-    paired version, or None if the index has no active tombstones. Like a
-    re-train, a purge must not run concurrently with appenders (it is a
-    maintenance-window operation; the same quiescing contract as
-    save_index) — the append path's auto-purge honors that by running
-    purge post-commit and treating a lost commit race as "skip, retry at
-    a later append" (see ``_maybe_auto_purge``)."""
+    same version, and reset the tombstone table to an empty snapshot —
+    ``_active_tombstones`` short-circuits on its zero ``row_count``, so
+    searches after a purge pay a metadata probe, not a read + anti-join
+    against an empty table. Returns the new paired version, or None if
+    the index has no active tombstones. Like a re-train, a purge must not
+    run concurrently with appenders (it is a maintenance-window
+    operation; the same quiescing contract as save_index) — the append
+    path's auto-purge honors that by running purge post-commit and
+    treating a lost commit race as "skip, retry at a later append" (see
+    ``_maybe_auto_purge``)."""
     t = _tombstone_table(root)
     if not t.exists():
         return None
-    tomb_v, tomb_n = _tombstone_head_count(spark, t)
-    if tomb_n == 0:
+    tomb_v = t.latest_version()
+    if t.row_count(spark, version=tomb_v) == 0:
         return None
     dead = t.read(spark, version=tomb_v)
     model_v, coded_head, target = _paired_versions(root)
@@ -279,7 +262,7 @@ def purge_deleted(spark: SparkSession, root: str) -> int | None:
         kept,
         "PURGE_DELETED",
         {"purged_from": coded_head},
-        partition_by=head_m.get("partition_by"),
+        partition_by=head_m["partition_by"],
         version=target,
     )
     # Model arrays are unchanged by a purge: re-pair with a manifest-only
@@ -291,29 +274,22 @@ def purge_deleted(spark: SparkSession, root: str) -> int | None:
     # Reset the tombstone table. The purged coded snapshot is ALREADY
     # committed above, so losing this CAS to a concurrent
     # delete_from_index must not leave the purged ids counted (an
-    # inflated n_tombstones would re-fire auto-purge's O(corpus) rewrite
-    # on every later append until a reset finally landed): re-derive the
-    # reset against the NEW tombstone head as (new head ids minus the
-    # just-purged set) — the racer's fresh deletes survive, the purged
-    # ids retire — and retry the CAS.
+    # inflated tombstone count would re-fire auto-purge's O(corpus)
+    # rewrite on every later append until a reset finally landed):
+    # re-derive the reset against the NEW tombstone head as (new head ids
+    # minus the just-purged set) — the racer's fresh deletes survive, the
+    # purged ids retire — and retry the CAS.
     remaining = dead.limit(0)
-    reset_n = 0
     reset_v = tomb_v + 1
     for _ in range(_TOMBSTONE_RETRIES):
         try:
-            t.write(
-                remaining,
-                "PURGE_RESET",
-                {"n_tombstones": reset_n},
-                version=reset_v,
-            )
+            t.write(remaining, "PURGE_RESET", version=reset_v)
             return target
         except ConcurrentCommitError:
-            head_v, _ = _tombstone_head_count(spark, t)
+            head_v = t.latest_version()
             remaining = t.read(spark, version=head_v).join(
                 dead, "neighbor_id", "left_anti"
             )
-            reset_n = remaining.count()
             reset_v = head_v + 1
     raise ConcurrentCommitError(
         f"purge_deleted at {root}: the purged coded snapshot committed "
@@ -328,11 +304,10 @@ def purge_deleted(spark: SparkSession, root: str) -> int | None:
 # post-commit (the ledger-auto-compaction template: maintenance amortized
 # into the write path so a long-lived index never pays the search-time
 # anti-join forever, and purge cost stays O(corpus) at a bounded
-# dead-fraction). The check is METADATA-ONLY: tombstone count from the
-# tombstone head manifest, corpus size from the coded head manifest's
-# ``n_rows`` (recorded from parquet footers at commit time) — no Spark
-# scan on the hot append path; only legacy pre-n_rows manifests fall
-# back to a count().
+# dead-fraction). The check is METADATA-ONLY: tombstone count and corpus
+# size are both ``row_count``s, the head manifests' ``n_rows`` (recorded
+# from parquet footers at commit time) — no Spark scan on the hot append
+# path.
 _AUTO_PURGE_TOMBSTONE_FRACTION = 0.1
 
 
@@ -345,11 +320,9 @@ def _maybe_auto_purge(spark: SparkSession, root: str) -> "int | None":
     t = _tombstone_table(root)
     if not t.exists():
         return None
-    _, n_dead = _tombstone_head_count(spark, t)
+    n_dead = t.row_count(spark)
     if n_dead == 0:
         return None
-    # the manifest's n_rows (a metadata probe); tables written before
-    # n_rows existed fall back to one count()
     _, coded_head, _ = _paired_versions(root)
     n_corpus = VersionedParquetTable(os.path.join(root, "coded")).row_count(
         spark, version=coded_head
@@ -379,18 +352,13 @@ def _clear_tombstones_for(spark: SparkSession, root: str, delta) -> None:
         return
     ids = delta.select("neighbor_id").distinct()
     for _ in range(_TOMBSTONE_RETRIES):
-        head_v, _ = _tombstone_head_count(spark, t)
+        head_v = t.latest_version()
         cur = t.read(spark, version=head_v)
         if cur.join(ids, "neighbor_id", "left_semi").limit(1).count() == 0:
             return
         kept = cur.join(ids, "neighbor_id", "left_anti")
         try:
-            t.write(
-                kept,
-                "REVIVE_IDS",
-                {"n_tombstones": kept.count()},
-                version=head_v + 1,
-            )
+            t.write(kept, "REVIVE_IDS", version=head_v + 1)
             return
         except ConcurrentCommitError:
             continue

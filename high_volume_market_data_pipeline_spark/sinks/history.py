@@ -11,16 +11,15 @@ commit log), minus transactions we cannot express without a JVM extension:
     <root>/_data/v<version>_<attempt>/  immutable parquet dir (unique per
                                         write attempt; manifests point at it)
 
-The file names, the checkpoint chain and the rules for reading the log
-live in ``sinks/table_format``, which the table_stream source
-(``sources/table_datasource``) reads the log through as well.
+The file names, the manifest keys, the format check, the checkpoint
+chain and the rules for reading the log live in ``sinks/table_format``,
+which the table_stream source (``sources/table_datasource``) reads the
+log through as well.
 
 The ``_data`` parent keeps snapshots out of a raw ``spark.read.parquet
 (root)`` (Spark skips ``_``-prefixed names), while the snapshot dir's own
 name does not start with ``_``: Spark ignores a READ PATH whose leaf is
-hidden and warns "All paths were ignored" on every such read. Tables
-written before ``_data`` keep their ``<root>/_v<version>_<attempt>``
-dirs; manifests store full paths, so those read as before.
+hidden and warns "All paths were ignored" on every such read.
 
 A ``write`` manifest references ONE full-snapshot dir; an ``append``
 manifest references its parent's dirs plus one new delta dir (the Delta
@@ -63,9 +62,9 @@ from high_volume_market_data_pipeline_spark.sinks.table_format import (
     MANIFEST_RE,
     checkpoint_name,
     chunks,
-    data_dirs,
     footer_rows,
     manifest_name,
+    new_manifest,
     parquet_files,
     read_last_checkpoint,
     tail_manifests,
@@ -295,34 +294,26 @@ class VersionedParquetTable:
         # for the same version must not overwrite each other's DATA either —
         # the commit-losing attempt leaves an orphan dir (vacuum reclaims
         # it), never clobbers the winner's snapshot. Readers follow the
-        # manifest's data_dir, so the name is free to be unique.
+        # manifest's data_dirs, so the name is free to be unique.
         data_dir = self._new_data_dir(version)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(data_dir)
-
-        manifest = {
-            "version": version,
-            "timestamp": time.time(),
-            "operation": operation,
-            "parameters": parameters or {},
-            "data_dir": data_dir,
-            # physical row count, summed from the just-written parquet
-            # footers (metadata-only): lets maintenance decisions (ANN
-            # auto-purge fraction, chain-absorb sizing) read the corpus
-            # size from the manifest instead of a count() scan
-            "n_rows": footer_rows(parquet_files(data_dir)),
-            # recorded so layout-preserving rewrites (compact/restore)
-            # can reproduce the snapshot's hive partitioning instead of
-            # silently flattening it
-            "partition_by": partition_by,
-            # the version's logical schema (Delta's metaData action):
-            # append() validates evolution against THIS instead of
-            # re-inferring parquet schemas across the whole chain —
-            # measured 2× on the streaming-ingest appends
-            "schema": df.schema.jsonValue(),
-        }
+        # n_rows from the just-written footers (metadata-only): row_count
+        # and the ANN auto-purge fraction read it instead of a count();
+        # partition_by lets compact/restore keep the hive layout; schema
+        # is what append() validates evolution against
+        manifest = new_manifest(
+            version,
+            operation,
+            parameters or {},
+            data_dirs=[data_dir],
+            fresh_dirs=[],
+            n_rows=footer_rows(parquet_files(data_dir)),
+            partition_by=partition_by,
+            schema=df.schema.jsonValue(),
+        )
         self._commit_manifest(manifest, version)
         return version
 
@@ -374,16 +365,11 @@ class VersionedParquetTable:
         parent = self._resolve(parent_version, None)
         if version is None:
             version = (self.latest_version() or 0) + 1
-        parent_dirs = data_dirs(parent)
+        parent_dirs = parent["data_dirs"]
         spark = df.sparkSession
         # Evolution check against the parent's RECORDED schema (Delta's
-        # metaData action) — metadata-only; falling back to parquet
-        # schema inference over the chain (pre-schema manifests) was
-        # measured 2× on streaming-ingest appends.
-        if parent.get("schema") is not None:
-            pschema = StructType.fromJson(parent["schema"])
-        else:
-            pschema = self.read(spark, version=parent["version"]).schema
+        # metaData action) — metadata-only
+        pschema = StructType.fromJson(parent["schema"])
         pnames = {f.name for f in pschema}
         if {f.name for f in df.schema} != pnames and not merge_schema:
             raise ValueError(
@@ -394,10 +380,10 @@ class VersionedParquetTable:
             )
         common = {f.name: f.dataType for f in pschema}
         # The hive partition column is exempt from the type check: its
-        # on-disk form is only a dir-name string, so a legacy
-        # inference-derived parent schema (or a compact/restore of one)
-        # can carry an int where the writer used long.
-        part_col = partition_by or parent.get("partition_by")
+        # on-disk form is only a dir-name string and read() casts it back
+        # to the recorded type, so a delta that types it int where the
+        # table records long (``F.lit(3)``) reads back exactly.
+        part_col = partition_by or parent["partition_by"]
         for f in df.schema:
             if (
                 f.name in common
@@ -433,14 +419,13 @@ class VersionedParquetTable:
             # the fresh delta keeps ITS OWN dir: the manifest then
             # references [folded, delta] and fresh_dirs names exactly the
             # new rows, so the table_stream source can emit the delta and
-            # skip the rewrite instead of (pre-r10) silently dropping a
-            # fold commit's new rows under skip_change_commits. read()
-            # unions the chain ONE SCAN PER DIR — a single multi-root
-            # read crashes with CONFLICTING_DIRECTORY_STRUCTURES when the
-            # dirs are hive-partitioned (the cell-partitioned index
-            # tables are exactly that) — so the fold costs one parent
-            # read + write, same as the old merged rewrite, and later
-            # reads open ≤ 2 dirs.
+            # skip the rewrite. read() unions the chain ONE SCAN PER DIR —
+            # a single multi-root read crashes with
+            # CONFLICTING_DIRECTORY_STRUCTURES when the dirs are
+            # hive-partitioned (the cell-partitioned index tables are
+            # exactly that) — so the fold costs one parent read + write,
+            # same as the old merged rewrite, and later reads open ≤ 2
+            # dirs.
             folded_dir = self._new_data_dir(version)
             fw = self.read(spark, version=parent["version"]).write.mode(
                 "overwrite"
@@ -450,40 +435,23 @@ class VersionedParquetTable:
             fw.parquet(folded_dir)
             parameters["absorbed_chain"] = len(parent_dirs)
             dirs = [folded_dir] + ([delta_dir] if has_files else [])
-            # the fold rewrote the whole corpus, so its footers ARE the
-            # authoritative parent count — no dependence on the parent
-            # manifest having recorded one
             n_rows = footer_rows(parquet_files(folded_dir) + delta_files)
         else:
             dirs = parent_dirs + ([delta_dir] if has_files else [])
-            # parent count + delta footers; a legacy parent without
-            # n_rows leaves it unrecorded (readers fall back to count())
-            # rather than paying an O(chain-files) footer walk here
-            n_rows = (
-                parent["n_rows"] + footer_rows(delta_files)
-                if parent.get("n_rows") is not None
-                else None
-            )
-        manifest = {
-            "version": version,
-            "timestamp": time.time(),
-            "operation": operation,
-            "parameters": parameters,
-            "data_dirs": dirs,
-            "n_rows": n_rows,
-            # dirs holding rows NEW at this version (vs rewrites of data
-            # older versions already reference) — the streaming source's
-            # exactly-once signal; [] on an empty delta
-            "fresh_dirs": [delta_dir] if has_files else [],
-            "partition_by": partition_by,
-            # an empty delta contributes no files, so its columns must
-            # not enter the recorded schema either (they would exist in
-            # no data dir: phantom columns that later appends would
-            # validate against)
-            "schema": (
-                merged_schema if has_files else pschema
-            ).jsonValue(),
-        }
+            n_rows = parent["n_rows"] + footer_rows(delta_files)
+        # fresh_dirs (the stream's exactly-once signal) is [] on an empty
+        # delta; so is its schema contribution — its columns would exist
+        # in no data dir, phantom columns later appends validate against
+        manifest = new_manifest(
+            version,
+            operation,
+            parameters,
+            data_dirs=dirs,
+            fresh_dirs=[delta_dir] if has_files else [],
+            n_rows=n_rows,
+            partition_by=partition_by,
+            schema=(merged_schema if has_files else pschema).jsonValue(),
+        )
         self._commit_manifest(manifest, version)
         return version
 
@@ -512,33 +480,26 @@ class VersionedParquetTable:
         parent = self._resolve(parent_version, None)
         if version is None:
             version = (self.latest_version() or 0) + 1
-        manifest = {
-            "version": version,
-            "timestamp": time.time(),
-            "operation": operation,
-            "parameters": parameters or {},
-            "data_dirs": data_dirs(parent),
-            "n_rows": parent.get("n_rows"),
-            "fresh_dirs": [],
-            "partition_by": parent.get("partition_by"),
-            "schema": parent.get("schema"),
-        }
+        manifest = new_manifest(
+            version,
+            operation,
+            parameters or {},
+            data_dirs=parent["data_dirs"],
+            fresh_dirs=[],
+            n_rows=parent["n_rows"],
+            partition_by=parent["partition_by"],
+            schema=parent["schema"],
+        )
         self._commit_manifest(manifest, version)
         return version
 
     def row_count(self, spark: SparkSession, version: int | None = None) -> int:
         """Physical row count of the snapshot at ``version`` from the
         manifest's ``n_rows`` (summed from parquet footers at commit
-        time — a metadata probe, no Spark job, no data scan); falls back
-        to one ``read().count()`` only for legacy manifests written
-        before ``n_rows`` existed. Equal to ``read(version).count()`` by
-        construction: both count exactly the files the manifest
-        references."""
-        m = self._resolve(version, None)
-        n = m.get("n_rows")
-        if n is None:
-            return self.read(spark, version=m["version"]).count()
-        return int(n)
+        time — a metadata probe, no Spark job, no data scan). Equal to
+        ``read(version).count()`` by construction: both count exactly the
+        files the manifest references."""
+        return int(self._resolve(version, None)["n_rows"])
 
     def verify_row_counts(self) -> list[dict]:
         """Maintenance fsck for the ``n_rows`` trust chain (r13): since
@@ -549,21 +510,16 @@ class VersionedParquetTable:
         physical row count from the parquet FOOTERS of the dirs the
         manifest references (metadata-only, no Spark job) and returns one
         dict per MISMATCH ({version, recorded, actual}) — empty means the
-        chain is sound. Legacy manifests without ``n_rows`` are skipped
-        (readers fall back to count() there anyway)."""
+        chain is sound."""
         bad = []
         for m in self._manifests():
-            n = m.get("n_rows")
-            if n is None:
-                continue
-            actual = sum(footer_rows(parquet_files(d)) for d in data_dirs(m))
-            if int(n) != actual:
+            n = int(m["n_rows"])
+            actual = sum(
+                footer_rows(parquet_files(d)) for d in m["data_dirs"]
+            )
+            if n != actual:
                 bad.append(
-                    {
-                        "version": int(m["version"]),
-                        "recorded": int(n),
-                        "actual": actual,
-                    }
+                    {"version": int(m["version"]), "recorded": n, "actual": actual}
                 )
         return bad
 
@@ -907,7 +863,7 @@ class VersionedParquetTable:
         by ``append(max_chain=...)``."""
         m = self._resolve(version, as_of_ts)
         return self._cast_partition_col(
-            self._read_dirs(spark, data_dirs(m), m["version"]), m
+            self._read_dirs(spark, m["data_dirs"], m["version"]), m
         )
 
     @staticmethod
@@ -919,12 +875,11 @@ class VersionedParquetTable:
         source, and the writer all agree on types. Partition pruning
         survives the cast: Catalyst's UnwrapCastInBinaryComparison
         rewrites ``cast(p as bigint) = 3L`` back to ``p = 3``."""
-        rec = m.get("schema")
-        part = m.get("partition_by")
-        if rec is not None and part and part in out.columns:
+        part = m["partition_by"]
+        if part and part in out.columns:
             from pyspark.sql.types import StructType
 
-            st = StructType.fromJson(rec)
+            st = StructType.fromJson(m["schema"])
             if (
                 part in st.fieldNames()
                 and out.schema[part].dataType != st[part].dataType
@@ -966,7 +921,7 @@ class VersionedParquetTable:
 
         def inventory(m: dict) -> dict:
             inv: dict[str, set] = {}
-            for d in data_dirs(m):
+            for d in m["data_dirs"]:
                 for f in parquet_files(d):
                     rel = os.path.relpath(os.path.dirname(f), d)
                     inv.setdefault(rel, set()).add(f)
@@ -1047,7 +1002,7 @@ class VersionedParquetTable:
         names there is no metadata signal for which partitions changed."""
         pre_m = self._resolve(v_from, None)
         post_m = self._resolve(v_to, None)
-        pre_dirs, post_dirs = data_dirs(pre_m), data_dirs(post_m)
+        pre_dirs, post_dirs = pre_m["data_dirs"], post_m["data_dirs"]
         shared = set(pre_dirs) & set(post_dirs)
         # the same recorded-type partition-column normalization read()
         # applies — a mixed raw/normalized pair would look like a retype
@@ -1063,8 +1018,8 @@ class VersionedParquetTable:
             ),
             post_m,
         )
-        part_by = pre_m.get("partition_by")
-        if shared and part_by and part_by == post_m.get("partition_by"):
+        part_by = pre_m["partition_by"]
+        if shared and part_by and part_by == post_m["partition_by"]:
             touched = self._touched_partitions(pre_m, post_m)
             # Literals are cast to the PARTITION COLUMN's type: a mixed-
             # type IN would coerce the column to string and the predicate
@@ -1178,7 +1133,7 @@ class VersionedParquetTable:
             self.read(spark),
             "COMPACT",
             {"compacted_from": head["version"]},
-            partition_by=head.get("partition_by"),
+            partition_by=head["partition_by"],
         )
 
     def restore(self, spark: SparkSession, version: int) -> int:
@@ -1191,7 +1146,7 @@ class VersionedParquetTable:
             df,
             "RESTORE",
             {"restored_version": version},
-            partition_by=src.get("partition_by"),
+            partition_by=src["partition_by"],
         )
 
     # -- maintenance --------------------------------------------------------
@@ -1203,9 +1158,9 @@ class VersionedParquetTable:
         retain_hours: float | None = None,
     ) -> "VacuumResult":
         """Retire snapshot dirs older than the newest ``keep_last`` versions
-        (and stale orphan snapshot dirs with no manifest, in ``_data/`` and
-        the legacy ``<root>/_v*`` layout). Time travel below
-        the horizon stops working — same contract as Delta VACUUM.
+        (and stale orphan snapshot dirs in ``_data/`` with no manifest).
+        Time travel below the horizon stops working — same contract as
+        Delta VACUUM.
 
         ``retain_hours`` is the Delta ``RETAIN N HOURS`` form: every
         version committed within the window is ALSO kept (the horizon is
@@ -1256,7 +1211,7 @@ class VersionedParquetTable:
                 if m["version"] in kept_v or m["timestamp"] >= cutoff_ts
             ]
         keep_dirs = {
-            os.path.basename(d) for m in kept for d in data_dirs(m)
+            os.path.basename(d) for m in kept for d in m["data_dirs"]
         }
         keep_versions = {m["version"] for m in kept}
         retiring = [m for m in ms if m["version"] not in keep_versions]
@@ -1265,7 +1220,7 @@ class VersionedParquetTable:
         # a commit-losing writer's orphan dir can share a version number
         # with the winner's kept snapshot.
         retired_dirs = {
-            os.path.basename(d) for m in retiring for d in data_dirs(m)
+            os.path.basename(d) for m in retiring for d in m["data_dirs"]
         } - keep_dirs
         removed_dirs: list[str] = []
         retired: list[int] = []
@@ -1284,15 +1239,8 @@ class VersionedParquetTable:
                 retired.append(m["version"])
         cutoff = time.time() - grace
         data = os.path.join(self.root, DATA)
-        snapshot_dirs = [
-            os.path.join(self.root, d)
-            for d in os.listdir(self.root)
-            if d.startswith("_v")
-        ]
-        if os.path.isdir(data):
-            snapshot_dirs += [os.path.join(data, d) for d in os.listdir(data)]
-        for path in snapshot_dirs:
-            d = os.path.basename(path)
+        for d in os.listdir(data) if os.path.isdir(data) else []:
+            path = os.path.join(data, d)
             if d in keep_dirs:
                 continue
             if d not in retired_dirs and self._newest_mtime(path) > cutoff:

@@ -12,7 +12,7 @@ With Delta absent, the observable effects are reproduced on parquet:
 - VACUUM → removal of orphaned temp dirs (parquet has no versioned
   files to expire; the swap-based rewrites — OPTIMIZE, Z-ORDER and the
   sinks.merge MERGE — leave only `__opt_*` temps and `__old_*` parked
-  copies; older runs' merges left `__merge_*` temps)
+  copies)
 """
 
 from __future__ import annotations
@@ -117,11 +117,7 @@ def vacuum_orphans(path: str) -> int:
     if not os.path.exists(path):
         return 0
     removed = 0
-    for d in (
-        glob.glob(f"{path}__merge_*")
-        + glob.glob(f"{path}__opt_*")
-        + glob.glob(f"{path}__old_*")
-    ):
+    for d in glob.glob(f"{path}__opt_*") + glob.glob(f"{path}__old_*"):
         shutil.rmtree(d, ignore_errors=True)
         removed += 1
     return removed

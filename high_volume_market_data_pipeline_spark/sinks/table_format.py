@@ -8,6 +8,31 @@ source) reads the same log through it:
     <root>/_log/_last_checkpoint           pointer to the newest checkpoint
     <root>/_data/v<version>_<attempt>/     parquet dirs the manifests name
 
+Every manifest is built by ``new_manifest`` and has exactly these keys:
+
+    format        ``FORMAT``, the one manifest format (Delta's ``protocol``
+                  action, as one integer)
+    version       the committed version number
+    timestamp     commit time, epoch seconds
+    operation     WRITE / APPEND / COMPACT / RESTORE / ... (free text)
+    parameters    the caller's dict, free form
+    data_dirs     every data dir the version reads (parent chain + delta
+                  for an append, one dir for a full write)
+    fresh_dirs    the dirs holding rows NEW at this version: the delta of
+                  an append or fold, [] for a full write, a manifest-only
+                  commit and an empty delta
+    n_rows        physical row count over ``data_dirs``, summed from the
+                  parquet footers at commit time
+    partition_by  the hive partition column, or None
+    schema        the version's logical schema (``StructType.jsonValue``)
+
+The format rule: a manifest whose ``format`` is not ``FORMAT`` (or that
+has none) raises ``ManifestFormatError``, naming the file and the format
+found. The check runs where manifests are parsed, in ``tail_manifests``
+and in ``chunks``' checkpoint walk, so every reader of the log meets it.
+It is a ``RuntimeError``: neither the torn-tail rule nor the checkpoint
+replay fallback (both on ``ValueError``) can swallow it.
+
 Stdlib-only, with pyarrow imported inside the one function that needs it:
 Spark runs the stream source's plan-time methods in a fresh python process
 that inherits the driver's cwd and so cannot import this package.
@@ -21,8 +46,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import time
 from collections.abc import Callable, Iterator
 
+FORMAT = 1
 LOG = "_log"
 DATA = "_data"
 LAST_CHECKPOINT = "_last_checkpoint"
@@ -38,10 +65,46 @@ def checkpoint_name(version: int) -> str:
     return f"{version:08d}.checkpoint.json"
 
 
-def data_dirs(manifest: dict) -> list[str]:
-    """Every data dir a manifest references: append commits carry
-    ``data_dirs`` (parent chain + delta), full snapshots ``data_dir``."""
-    return list(manifest.get("data_dirs") or [manifest["data_dir"]])
+class ManifestFormatError(RuntimeError):
+    """A manifest in a format other than ``FORMAT``."""
+
+
+def new_manifest(
+    version: int,
+    operation: str,
+    parameters: dict,
+    *,
+    data_dirs: list[str],
+    fresh_dirs: list[str],
+    n_rows: int,
+    partition_by: str | None,
+    schema: dict,
+    timestamp: float | None = None,
+) -> dict:
+    """A manifest in the one current shape (module docstring)."""
+    return {
+        "format": FORMAT,
+        "version": version,
+        "timestamp": time.time() if timestamp is None else timestamp,
+        "operation": operation,
+        "parameters": parameters,
+        "data_dirs": data_dirs,
+        "fresh_dirs": fresh_dirs,
+        "n_rows": n_rows,
+        "partition_by": partition_by,
+        "schema": schema,
+    }
+
+
+def _checked(m, where: str) -> dict:
+    found = m.get("format") if isinstance(m, dict) else None
+    if found != FORMAT:
+        raise ManifestFormatError(
+            f"manifest {where} has format {found!r}; this reader reads "
+            f"manifest format {FORMAT} only (rebuild the table with the "
+            "current writer)"
+        )
+    return m
 
 
 def _uncounted(n: int) -> None:
@@ -88,7 +151,7 @@ def tail_manifests(
     for i, f in enumerate(names):
         try:
             with open(os.path.join(log_dir, f)) as fh:
-                out.append(json.load(fh))
+                m = json.load(fh)
             opened(1)
         except (json.JSONDecodeError, ValueError) as exc:
             if i == len(names) - 1:
@@ -97,6 +160,7 @@ def tail_manifests(
                 f"corrupt non-trailing manifest {f} at {log_dir}; "
                 "the commit log is damaged beyond a torn tail"
             ) from exc
+        out.append(_checked(m, os.path.join(log_dir, f)))
     return out
 
 
@@ -122,21 +186,25 @@ def chunks(
         cp = read_last_checkpoint(log_dir, opened)
         floor = cp["version"] if cp else -1
         yield floor, tail_manifests(log_dir, floor, opened)
+        name = cp["_name"] if cp else None
         seen_floors = set()
         while cp is not None:
             pfloor = cp.get("floor", -1)
             if pfloor in seen_floors or pfloor >= cp["version"]:
                 raise ValueError("checkpoint chain cycle")
             seen_floors.add(pfloor)
-            yield pfloor, list(cp["manifests"])
+            where = os.path.join(log_dir, name)
+            yield pfloor, [_checked(m, where) for m in cp["manifests"]]
             parent = cp.get("parent")
             if parent is None:
                 return
-            with open(os.path.join(log_dir, parent)) as fh:
+            name = parent
+            with open(os.path.join(log_dir, name)) as fh:
                 cp = json.load(fh)
             opened(1)
     except RuntimeError:
-        raise  # non-trailing corruption: a replay would hit it too
+        raise  # non-trailing corruption or another format: a replay
+        # would meet it too
     except (OSError, ValueError, KeyError):
         yield -1, tail_manifests(log_dir, -1, opened)
 

@@ -8,17 +8,17 @@ VERSION numbers, and each micro-batch emits the rows of the data dirs a
 version NEWLY references. Structural rules (no reliance on free-text
 operation names):
 
-- an APPEND manifest references its parent's dirs plus fresh delta dirs
-  → the batch is exactly the delta rows;
-- a FULL-WRITE manifest (overwrite / COMPACT / RESTORE) rewrites data
-  the stream already emitted → skipped when ``skip_change_commits`` is
-  true (the default; Delta's ``skipChangeCommits``), otherwise the
-  stream raises — silently re-emitting a whole snapshot would duplicate
-  every row downstream;
-- a FOLD commit (append hitting ``max_chain``) rewrites the parent
-  chain AND carries new rows; the manifest records ``fresh_dirs`` and
-  exactly those are emitted (a legacy fold without the record raises —
-  its new rows are inseparable from the rewrite);
+- every manifest records ``fresh_dirs``, the dirs holding rows new at
+  that version (``sinks/table_format``), and a batch emits exactly
+  those: an APPEND's delta, a FOLD commit's delta (an append hitting
+  ``max_chain`` rewrites the parent chain into one dir but keeps its
+  delta apart), nothing for a full write or a manifest-only commit;
+- a commit that DROPS dirs of its parent (overwrite / COMPACT /
+  RESTORE / fold) rewrites data the stream already emitted → its
+  rewrite is skipped when ``skip_change_commits`` is true (the default;
+  Delta's ``skipChangeCommits``), otherwise the stream raises —
+  silently re-emitting a whole snapshot would duplicate every row
+  downstream;
 - the starting snapshot (``starting_version``, default 0, or
   ``starting_timestamp`` — first version committed at/after it) is
   emitted in full as the first batch — the Delta "initial snapshot then
@@ -71,9 +71,11 @@ into Spark. Nothing data-sized ever crosses the planning process.
 The manifest log is read through ``sinks/table_format`` — the module
 that owns the on-disk format and that ``VersionedParquetTable`` itself
 reads through — so the source and the table cannot disagree on what is
-committed. Spark runs the plan-time methods in a fresh python process
-that cannot import this package; ``register_table_stream`` ships both
-modules by value, so neither may import any other repo module.
+committed, and a manifest in any other format fails there, at schema
+resolution and at batch planning alike. Spark runs the plan-time methods
+in a fresh python process that cannot import this package;
+``register_table_stream`` ships both modules by value, so neither may
+import any other repo module.
 
 Vacuum interacts like Delta: computing version v's new dirs needs
 manifest v-1, so the table's vacuum horizon must cover the stream's lag
@@ -100,7 +102,6 @@ from pyspark.sql.datasource import (
 from high_volume_market_data_pipeline_spark.sinks.table_format import (
     LOG,
     chunks,
-    data_dirs,
     parquet_files,
 )
 
@@ -149,21 +150,6 @@ def _resolve_starting_version(root: str, options: dict) -> int:
             f"{root}; no version starts at or after it"
         )
     return min(eligible)
-
-
-def _arrow_schema(dirs: list[str]):
-    """Unified arrow schema of a snapshot: pyarrow.dataset resolves hive
-    partition columns the same way every read() does, so planning and
-    execution can never disagree on column types. A list of directory
-    sources needs one child dataset per dir (pyarrow's list form is
-    files-only)."""
-    import pyarrow.dataset as ds
-
-    children = [
-        ds.dataset(d, format="parquet", partitioning=_PARTITIONING)
-        for d in dirs
-    ]
-    return (children[0] if len(children) == 1 else ds.dataset(children)).schema
 
 
 _META_FIELDS = (
@@ -433,7 +419,7 @@ class TableStreamReader(DataSourceStreamReader):
                 "log (vacuumed?); the table's vacuum horizon must cover "
                 "the stream's lag"
             )
-        dirs = data_dirs(ms[v])
+        dirs = ms[v]["data_dirs"]
         if v == self.starting_version and batch_start == v - 1:
             # the initial snapshot is emitted in full — but ONLY for the
             # batch that actually starts at it: a timestamp-resolved
@@ -448,39 +434,16 @@ class TableStreamReader(DataSourceStreamReader):
                 "manifest log (vacuumed?); cannot derive version "
                 f"{v}'s delta"
             )
-        parent = set(data_dirs(ms[v - 1]))
-        fresh = [d for d in dirs if d not in parent]
-        if parent - set(dirs) or (fresh and "data_dirs" not in ms[v]):
-            # dirs were dropped (overwrite / compact / restore / chain
-            # fold) — the commit rewrites data the stream already emitted
-            if not self.skip_change_commits:
-                raise ValueError(
-                    f"version {v} of {self.root} rewrites existing data "
-                    "(overwrite/compact/restore); set "
-                    "skip_change_commits=true to tail only appends"
-                )
-            if "fresh_dirs" in ms[v]:
-                # a FOLD commit (append hitting max_chain) mixes a rewrite
-                # of the parent chain with genuinely NEW delta rows; the
-                # manifest records the delta dirs so exactly those are
-                # emitted while the rewrite is skipped
-                return list(ms[v]["fresh_dirs"])
-            if ms[v].get("parameters", {}).get("absorbed_chain") is not None:
-                # legacy (pre-r10) fold commit: its new rows are fused
-                # into the rewritten snapshot and CANNOT be separated —
-                # skipping would silently drop them (permanent data loss),
-                # so fail loudly even under skip_change_commits
-                raise ValueError(
-                    f"version {v} of {self.root} is a legacy fold commit "
-                    "(absorbed_chain without fresh_dirs): its new rows "
-                    "are inseparable from the rewrite; re-commit the "
-                    "table with the current writer or start a fresh "
-                    "stream from a later snapshot"
-                )
-            return []
-        if "fresh_dirs" in ms[v]:
-            return list(ms[v]["fresh_dirs"])
-        return fresh
+        # dirs dropped (overwrite / compact / restore / chain fold): the
+        # commit rewrites data the stream already emitted
+        dropped = set(ms[v - 1]["data_dirs"]) - set(dirs)
+        if dropped and not self.skip_change_commits:
+            raise ValueError(
+                f"version {v} of {self.root} rewrites existing data "
+                "(overwrite/compact/restore); set "
+                "skip_change_commits=true to tail only appends"
+            )
+        return ms[v]["fresh_dirs"]
 
     def partitions(
         self, start: dict, end: dict
@@ -594,14 +557,12 @@ class TableStreamDataSource(DataSource):
         # authoritative schema, and a resumed stream must be plannable
         # even after its starting snapshot was vacuumed away (only the
         # versions the resume actually READS need to be retained).
-        # The manifest-RECORDED schema (Delta's metaData action) is
-        # preferred over pyarrow hive inference: inference types a
-        # partition column from its dir-name strings (long written as
-        # ``p=3`` reads back int32), so stream and batch reads of the
-        # same table would disagree on column types. The partition
-        # column moves to the END to match the batch read's hive column
-        # order. Legacy manifests without a recorded schema fall back to
-        # inference.
+        # The manifest-RECORDED schema (Delta's metaData action), not
+        # pyarrow hive inference: inference types a partition column
+        # from its dir-name strings (long written as ``p=3`` reads back
+        # int32), so stream and batch reads of the same table would
+        # disagree on column types. The partition column moves to the
+        # END to match the batch read's hive column order.
         root = self.options.get("root")
         if not root:
             raise ValueError("table_stream requires option 'root'")
@@ -611,20 +572,15 @@ class TableStreamDataSource(DataSource):
         ms = _read_manifests(root, min_version=1 << 62)
         if not ms:
             raise ValueError(f"no committed versions at {root}")
+        from pyspark.sql.types import StructType
+
         head = ms[max(ms)]
-        if head.get("schema") is not None:
-            from pyspark.sql.types import StructType
-
-            st = StructType.fromJson(head["schema"])
-            part = head.get("partition_by")
-            if part and part in st.fieldNames():
-                fields = [f for f in st.fields if f.name != part]
-                fields.append(st[part])
-                st = StructType(fields)
-        else:
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            st = from_arrow_schema(_arrow_schema(data_dirs(head)))
+        st = StructType.fromJson(head["schema"])
+        part = head["partition_by"]
+        if part and part in st.fieldNames():
+            st = StructType(
+                [f for f in st.fields if f.name != part] + [st[part]]
+            )
         if str(
             self.options.get("with_commit_version", "false")
         ).lower() in ("1", "true", "yes"):
@@ -635,7 +591,6 @@ class TableStreamDataSource(DataSource):
                 LongType,
                 StringType,
                 StructField,
-                StructType,
             )
 
             meta_types = {

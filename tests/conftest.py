@@ -98,3 +98,40 @@ def assert_matches_oracle(spark_df, con, sql):
         (a, b) for a, b in zip(s_canon, o_canon) if a != b
     ]
     assert not mismatches, f"value mismatch ({len(mismatches)} rows), first: {mismatches[0]}"
+
+
+def rewrite_in_older_format(table, version: int, where: str, shape: str) -> str:
+    """Rewrite ``version``'s manifest of a VersionedParquetTable in an
+    older shape — without ``format`` (``shape="no_format"``) or with
+    format 0 — either as the trailing loose file (``where="loose_tail"``)
+    or inside a fresh checkpoint chunk (``"checkpoint"``; the loose copy
+    stays current, so a replay fallback would read fine). Returns the
+    damaged file's name."""
+    import json
+
+    def older(m: dict) -> dict:
+        m = dict(m)
+        if shape == "no_format":
+            del m["format"]
+        else:
+            m["format"] = 0
+        return m
+
+    if where == "loose_tail":
+        name = f"{version:08d}.json"
+        path = os.path.join(table.log_dir, name)
+        with open(path) as fh:
+            m = json.load(fh)
+        with open(path, "w") as fh:
+            json.dump(older(m), fh)
+        return name
+    name = table.checkpoint()
+    path = os.path.join(table.log_dir, name)
+    with open(path) as fh:
+        cp = json.load(fh)
+    cp["manifests"] = [
+        older(m) if m["version"] == version else m for m in cp["manifests"]
+    ]
+    with open(path, "w") as fh:
+        json.dump(cp, fh)
+    return name

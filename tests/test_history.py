@@ -14,12 +14,31 @@ from pyspark.sql import functions as F
 from high_volume_market_data_pipeline_spark.sinks.history import (
     VersionedParquetTable,
 )
-from high_volume_market_data_pipeline_spark.sinks.table_format import data_dirs
+from high_volume_market_data_pipeline_spark.sinks.table_format import (
+    new_manifest,
+)
+from tests.conftest import rewrite_in_older_format
 
 
 @pytest.fixture()
 def table(tmp_path):
     return VersionedParquetTable(str(tmp_path / "tbl"))
+
+
+def _fake_manifest(v: int, data_dir: str | None = None, parameters=None):
+    """A current-shape manifest for log-layer tests: its data dir is not
+    written, so only log reads (versions, history, resolve) use it."""
+    return new_manifest(
+        v,
+        "WRITE",
+        parameters or {},
+        data_dirs=[data_dir or f"/nope/v{v:08d}_x"],
+        fresh_dirs=[],
+        n_rows=0,
+        partition_by=None,
+        schema={"type": "struct", "fields": []},
+        timestamp=float(v),
+    )
 
 
 def _df(spark, n, tag):
@@ -102,7 +121,7 @@ def test_crashed_writer_leaves_current_version_intact(spark, table):
     table.write(_df(spark, 5, "a"), "WRITE")
     # Simulate a writer that died after the snapshot dir, before the
     # manifest: readers must still see v0; vacuum cleans the orphan.
-    orphan = os.path.join(table.root, "_v00000042")
+    orphan = os.path.join(table.root, "_data", "v00000042_x")
     _df(spark, 2, "zz").write.parquet(orphan)
     assert table.latest_version() == 0
     assert table.read(spark).count() == 5
@@ -111,13 +130,13 @@ def test_crashed_writer_leaves_current_version_intact(spark, table):
     # grace must leave it alone, or the commit would reference a deleted
     # dir and poison every descendant version.
     result = table.vacuum(keep_last=1)
-    assert "_v00000042" not in result.removed_dirs
+    assert "v00000042_x" not in result.removed_dirs
     assert os.path.exists(orphan)
     # Past the grace window (forced to 0 here) the orphan is a crashed
     # writer's leftovers: removed, but NOT reported as a retired version —
     # its parsed number could collide with a kept snapshot's.
     result = table.vacuum(keep_last=1, orphan_grace_seconds=0.0)
-    assert "_v00000042" in result.removed_dirs
+    assert "v00000042_x" in result.removed_dirs
     assert 42 not in result.retired
     assert not os.path.exists(orphan)
 
@@ -133,7 +152,7 @@ def test_snapshot_dirs_have_no_hidden_leaf(spark, table):
     table.write(_df(spark, 5, "a"), "WRITE")
     table.append(_df(spark, 3, "b"), "APPEND")
     table.append(_df(spark, 2, "c"), "APPEND", max_chain=1)  # folds
-    dirs = {d for m in table._manifests() for d in data_dirs(m)}
+    dirs = {d for m in table._manifests() for d in m["data_dirs"]}
     assert len(dirs) == 4
     for d in dirs:
         assert os.path.dirname(d) == os.path.join(table.root, "_data")
@@ -246,7 +265,7 @@ def test_changes_append_lineage_prunes_to_exclusive_dirs(spark, tmp_path):
     import json, os
 
     with open(os.path.join(t.log_dir, "00000000.json")) as fh:
-        v0_dir = json.load(fh)["data_dir"]
+        v0_dir = json.load(fh)["data_dirs"][0]
     assert os.path.basename(v0_dir) not in plan
 
 
@@ -422,12 +441,12 @@ def test_append_commits_delta_files_only(spark, table):
     assert table.read(spark).count() == 8
     assert table.read(spark, version=0).count() == 5
 
-    dirs_v1 = data_dirs(table._resolve(1, None))
-    v0_dir = data_dirs(table._resolve(0, None))[0]
+    dirs_v1 = table._resolve(1, None)["data_dirs"]
+    v0_dir = table._resolve(0, None)["data_dirs"][0]
     assert len(dirs_v1) == 2 and v0_dir in dirs_v1  # parent referenced
 
     table.append(_df(spark, 2, "c"))
-    assert len(data_dirs(table._resolve(2, None))) == 3
+    assert len(table._resolve(2, None)["data_dirs"]) == 3
     tags = {
         r["tag"] for r in table.read(spark).select("tag").distinct().collect()
     }
@@ -435,7 +454,7 @@ def test_append_commits_delta_files_only(spark, table):
 
     # compaction folds the chain back to one snapshot, same rows
     v3 = table.compact(spark)
-    assert len(data_dirs(table._resolve(v3, None))) == 1
+    assert len(table._resolve(v3, None)["data_dirs"]) == 1
     assert table.read(spark).count() == 10
 
 
@@ -467,7 +486,7 @@ def test_append_max_chain_absorbs_into_snapshot(spark, table):
     # parent + keeps its delta = 2, v4=3, v5 folds again = 2 — never
     # above the bound
     lens = [
-        len(data_dirs(table._resolve(v, None))) for v in range(6)
+        len(table._resolve(v, None)["data_dirs"]) for v in range(6)
     ]
     assert lens == [1, 2, 3, 2, 3, 2]
     fold = table._resolve(3, None)
@@ -476,7 +495,7 @@ def test_append_max_chain_absorbs_into_snapshot(spark, table):
     # parent chain's fold did not rewrite
     assert len(fold["fresh_dirs"]) == 1
     assert fold["fresh_dirs"][0] in fold["data_dirs"]
-    assert set(data_dirs(table._resolve(2, None))).isdisjoint(
+    assert set(table._resolve(2, None)["data_dirs"]).isdisjoint(
         fold["fresh_dirs"]
     )
     assert table.read(spark).count() == 9
@@ -507,7 +526,7 @@ def test_partitioned_append_chain_absorbs_and_compacts(spark, table):
     v = table.compact(spark)
     compacted = table._resolve(v, None)
     assert compacted.get("partition_by") == "p"  # layout preserved
-    ddir = data_dirs(compacted)[0]
+    ddir = compacted["data_dirs"][0]
     assert {d for d in os.listdir(ddir) if d.startswith("p=")} == {
         "p=0", "p=1"
     }
@@ -561,13 +580,12 @@ def test_checkpoint_thousand_commit_log_constant_opens(spark, table):
     opens once checkpointed — the continuous-ingest scale contract.
     Manifests are fabricated directly (this exercises only the log
     layer; data-path reads are covered above)."""
+    import json as _json
+
     os.makedirs(table.log_dir)
     for v in range(1000):
         with open(os.path.join(table.log_dir, f"{v:08d}.json"), "w") as fh:
-            fh.write(
-                '{"version": %d, "timestamp": %d.0, "operation": "WRITE",'
-                ' "parameters": {}, "data_dir": "/nope/_v%08d_x"}' % (v, v, v)
-            )
+            _json.dump(_fake_manifest(v), fh)
     assert table.versions() == list(range(1000))
     assert table.last_log_files_opened == 1000  # pre-checkpoint: full replay
     table.checkpoint()
@@ -584,19 +602,8 @@ def test_checkpoint_thousand_commit_log_constant_opens(spark, table):
     # checkpoint, O(commits) cumulative write volume), never the whole
     # 1,000-commit history again; head reads stay constant-opens and the
     # full log is still exact down the chain.
-    import json as _json
-
     for v in range(1000, 1100):
-        table._commit_manifest(
-            {
-                "version": v,
-                "timestamp": float(v),
-                "operation": "WRITE",
-                "parameters": {},
-                "data_dir": f"/nope/_v{v:08d}_x",
-            },
-            v,
-        )
+        table._commit_manifest(_fake_manifest(v), v)
     cps = sorted(
         n for n in os.listdir(table.log_dir) if n.endswith(".checkpoint.json")
     )
@@ -623,16 +630,7 @@ def test_head_resolve_stops_at_first_chunk(table):
     1,000-commit incremental checkpoint chain; time travel still reaches
     the bottom of the chain."""
     for v in range(1000):
-        table._commit_manifest(
-            {
-                "version": v,
-                "timestamp": float(v),
-                "operation": "WRITE",
-                "parameters": {},
-                "data_dir": f"/nope/_v{v:08d}_x",
-            },
-            v,
-        )
+        table._commit_manifest(_fake_manifest(v), v)
     assert table._resolve(None, None)["version"] == 999
     head_opens = table.last_log_files_opened
     assert table.latest_version() == 999
@@ -850,16 +848,7 @@ def test_history_limit_stops_at_first_chunks(spark, table):
     chain, history(1) on a deep table parses pointer + newest chunk, not
     the whole chain."""
     for v in range(35):
-        table._commit_manifest(
-            {
-                "version": v,
-                "timestamp": float(v),
-                "operation": "WRITE",
-                "parameters": {},
-                "data_dir": f"/nope/_v{v:08d}_x",
-            },
-            v,
-        )
+        table._commit_manifest(_fake_manifest(v), v)
     got = table.history(spark, limit=3).collect()
     assert [r["version"] for r in got] == [34, 33, 32]
     # the walk stopped at the loose tail: pointer + cp + tail(5) opens,
@@ -877,16 +866,7 @@ def test_checkpoint_chain_damage_falls_back_to_replay(spark, table):
     import json as _json
 
     for v in range(25):
-        table._commit_manifest(
-            {
-                "version": v,
-                "timestamp": float(v),
-                "operation": "WRITE",
-                "parameters": {},
-                "data_dir": f"/nope/_v{v:08d}_x",
-            },
-            v,
-        )
+        table._commit_manifest(_fake_manifest(v), v)
     cps = sorted(
         n for n in os.listdir(table.log_dir) if n.endswith(".checkpoint.json")
     )
@@ -1006,13 +986,11 @@ def test_concurrent_writers_with_incremental_checkpoints(spark, table):
                     target = (table.latest_version() or 0) + 1 if table.exists() else 0
                     try:
                         table._commit_manifest(
-                            {
-                                "version": target,
-                                "timestamp": float(target),
-                                "operation": "WRITE",
-                                "parameters": {"tid": tid, "i": i},
-                                "data_dir": f"/nope/_t{tid}_{i}",
-                            },
+                            _fake_manifest(
+                                target,
+                                f"/nope/t{tid}_{i}",
+                                {"tid": tid, "i": i},
+                            ),
                             target,
                         )
                         break
@@ -1063,15 +1041,9 @@ def test_repair_quarantine_restores_completed_write(spark, table):
     table.torn_grace_seconds = -1.0
 
     real_rename = os.rename
-    good = {
-        "version": 1,
-        "timestamp": 1.0,
-        "operation": "WRITE",
-        "parameters": {},
-        "data_dir": os.path.join(table.root, "_v00000001_deadbeef"),
-        "partition_by": None,
-        "schema": None,
-    }
+    good = _fake_manifest(
+        1, os.path.join(table.root, "_data", "v00000001_deadbeef")
+    )
 
     def rename_then_complete(src, dst):
         real_rename(src, dst)
@@ -1293,3 +1265,79 @@ def test_row_count_fsck_detects_corrupt_manifest(spark, tmp_path):
     bad = t.verify_row_counts()
     assert [b["version"] for b in bad] == [1]
     assert bad[0]["recorded"] == bad[0]["actual"] + 7
+
+
+_MANIFEST_KEYS = {
+    "format",
+    "version",
+    "timestamp",
+    "operation",
+    "parameters",
+    "data_dirs",
+    "fresh_dirs",
+    "n_rows",
+    "partition_by",
+    "schema",
+}
+
+_WRITERS = {
+    "write": lambda spark, t: t.write(_df(spark, 2, "w")),
+    "append": lambda spark, t: t.append(_df(spark, 2, "a")),
+    "append_fold": lambda spark, t: t.append(_df(spark, 2, "f"), max_chain=1),
+    "empty_append": lambda spark, t: t.append(_df(spark, 0, "e")),
+    "commit_ref": lambda spark, t: t.commit_ref("REF"),
+    "compact": lambda spark, t: t.compact(spark),
+    "restore": lambda spark, t: t.restore(spark, 0),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_every_writer_commits_the_one_manifest_shape(spark, table, writer):
+    """Every commit path writes exactly the current manifest keys, with
+    ``format`` equal to the one format constant, and its row_count is a
+    manifest read (no Spark job) equal to the data's count."""
+    from high_volume_market_data_pipeline_spark.session import job_mark
+    from high_volume_market_data_pipeline_spark.sinks.table_format import (
+        FORMAT,
+    )
+
+    table.write(_df(spark, 3, "base"))
+    v = _WRITERS[writer](spark, table)
+    for m in (table._resolve(0, None), table._resolve(v, None)):
+        assert set(m) == _MANIFEST_KEYS
+        assert m["format"] == FORMAT
+    j0 = job_mark(spark)
+    n = table.row_count(spark, version=v)
+    assert job_mark(spark) == j0
+    assert n == table.read(spark, version=v).count()
+
+
+_READERS = {
+    "read": lambda spark, t: t.read(spark),
+    "row_count": lambda spark, t: t.row_count(spark),
+    "history": lambda spark, t: t.history(spark),
+    "append": lambda spark, t: t.append(_df(spark, 1, "x")),
+}
+
+
+@pytest.mark.parametrize("where", ["loose_tail", "checkpoint"])
+@pytest.mark.parametrize("shape", ["no_format", "format_0"])
+@pytest.mark.parametrize("reader", sorted(_READERS))
+def test_older_format_raises(spark, table, reader, shape, where):
+    """A manifest in any other format raises the one format error, naming
+    the file and the format found: a trailing loose one is not skipped as
+    a torn commit, and one inside a checkpoint chunk does not fall back to
+    a replay of the (current-format) loose files."""
+    from high_volume_market_data_pipeline_spark.sinks.table_format import (
+        ManifestFormatError,
+    )
+
+    table.write(_df(spark, 3, "a"))
+    table.commit_ref("REF")
+    name = rewrite_in_older_format(table, 1, where, shape)
+    found = "None" if shape == "no_format" else "0"
+    with pytest.raises(ManifestFormatError, match=f"{name} has format {found}"):
+        _READERS[reader](spark, table)
+    # append resolves its parent before writing any data
+    assert len(os.listdir(os.path.join(table.root, "_data"))) == 1
+

@@ -853,9 +853,9 @@ def test_auto_purge_fires_on_tombstone_fraction(spark, tmp_path):
     """Tombstone maintenance amortized into the write path: when active
     tombstones cross _AUTO_PURGE_TOMBSTONE_FRACTION of the physical
     corpus, the NEXT append triggers purge_deleted automatically — the
-    rows are physically dropped, the tombstone head records
-    n_tombstones=0, and _active_tombstones short-circuits to None (no
-    read + anti-join on every later search)."""
+    rows are physically dropped, the tombstone table's row_count is 0,
+    and _active_tombstones short-circuits to None (no read + anti-join
+    on every later search)."""
     from high_volume_market_data_pipeline_spark.similarity import (
         append_to_index,
         build_ivf_index,
@@ -865,7 +865,6 @@ def test_auto_purge_fires_on_tombstone_fraction(spark, tmp_path):
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _active_tombstones,
-        _tombstone_head_count,
         _tombstone_table,
     )
     from high_volume_market_data_pipeline_spark.sinks.history import (
@@ -885,7 +884,7 @@ def test_auto_purge_fires_on_tombstone_fraction(spark, tmp_path):
         spark, root, emb.filter("vec_id >= 40 and vec_id < 45"),
         skip_existing_ids=True,
     )
-    _, n = _tombstone_head_count(spark, _tombstone_table(root))
+    n = _tombstone_table(root).row_count(spark)
     assert n == 0
     assert _active_tombstones(spark, root) is None  # metadata short-circuit
     raw = VersionedParquetTable(os.path.join(root, "coded")).read(spark)
@@ -912,7 +911,6 @@ def test_small_tombstone_fraction_does_not_auto_purge(spark, tmp_path):
         save_index,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
-        _tombstone_head_count,
         _tombstone_table,
     )
 
@@ -926,7 +924,7 @@ def test_small_tombstone_fraction_does_not_auto_purge(spark, tmp_path):
         spark, root, emb.filter("vec_id >= 150 and vec_id < 155"),
         skip_existing_ids=True,
     )
-    _, n = _tombstone_head_count(spark, _tombstone_table(root))
+    n = _tombstone_table(root).row_count(spark)
     assert n == 2  # untouched
 
 
@@ -1040,7 +1038,7 @@ def test_purge_reset_race_retries_against_new_head(spark, tmp_path,
     coded snapshot can land and then the PURGE_RESET tombstone write lose
     its CAS to a concurrent delete_from_index. The reset must re-derive
     against the new head — (new head ids minus the just-purged set) with
-    a corrected n_tombstones — so the already-purged ids stop counting
+    a corrected row count — so the already-purged ids stop counting
     (no auto-purge re-fire loop) while the racer's fresh delete
     survives."""
     from high_volume_market_data_pipeline_spark.similarity import (
@@ -1053,7 +1051,6 @@ def test_purge_reset_race_retries_against_new_head(spark, tmp_path,
     )
     from high_volume_market_data_pipeline_spark.similarity.index_store import (
         _active_tombstones,
-        _tombstone_head_count,
         _tombstone_table,
     )
     from high_volume_market_data_pipeline_spark.sinks.history import (
@@ -1085,7 +1082,7 @@ def test_purge_reset_race_retries_against_new_head(spark, tmp_path,
     assert v is not None
 
     # corrected count: ONLY the racer's id remains tombstoned
-    _, n = _tombstone_head_count(spark, _tombstone_table(root))
+    n = _tombstone_table(root).row_count(spark)
     assert n == 1
     alive = {
         r["neighbor_id"] for r in _active_tombstones(spark, root).collect()
@@ -1123,10 +1120,6 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
     from high_volume_market_data_pipeline_spark.sinks.history import (
         VersionedParquetTable,
     )
-    from high_volume_market_data_pipeline_spark.sinks.table_format import (
-        data_dirs,
-    )
-
     emb = load_table(spark, SF_DIR, "embeddings")
     root = str(tmp_path / "pairing")
     save_index(build_pq_index(emb.filter("vec_id < 150"), n_codes=8), root)
@@ -1137,7 +1130,7 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
     m0 = model_t._resolve(0, None)
     mv = model_t._resolve(v, None)
     # (a) pairing commit references the trained model's files verbatim
-    assert data_dirs(mv) == data_dirs(m0)
+    assert mv["data_dirs"] == m0["data_dirs"]
     assert mv["operation"] == "PQ_APPEND"
 
     # (b) pyarrow load: no Spark job, content identical to the Spark read
@@ -1155,3 +1148,46 @@ def test_append_model_pairing_and_load_are_metadata_only(spark, tmp_path):
     # the loaded pair still searches: coded head has both slices
     coded = VersionedParquetTable(os.path.join(root, "coded"))
     assert coded.row_count(spark) == 170
+
+
+def test_tombstone_row_count_tracks_every_mutation(spark, tmp_path):
+    """The tombstone table holds each deleted id once, so its row_count
+    (the manifest's n_rows, no Spark job) is the active-tombstone count
+    after a delete, a repeated delete, a revive and a purge-reset — and
+    no tombstone commit records the count a second time."""
+    from high_volume_market_data_pipeline_spark.similarity import (
+        append_to_index,
+        build_ivf_index,
+        delete_from_index,
+        purge_deleted,
+        save_index,
+    )
+    from high_volume_market_data_pipeline_spark.similarity.index_store import (
+        _tombstone_table,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    root = str(tmp_path / "tc")
+    save_index(build_ivf_index(emb.filter("vec_id < 150"), n_cells=4), root)
+    t = _tombstone_table(root)
+
+    def check(expected: int) -> None:
+        j0 = job_mark(spark)
+        n = t.row_count(spark)
+        assert job_mark(spark) == j0
+        assert n == t.read(spark).count() == expected
+
+    delete_from_index(spark, root, [3, 7, 11, 200])
+    check(4)
+    delete_from_index(spark, root, [7, 11, 12])  # repeated ids dedup
+    check(5)
+    # revive: id 200 has no physical rows, so its commit clears it
+    append_to_index(
+        spark, root, emb.filter("vec_id = 200"), skip_existing_ids=True
+    )
+    check(4)
+    purge_deleted(spark, root)  # PURGE_RESET
+    check(0)
+    assert all(
+        "n_tombstones" not in r["parameters"] for r in t.history(spark).collect()
+    )

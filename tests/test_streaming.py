@@ -1239,3 +1239,38 @@ def test_stream_auto_compacts_ledger_partitions(spark, tmp_path):
         r["doc_id"] for r in spark.read.parquet(f"{ledger}/admitted").collect()
     }
     assert admitted2 == admitted
+
+
+def test_events_stream_stages_under_tempdir(spark, tmp_path, monkeypatch):
+    """The events stream stages its symlink under tempfile.gettempdir()
+    (so TMPDIR is honored), replaces a stage link that points elsewhere,
+    and removes stages whose link dangles."""
+    import os
+    import tempfile
+
+    from high_volume_market_data_pipeline_spark.queries_streaming import (
+        _events_stream,
+    )
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = tmp_path / "hvmdp_stream_stale"
+    stale.mkdir()
+    os.symlink(str(tmp_path / "gone" / "events.parquet"),
+               str(stale / "events.parquet"))
+    target = os.path.abspath(os.path.join(SF_DIR, "events.parquet"))
+    sdf = _events_stream(spark, SF_DIR)
+    assert sdf.isStreaming
+    stages = sorted(p.name for p in tmp_path.iterdir())
+    assert len(stages) == 1 and stages[0].startswith("hvmdp_stream_")
+    link = tmp_path / stages[0] / "events.parquet"
+    assert os.readlink(str(link)) == target
+
+    # a link retargeted at another (existing) file is replaced, not reused
+    other = tmp_path / "elsewhere.parquet"
+    other.write_bytes(b"")
+    os.unlink(str(link))
+    os.symlink(str(other), str(link))
+    _events_stream(spark, SF_DIR)
+    assert os.readlink(str(link)) == target
+    assert os.listdir(str(tmp_path / stages[0])) == ["events.parquet"]

@@ -20,6 +20,7 @@ from high_volume_market_data_pipeline_spark.sinks.history import (
 from high_volume_market_data_pipeline_spark.sources.table_datasource import (
     register_table_stream,
 )
+from tests.conftest import rewrite_in_older_format
 
 
 def _drain_to_parquet(spark, root: str, out: str, ckpt: str) -> list:
@@ -208,33 +209,30 @@ def test_fold_commit_emits_exactly_the_new_rows(spark, tmp_path):
     assert rows == [(i, "s" if i == 0 else f"d{i}") for i in range(6)]
 
 
-def test_legacy_fold_commit_fails_loudly(spark, tmp_path):
-    """A pre-r10 fold commit (absorbed_chain recorded, no fresh_dirs) has
-    its new rows fused into the rewritten snapshot — the stream must
-    RAISE rather than skip it as a change commit and silently lose
-    them."""
-    import json
-    import os
-
+def test_older_format_fails_stream_schema(spark, tmp_path):
+    """The stream's schema comes from the head manifest: a head in
+    another format fails load() with the format error, never an
+    inferred schema."""
     register_table_stream(spark)
-    t = VersionedParquetTable(str(tmp_path / "ltbl"))
+    t = VersionedParquetTable(str(tmp_path / "otbl"))
     t.write(spark.createDataFrame([(0, "s")], "id long, s string"))
-    t.append(spark.createDataFrame([(1, "d1")], "id long, s string"))
-    # fabricate the legacy fold shape: a full-write manifest carrying
-    # absorbed_chain (what pre-r10 append(max_chain) committed)
-    t.write(
-        spark.createDataFrame(
-            [(0, "s"), (1, "d1"), (2, "d2")], "id long, s string"
-        ),
-        operation="APPEND",
-        parameters={"absorbed_chain": 2},
-    )
-    mf = os.path.join(t.log_dir, "00000002.json")
-    with open(mf) as fh:
-        m = json.load(fh)
-    assert m["parameters"]["absorbed_chain"] == 2
+    name = rewrite_in_older_format(t, 0, "loose_tail", "no_format")
+    with pytest.raises(Exception, match=f"{name} has format None"):
+        spark.readStream.format("table_stream").option("root", t.root).load()
 
+
+@pytest.mark.parametrize("where", ["loose_tail", "checkpoint"])
+def test_older_format_fails_stream_planning(spark, tmp_path, where):
+    """A manifest in another format that lands after the stream was
+    loaded fails the stream at planning: the trailing loose one is not
+    skipped as a torn commit, and one inside a checkpoint chunk does not
+    fall back to a replay."""
+    register_table_stream(spark)
+    t = VersionedParquetTable(str(tmp_path / "ptbl"))
+    t.write(spark.createDataFrame([(0, "s")], "id long, s string"))
     sdf = spark.readStream.format("table_stream").option("root", t.root).load()
+    t.append(spark.createDataFrame([(1, "d1")], "id long, s string"))
+    name = rewrite_in_older_format(t, 1, where, "format_0")
     q = (
         sdf.writeStream.format("parquet")
         .option("path", str(tmp_path / "out"))
@@ -244,7 +242,7 @@ def test_legacy_fold_commit_fails_loudly(spark, tmp_path):
     )
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    with pytest.raises(StreamingQueryException, match="legacy fold"):
+    with pytest.raises(StreamingQueryException, match=f"{name} has format"):
         q.awaitTermination()
 
 

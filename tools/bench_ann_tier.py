@@ -380,9 +380,6 @@ def main() -> None:
         from high_volume_market_data_pipeline_spark.sinks.history import (
             VersionedParquetTable,
         )
-        from high_volume_market_data_pipeline_spark.sinks.table_format import (
-            data_dirs,
-        )
 
         part_root = os.path.join(idx_scratch, "ivf_part")
         flat_root = os.path.join(idx_scratch, "ivf_flat")
@@ -411,7 +408,7 @@ def main() -> None:
         cells_ix = np.arange(len(ivf_idx.centroids))
         probed = sorted(int(c) for c in np.lexsort((cells_ix, d2))[:4])
         vt = VersionedParquetTable(os.path.join(part_root, "coded"))
-        part_dir = data_dirs(vt._resolve(None, None))[0]
+        part_dir = vt._resolve(None, None)["data_dirs"][0]
         files_total, bytes_total = _dir_stats(part_dir)
         files_probed = bytes_probed = 0
         for c in probed:

@@ -33,7 +33,7 @@ from high_volume_market_data_pipeline_spark.sinks.history import (  # noqa: E402
     VersionedParquetTable,
 )
 from high_volume_market_data_pipeline_spark.sinks.table_format import (  # noqa: E402
-    data_dirs,
+    new_manifest,
 )
 
 PROBE_LENGTHS = [1, 2, 4, 8, 16, 32, 64, 96, 128]
@@ -91,7 +91,7 @@ def main() -> None:
                 rows[str(target)] = {
                     "read_count_sec": round(statistics.median(secs), 3),
                     "n_rows": n,
-                    "n_dirs": len(data_dirs(table._resolve(None, None))),
+                    "n_dirs": len(table._resolve(None, None)["data_dirs"]),
                 }
                 print(f"# {tag} chain={target}: {rows[str(target)]}",
                       file=sys.stderr)
@@ -162,13 +162,11 @@ def main() -> None:
         import re as _re
 
         def fab(v: int) -> dict:
-            return {
-                "version": v,
-                "timestamp": float(v),
-                "operation": "WRITE",
-                "parameters": {},
-                "data_dir": f"/nope/_v{v:08d}_x",
-            }
+            return new_manifest(
+                v, "WRITE", {}, data_dirs=[f"/nope/v{v:08d}_x"],
+                fresh_dirs=[], n_rows=0, partition_by=None,
+                schema={"type": "struct", "fields": []}, timestamp=float(v),
+            )
 
         def head_read_cost(t: VersionedParquetTable) -> tuple[int, int]:
             t.latest_version()
