@@ -14,22 +14,20 @@ ONCE per document and persisted banded (id, sig, band_key); an increment
 3. equi-joins the survivors' band keys against the STORE (the store side
    never recomputes text — it is keys + k-component signatures only, a
    few hundred bytes per document regardless of document size), and
-4. appends the admitted documents' signatures back to the store.
+4. commits the admitted documents' signatures back to the store.
 
-At scale the store is written partitioned by a band_key prefix so the
-increment join prunes to matching partitions; the text of the historical
-corpus is never read again. Determinism: signatures are md5-derived
-(engine-exact), keep-decisions are min-id, and admission is a pure
-function of (store state, batch) — re-running an increment admits the
-same set.
+The store is a ``sinks/history.VersionedParquetTable``: ``bootstrap`` is
+a full write (operation BOOTSTRAP) and each increment is one append
+commit (operation INCREMENT) of a fresh delta dir, folded into one
+snapshot every ``MAX_CHAIN`` dirs. A crashed increment leaves the head
+untouched, the row count the scope decision reads is the manifest's
+``n_rows``, and the table's ``history`` lists every increment. The text of the historical corpus is never read again.
+Determinism: signatures are md5-derived (engine-exact), keep-decisions
+are min-id, and admission is a pure function of (store state, batch) —
+re-running an increment admits the same set.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import warnings
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -42,20 +40,18 @@ from high_volume_market_data_pipeline_spark.dedup.minhash import (
     lsh_candidate_pairs,
     minhash_signature,
 )
-from high_volume_market_data_pipeline_spark.sinks.table_format import (
-    footer_rows,
-    parquet_files,
+from high_volume_market_data_pipeline_spark.sinks.history import (
+    MAX_CHAIN,
+    VersionedParquetTable,
 )
-
-# Spark's parquet reader ignores underscore-prefixed files, so the sidecar
-# can live inside the store directory without affecting reads.
-_ROW_COUNT_SIDECAR = "_store_rows.json"
 
 
 class SignatureStore:
     """Persisted banded MinHash signatures: (doc_id, sig, band_key), one
-    row per (doc, band). ``bootstrap`` seeds it from an initial corpus;
-    ``dedup_increment`` admits a new batch against it."""
+    row per (doc, band), kept as a ``VersionedParquetTable`` at ``path``.
+    ``bootstrap`` seeds it from an initial corpus (a full write);
+    ``dedup_increment`` admits a new batch against it and commits the
+    admitted signatures as an append."""
 
     # Scope the per-increment STORE passes (degenerate-bucket guard, probe,
     # replay-hygiene id set) to the batch's keys only once the store is at
@@ -66,8 +62,8 @@ class SignatureStore:
     # micro-batch — the accidental per-batch full pass this module exists
     # to avoid. The threshold compares store size against the fixed cost
     # of one broadcast build, so it is scale-adaptive, not tuned to local
-    # core count; the store size is read from a sidecar row count the
-    # writers maintain (no job, no footer walk).
+    # core count; the store size is the table manifest's ``n_rows`` (no
+    # job, no footer walk).
     scope_store_min_rows = 200_000
 
     # The scoped branch force-broadcasts the batch's band keys (and the
@@ -94,56 +90,11 @@ class SignatureStore:
     ):
         if k % bands != 0:
             raise ValueError("k must be divisible by bands")
-        if urlparse(path).scheme:
-            # os.walk lists nothing under s3a://, hdfs://, ...: the row
-            # count reads 0, so every increment takes the full-store pass
-            warnings.warn(
-                f"SignatureStore {path}: a path with a URI scheme cannot "
-                "be listed locally, so every increment takes the "
-                "full-store pass",
-                stacklevel=2,
-            )
+        self.table = VersionedParquetTable(path)
         self.path = path
         self.k = k
         self.bands = bands
         self.shingle = shingle
-
-    # -- store row count (sidecar, no Spark job) ---------------------------
-
-    def _sidecar_path(self) -> str:
-        return os.path.join(self.path, _ROW_COUNT_SIDECAR)
-
-    def _write_sidecar(self, rows: int, files: int) -> None:
-        tmp = self._sidecar_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"rows": int(rows), "files": int(files)}, fh)
-        os.replace(tmp, self._sidecar_path())
-
-    def _physical_rows(self, files: list[str] | None = None) -> int:
-        """Store row count for the scope-vs-full decision, from the sidecar
-        bootstrap and appends maintain (one json read, no Spark job, no
-        footer walk). ``files`` is a listing of the store the caller
-        already took. The sidecar records the file count it describes;
-        when the live count differs (an external writer, an append that
-        landed without bumping the sidecar) or the sidecar is missing,
-        ONE footer walk reseeds it. The count only gates which of two
-        result-identical branches runs, so a stale count costs
-        performance, never correctness."""
-        if files is None:
-            files = parquet_files(self.path)
-        try:
-            with open(self._sidecar_path()) as fh:
-                side = json.load(fh)
-            if int(side["files"]) == len(files):
-                return int(side["rows"])
-        except (OSError, ValueError, KeyError, TypeError):
-            pass
-        rows = footer_rows(files)
-        try:
-            self._write_sidecar(rows, len(files))
-        except OSError:
-            pass  # read-only store: fall back to walking next time
-        return rows
 
     def _banded_signatures(
         self, docs: DataFrame, text_col: str, id_col: str
@@ -156,41 +107,29 @@ class SignatureStore:
         )
 
     def exists(self, spark: SparkSession) -> bool:
-        from pyspark.errors import AnalysisException
-
-        try:
-            spark.read.parquet(self.path).limit(1).collect()
-            return True
-        except AnalysisException:
-            # path-not-found / empty-dir: the store genuinely isn't there.
-            # Anything else (IO, permissions, executor loss) must PROPAGATE:
-            # returning False tells callers to bootstrap(), and bootstrap
-            # overwrites — a transient error must never be converted into
-            # an instruction to destroy the corpus signature history.
-            return False
+        """Whether a version is committed (a log read, no Spark job)."""
+        return self.table.exists()
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return self.table.read(spark)
 
     def bootstrap(
         self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     ) -> None:
         """Seed the store from an initial (already-deduped) corpus. The
-        one full-corpus signature computation ever run."""
+        one full-corpus signature computation ever run. Committed as a
+        full version, so a second bootstrap replaces the store's
+        contents."""
         banded = self._banded_signatures(docs, text_col, id_col)
         # Size the store's FILE COUNT to the corpus' own scan layout
         # (guide §6): without this the banded frame inherits the
         # signature compute's session-parallelism fan-out, so a
         # metadata-scale seed corpus lands as ~cores near-empty files
-        # that EVERY subsequent probe scan, guard aggregation, and
-        # footer walk then pays per increment. A 100 TB corpus has
-        # thousands of input splits and keeps thousands of store files.
+        # that EVERY subsequent probe scan and guard aggregation then
+        # pays per increment. A 100 TB corpus has thousands of input
+        # splits and keeps thousands of store files.
         banded = banded.repartition(max(1, docs.rdd.getNumPartitions()))
-        banded.write.mode("overwrite").parquet(self.path)
-        # seed the row-count sidecar: one footer pass over the files just
-        # written (bootstrap-only; increments maintain it incrementally)
-        files = parquet_files(self.path)
-        self._write_sidecar(footer_rows(files), len(files))
+        self.table.write(banded, "BOOTSTRAP")
 
     def dedup_increment(
         self,
@@ -357,7 +296,7 @@ class SignatureStore:
         )
         store = self.read(spark)
         # Scope the store-side passes to the BATCH'S band keys once the
-        # store is big enough for those passes to matter (sidecar row
+        # store is big enough for those passes to matter (manifest row
         # count — no job) AND the batch is micro-batch-scale (the exact
         # count above — a forced broadcast of a store-scale batch's keys
         # would risk driver memory; such a batch amortizes the full-store
@@ -372,10 +311,8 @@ class SignatureStore:
         # set and replay convergence — are byte-identical in both
         # branches (pinned by
         # tests/test_dedup_similarity.py::test_scoped_store_probe_equivalence).
-        files_before = parquet_files(self.path)
-        store_rows = self._physical_rows(files_before)
         scope_store = (
-            store_rows >= self.scope_store_min_rows
+            self.table.row_count(spark) >= self.scope_store_min_rows
             and n_batch_docs <= self.scope_batch_max_docs
         )
         if scope_store:
@@ -453,12 +390,12 @@ class SignatureStore:
         # materializations of the batch's text rows per micro-batch; now
         # the pair barrier above plus this ledger-sized checkpoint pin the
         # same decisions (guide §5: materialize once, serve every
-        # consumer). persist() would NOT be a safe pin — Spark's
-        # CacheManager recaches-by-path when a write lands on a path a
-        # cached plan reads, so the "cached" pre-append probe would
-        # silently recompute against the grown store; localCheckpoint
-        # truncates lineage to materialized partitions, which no path
-        # refresh can touch.
+        # consumer). The append below writes a fresh data dir that the
+        # probe plan never references, but the decisions must not be
+        # recomputed after it either: the admitted/rejected frames the
+        # caller consumes later would re-probe a store that by then holds
+        # this batch's own signatures. localCheckpoint truncates lineage
+        # to materialized partitions, so no later read can change them.
         ledger_parts = [
             batch_loser.withColumn("_src", F.lit("batch")),
             store_loser.withColumn("_src", F.lit("store")),
@@ -499,10 +436,9 @@ class SignatureStore:
         )
         # 3. append admitted signatures (reusing the cached batch
         # signatures — admitted ids = batch ids minus ledger losers; the
-        # write must complete before the finally-block unpersists the
+        # commit must complete before the finally-block unpersists the
         # cache). No store-reading subtree survives in this plan (the
-        # ledger is checkpointed), so the append can evaluate it while
-        # writing to the store path without a pin.
+        # ledger is checkpointed).
         to_append = new_banded.join(
             ledger.filter(F.col("_src") == "store").select("doc_id"),
             "doc_id",
@@ -517,26 +453,15 @@ class SignatureStore:
         # Size the delta's FILE COUNT to the batch (guide §6): the
         # anti-join otherwise inherits the cache's partitioning and a
         # micro-batch append lands as many near-empty files, growing the
-        # store's file count — and every later probe scan and footer
-        # walk — per increment. Row target ≈ 100 MB files at ~100 B per
-        # banded signature row; the exact batch count is already known.
+        # store's file count — and every later probe scan — per
+        # increment. Row target ≈ 100 MB files at ~100 B per banded
+        # signature row; the exact batch count is already known.
         n_files = max(
             1, -(-n_batch_docs * self.bands // self._STORE_ROWS_PER_FILE)
         )
-        to_append = to_append.repartition(n_files)
-        to_append.write.mode("append").parquet(self.path)
-        # maintain the row-count sidecar: footer-read ONLY the files this
-        # append created (guide §6 — metadata instead of data I/O; the
-        # listing is one os.walk, the footers are O(files just written))
-        before = set(files_before)
-        new_files = [f for f in parquet_files(self.path) if f not in before]
-        try:
-            self._write_sidecar(
-                store_rows + footer_rows(new_files),
-                len(files_before) + len(new_files),
-            )
-        except OSError:
-            pass
+        self.table.append(
+            to_append.repartition(n_files), "INCREMENT", max_chain=MAX_CHAIN
+        )
 
         admitted = new_docs.join(
             loser_ids.withColumnRenamed("doc_id", id_col), id_col, "left_anti"

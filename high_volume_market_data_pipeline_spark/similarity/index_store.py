@@ -44,6 +44,7 @@ from high_volume_market_data_pipeline_spark.similarity.knn import (
     _encode,
 )
 from high_volume_market_data_pipeline_spark.sinks.history import (
+    MAX_CHAIN,
     ConcurrentCommitError,
     VersionedParquetTable,
 )
@@ -222,7 +223,7 @@ def delete_from_index(spark: SparkSession, root: str, ids) -> int:
                 "DELETE_IDS",
                 version=head_v + 1,
                 parent_version=head_v,
-                max_chain=_CODED_MAX_CHAIN,
+                max_chain=MAX_CHAIN,
             )
         except ConcurrentCommitError:
             continue
@@ -370,19 +371,6 @@ def _clear_tombstones_for(spark: SparkSession, root: str, delta) -> None:
 
 _APPEND_RETRIES = 5
 
-# Bound on the coded table's append-chain length before a commit absorbs
-# the chain into one snapshot (log-structured compaction): continuous
-# streaming ingest must not make every later search open an unbounded
-# number of tiny delta dirs. MEASURED default (BENCH_CHAIN_r08, sf1-tier
-# table, coalesced one-file deltas): head-read cost is linear in chain
-# length at ~0.07 s/dir — each delta dir is its own scan stage in the
-# read union — so chain 64 costs ~5 s per read vs ~1.4 s at 16 against a
-# 0.14 s compact snapshot. 16 keeps the read penalty ~10x under the
-# chain-64 default while amortized absorb cost stays ≤ ~8 rewritten rows
-# per appended row at the 2k-batch / 200k-corpus tier; searches outnumber
-# appends in a vector store, so the trade favors readers.
-_CODED_MAX_CHAIN = 16
-
 
 def _paired_versions(root: str) -> tuple[int, int, int]:
     """(newest paired version, coded head, version past both heads): the
@@ -446,7 +434,7 @@ def _append_coded(
     encode pipeline parallel-ish and bounds single-file hotspots."""
     return VersionedParquetTable(os.path.join(root, "coded")).append(
         delta.coalesce(_DELTA_FILES), operation, parameters, version=version,
-        parent_version=parent_version, max_chain=_CODED_MAX_CHAIN,
+        parent_version=parent_version, max_chain=MAX_CHAIN,
         partition_by=partition_by,
     )
 

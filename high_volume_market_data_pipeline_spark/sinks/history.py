@@ -58,17 +58,33 @@ from high_volume_market_data_pipeline_spark.sinks.table_format import (
     CHECKPOINT_RE,
     DATA,
     LAST_CHECKPOINT,
-    LOG,
     MANIFEST_RE,
     checkpoint_name,
     chunks,
     footer_rows,
+    local_log_dir,
     manifest_name,
+    manifests_since,
     new_manifest,
     parquet_files,
     read_last_checkpoint,
     tail_manifests,
 )
+
+
+# Append-chain bound the package's streaming-ingest tables (the ANN
+# coded table, the MinHash signature store) pass as
+# ``append(max_chain=...)``: at this many dirs a commit absorbs the chain
+# into one snapshot, so a stream of micro-batch appends never leaves every
+# later read opening an unbounded number of tiny delta dirs. MEASURED
+# (BENCH_CHAIN_r08, sf1-tier table, coalesced one-file deltas): head-read
+# cost is linear in chain length at ~0.07 s/dir — each delta dir is its
+# own scan stage in the read union — so chain 64 costs ~5 s per read vs
+# ~1.4 s at 16 against a 0.14 s compact snapshot. 16 keeps the read
+# penalty ~10x under chain 64 while amortized absorb cost stays ≤ ~8
+# rewritten rows per appended row at the 2k-batch / 200k-corpus tier;
+# both tables are probed on every batch, so the trade favors readers.
+MAX_CHAIN = 16
 
 
 class VacuumResult(NamedTuple):
@@ -160,10 +176,10 @@ class VersionedParquetTable:
 
     def __init__(self, root: str) -> None:
         self.root = root
-        self.log_dir = os.path.join(root, LOG)
+        self.log_dir = local_log_dir(root)
         # observability for tests/benches: log files opened by the most
-        # recent _manifests() call (the checkpointing contract is that
-        # this stays bounded by a constant as the table ages)
+        # recent log read (the checkpointing contract is that a head read
+        # stays bounded by a constant as the table ages)
         self.last_log_files_opened = 0
 
     # -- log plumbing -------------------------------------------------------
@@ -171,18 +187,18 @@ class VersionedParquetTable:
     def _opened(self, n: int) -> None:
         self.last_log_files_opened += n
 
-    def _chunks(self):
-        """The log as newest-first (floor, manifests) chunks
-        (``table_format.chunks``), counting the files it opens into
-        ``last_log_files_opened``."""
+    def _since(self, min_version: int) -> dict[int, dict]:
+        """``table_format.manifests_since`` over this table's log,
+        counting the files it opens into ``last_log_files_opened``."""
         self.last_log_files_opened = 0
-        yield from chunks(self.log_dir, self._opened)
+        return manifests_since(self.log_dir, min_version, self._opened)
 
     def _manifests(self, limit: int | None = None) -> list[dict]:
         """Committed manifests, ascending; with ``limit`` only the newest
         ``limit``, and the chunk walk stops as soon as it has them."""
+        self.last_log_files_opened = 0
         by_version: dict[int, dict] = {}
-        for _, chunk in self._chunks():
+        for _, chunk in chunks(self.log_dir, self._opened):
             for m in chunk:
                 by_version.setdefault(m["version"], m)
             if limit is not None and len(by_version) >= limit:
@@ -249,18 +265,12 @@ class VersionedParquetTable:
                         pass
         return name
 
-    def _head(self) -> dict | None:
-        for _, chunk in self._chunks():
-            if chunk:
-                return chunk[-1]
-        return None
-
     def latest_version(self) -> int | None:
         """Head version. Opens pointer + latest checkpoint + loose tail
         only — O(checkpoint_interval) bytes regardless of table age (the
         chunk walk stops at the first non-empty chunk)."""
-        head = self._head()
-        return head["version"] if head else None
+        ms = self._since(1 << 62)
+        return max(ms) if ms else None
 
     def versions(self) -> list[int]:
         """Every committed version number, ascending."""
@@ -828,24 +838,29 @@ class VersionedParquetTable:
 
     def _resolve(self, version: int | None, as_of_ts: float | None) -> dict:
         """The manifest of ``version``, of the newest version at or before
-        ``as_of_ts``, or of the head. The head walk stops at the first
-        non-empty chunk, like ``latest_version``; time travel walks the
-        whole chain."""
-        head_only = version is None and as_of_ts is None
-        ms = self._manifests(1 if head_only else None)
-        if not ms:
+        ``as_of_ts``, or of the head. The head and an explicit version
+        stop at the chunk that holds them (``table_format.manifests_since``
+        — a CAS pin on a recent version costs what the head costs); time
+        travel by timestamp walks the whole chain."""
+        if version is not None:
+            min_version = version
+        else:
+            min_version = 0 if as_of_ts is not None else 1 << 62
+        by_version = self._since(min_version)
+        if not by_version:
             raise FileNotFoundError(f"no versions at {self.root}")
         if version is not None:
-            for m in ms:
-                if m["version"] == version:
-                    return m
-            raise ValueError(f"version {version} not found at {self.root}")
+            if version not in by_version:
+                raise ValueError(f"version {version} not found at {self.root}")
+            return by_version[version]
         if as_of_ts is not None:
-            eligible = [m for m in ms if m["timestamp"] <= as_of_ts]
+            eligible = [
+                v for v, m in by_version.items() if m["timestamp"] <= as_of_ts
+            ]
             if not eligible:
                 raise ValueError(f"no version at or before ts={as_of_ts}")
-            return eligible[-1]
-        return ms[-1]
+            return by_version[max(eligible)]
+        return by_version[max(by_version)]
 
     def read(
         self,

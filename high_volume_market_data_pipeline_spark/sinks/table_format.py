@@ -33,6 +33,11 @@ and in ``chunks``' checkpoint walk, so every reader of the log meets it.
 It is a ``RuntimeError``: neither the torn-tail rule nor the checkpoint
 replay fallback (both on ``ValueError``) can swallow it.
 
+The root rule: the log is kept with ``os`` calls, so ``local_log_dir``
+raises ``ValueError`` for a root with a URI scheme. The table and the
+stream source take their log dir from it, and read the log through one
+walk, ``manifests_since``.
+
 Stdlib-only, with pyarrow imported inside the one function that needs it:
 Spark runs the stream source's plan-time methods in a fresh python process
 that inherits the driver's cwd and so cannot import this package.
@@ -48,6 +53,7 @@ import os
 import re
 import time
 from collections.abc import Callable, Iterator
+from urllib.parse import urlparse
 
 FORMAT = 1
 LOG = "_log"
@@ -209,9 +215,41 @@ def chunks(
         yield -1, tail_manifests(log_dir, -1, opened)
 
 
+def manifests_since(
+    log_dir: str, min_version: int, opened: Callable[[int], None] = _uncounted
+) -> dict[int, dict]:
+    """Manifests with version >= ``min_version``, and at least the head
+    (older ones may also be returned — callers filter). A chunk holds
+    versions above its floor only, so the newest-first walk stops at the
+    first chunk whose floor is below ``min_version``: a head or recent
+    version parses O(lag) metadata, not the table's whole history;
+    ``min_version`` 0 walks every chunk."""
+    out: dict[int, dict] = {}
+    for floor, chunk in chunks(log_dir, opened):
+        for m in chunk:
+            out.setdefault(m["version"], m)
+        if floor < min_version and out:
+            break
+    return out
+
+
+def local_log_dir(root: str) -> str:
+    """The manifest log dir of the table at ``root``. The log is read and
+    written with ``os`` calls, so a root with a URI scheme (file://,
+    s3a://, hdfs://) raises ValueError: ``os`` would write the log to a
+    relative dir named after the scheme while Spark writes the data
+    where the URI points, and the two would never meet."""
+    if urlparse(root).scheme:
+        raise ValueError(
+            f"versioned table root {root!r} has a URI scheme; the manifest "
+            "log is kept with local file calls, so pass a local path"
+        )
+    return os.path.join(root, LOG)
+
+
 def parquet_files(d: str) -> list[str]:
     """Every parquet file under ``d``, hive partition dirs included,
-    sorted. A path with a URI scheme (s3a://, hdfs://) lists nothing."""
+    sorted."""
     return sorted(
         os.path.join(dirpath, f)
         for dirpath, _, files in os.walk(d)

@@ -100,29 +100,13 @@ from pyspark.sql.datasource import (
 )
 
 from high_volume_market_data_pipeline_spark.sinks.table_format import (
-    LOG,
-    chunks,
+    local_log_dir,
+    manifests_since,
     parquet_files,
 )
 
 _PARTITIONING = "hive"
 _HIGH_WATER = "high_water.json"
-
-
-def _read_manifests(root: str, min_version: int = 0) -> dict[int, dict]:
-    """Manifests with version >= ``min_version``, and at least the head
-    (older ones may also be returned — callers filter). The log's
-    newest-first chunk walk (``sinks/table_format.chunks``, the same one
-    the table reads) stops at the first chunk whose floor is below
-    ``min_version``, so planning a tail batch parses O(lag) metadata,
-    not the table's whole history."""
-    out: dict[int, dict] = {}
-    for floor, chunk in chunks(os.path.join(root, LOG)):
-        for m in chunk:
-            out.setdefault(m["version"], m)
-        if floor < min_version and out:
-            break
-    return out
 
 
 def _resolve_starting_version(root: str, options: dict) -> int:
@@ -142,7 +126,7 @@ def _resolve_starting_version(root: str, options: dict) -> int:
     if st is None:
         return int(sv) if sv is not None else 0
     ts = float(st)
-    ms = _read_manifests(root)
+    ms = manifests_since(local_log_dir(root), 0)
     eligible = [v for v, m in ms.items() if float(m["timestamp"]) >= ts]
     if not eligible:
         raise ValueError(
@@ -182,6 +166,7 @@ class TableStreamReader(DataSourceStreamReader):
         self.root = options.get("root")
         if not self.root:
             raise ValueError("table_stream requires option 'root'")
+        self.log_dir = local_log_dir(self.root)
         self.starting_version = _resolve_starting_version(self.root, options)
         self.skip_change_commits = str(
             options.get("skip_change_commits", "true")
@@ -248,7 +233,7 @@ class TableStreamReader(DataSourceStreamReader):
                 # partitions() would plan empty batches for versions
                 # that never existed — the real rows up to the stale
                 # high-water silently skipped. Fail loudly instead.
-                ms = _read_manifests(self.root, min_version=1 << 62)
+                ms = manifests_since(self.log_dir, min_version=1 << 62)
                 head = max(ms) if ms else None
                 if head is None or hw > head:
                     raise ValueError(
@@ -336,7 +321,7 @@ class TableStreamReader(DataSourceStreamReader):
         for bounded catch-up."""
         # head discovery needs only the newest chunk — a huge min_version
         # stops the chain walk right after it
-        ms = _read_manifests(self.root, min_version=1 << 62)
+        ms = manifests_since(self.log_dir, min_version=1 << 62)
         # the monotonic floor: never return below a prior return or a
         # revealed engine offset, even on a transient empty log read
         known = max(
@@ -376,7 +361,9 @@ class TableStreamReader(DataSourceStreamReader):
             # oversized commit cannot stall the stream). Metadata-only:
             # lists + stats the candidate versions' new dirs, O(lag)
             # like partitions() itself.
-            ms_full = _read_manifests(self.root, min_version=max(0, base))
+            ms_full = manifests_since(
+                self.log_dir, min_version=max(0, base)
+            )
             f_budget = self.max_files_per_batch or (1 << 62)
             b_budget = self.max_bytes_per_trigger or (1 << 62)
             spent_f, spent_b, end = 0, 0, base
@@ -466,7 +453,7 @@ class TableStreamReader(DataSourceStreamReader):
             # raising the floor to that probe's start would plan the
             # replay empty and drop its versions for good.
             self._floor = max(self._floor, v_start)
-        ms = _read_manifests(self.root, min_version=max(0, lo))
+        ms = manifests_since(self.log_dir, min_version=max(0, lo))
         out: list[TableFilesPartition] = []
         for v in range(lo + 1, v_end + 1):
             meta: tuple = (None, None)
@@ -569,7 +556,7 @@ class TableStreamDataSource(DataSource):
         # validate start options HERE (schema() runs at load() time) so a
         # conflicting pair fails fast instead of at the first trigger
         _resolve_starting_version(root, self.options)
-        ms = _read_manifests(root, min_version=1 << 62)
+        ms = manifests_since(local_log_dir(root), min_version=1 << 62)
         if not ms:
             raise ValueError(f"no committed versions at {root}")
         from pyspark.sql.types import StructType
@@ -759,7 +746,7 @@ def drain(
     (no query start, no ~10 s idle-progress stall)."""
     import time
 
-    ms = _read_manifests(root, min_version=1 << 62)
+    ms = manifests_since(local_log_dir(root), min_version=1 << 62)
     if not ms:
         return 0
     target = max(ms)

@@ -14,10 +14,12 @@ partition instead of double-appending.
 
 At 100 TB the per-batch cost is exactly the batch path's: signature
 compute ∝ batch size, one band-key equi-join against the store shipping
-(key, sig) rows only — historical text is never re-read, and the store
-side prunes by band-key partition. State is the parquet store itself,
-not Spark state-store memory, so corpus-scale state survives restarts
-and is shared with the batch path.
+(key, sig) rows only — historical text is never re-read. State is the
+store's versioned table (``sinks/history.VersionedParquetTable``), not
+Spark state-store memory: each micro-batch's admitted signatures land as
+one INCREMENT commit, so a batch that dies before its commit leaves the
+store at the previous version and its replay starts from there.
+Corpus-scale state survives restarts and is shared with the batch path.
 
 No reference counterpart (beyond-reference extension): composes the
 reference's streaming ingest discipline (extract_crypto_data.py's

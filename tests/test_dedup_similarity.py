@@ -732,70 +732,112 @@ def test_adaptive_recall_meets_committed_floor():
         ), f"{os.path.basename(path)} {key}: {r}"
 
 
-def test_store_row_count_sidecar_no_per_increment_walk(spark, tmp_path):
-    """r13 optimization contract: the scope-vs-full decision reads the
-    store's row count from a sidecar the writers maintain (bootstrap
-    seeds it, every append bumps it by the footer sum of ONLY the files
-    it just wrote). An increment must never re-walk every parquet footer
-    in the store — that was O(total files) driver work per micro-batch,
-    quadratic over a continuous-ingest stream's lifetime. A store whose
-    sidecar is missing (external writer, pre-r13 layout) or records a
-    file count the store no longer has (an append that did not bump it)
-    pays one reseeding walk and is exact again."""
-    import os
-    import unittest.mock as mock
-    import warnings
-
+def _seeded_store(spark, path):
     from high_volume_market_data_pipeline_spark.dedup import SignatureStore
-    from high_volume_market_data_pipeline_spark.dedup import incremental
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    store = SignatureStore(path)
+    store.bootstrap(docs.filter(F.col("doc_id") < 20))
+    batch = docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 30))
+    return store, batch
+
+
+def test_store_row_count_is_manifest_n_rows(spark, tmp_path):
+    """The scope-vs-full decision reads the store's row count from the
+    table manifest's ``n_rows``: exact after bootstrap, an increment and
+    its replay, and read with no Spark job. An increment footer-reads
+    only the files of the delta it commits — never the whole store,
+    which was O(total files) driver work per micro-batch."""
+    import unittest.mock as mock
+
+    from high_volume_market_data_pipeline_spark.session import job_mark
+    from high_volume_market_data_pipeline_spark.sinks import history
     from high_volume_market_data_pipeline_spark.sinks.table_format import (
         footer_rows,
         parquet_files,
     )
 
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    store = SignatureStore(str(tmp_path / "sigs"))
-    store.bootstrap(docs.filter(F.col("doc_id") < 20))
-    assert store._physical_rows() == store.read(spark).count()
+    store, batch = _seeded_store(spark, str(tmp_path / "sigs"))
 
-    walks: list[int] = []
+    def exact() -> bool:
+        j0 = job_mark(spark)
+        n = store.table.row_count(spark)
+        assert job_mark(spark) == j0
+        return n == store.read(spark).count()
+
+    assert exact()
+    read: list[str] = []
 
     def counting(files):
-        walks.append(len(files))
+        read.extend(files)
         return footer_rows(files)
 
-    with open(store._sidecar_path()) as fh:
-        pre_append_sidecar = fh.read()
-    with mock.patch.object(incremental, "footer_rows", counting):
-        store.dedup_increment(
-            docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 30))
+    with mock.patch.object(history, "footer_rows", counting):
+        store.dedup_increment(batch, skip_existing_ids=True)
+    head = store.table._resolve(None, None)
+    delta = [f for d in head["fresh_dirs"] for f in parquet_files(d)]
+    assert read and set(read) <= set(delta), (read, delta)
+    assert exact()
+    store.dedup_increment(batch, skip_existing_ids=True)
+    assert exact()
+
+
+def test_store_exists_runs_no_spark_job(spark, tmp_path):
+    """``exists`` reads the table log: no Spark job before or after the
+    bootstrap (a ``limit(1)`` read of the store cost two per call)."""
+    from high_volume_market_data_pipeline_spark.dedup import SignatureStore
+    from high_volume_market_data_pipeline_spark.session import job_mark
+
+    store = SignatureStore(str(tmp_path / "sigs"))
+    j0 = job_mark(spark)
+    assert not store.exists(spark)
+    assert job_mark(spark) == j0
+    store.bootstrap(
+        spark.createDataFrame(
+            [(1, "a seed document")], "doc_id long, text string"
         )
-    n_store_files = len(parquet_files(store.path))
-    # the only footer reads during an increment cover the just-appended
-    # files, never the whole store
-    assert walks and all(w < n_store_files for w in walks), (
-        walks,
-        n_store_files,
     )
-    # sidecar stays exact after the append
-    assert store._physical_rows() == store.read(spark).count()
+    j0 = job_mark(spark)
+    assert store.exists(spark)
+    assert job_mark(spark) == j0
 
-    # sidecar lost (external writer): one reseeding walk, then exact
-    os.remove(store._sidecar_path())
-    assert store._physical_rows() == store.read(spark).count()
 
-    # append landed, sidecar not bumped: the file count differs, so it
-    # reseeds instead of serving the stale row count
-    with open(store._sidecar_path(), "w") as fh:
-        fh.write(pre_append_sidecar)
-    assert store._physical_rows() == store.read(spark).count()
+def test_store_history_lists_bootstrap_then_increment(spark, tmp_path):
+    """The bootstrap is a full write and each increment one append commit
+    of the store's versioned table."""
+    store, batch = _seeded_store(spark, str(tmp_path / "sigs"))
+    store.dedup_increment(batch)
+    ops = [
+        (r["version"], r["operation"])
+        for r in store.table.history(spark).collect()
+    ]
+    assert ops == [(1, "INCREMENT"), (0, "BOOTSTRAP")]
 
-    # a path os.walk cannot list warns once, when the store is made
-    with pytest.warns(UserWarning, match="URI scheme"):
-        remote = SignatureStore("s3a://bucket/sigs")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert remote._physical_rows() == 0
+
+def test_store_increment_crash_before_commit_leaves_head(spark, tmp_path):
+    """An increment that dies at its commit point (the manifest commit)
+    leaves the store's head and row count as they were, and rerunning it
+    admits exactly the set a clean run admits."""
+    import unittest.mock as mock
+
+    clean, batch = _seeded_store(spark, str(tmp_path / "clean"))
+    want = {r.doc_id for r in clean.dedup_increment(batch)[0].collect()}
+
+    store, batch = _seeded_store(spark, str(tmp_path / "sigs"))
+    head = store.table.latest_version()
+    rows = store.table.row_count(spark)
+
+    def crash(manifest, version):
+        raise OSError("injected crash at the manifest commit")
+
+    with mock.patch.object(store.table, "_commit_manifest", crash):
+        with pytest.raises(OSError, match="injected crash"):
+            store.dedup_increment(batch)
+    assert store.table.latest_version() == head
+    assert store.table.row_count(spark) == rows
+    got = {r.doc_id for r in store.dedup_increment(batch)[0].collect()}
+    assert got == want and got
+    assert store.table.row_count(spark) == clean.table.row_count(spark)
 
 
 def test_store_probe_applies_bucket_guard_and_replay_converges(

@@ -7,6 +7,7 @@ first), README time-travel claims; M5 existence probe.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -640,6 +641,44 @@ def test_head_resolve_stops_at_first_chunk(table):
     assert table._resolve(None, 500.0)["version"] == 500
 
 
+def test_explicit_version_resolve_stops_at_its_chunk(spark, table):
+    """A pinned recent version (the CAS paths pin one on every call)
+    costs what the head costs, not a walk down a 1,000-commit
+    incremental checkpoint chain; an old version is still reachable."""
+    table.write(spark.range(3))
+    for _ in range(999):
+        table.commit_ref("REF")
+    assert table._resolve(None, None)["version"] == 999
+    head_opens = table.last_log_files_opened
+    assert table._resolve(999, None)["version"] == 999
+    assert table.last_log_files_opened == head_opens
+    assert table.row_count(spark, version=995) == 3
+    assert table.last_log_files_opened == head_opens
+    assert table.read(spark, version=0).count() == 3
+
+
+def test_uri_root_fails_loudly(tmp_path, monkeypatch):
+    """The log is kept with ``os`` calls, so a root with a URI scheme
+    raises, naming the root, before anything is written: committing it
+    would land the log in a relative ``file:`` dir under the cwd while
+    Spark wrote the data where the URI points. The table_stream source
+    reads the log the same way and raises too."""
+    from high_volume_market_data_pipeline_spark.dedup import SignatureStore
+    from high_volume_market_data_pipeline_spark.sources.table_datasource import (
+        TableStreamReader,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    root = f"file://{tmp_path}/t"
+    with pytest.raises(ValueError, match=re.escape(root)):
+        VersionedParquetTable(root)
+    with pytest.raises(ValueError, match="s3a://bucket/sigs"):
+        SignatureStore("s3a://bucket/sigs")
+    with pytest.raises(ValueError, match=re.escape(root)):
+        TableStreamReader({"root": root})
+    assert os.listdir(tmp_path) == []
+
+
 def test_vacuum_folds_checkpoint_and_never_resurrects(spark, table):
     """vacuum() rewrites the checkpoint over the KEPT manifests before
     deleting anything: a stale checkpoint must never resurrect a retired
@@ -875,18 +914,18 @@ def test_checkpoint_chain_damage_falls_back_to_replay(spark, table):
     os.unlink(os.path.join(table.log_dir, cps[0]))
     assert table.versions() == list(range(25))
     assert table.latest_version() == 24
-    # the stream-side parser agrees
-    from high_volume_market_data_pipeline_spark.sources.table_datasource import (
-        _read_manifests,
+    # the walk the stream source reads through agrees
+    from high_volume_market_data_pipeline_spark.sinks.table_format import (
+        manifests_since,
     )
 
-    assert sorted(_read_manifests(table.root)) == list(range(25))
+    assert sorted(manifests_since(table.log_dir, 0)) == list(range(25))
 
     # now garble the pointer itself: same degradation
     with open(os.path.join(table.log_dir, "_last_checkpoint"), "w") as fh:
         fh.write("{not json")
     assert table.versions() == list(range(25))
-    assert sorted(_read_manifests(table.root)) == list(range(25))
+    assert sorted(manifests_since(table.log_dir, 0)) == list(range(25))
 
     # a cycle (checkpoint naming itself as parent) must not loop forever
     name = cps[1]
@@ -899,14 +938,14 @@ def test_checkpoint_chain_damage_falls_back_to_replay(spark, table):
     with open(os.path.join(table.log_dir, "_last_checkpoint"), "w") as fh:
         _json.dump({"checkpoint": name}, fh)
     assert table.versions() == list(range(25))
-    assert sorted(_read_manifests(table.root)) == list(range(25))
+    assert sorted(manifests_since(table.log_dir, 0)) == list(range(25))
 
     # a torn TRAILING manifest (crashed commit) is uncommitted to both
     with open(os.path.join(table.log_dir, "00000025.json"), "w") as fh:
         fh.write('{"version": 25, "time')
     assert table.versions() == list(range(25))
-    assert sorted(_read_manifests(table.root)) == list(range(25))
-    assert max(_read_manifests(table.root, min_version=1 << 62)) == 24
+    assert sorted(manifests_since(table.log_dir, 0)) == list(range(25))
+    assert max(manifests_since(table.log_dir, 1 << 62)) == 24
 
 
 def test_vacuum_rejects_non_positive_keep_last(spark, table):

@@ -1,5 +1,5 @@
 """Read latency vs append-chain length — the measurement behind the
-``max_chain`` absorption default (``index_store._CODED_MAX_CHAIN``).
+``max_chain`` absorption bound (``sinks/history.MAX_CHAIN``).
 
 A delta-file append commits O(batch) but adds one more directory every
 reader must open; absorption folds the chain back to one snapshot at a

@@ -37,6 +37,9 @@ from high_volume_market_data_pipeline_spark.dedup.incremental import (  # noqa: 
     SignatureStore,
 )
 from high_volume_market_data_pipeline_spark.session import build_session  # noqa: E402
+from high_volume_market_data_pipeline_spark.sinks.history import (  # noqa: E402
+    VersionedParquetTable,
+)
 
 SF1 = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf1"
@@ -80,7 +83,7 @@ def main() -> None:
             docs.filter(F.col("doc_id") % STRIDE < BASE_DOCS // 10)
         )
         boot = time.perf_counter() - t0
-        base_df = spark.read.parquet(base_dir)
+        base_df = base.read(spark)
         for copies in STORE_COPIES:
             store_dir = os.path.join(scratch, f"store_x{copies}")
             tier = base_df
@@ -90,9 +93,9 @@ def main() -> None:
                         "doc_id", F.col("doc_id") + i * 1_000_000_000
                     )
                 )
-            tier.write.mode("overwrite").parquet(store_dir)
-            store = SignatureStore(store_dir)
-            banded_rows = store._physical_rows()  # reseeds the sidecar
+            table = VersionedParquetTable(store_dir)
+            table.write(tier, "BOOTSTRAP")
+            banded_rows = table.row_count(spark)
             for variant in ("scoped", "full"):
                 s = SignatureStore(store_dir)
                 if variant == "full":
