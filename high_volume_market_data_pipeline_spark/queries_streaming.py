@@ -340,7 +340,8 @@ def stream_static_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_quality_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming data-quality gate, end-state-checked: the events stream
     runs through streaming/quality.monitor_expectations (foreachBatch →
-    check_expectations per micro-batch → parquet ledger append), then the
+    check_expectations per micro-batch → one ledger-table commit per batch
+    id), then the
     ledger is folded over batches into one row per rule — which must equal
     the batch expectation report DuckDB computes over the full table.
 
@@ -359,6 +360,9 @@ def stream_quality_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id_positive": F.col("user_id") > 0,
         "value_nonnegative": F.col("value") >= 0,
     }
+    from high_volume_market_data_pipeline_spark.sinks.history import (
+        VersionedParquetTable,
+    )
     from high_volume_market_data_pipeline_spark.streaming.quality import (
         monitor_expectations,
     )
@@ -373,7 +377,7 @@ def stream_quality_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=os.path.join(scratch, "ckpt"),
     )
     q.awaitTermination()
-    ledger = spark.read.parquet(ledger_path)
+    ledger = VersionedParquetTable(ledger_path).read(spark)
     return (
         ledger.groupBy("rule")
         .agg(
@@ -584,8 +588,8 @@ def stream_incremental_dedup_admission(
     — batch 2 probing a store GROWN by batch 1's admissions — and the
     driver hash pins the rolled-up ledger end to end through the
     streaming bridge. The replay/restart contract (same checkpoint →
-    only unseen files; ledger partitions overwritten idempotently) is
-    pinned in tests/test_streaming.py."""
+    only unseen files; a replayed batch's ledger commit skipped by its
+    batch id) is pinned in tests/test_streaming.py."""
     import shutil
     import tempfile
 

@@ -73,7 +73,7 @@ from high_volume_market_data_pipeline_spark.sinks.table_format import (
 
 
 # Append-chain bound the package's streaming-ingest tables (the ANN
-# coded table, the MinHash signature store) pass as
+# coded table, the MinHash signature store, the streaming ledgers) pass as
 # ``append(max_chain=...)``: at this many dirs a commit absorbs the chain
 # into one snapshot, so a stream of micro-batch appends never leaves every
 # later read opening an unbounded number of tiny delta dirs. MEASURED
@@ -390,8 +390,8 @@ class VersionedParquetTable:
             )
         common = {f.name: f.dataType for f in pschema}
         # The hive partition column is exempt from the type check: its
-        # on-disk form is only a dir-name string and read() casts it back
-        # to the recorded type, so a delta that types it int where the
+        # on-disk form is only a dir-name string and read() types it from
+        # the recorded schema, so a delta that types it int where the
         # table records long (``F.lit(3)``) reads back exactly.
         part_col = partition_by or parent["partition_by"]
         for f in df.schema:
@@ -873,56 +873,34 @@ class VersionedParquetTable:
         dirs are read ONE SCAN EACH and unioned by name: a single
         multi-path read cannot mix hive-partitioned snapshot layouts
         (CONFLICTING_DIRECTORY_STRUCTURES without a common basePath), and
-        per-dir scans keep partition pruning and column order independent
-        per snapshot. Chain length — and so the union width — is bounded
+        per-dir scans keep partition pruning independent per snapshot.
+        Chain length — and so the union width — is bounded
         by ``append(max_chain=...)``."""
         m = self._resolve(version, as_of_ts)
-        return self._cast_partition_col(
-            self._read_dirs(spark, m["data_dirs"], m["version"]), m
-        )
+        return self._read_dirs(spark, m["data_dirs"], m)
 
     @staticmethod
-    def _cast_partition_col(out: DataFrame, m: dict) -> DataFrame:
-        """The hive PARTITION column's on-disk form is only a dir-name
-        string, so scan inference can disagree with the table's logical
-        schema (long written as ``p=3`` reads back int). Cast it back to
-        the manifest-RECORDED type so batch reads, the table_stream
-        source, and the writer all agree on types. Partition pruning
-        survives the cast: Catalyst's UnwrapCastInBinaryComparison
-        rewrites ``cast(p as bigint) = 3L`` back to ``p = 3``."""
-        part = m["partition_by"]
-        if part and part in out.columns:
-            from pyspark.sql.types import StructType
+    def _read_dirs(spark: SparkSession, dirs: list[str], m: dict) -> DataFrame:
+        """One scan per dir of (a subset of) manifest ``m``'s data dirs,
+        unioned by name (see ``read``). Every scan is given the schema
+        ``m`` records (Delta's metaData action), so building the read
+        runs no schema-inference job, a dir without parquet files (an
+        all-empty write) still reads, and Spark types the hive partition
+        column as recorded rather than from its dir-name strings. A
+        partition column comes last, after any merge-schema additions.
+        An empty subset (``changes`` on shared dirs) still needs the
+        schema for the diff join: it reads one of ``m``'s dirs under
+        limit(0), which Catalyst collapses to an empty relation."""
+        from pyspark.sql.types import StructType
 
-            st = StructType.fromJson(m["schema"])
-            if (
-                part in st.fieldNames()
-                and out.schema[part].dataType != st[part].dataType
-            ):
-                out = out.withColumn(
-                    part, F.col(part).cast(st[part].dataType)
-                )
-        return out
-
-    def _read_dirs(
-        self, spark: SparkSession, dirs: list[str], fallback_version: int
-    ) -> DataFrame:
-        """One scan per dir of (a subset of) a version's data dirs, unioned
-        by name (see ``read``). An empty subset (``changes`` on shared
-        dirs) still needs the version's schema for the diff join, so it
-        reads the version under limit(0) — Catalyst collapses that to an
-        empty relation."""
+        reader = spark.read.schema(StructType.fromJson(m["schema"]))
         if not dirs:
-            return self.read(spark, version=fallback_version).limit(0)
-        out = spark.read.parquet(dirs[0])
+            return reader.parquet(m["data_dirs"][0]).limit(0)
+        out = reader.parquet(dirs[0])
         for d in dirs[1:]:
-            # allowMissingColumns: merge-schema appends (see append()) may
-            # add or omit columns per delta dir; absent columns read null.
-            # Writes validate name/type compatibility, so this can never
-            # mask a typo — only honor a declared evolution.
-            out = out.unionByName(
-                spark.read.parquet(d), allowMissingColumns=True
-            )
+            # every scan carries the same recorded schema (merge-schema
+            # columns a dir lacks read null), so the union is by name
+            out = out.unionByName(reader.parquet(d))
         return out
 
     def _touched_partitions(self, pre_m: dict, post_m: dict) -> list:
@@ -1019,19 +997,11 @@ class VersionedParquetTable:
         post_m = self._resolve(v_to, None)
         pre_dirs, post_dirs = pre_m["data_dirs"], post_m["data_dirs"]
         shared = set(pre_dirs) & set(post_dirs)
-        # the same recorded-type partition-column normalization read()
-        # applies — a mixed raw/normalized pair would look like a retype
-        pre = self._cast_partition_col(
-            self._read_dirs(
-                spark, [d for d in pre_dirs if d not in shared], v_from
-            ),
-            pre_m,
+        pre = self._read_dirs(
+            spark, [d for d in pre_dirs if d not in shared], pre_m
         )
-        post = self._cast_partition_col(
-            self._read_dirs(
-                spark, [d for d in post_dirs if d not in shared], v_to
-            ),
-            post_m,
+        post = self._read_dirs(
+            spark, [d for d in post_dirs if d not in shared], post_m
         )
         part_by = pre_m["partition_by"]
         if shared and part_by and part_by == post_m["partition_by"]:

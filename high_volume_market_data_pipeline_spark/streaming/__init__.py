@@ -31,7 +31,6 @@ from high_volume_market_data_pipeline_spark.streaming.sketch_state import (
     stream_hll_state,
 )
 from high_volume_market_data_pipeline_spark.streaming.incremental import (
-    compact_ledger,
     read_ledger,
     stream_incremental_dedup,
 )
@@ -42,7 +41,6 @@ from high_volume_market_data_pipeline_spark.streaming.custom_state import (
 )
 
 __all__ = [
-    "compact_ledger",
     "interval_join_streams",
     "monitor_expectations",
     "read_parquet_stream",

@@ -4,15 +4,44 @@ extract_crypto_data.py:226-241, bronze_to_silver_crypto.py:96-108).
 
 foreachBatch hands each micro-batch to a batch function, so the batch
 sink library (sinks/) is reused verbatim — one upsert implementation for
-both batch and streaming paths.
+both batch and streaming paths. ``foreach_batch_apply`` is the package's
+one foreachBatch starter; ``append_batch`` is its one exactly-once
+ledger commit.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from high_volume_market_data_pipeline_spark.sinks import history
+
+
+def append_batch(
+    table: history.VersionedParquetTable,
+    df: DataFrame,
+    batch_id: int,
+    operation: str,
+) -> int | None:
+    """Commit micro-batch ``batch_id``'s rows to ``table`` exactly once;
+    returns the committed version, or None for a replay.
+
+    The batch id rides in the commit's ``parameters`` (Delta's
+    ``txnVersion``): a head already at or past ``batch_id`` means this
+    batch committed before the stream failed to record it, so Spark's
+    replay commits nothing. Appends pass ``history.MAX_CHAIN``, so the
+    fold bounds how many dirs a read of the ledger opens."""
+    parameters = {"batch_id": batch_id}
+    if not table.exists():
+        return table.write(df, operation, parameters)
+    head = table._resolve(None, None)
+    if head["parameters"].get("batch_id", -1) >= batch_id:
+        return None
+    return table.append(
+        df, operation, parameters, max_chain=history.MAX_CHAIN
+    )
 
 
 def foreach_batch_upsert(
@@ -37,23 +66,23 @@ def foreach_batch_upsert(
             partition_by=partition_by,
         )
 
-    return (
-        sdf.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_apply(sdf, handle, checkpoint)
 
 
 def foreach_batch_apply(
     sdf: DataFrame,
     fn: Callable[[DataFrame, int], None],
     checkpoint: str,
+    trigger: Mapping[str, object] | None = None,
 ) -> StreamingQuery:
-    """General foreachBatch escape hatch (custom batch-side logic)."""
+    """Start ``sdf`` with ``fn`` as its foreachBatch function; returns the
+    started query. ``trigger`` passes through to
+    ``writeStream.trigger(**trigger)``: the default
+    ``{"availableNow": True}`` drains what is there and stops; pass
+    ``{"processingTime": "30 seconds"}`` to run continuously."""
     return (
         sdf.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+        .trigger(**(trigger or {"availableNow": True}))
         .start()
     )

@@ -41,6 +41,9 @@ from high_volume_market_data_pipeline_spark.sinks.history import (
     ConcurrentCommitError,
     VersionedParquetTable,
 )
+from high_volume_market_data_pipeline_spark.streaming.sink import (
+    foreach_batch_apply,
+)
 
 
 def merge_commit_sketches(
@@ -114,7 +117,6 @@ def stream_hll_state(
     to keep every version (audit mode — the history IS the per-batch
     ledger then)."""
     table = VersionedParquetTable(table_root)
-    trigger_kwargs = dict(trigger) if trigger else {"availableNow": True}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_sketches = hll_rollup(batch_df, group_cols, item_col, lgk=lgk)
@@ -127,9 +129,4 @@ def stream_hll_state(
         if vacuum_keep is not None:
             table.vacuum(keep_last=vacuum_keep)
 
-    return (
-        sdf.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger_kwargs)
-        .start()
-    )
+    return foreach_batch_apply(sdf, handle, checkpoint, trigger)

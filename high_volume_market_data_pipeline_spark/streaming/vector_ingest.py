@@ -14,15 +14,16 @@ and every append is an atomic versioned commit (a searcher pinned to
 version N never sees a half-written batch).
 
 Replay safety: ``skip_existing_ids`` makes a replayed batch a no-op at
-the id level, so at-least-once delivery converges — the ledger-style
-batch_id partitioning is unnecessary here because the id set IS the
-dedup key. Concurrent appenders are safe: ``append_to_index``
-CAS-commits at an explicit version derived from the coded head, so an
-interleaved writer loses the commit race LOUDLY and the retry
-re-derives its union from the winner's head (no lost update — pinned
-by the interleaved-append test in tests/test_index_store.py). Only a
-concurrent RE-TRAIN (save_index) requires quiescing this stream
-first — the FAISS offline-retrain contract.
+the id level, so at-least-once delivery converges — the ledgers'
+once-per-batch-id commit (``streaming/sink.append_batch``) is
+unnecessary here because the id set IS the dedup key. Concurrent
+appenders are safe: ``append_to_index`` CAS-commits at an explicit
+version derived from the coded head, so an interleaved writer loses the
+commit race LOUDLY and the retry re-derives its union from the winner's
+head (no lost update — pinned by the interleaved-append test in
+tests/test_index_store.py). Only a concurrent RE-TRAIN (save_index)
+requires quiescing this stream first — the FAISS offline-retrain
+contract.
 
 No reference counterpart (beyond-reference ANN surface); composes the
 reference's checkpointed incremental-pull discipline
@@ -37,6 +38,9 @@ from pyspark.sql.streaming import StreamingQuery
 from high_volume_market_data_pipeline_spark.similarity.index_store import (
     append_to_index,
     load_index,
+)
+from high_volume_market_data_pipeline_spark.streaming.sink import (
+    foreach_batch_apply,
 )
 
 
@@ -76,10 +80,4 @@ def stream_append_index(
                 skip_existing_ids=True,
             )
 
-    trigger_kwargs = dict(trigger) if trigger else {"availableNow": True}
-    return (
-        sdf.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger_kwargs)
-        .start()
-    )
+    return foreach_batch_apply(sdf, handle, checkpoint, trigger)

@@ -13,6 +13,9 @@ from pyspark.sql.types import (
 )
 
 from high_volume_market_data_pipeline_spark.session import scoped_conf
+from high_volume_market_data_pipeline_spark.sinks.history import (
+    VersionedParquetTable,
+)
 from high_volume_market_data_pipeline_spark.streaming import (
     read_parquet_stream,
     run_to_memory_sink,
@@ -444,7 +447,7 @@ def test_monitor_expectations_per_batch_ledger(spark, tmp_path):
     )
     q.awaitTermination()
 
-    ledger = spark.read.parquet(str(tmp_path / "ledger"))
+    ledger = VersionedParquetTable(str(tmp_path / "ledger")).read(spark)
     rows = ledger.orderBy("batch_id").collect()
     assert len(rows) == 2  # one rule x two micro-batches
     assert sum(r["n_violations"] for r in rows) == 1
@@ -454,6 +457,59 @@ def test_monitor_expectations_per_batch_ledger(spark, tmp_path):
     want = batch_report.collect()[0]
     assert want["n_violations"] == 1
     assert sum(r["n_rows"] for r in rows) == want["n_rows"]
+
+
+def test_monitor_expectations_replayed_batch_commits_once(spark, tmp_path):
+    """A batch whose violation hook fails the stream has already
+    committed its report; the restart on the same checkpoint replays the
+    batch, and the ledger must still hold one row per (batch_id, rule) —
+    the head's recorded batch id turns the replay's commit into a
+    no-op."""
+    from collections import Counter
+
+    from pyspark.errors import StreamingQueryException
+
+    from high_volume_market_data_pipeline_spark.streaming import (
+        monitor_expectations,
+    )
+
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, [(1, -5, _ts(spark, "2024-01-01 00:00:00"))])
+    _write_batch(spark, src, [(2, 3, _ts(spark, "2024-01-01 01:00:00"))])
+    rules = {
+        "seq_positive": F.col("seq") > 0,
+        "k_set": F.col("k").isNotNull(),
+    }
+
+    def run(on_violation=None):
+        sdf = (
+            spark.readStream.schema(SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        return monitor_expectations(
+            sdf, rules,
+            log_path=str(tmp_path / "ledger"),
+            checkpoint=str(tmp_path / "ckpt"),
+            on_violation=on_violation,
+        )
+
+    def fail_batch_0(failing, batch_id):
+        if batch_id == 0:
+            raise RuntimeError("quarantine batch 0")
+
+    q = run(fail_batch_0)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    run().awaitTermination()
+
+    rows = VersionedParquetTable(str(tmp_path / "ledger")).read(spark).collect()
+    assert Counter((r["batch_id"], r["rule"]) for r in rows) == {
+        (0, "seq_positive"): 1,
+        (0, "k_set"): 1,
+        (1, "seq_positive"): 1,
+        (1, "k_set"): 1,
+    }
 
 
 def test_stream_quality_ledger_flags_seeded_violations(spark, tmp_path):
@@ -962,6 +1018,7 @@ def test_stream_incremental_dedup_restart_and_replay(spark, tmp_path):
         SignatureStore,
     )
     from high_volume_market_data_pipeline_spark.streaming.incremental import (
+        read_ledger,
         stream_incremental_dedup,
     )
 
@@ -1001,11 +1058,11 @@ def test_stream_incremental_dedup_restart_and_replay(spark, tmp_path):
     def decisions():
         adm = {
             r["doc_id"]
-            for r in spark.read.parquet(f"{ledger}/admitted").collect()
+            for r in read_ledger(spark, ledger, "admitted").collect()
         }
         rej = {
             (r["doc_id"], r["matched_id"], r["reason"])
-            for r in spark.read.parquet(f"{ledger}/rejected").collect()
+            for r in read_ledger(spark, ledger, "rejected").collect()
         }
         return adm, rej
 
@@ -1040,10 +1097,10 @@ def test_stream_incremental_dedup_restart_and_replay(spark, tmp_path):
 
 def test_stream_incremental_dedup_empty_leaf_readable(spark, tmp_path):
     """A run where NO document is rejected must still leave a readable
-    rejected leaf: every micro-batch writes zero rows there, so the
-    partitioned dir has no schema-bearing parquet files and a plain
-    spark.read.parquet fails with 'unable to infer schema'. The schema
-    marker written at first batch + read_ledger cover exactly that."""
+    rejected leaf: every micro-batch commits zero rows there, and
+    read_ledger takes the schema from the leaf table's manifest rather
+    than from data files. A bare spark.read.parquet of the leaf root
+    finds no data files (the table keeps them under ``_data``)."""
     from pyspark.errors import AnalysisException
 
     from high_volume_market_data_pipeline_spark.dedup.incremental import (
@@ -1079,166 +1136,87 @@ def test_stream_incremental_dedup_empty_leaf_readable(spark, tmp_path):
     assert "matched_id" in rej.columns and "batch_id" in rej.columns
     adm = read_ledger(spark, str(tmp_path / "ledger"), "admitted")
     assert {r["doc_id"] for r in adm.collect()} == {1, 2}
-    # the failure mode the marker exists for
-    import pytest as _pytest
-
-    with _pytest.raises(AnalysisException):
+    # the leaf is a table: only read_ledger reads it
+    with pytest.raises(AnalysisException):
         spark.read.parquet(str(tmp_path / "ledger" / "rejected")).collect()
 
 
-def test_compact_ledger_folds_old_partitions(spark, tmp_path):
-    """The admission ledger's absorption bound: partitions older than the
-    keep-horizon fold to ONE file each, in place — content identical,
-    batch_id values unchanged (so a replayed batch still overwrites
-    exactly its own partition after compaction)."""
-    import os
-
-    from high_volume_market_data_pipeline_spark.streaming.incremental import (
-        _ensure_schema_marker,
-        compact_ledger,
-        read_ledger,
+def test_append_batch_commits_each_batch_id_once(spark, tmp_path):
+    """The ledgers' exactly-once rule: re-committing the head's batch id,
+    or a lower one, is a replay and leaves the table at its version and
+    rows; a higher batch id appends."""
+    from high_volume_market_data_pipeline_spark.streaming.sink import (
+        append_batch,
     )
 
-    root = str(tmp_path / "ledger")
-    for b in range(5):
-        df = spark.createDataFrame(
-            [(b * 10 + i, f"d{b}_{i}", b) for i in range(8)],
-            "doc_id long, text string, batch_id long",
-        ).repartition(4)  # the naive many-files-per-batch shape
-        _ensure_schema_marker(df, f"{root}/admitted")
-        df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(f"{root}/admitted")
+    table = VersionedParquetTable(str(tmp_path / "ledger"))
 
-    def files(b):
-        d = f"{root}/admitted/batch_id={b}"
-        return [f for f in os.listdir(d) if f.endswith(".parquet")]
+    def batch(b):
+        return spark.createDataFrame(
+            [(b * 10 + i, b) for i in range(3)], "doc_id long, batch_id long"
+        )
 
-    before = sorted(
-        (r["doc_id"], r["text"], r["batch_id"])
-        for r in read_ledger(spark, root, "admitted").collect()
-    )
-    assert all(len(files(b)) > 1 for b in range(5))
-
-    stats = compact_ledger(spark, root, "admitted", keep_last_batches=2)
-    assert stats["compacted_partitions"] == 3  # batches 0,1,2
-    assert stats["files_after"] == 3  # one file each
-    for b in range(3):
-        assert len(files(b)) == 1
-    for b in (3, 4):  # horizon partitions untouched
-        assert len(files(b)) > 1
-    after = sorted(
-        (r["doc_id"], r["text"], r["batch_id"])
-        for r in read_ledger(spark, root, "admitted").collect()
-    )
-    assert after == before
-
-    # idempotent: nothing left above 1 file below the horizon
-    again = compact_ledger(spark, root, "admitted", keep_last_batches=2)
-    assert again["compacted_partitions"] == 0
-
-    # a replay of a COMPACTED batch still overwrites only its partition
-    replay = spark.createDataFrame(
-        [(10 + i, f"d1_{i}", 1) for i in range(8)],
-        "doc_id long, text string, batch_id long",
-    )
-    replay.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("batch_id").parquet(f"{root}/admitted")
-    assert sorted(
-        (r["doc_id"], r["text"], r["batch_id"])
-        for r in read_ledger(spark, root, "admitted").collect()
-    ) == before
+    assert append_batch(table, batch(0), 0, "LEDGER") == 0
+    assert append_batch(table, batch(1), 1, "LEDGER") == 1
+    for b in (1, 0):
+        assert append_batch(table, batch(b), b, "LEDGER") is None
+        assert table.latest_version() == 1
+    assert append_batch(table, batch(2), 2, "LEDGER") == 2
+    got = sorted(tuple(r) for r in table.read(spark).collect())
+    assert got == [(b * 10 + i, b) for b in range(3) for i in range(3)]
 
 
-def test_stream_auto_compacts_ledger_partitions(spark, tmp_path):
-    """The foreachBatch sink auto-folds ledger partitions older than the
-    compaction horizon every ``compact_every_batches`` micro-batches —
-    a long-lived stream needs no external maintenance schedule — and a
-    full replay against the folded ledger still converges (a replayed
-    batch dynamically overwrites its whole batch_id partition regardless
-    of file layout)."""
-    import os
-
+def test_stream_ledger_chain_stays_bounded(spark, tmp_path, monkeypatch):
+    """A long-lived admission stream commits one ledger version per
+    micro-batch, and the MAX_CHAIN fold bounds the dirs the head
+    references: with the bound at 2, six batches leave a head of at
+    most 2 dirs that still records its batch id and reads back every
+    batch's rows."""
     from high_volume_market_data_pipeline_spark.dedup.incremental import (
         SignatureStore,
     )
+    from high_volume_market_data_pipeline_spark.sinks import history
     from high_volume_market_data_pipeline_spark.streaming.incremental import (
+        read_ledger,
         stream_incremental_dedup,
     )
 
+    monkeypatch.setattr(history, "MAX_CHAIN", 2)
     store = SignatureStore(str(tmp_path / "sigs"))
-    store.bootstrap(
-        spark.createDataFrame([], "doc_id long, text string")
-    )
+    store.bootstrap(spark.createDataFrame([], "doc_id long, text string"))
     arrivals = str(tmp_path / "arrivals")
     ledger = str(tmp_path / "ledger")
-
-    def doc(i):
+    for b in range(6):
         # token sets fully DISJOINT across docs: true pairwise Jaccard 0,
         # so minhash-estimate noise can never reject one (this test is
-        # about ledger compaction, not admission decisions)
-        return " ".join(f"w{i}x{j}" for j in range(10))
+        # about the ledger chain, not admission decisions)
+        rows = [
+            (d, " ".join(f"w{d}x{j}" for j in range(10)))
+            for d in range(b * 8, b * 8 + 8)
+        ]
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(arrivals)
+    sdf = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(arrivals)
+    )
+    stream_incremental_dedup(
+        sdf, store, out_root=ledger, checkpoint=str(tmp_path / "ckpt"),
+        threshold=0.95,
+    ).awaitTermination()
 
-    next_id = [0]
-
-    def land(n):
-        rows = [(next_id[0] + k, doc(next_id[0] + k)) for k in range(n)]
-        next_id[0] += n
-        spark.createDataFrame(
-            rows, "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(arrivals)
-
-    for _ in range(6):
-        land(8)
-
-    def run(checkpoint):
-        sdf = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(arrivals)
-        )
-        q = stream_incremental_dedup(
-            sdf,
-            store,
-            out_root=ledger,
-            checkpoint=checkpoint,
-            threshold=0.95,
-            compact_every_batches=2,
-        )
-        q.awaitTermination()
-
-    run(str(tmp_path / "ckpt"))
-
-    def files_per_partition(leaf):
-        root = f"{ledger}/{leaf}"
-        out = {}
-        for d in os.listdir(root):
-            if d.startswith("batch_id="):
-                out[int(d.split("=")[1])] = sum(
-                    1
-                    for f in os.listdir(os.path.join(root, d))
-                    if f.endswith(".parquet")
-                )
-        return out
-
-    fpp = files_per_partition("admitted")
-    assert sorted(fpp) == [0, 1, 2, 3, 4, 5]
-    # the last fold ran at batch 4 with keep_last=2: batches ≤ 2 are
-    # single-file
-    assert all(fpp[b] == 1 for b in (0, 1, 2)), fpp
-    admitted = {
-        r["doc_id"] for r in spark.read.parquet(f"{ledger}/admitted").collect()
+    table = VersionedParquetTable(f"{ledger}/admitted")
+    head = table._resolve(None, None)
+    assert head["version"] == 5
+    assert len(head["data_dirs"]) <= 2
+    assert head["parameters"]["batch_id"] == 5
+    got = {
+        (r["doc_id"], r["batch_id"])
+        for r in read_ledger(spark, ledger, "admitted").collect()
     }
-    assert admitted == set(range(48))
-
-    # full replay with a fresh checkpoint over the FOLDED ledger:
-    # decisions converge, partition layout irrelevant to exactness
-    run(str(tmp_path / "ckpt2"))
-    admitted2 = {
-        r["doc_id"] for r in spark.read.parquet(f"{ledger}/admitted").collect()
-    }
-    assert admitted2 == admitted
+    assert got == {(d, d // 8) for d in range(48)}
 
 
 def test_events_stream_stages_under_tempdir(spark, tmp_path, monkeypatch):

@@ -60,6 +60,17 @@ def main() -> None:
                 ).alias("pq_codes"),
             )
 
+        def read_count_sec(table: VersionedParquetTable) -> tuple[float, int]:
+            secs = []
+            for _ in range(args.runs):
+                t0 = time.perf_counter()
+                n = table.read(spark).count()
+                secs.append(time.perf_counter() - t0)
+            return round(statistics.median(secs), 3), n
+
+        def head_dirs(table: VersionedParquetTable) -> int:
+            return len(table._resolve(None, None)["data_dirs"])
+
         # Two curves: deltas written at the session's default parallelism
         # (32 files per 500-row delta — what a naive caller gets) and
         # coalesced to one file (what index_store now does for
@@ -83,70 +94,50 @@ def main() -> None:
                         max_chain=None,  # never absorb: measuring the chain
                     )
                     chain += 1
-                secs = []
-                for _ in range(args.runs):
-                    t0 = time.perf_counter()
-                    n = table.read(spark).count()
-                    secs.append(time.perf_counter() - t0)
+                sec, n = read_count_sec(table)
                 rows[str(target)] = {
-                    "read_count_sec": round(statistics.median(secs), 3),
+                    "read_count_sec": sec,
                     "n_rows": n,
-                    "n_dirs": len(table._resolve(None, None)["data_dirs"]),
+                    "n_dirs": head_dirs(table),
                 }
                 print(f"# {tag} chain={target}: {rows[str(target)]}",
                       file=sys.stderr)
             curves[tag] = rows
 
-        # Ledger curve: the admission ledger adds one batch_id partition
-        # per micro-batch (capped at _LEDGER_MAX_FILES_PER_BATCH files by
-        # the wired default) — measure read cost vs batch count, and what
-        # compact_ledger (1 file/partition below the horizon) buys back.
+        # Ledger curve: the streaming ledgers commit each micro-batch
+        # (≤ _LEDGER_MAX_FILES_PER_BATCH files) through append_batch,
+        # whose MAX_CHAIN fold bounds the dirs a read opens — read cost
+        # and the head's dir count vs batches committed.
         from high_volume_market_data_pipeline_spark.streaming.incremental import (
             _LEDGER_MAX_FILES_PER_BATCH,
-            compact_ledger,
-            read_ledger,
+        )
+        from high_volume_market_data_pipeline_spark.streaming.sink import (
+            append_batch,
         )
 
-        ledger_root = os.path.join(scratch, "ledger")
+        ledger = VersionedParquetTable(os.path.join(scratch, "ledger"))
         ledger_rows: dict[str, dict] = {}
-
-        def read_ledger_sec() -> tuple[float, int]:
-            secs = []
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                n = read_ledger(spark, ledger_root, "admitted").count()
-                secs.append(time.perf_counter() - t0)
-            return round(statistics.median(secs), 3), n
-
         built = 0
-        targets = [8, 32, 128, 256]
-        for target in targets:
+        for target in (8, 32, 128, 256):
             while built < target:
-                (
-                    fake_coded(200, built * 200)
-                    .withColumn("batch_id", F.lit(built).cast("long"))
-                    .coalesce(_LEDGER_MAX_FILES_PER_BATCH)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(f"{ledger_root}/admitted")
+                batch = fake_coded(200, built * 200).withColumn(
+                    "batch_id", F.lit(built).cast("long")
+                )
+                append_batch(
+                    ledger,
+                    batch.coalesce(_LEDGER_MAX_FILES_PER_BATCH),
+                    built,
+                    "ADMITTED",
                 )
                 built += 1
-            sec, n = read_ledger_sec()
-            ledger_rows[str(target)] = {"capped_read_sec": sec, "n_rows": n}
+            sec, n = read_count_sec(ledger)
+            ledger_rows[str(target)] = {
+                "read_count_sec": sec,
+                "n_rows": n,
+                "n_dirs": head_dirs(ledger),
+            }
             print(f"# ledger batches={target}: {ledger_rows[str(target)]}",
                   file=sys.stderr)
-        # one maintenance pass at the deepest point: what absorption buys
-        stats = compact_ledger(
-            spark, ledger_root, "admitted", keep_last_batches=8
-        )
-        sec, n = read_ledger_sec()
-        ledger_rows[str(targets[-1])].update(
-            compacted_read_sec=sec,
-            files_folded=stats["files_before"] - stats["files_after"],
-        )
-        print(f"# ledger compacted: {ledger_rows[str(targets[-1])]}",
-              file=sys.stderr)
         curves["ledger"] = ledger_rows
 
         # Checkpoint-chain curve (no Spark jobs — pure log layer): commit
