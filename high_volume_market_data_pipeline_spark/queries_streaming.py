@@ -589,7 +589,7 @@ def stream_incremental_dedup_admission(
     driver hash pins the rolled-up ledger end to end through the
     streaming bridge. The replay/restart contract (same checkpoint →
     only unseen files; a replayed batch's ledger commit skipped by its
-    batch id) is pinned in tests/test_streaming.py."""
+    query id and batch id) is pinned in tests/test_streaming.py."""
     import shutil
     import tempfile
 

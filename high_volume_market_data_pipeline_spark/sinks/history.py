@@ -84,7 +84,35 @@ from high_volume_market_data_pipeline_spark.sinks.table_format import (
 # penalty ~10x under chain 64 while amortized absorb cost stays ≤ ~8
 # rewritten rows per appended row at the 2k-batch / 200k-corpus tier;
 # both tables are probed on every batch, so the trade favors readers.
+# The ledgers, which no batch reads, fold ``tiered`` (see ``append``).
 MAX_CHAIN = 16
+
+
+def _with_txn(base: dict | None, txn: tuple[str, int] | None) -> dict | None:
+    """The transactions manifest ``base`` records (none for a new table),
+    plus ``txn``; None when ``txn`` is a replay — its writer already
+    committed that batch id or a later one."""
+    txns = dict((base or {}).get("txns") or {})
+    if txn is not None:
+        writer, batch_id = txn
+        if txns.get(writer, -1) >= batch_id:
+            return None
+        txns[writer] = batch_id
+    return txns
+
+
+def _kept_prefix(dirs: list[str], max_chain: int) -> int:
+    """How many leading ``dirs`` a tiered fold keeps (``append``): the
+    longest run of dirs each holding at least as many parquet bytes as
+    all the dirs after it, capped at ``max_chain // 2 - 1`` so the fold
+    leaves room for ``max_chain // 2`` appends before the next one."""
+    sizes = [
+        sum(os.path.getsize(f) for f in parquet_files(d)) for d in dirs
+    ]
+    keep = 0
+    while keep < max_chain // 2 - 1 and sizes[keep] >= sum(sizes[keep + 1:]):
+        keep += 1
+    return keep
 
 
 class VacuumResult(NamedTuple):
@@ -265,12 +293,18 @@ class VersionedParquetTable:
                         pass
         return name
 
-    def latest_version(self) -> int | None:
-        """Head version. Opens pointer + latest checkpoint + loose tail
-        only — O(checkpoint_interval) bytes regardless of table age (the
-        chunk walk stops at the first non-empty chunk)."""
+    def _head(self) -> dict | None:
+        """The head manifest, or None for a table with no versions. Opens
+        pointer + latest checkpoint + loose tail only —
+        O(checkpoint_interval) bytes regardless of table age (the chunk
+        walk stops at the first non-empty chunk)."""
         ms = self._since(1 << 62)
-        return max(ms) if ms else None
+        return ms[max(ms)] if ms else None
+
+    def latest_version(self) -> int | None:
+        """Head version (one ``_head`` walk)."""
+        head = self._head()
+        return None if head is None else head["version"]
 
     def versions(self) -> list[int]:
         """Every committed version number, ascending."""
@@ -289,17 +323,27 @@ class VersionedParquetTable:
         parameters: dict | None = None,
         partition_by: str | None = None,
         version: int | None = None,
-    ) -> int:
-        """Commit ``df`` as the next version; returns the version number.
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """Commit ``df`` as the next version; returns the version number,
+        or None when ``txn`` (see ``append``) is a replay.
 
         An explicit ``version`` turns the commit into a compare-and-swap:
         the create-if-absent manifest gate raises ConcurrentCommitError
         when that version already exists, so a caller that derived its
         write from version N can commit at N+1 and KNOW no other commit
         landed in between (the optimistic-concurrency pattern Delta uses;
-        see similarity/index_store.append_to_index)."""
+        see similarity/index_store.append_to_index).
+
+        A full write keeps the head's recorded transactions, as a Delta
+        overwrite keeps its SetTransaction actions: a compacted or
+        restored ledger still knows which batches it holds."""
+        head = self._head()
+        txns = _with_txn(head, txn)
+        if txns is None:
+            return None
         if version is None:
-            version = (self.latest_version() or 0) + 1 if self.exists() else 0
+            version = 0 if head is None else self.latest_version() + 1
         # The snapshot dir carries a per-attempt suffix: two writers racing
         # for the same version must not overwrite each other's DATA either —
         # the commit-losing attempt leaves an orphan dir (vacuum reclaims
@@ -323,6 +367,7 @@ class VersionedParquetTable:
             n_rows=footer_rows(parquet_files(data_dir)),
             partition_by=partition_by,
             schema=df.schema.jsonValue(),
+            txns=txns,
         )
         self._commit_manifest(manifest, version)
         return version
@@ -337,7 +382,9 @@ class VersionedParquetTable:
         parent_version: int | None = None,
         max_chain: int | None = None,
         merge_schema: bool = False,
-    ) -> int:
+        tiered: bool = False,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
         """Commit ``df`` as NEW FILES ONLY on top of an existing version —
         the Delta append shape: the manifest lists the parent's data dirs
         plus one fresh delta dir, so commit cost is O(appended rows), not
@@ -358,8 +405,30 @@ class VersionedParquetTable:
         parent already references that many dirs, THIS commit absorbs
         chain + delta into one full snapshot instead (same version
         number, same CAS) — log-structured compaction, so a stream of
-        10,000 micro-batches costs O(batch) per commit amortized and a
-        reader never opens more than ``max_chain`` dirs.
+        10,000 micro-batches never leaves a reader opening more than
+        ``max_chain`` dirs. That fold rewrites the whole table, once per
+        ~``max_chain`` commits: right for the tables a stream also READS
+        every batch (the ANN coded table, the MinHash store), whose
+        per-batch read is O(table) anyway.
+
+        ``tiered=True`` folds size-tiered instead, for append-mostly
+        tables a stream never reads (the streaming ledgers): a leading
+        dir holding at least as many bytes as all later dirs together
+        stays in place, up to ``max_chain // 2 - 1`` of them, and only
+        the dirs after them fold. Rows are then rewritten a number of
+        times that grows with log(table / batch), not once per fold
+        (simulated at ``MAX_CHAIN`` with equal batches: 4.5 rewrites per
+        row after 1,024 batches and 7.8 after 20,160, against 34 and 672
+        for the whole-chain fold), and a read still opens at most
+        ``max_chain`` dirs.
+
+        ``txn=(writer_id, batch_id)`` makes the commit exactly-once per
+        writer — Delta's ``txnAppId``/``txnVersion``: the manifest
+        records each writer's last committed batch id and carries the
+        record forward; a batch id at or below the one recorded for its
+        writer is a replay, and the call returns None without writing
+        anything. With a ``txn``, the first commit to a table that does
+        not exist yet creates it (as ``write``).
 
         ``merge_schema=False`` (default) REJECTS a delta whose column set
         differs from the parent's — Delta's posture: silent schema drift
@@ -372,9 +441,24 @@ class VersionedParquetTable:
         a type conflict would poison every later read of the table."""
         from pyspark.sql.types import StructType
 
-        parent = self._resolve(parent_version, None)
+        if parent_version is not None:
+            parent = self._resolve(parent_version, None)
+        else:
+            parent = self._head()
+            if parent is None:
+                if txn is None:
+                    raise FileNotFoundError(f"no versions at {self.root}")
+                return self.write(df, operation, parameters, partition_by,
+                                  version, txn=txn)
+        txns = _with_txn(parent, txn)
+        if txns is None:
+            return None
         if version is None:
-            version = (self.latest_version() or 0) + 1
+            version = (
+                parent["version"]
+                if parent_version is None
+                else self.latest_version()
+            ) + 1
         parent_dirs = parent["data_dirs"]
         spark = df.sparkSession
         # Evolution check against the parent's RECORDED schema (Delta's
@@ -425,30 +509,32 @@ class VersionedParquetTable:
         has_files = bool(delta_files)
         parameters = dict(parameters or {})
         if max_chain is not None and len(parent_dirs) >= max_chain:
-            # Absorb the PARENT CHAIN into one folded snapshot dir while
-            # the fresh delta keeps ITS OWN dir: the manifest then
-            # references [folded, delta] and fresh_dirs names exactly the
-            # new rows, so the table_stream source can emit the delta and
-            # skip the rewrite. read() unions the chain ONE SCAN PER DIR —
-            # a single multi-root read crashes with
-            # CONFLICTING_DIRECTORY_STRUCTURES when the dirs are
-            # hive-partitioned (the cell-partitioned index tables are
-            # exactly that) — so the fold costs one parent read + write,
-            # same as the old merged rewrite, and later reads open ≤ 2
-            # dirs.
+            # Absorb the PARENT CHAIN (after any dirs a tiered fold keeps)
+            # into one folded snapshot dir while the fresh delta keeps ITS
+            # OWN dir: the manifest then references [kept.., folded,
+            # delta] and fresh_dirs names exactly the new rows, so the
+            # table_stream source can emit the delta and skip the rewrite.
+            # read() unions the chain ONE SCAN PER DIR — a single
+            # multi-root read crashes with CONFLICTING_DIRECTORY_STRUCTURES
+            # when the dirs are hive-partitioned (the cell-partitioned
+            # index tables are exactly that) — so the fold costs one read
+            # + write of the folded dirs, and a full fold leaves later
+            # reads opening ≤ 2 dirs.
+            keep = _kept_prefix(parent_dirs, max_chain) if tiered else 0
             folded_dir = self._new_data_dir(version)
-            fw = self.read(spark, version=parent["version"]).write.mode(
+            fw = self._read_dirs(spark, parent_dirs[keep:], parent).write.mode(
                 "overwrite"
             )
             if partition_by:
                 fw = fw.partitionBy(partition_by)
             fw.parquet(folded_dir)
-            parameters["absorbed_chain"] = len(parent_dirs)
-            dirs = [folded_dir] + ([delta_dir] if has_files else [])
-            n_rows = footer_rows(parquet_files(folded_dir) + delta_files)
+            parameters["absorbed_chain"] = len(parent_dirs) - keep
+            dirs = parent_dirs[:keep] + [folded_dir]
         else:
-            dirs = parent_dirs + ([delta_dir] if has_files else [])
-            n_rows = parent["n_rows"] + footer_rows(delta_files)
+            dirs = parent_dirs
+        dirs = dirs + ([delta_dir] if has_files else [])
+        # a fold rewrites the parent's rows, so the count is unchanged
+        n_rows = parent["n_rows"] + footer_rows(delta_files)
         # fresh_dirs (the stream's exactly-once signal) is [] on an empty
         # delta; so is its schema contribution — its columns would exist
         # in no data dir, phantom columns later appends validate against
@@ -461,6 +547,7 @@ class VersionedParquetTable:
             n_rows=n_rows,
             partition_by=partition_by,
             schema=(merged_schema if has_files else pschema).jsonValue(),
+            txns=txns,
         )
         self._commit_manifest(manifest, version)
         return version
@@ -499,6 +586,7 @@ class VersionedParquetTable:
             n_rows=parent["n_rows"],
             partition_by=parent["partition_by"],
             schema=parent["schema"],
+            txns=_with_txn(parent, None),
         )
         self._commit_manifest(manifest, version)
         return version

@@ -25,6 +25,11 @@ Every manifest is built by ``new_manifest`` and has exactly these keys:
                   parquet footers at commit time
     partition_by  the hive partition column, or None
     schema        the version's logical schema (``StructType.jsonValue``)
+    txns          {writer id: last batch id it committed} for every writer
+                  that commits with ``append(txn=...)`` (Delta's
+                  SetTransaction actions); each later commit carries it
+                  forward. A manifest written before the key existed reads
+                  as {}.
 
 The format rule: a manifest whose ``format`` is not ``FORMAT`` (or that
 has none) raises ``ManifestFormatError``, naming the file and the format
@@ -85,6 +90,7 @@ def new_manifest(
     n_rows: int,
     partition_by: str | None,
     schema: dict,
+    txns: dict | None = None,
     timestamp: float | None = None,
 ) -> dict:
     """A manifest in the one current shape (module docstring)."""
@@ -99,6 +105,7 @@ def new_manifest(
         "n_rows": n_rows,
         "partition_by": partition_by,
         "schema": schema,
+        "txns": txns or {},
     }
 
 

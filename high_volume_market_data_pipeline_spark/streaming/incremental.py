@@ -11,7 +11,9 @@ replayed batch recomputes the SAME decision set (dedup_increment with
 ``skip_existing_ids=True`` is a pure function of (store, batch):
 self-pairs are excluded and signature appends are id-deduped, so
 at-least-once delivery converges), and its ledger commit is skipped
-because the ledger head already records that batch id.
+because the ledger already records that batch id for the stream's query
+id. A run on a fresh checkpoint is a new query: its batches all commit,
+so a replay of old arrivals adds a second copy of their decisions.
 
 At 100 TB the per-batch cost is exactly the batch path's: signature
 compute ∝ batch size, one band-key equi-join against the store shipping

@@ -19,28 +19,44 @@ from pyspark.sql.streaming import StreamingQuery
 from high_volume_market_data_pipeline_spark.sinks import history
 
 
+# The local property Spark sets on a streaming query's thread to the
+# query's id (StreamExecution.QUERY_ID_KEY). In PySpark's default
+# pinned-thread mode a foreachBatch function's calls into the JVM run on
+# that thread, so the function reads the id there.
+_QUERY_ID = "sql.streaming.queryId"
+
+
 def append_batch(
     table: history.VersionedParquetTable,
     df: DataFrame,
     batch_id: int,
     operation: str,
 ) -> int | None:
-    """Commit micro-batch ``batch_id``'s rows to ``table`` exactly once;
-    returns the committed version, or None for a replay.
+    """Commit micro-batch ``batch_id`` of the running stream to ``table``
+    exactly once; returns the committed version, or None for a replay.
+    Call it from a foreachBatch function.
 
-    The batch id rides in the commit's ``parameters`` (Delta's
-    ``txnVersion``): a head already at or past ``batch_id`` means this
-    batch committed before the stream failed to record it, so Spark's
-    replay commits nothing. Appends pass ``history.MAX_CHAIN``, so the
-    fold bounds how many dirs a read of the ledger opens."""
-    parameters = {"batch_id": batch_id}
-    if not table.exists():
-        return table.write(df, operation, parameters)
-    head = table._resolve(None, None)
-    if head["parameters"].get("batch_id", -1) >= batch_id:
-        return None
+    The commit is a transaction of the stream's query id
+    (``table.append``'s ``txn``, Delta's ``txnAppId``/``txnVersion``).
+    The id is kept in the checkpoint: a restart on the same checkpoint
+    replays a batch that committed before the stream failed to record
+    it, and that replay commits nothing. A fresh checkpoint is a new
+    query whose batch ids restart at 0, and all its batches commit. The
+    fold is tiered at ``history.MAX_CHAIN``: a ledger is appended every
+    batch and read rarely."""
+    query_id = df.sparkSession.sparkContext.getLocalProperty(_QUERY_ID)
+    if query_id is None:
+        raise RuntimeError(
+            "append_batch needs a running streaming query: call it from "
+            "a foreachBatch function"
+        )
     return table.append(
-        df, operation, parameters, max_chain=history.MAX_CHAIN
+        df,
+        operation,
+        {"batch_id": batch_id},
+        max_chain=history.MAX_CHAIN,
+        tiered=True,
+        txn=(query_id, batch_id),
     )
 
 

@@ -507,6 +507,66 @@ def test_append_max_chain_absorbs_into_snapshot(spark, table):
     ]
 
 
+def test_append_tiered_fold_keeps_big_dirs_in_place(spark, table):
+    """append(max_chain=k, tiered=True) folds size-tiered: a leading dir
+    holding at least the bytes of all later dirs stays in place (up to
+    k // 2 - 1 of them) and only the small dirs after it fold, so a big
+    table is not rewritten every k appends. Reads see the same rows at
+    every version."""
+    table.write(_df(spark, 5000, "big").coalesce(1))
+    big = table._resolve(0, None)["data_dirs"][0]
+    for i in range(6):
+        table.append(
+            _df(spark, 1, f"d{i}").coalesce(1), max_chain=4, tiered=True
+        )
+    lens = [len(table._resolve(v, None)["data_dirs"]) for v in range(7)]
+    # v4 and v6 fold the three dirs after the big one: [big, folded, delta]
+    assert lens == [1, 2, 3, 4, 3, 4, 3]
+    for v in (4, 6):
+        fold = table._resolve(v, None)
+        assert fold["data_dirs"][0] == big
+        assert fold["parameters"]["absorbed_chain"] == 3
+        assert fold["fresh_dirs"] == fold["data_dirs"][-1:]
+    assert [table.read(spark, version=v).count() for v in range(7)] == [
+        5000 + v for v in range(7)
+    ]
+    assert table.row_count(spark) == 5006
+
+
+def test_append_txn_commits_each_batch_id_once_per_writer(
+    spark, table, tmp_path
+):
+    """append(txn=(writer, batch_id)) is Delta's txnAppId/txnVersion: the
+    first commit creates the table; a batch id at or below the one
+    recorded for ITS writer is a replay that commits and writes nothing;
+    another writer's batch ids are its own; and the record survives
+    other writers' commits, a fold and a compaction."""
+    assert table.append(_df(spark, 2, "a0"), txn=("a", 0)) == 0
+    assert table.append(_df(spark, 2, "a1"), txn=("a", 1)) == 1
+    data_root = os.path.join(table.root, "_data")
+    dirs = sorted(os.listdir(data_root))
+    for b in (1, 0):
+        assert table.append(_df(spark, 2, "x"), txn=("a", b)) is None
+    assert table.latest_version() == 1
+    assert sorted(os.listdir(data_root)) == dirs
+    # a new writer (a fresh checkpoint: batch ids restart at 0) commits
+    assert table.append(_df(spark, 2, "b0"), txn=("b", 0)) == 2
+    assert table.append(_df(spark, 2, "x"), txn=("a", 1)) is None
+    assert table.compact(spark) == 3
+    assert table.append(_df(spark, 2, "x"), txn=("b", 0)) is None
+    assert table.append(_df(spark, 2, "a2"), txn=("a", 2), max_chain=1) == 4
+    assert table._resolve(4, None)["parameters"]["absorbed_chain"] == 1
+    assert table.append(_df(spark, 2, "x"), txn=("a", 2)) is None
+    assert table._resolve(None, None)["txns"] == {"a": 2, "b": 0}
+    tags = sorted(r["tag"] for r in table.read(spark).collect())
+    assert tags == ["a0", "a0", "a1", "a1", "a2", "a2", "b0", "b0"]
+    # without a txn, appending to a table that does not exist still fails
+    with pytest.raises(FileNotFoundError):
+        VersionedParquetTable(str(tmp_path / "absent")).append(
+            _df(spark, 1, "x")
+        )
+
+
 def test_partitioned_append_chain_absorbs_and_compacts(spark, table):
     """The absorb and compact rewrites must work on HIVE-PARTITIONED
     chains and preserve the partition layout: a single multi-root read
@@ -1317,6 +1377,7 @@ _MANIFEST_KEYS = {
     "n_rows",
     "partition_by",
     "schema",
+    "txns",
 }
 
 _WRITERS = {

@@ -463,8 +463,10 @@ def test_monitor_expectations_replayed_batch_commits_once(spark, tmp_path):
     """A batch whose violation hook fails the stream has already
     committed its report; the restart on the same checkpoint replays the
     batch, and the ledger must still hold one row per (batch_id, rule) —
-    the head's recorded batch id turns the replay's commit into a
-    no-op."""
+    the ledger records the batch id under the stream's query id, which
+    the checkpoint keeps, so the replay's commit is a no-op. A new
+    monitor run on a fresh checkpoint is a new query: reusing the ledger,
+    its batch 0 still commits."""
     from collections import Counter
 
     from pyspark.errors import StreamingQueryException
@@ -503,10 +505,26 @@ def test_monitor_expectations_replayed_batch_commits_once(spark, tmp_path):
         q.awaitTermination()
     run().awaitTermination()
 
-    rows = VersionedParquetTable(str(tmp_path / "ledger")).read(spark).collect()
+    ledger = VersionedParquetTable(str(tmp_path / "ledger"))
+    rows = ledger.read(spark).collect()
     assert Counter((r["batch_id"], r["rule"]) for r in rows) == {
         (0, "seq_positive"): 1,
         (0, "k_set"): 1,
+        (1, "seq_positive"): 1,
+        (1, "k_set"): 1,
+    }
+
+    src2 = str(tmp_path / "src2")
+    _write_batch(spark, src2, [(3, 7, _ts(spark, "2024-01-01 02:00:00"))])
+    monitor_expectations(
+        spark.readStream.schema(SCHEMA).parquet(src2), rules,
+        log_path=str(tmp_path / "ledger"),
+        checkpoint=str(tmp_path / "ckpt2"),
+    ).awaitTermination()
+    rows = ledger.read(spark).collect()
+    assert Counter((r["batch_id"], r["rule"]) for r in rows) == {
+        (0, "seq_positive"): 2,
+        (0, "k_set"): 2,
         (1, "seq_positive"): 1,
         (1, "k_set"): 1,
     }
@@ -1011,8 +1029,9 @@ def test_stream_incremental_dedup_restart_and_replay(spark, tmp_path):
     checkpoint processes only unseen arrival files, and decisions match
     the batch path (a copy of a doc admitted in an EARLIER batch is
     rejected vs_store — its signatures landed); (2) a full replay with a
-    fresh checkpoint against the SAME store converges: identical
-    decision sets and an UNCHANGED store (self-pairs excluded,
+    fresh checkpoint against the SAME store converges: the replay (a new
+    query, so its ledger commits all land) decides exactly the first
+    runs' sets, and the store is UNCHANGED (self-pairs excluded,
     id-deduped appends) — at-least-once delivery is safe."""
     from high_volume_market_data_pipeline_spark.dedup.incremental import (
         SignatureStore,
@@ -1055,14 +1074,23 @@ def test_stream_incremental_dedup_restart_and_replay(spark, tmp_path):
         )
         q.awaitTermination()
 
-    def decisions():
-        adm = {
-            r["doc_id"]
-            for r in read_ledger(spark, ledger, "admitted").collect()
-        }
+    def decisions(since=None):
+        """Decision sets in the ledger; with ``since`` (leaf -> version),
+        only the rows committed after that version."""
+        def rows(leaf):
+            df = read_ledger(spark, ledger, leaf)
+            if since is not None:
+                df = df.exceptAll(
+                    VersionedParquetTable(f"{ledger}/{leaf}").read(
+                        spark, version=since[leaf]
+                    )
+                )
+            return df.collect()
+
+        adm = {r["doc_id"] for r in rows("admitted")}
         rej = {
             (r["doc_id"], r["matched_id"], r["reason"])
-            for r in read_ledger(spark, ledger, "rejected").collect()
+            for r in rows("rejected")
         }
         return adm, rej
 
@@ -1090,8 +1118,12 @@ def test_stream_incremental_dedup_restart_and_replay(spark, tmp_path):
 
     # full replay, fresh checkpoint, same store: decisions converge and
     # the store does not grow (no self-matches, no double-append)
+    before = {
+        leaf: VersionedParquetTable(f"{ledger}/{leaf}").latest_version()
+        for leaf in ("admitted", "rejected")
+    }
     run(str(tmp_path / "ckpt2"))
-    assert decisions() == (adm, rej)
+    assert decisions(since=before) == (adm, rej)
     assert store.read(spark).count() == store_rows
 
 
@@ -1142,28 +1174,105 @@ def test_stream_incremental_dedup_empty_leaf_readable(spark, tmp_path):
 
 
 def test_append_batch_commits_each_batch_id_once(spark, tmp_path):
-    """The ledgers' exactly-once rule: re-committing the head's batch id,
-    or a lower one, is a replay and leaves the table at its version and
-    rows; a higher batch id appends."""
+    """The ledgers' exactly-once rule: inside a foreachBatch function,
+    re-committing the batch's id, or a lower one, is a replay that
+    leaves the table at its version; the ledger records the batch id
+    under the query's id. Outside a stream there is no query to key a
+    commit on, so append_batch refuses."""
     from high_volume_market_data_pipeline_spark.streaming.sink import (
         append_batch,
+        foreach_batch_apply,
     )
 
     table = VersionedParquetTable(str(tmp_path / "ledger"))
+    src = str(tmp_path / "src")
+    for b in range(3):
+        spark.createDataFrame(
+            [(b * 10 + i,) for i in range(3)], "doc_id long"
+        ).coalesce(1).write.mode("append").parquet(src)
+    got = []
 
-    def batch(b):
-        return spark.createDataFrame(
-            [(b * 10 + i, b) for i in range(3)], "doc_id long, batch_id long"
-        )
+    def handle(df, batch_id):
+        out = df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        got.append(append_batch(table, out, batch_id, "LEDGER"))
+        for b in (batch_id, batch_id - 1):
+            got.append(append_batch(table, out, b, "LEDGER"))
 
-    assert append_batch(table, batch(0), 0, "LEDGER") == 0
-    assert append_batch(table, batch(1), 1, "LEDGER") == 1
-    for b in (1, 0):
-        assert append_batch(table, batch(b), b, "LEDGER") is None
-        assert table.latest_version() == 1
-    assert append_batch(table, batch(2), 2, "LEDGER") == 2
-    got = sorted(tuple(r) for r in table.read(spark).collect())
-    assert got == [(b * 10 + i, b) for b in range(3) for i in range(3)]
+    q = foreach_batch_apply(
+        spark.readStream.schema("doc_id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        handle,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination()
+    assert got == [0, None, None, 1, None, None, 2, None, None]
+    assert table._resolve(None, None)["txns"] == {str(q.id): 2}
+    rows = sorted(tuple(r) for r in table.read(spark).collect())
+    assert rows == [(b * 10 + i, b) for b in range(3) for i in range(3)]
+    with pytest.raises(RuntimeError, match="foreachBatch"):
+        append_batch(table, spark.range(1), 3, "LEDGER")
+    assert table.latest_version() == 2
+
+
+def test_stream_incremental_dedup_fresh_checkpoint_keeps_admissions(
+    spark, tmp_path
+):
+    """A fresh checkpoint restarts batch ids at 0 against a ledger that
+    already holds batches 0..2. The new run is a new query, so its
+    batch 0 commits: every doc it admits into the store is also in the
+    admitted ledger, although it batches the arrivals differently."""
+    from high_volume_market_data_pipeline_spark.dedup.incremental import (
+        SignatureStore,
+    )
+    from high_volume_market_data_pipeline_spark.streaming.incremental import (
+        read_ledger,
+        stream_incremental_dedup,
+    )
+
+    store = SignatureStore(str(tmp_path / "sigs"))
+    store.bootstrap(spark.createDataFrame([], "doc_id long, text string"))
+    arrivals = str(tmp_path / "arrivals")
+    ledger = str(tmp_path / "ledger")
+
+    def land(first):
+        # token sets disjoint across docs: every doc is admitted
+        rows = [
+            (d, " ".join(f"w{d}x{j}" for j in range(10)))
+            for d in range(first, first + 4)
+        ]
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(arrivals)
+
+    for first in (0, 10, 20):
+        land(first)
+    sdf = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(arrivals)
+    )
+    stream_incremental_dedup(
+        sdf, store, out_root=ledger, checkpoint=str(tmp_path / "ckpt"),
+        threshold=0.95,
+    ).awaitTermination()
+    assert VersionedParquetTable(f"{ledger}/admitted").latest_version() == 2
+
+    land(100)
+    # no maxFilesPerTrigger: all four files form the new run's batch 0
+    sdf = spark.readStream.schema("doc_id long, text string").parquet(
+        arrivals
+    )
+    stream_incremental_dedup(
+        sdf, store, out_root=ledger, checkpoint=str(tmp_path / "ckpt2"),
+        threshold=0.95,
+    ).awaitTermination()
+    in_store = {r["doc_id"] for r in store.read(spark).collect()}
+    admitted = {
+        r["doc_id"] for r in read_ledger(spark, ledger, "admitted").collect()
+    }
+    assert {100, 101, 102, 103} <= in_store
+    assert admitted == in_store
 
 
 def test_stream_ledger_chain_stays_bounded(spark, tmp_path, monkeypatch):

@@ -10,7 +10,11 @@ shape), extends the chain WITHOUT absorption, and records the head
 read+count time at increasing chain lengths. Run SOLO (NOTES.md: host
 drifts under load).
 
+The ledger curves commit ``--ledger-batches`` micro-batches each and
+record per-commit cost, so they measure what a fold costs the writer.
+
 Usage: python tools/bench_chain.py [--out FILE] [--runs 3]
+       [--ledger-batches 1024]
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=None)
     ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--ledger-batches", type=int, default=1024)
     args = ap.parse_args()
 
     spark = build_session(app_name="hvmdp-bench-chain")
@@ -104,41 +109,67 @@ def main() -> None:
                       file=sys.stderr)
             curves[tag] = rows
 
-        # Ledger curve: the streaming ledgers commit each micro-batch
-        # (≤ _LEDGER_MAX_FILES_PER_BATCH files) through append_batch,
-        # whose MAX_CHAIN fold bounds the dirs a read opens — read cost
-        # and the head's dir count vs batches committed.
+        # Ledger curves: the streaming ledgers commit each micro-batch
+        # (≤ _LEDGER_MAX_FILES_PER_BATCH files) as append_batch does —
+        # a txn'd append folded at MAX_CHAIN — and nothing reads them
+        # between batches, so the fold's rewrite is their whole
+        # maintenance cost. "tiered" is append_batch's fold, "full_fold"
+        # the whole-chain fold the read-every-batch tables use. Per
+        # probe window: commit seconds (mean, max), rows rewritten by
+        # folds so far, the head's dir count and a read's cost.
+        from high_volume_market_data_pipeline_spark.sinks.history import (
+            MAX_CHAIN,
+        )
+        from high_volume_market_data_pipeline_spark.sinks.table_format import (
+            footer_rows,
+            parquet_files,
+        )
         from high_volume_market_data_pipeline_spark.streaming.incremental import (
             _LEDGER_MAX_FILES_PER_BATCH,
         )
-        from high_volume_market_data_pipeline_spark.streaming.sink import (
-            append_batch,
-        )
 
-        ledger = VersionedParquetTable(os.path.join(scratch, "ledger"))
-        ledger_rows: dict[str, dict] = {}
-        built = 0
-        for target in (8, 32, 128, 256):
-            while built < target:
-                batch = fake_coded(200, built * 200).withColumn(
-                    "batch_id", F.lit(built).cast("long")
-                )
-                append_batch(
-                    ledger,
-                    batch.coalesce(_LEDGER_MAX_FILES_PER_BATCH),
-                    built,
-                    "ADMITTED",
-                )
-                built += 1
-            sec, n = read_count_sec(ledger)
-            ledger_rows[str(target)] = {
-                "read_count_sec": sec,
-                "n_rows": n,
-                "n_dirs": head_dirs(ledger),
-            }
-            print(f"# ledger batches={target}: {ledger_rows[str(target)]}",
-                  file=sys.stderr)
-        curves["ledger"] = ledger_rows
+        probes = [p for p in (16, 64, 256, 1024, 4096)
+                  if p < args.ledger_batches] + [args.ledger_batches]
+        for tag, tiered in (
+            ("ledger_tiered", True),
+            ("ledger_full_fold", False),
+        ):
+            ledger = VersionedParquetTable(os.path.join(scratch, tag))
+            ledger_rows: dict[str, dict] = {}
+            built, rewritten = 0, 0
+            for target in probes:
+                secs = []
+                while built < target:
+                    batch = fake_coded(200, built * 200).withColumn(
+                        "batch_id", F.lit(built).cast("long")
+                    )
+                    t0 = time.perf_counter()
+                    v = ledger.append(
+                        batch.coalesce(_LEDGER_MAX_FILES_PER_BATCH),
+                        "ADMITTED",
+                        {"batch_id": built},
+                        max_chain=MAX_CHAIN,
+                        tiered=tiered,
+                        txn=("bench", built),
+                    )
+                    secs.append(time.perf_counter() - t0)
+                    m = ledger._resolve(v, None)
+                    if "absorbed_chain" in m["parameters"]:
+                        folded = m["data_dirs"][-1 - len(m["fresh_dirs"])]
+                        rewritten += footer_rows(parquet_files(folded))
+                    built += 1
+                sec, n = read_count_sec(ledger)
+                ledger_rows[str(target)] = {
+                    "commit_sec_mean": round(statistics.mean(secs), 4),
+                    "commit_sec_max": round(max(secs), 3),
+                    "rows_rewritten": rewritten,
+                    "read_count_sec": sec,
+                    "n_rows": n,
+                    "n_dirs": head_dirs(ledger),
+                }
+                print(f"# {tag} batches={target}: {ledger_rows[str(target)]}",
+                      file=sys.stderr)
+            curves[tag] = ledger_rows
 
         # Checkpoint-chain curve (no Spark jobs — pure log layer): commit
         # N fabricated manifests and record, per probe point, the HEAD
