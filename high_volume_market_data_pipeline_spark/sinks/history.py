@@ -27,14 +27,19 @@ add-files shape), so appending a micro-batch to a 100 TB table writes
 only the batch. Compaction (sinks/maintenance) folds an append chain
 back into a single snapshot via ``write``.
 
-Commit protocol: write the snapshot dir first, then CREATE the manifest via
-a create-if-absent hard link of a temp file (os.link fails with EEXIST — a
-rename would silently replace a concurrent winner's manifest). A crashed or
-commit-losing writer leaves an orphan snapshot dir (cleaned by ``vacuum``)
-but can never corrupt the current version — readers only follow manifests,
-and snapshot dirs are per-attempt so racers never overwrite each other's
-data. This also makes MERGE/OPTIMIZE through the table crash-safe: the
-previous snapshot is untouched until vacuum retires it.
+Commit protocol, the one path every commit takes: write the snapshot dir
+first, then write the manifest to a temp file, fsync it, and publish it by
+a create-if-absent hard link to its version name (os.link fails with
+EEXIST — a rename would silently replace a concurrent winner's manifest).
+The link publishes a complete, durable file or nothing, so readers never
+meet a partly written manifest, and any unparseable one is damage that
+fails the read. A filesystem without hard links cannot hold the log: the
+commit raises, naming the root and the errno. A crashed or commit-losing
+writer leaves an orphan snapshot dir (cleaned by ``vacuum``) but can never
+corrupt the current version — readers only follow manifests, and snapshot
+dirs are per-attempt so racers never overwrite each other's data. This
+also makes MERGE/OPTIMIZE through the table crash-safe: the previous
+snapshot is untouched until vacuum retires it.
 
 At cluster scale the manifest write is a single small driver-side file per
 commit (same as a Delta commit json); snapshots are whatever Spark wrote —
@@ -43,6 +48,7 @@ partitioned, distributed parquet.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import time
@@ -58,7 +64,6 @@ from high_volume_market_data_pipeline_spark.sinks.table_format import (
     CHECKPOINT_RE,
     DATA,
     LAST_CHECKPOINT,
-    MANIFEST_RE,
     checkpoint_name,
     chunks,
     footer_rows,
@@ -135,17 +140,6 @@ class ConcurrentCommitError(RuntimeError):
     case)."""
 
 
-class TornCommitError(RuntimeError):
-    """The version a CAS commit targeted is occupied by an UNPARSEABLE
-    manifest older than the in-flight grace window — a crashed O_EXCL-
-    fallback commit, not live contention. Retrying cannot succeed
-    (readers skip the torn tail, so every retry re-derives the same
-    target version and hits the same file); the table needs the torn
-    manifest removed (``repair_torn_tail()``). Distinct from
-    ConcurrentCommitError so retry loops fail fast with the real cause
-    instead of burning their retries and blaming contention."""
-
-
 class VersionedParquetTable:
     """Versioned snapshots of a parquet table with Delta-like history()."""
 
@@ -157,50 +151,6 @@ class VersionedParquetTable:
     # travel. With it, a read opens ≤ pointer + checkpoint +
     # checkpoint_interval tail manifests, regardless of table age.
     checkpoint_interval = 10
-
-    # Unreferenced snapshot dirs younger than this are NOT vacuumed: data dirs
-    # are written BEFORE their manifest commits, so a young orphan may be
-    # an in-flight write whose manifest is about to land — deleting it
-    # would poison the committed version (and, for append chains, every
-    # descendant that inherits the dir). Delta VACUUM's retention-window
-    # rule. Vacuum still must not be scheduled concurrently with writers
-    # that can stall longer than this grace.
-    orphan_grace_seconds = 3600.0
-
-    # Fault-injection point for the stalled-writer race test: called (when
-    # set) between the O_EXCL manifest create and its write+fsync — the
-    # exact window a repair_torn_tail() racer can misclassify as a crashed
-    # commit. Production value is always None.
-    _test_stall_after_manifest_create = None
-
-    # Second injection point: called (when set) between the write+fsync
-    # and the post-fsync self-check stat — the window where a repair
-    # racer has QUARANTINED a by-now-complete manifest but not yet
-    # restored it. Production value is always None.
-    _test_stall_after_manifest_write = None
-
-    # How long the post-fsync self-check waits for a repair racer that
-    # quarantined this writer's (complete) manifest to finish its
-    # re-verify + restore before declaring the outcome ambiguous. Repair's
-    # decision is a parse of a small JSON file plus one link/unlink, so
-    # seconds of grace covers any plausible scheduling stall.
-    repair_ack_grace_seconds = 5.0
-
-    # An unparseable manifest OCCUPYING a CAS target is live contention
-    # (O_EXCL makes the file visible before its one write lands) only for
-    # about as long as a write+fsync takes; older than this it is a
-    # crashed commit that will never finish, and retrying is futile.
-    # A writer stalled longer than this between its O_EXCL create and the
-    # write+fsync can have its in-flight manifest classified as dead —
-    # repair then unlinks it and a rival may reuse the version. The
-    # stalled writer is PROTECTED by the post-fsync self-check in
-    # _commit_manifest (it re-stats its manifest path and raises
-    # ConcurrentCommitError instead of acknowledging a commit that was
-    # unlinked mid-write), so the worst case is a spurious retry, never a
-    # silently lost commit. The default is still sized well above any
-    # plausible single-small-file write stall (GC pause, NFS hiccup) so
-    # repair rarely fires against a live writer at all.
-    torn_grace_seconds = 300.0
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -628,265 +578,47 @@ class VersionedParquetTable:
             self.root, DATA, f"v{version:08d}_{uuid.uuid4().hex[:8]}"
         )
 
-    def _raise_occupied(self, final: str, version: int) -> None:
-        """The CAS target is occupied. Distinguish a real winner (or a
-        racer still mid-write — O_EXCL makes its file visible before the
-        single write lands) from a CRASHED commit's torn manifest: readers
-        skip a torn tail, so the next retry re-derives the SAME version
-        and hits the same file forever — without this check the retry
-        loop burns out and blames contention when the table needs repair."""
-        try:
-            with open(final) as fh:
-                json.load(fh)
-        except FileNotFoundError:
-            pass  # occupant vanished (repair raced us) — plain retry works
-        except (json.JSONDecodeError, ValueError):
-            try:
-                age = time.time() - os.path.getmtime(final)
-            except OSError:
-                age = 0.0
-            if age > self.torn_grace_seconds:
-                raise TornCommitError(
-                    f"version {version} at {self.root} is occupied by an "
-                    f"unparseable manifest untouched for {age:.0f}s — a "
-                    "crashed commit, not contention; remove it with "
-                    "repair_torn_tail() and retry"
-                ) from None
-        raise ConcurrentCommitError(
-            f"version {version} at {self.root} was committed by "
-            "another writer; re-read the head and retry"
-        )
-
-    def repair_torn_tail(self) -> str | None:
-        """Remove a torn TRAILING manifest (a crashed commit that readers
-        already treat as never committed) so its version number frees up
-        for writers. Refuses to touch a parseable manifest or anything
-        younger than the in-flight grace window. Returns the removed file
-        name, or None if there was nothing to repair.
-
-        Mtime age is the only liveness signal available, so repair CAN
-        race a writer stalled longer than ``torn_grace_seconds`` between
-        creating its manifest and finishing the write. Two guards make
-        that race a retry or a loud error, never silent loss: the
-        writer's post-fsync self-check (see ``_commit_manifest``) refuses
-        to acknowledge a commit whose manifest was unlinked mid-write,
-        and repair itself QUARANTINES (renames) the file and re-verifies
-        it before deleting — a write that completed between the first
-        parse and the rename is restored in place. A self-check that
-        finds its manifest quarantined WAITS for repair's decision
-        (``_landed_after_repair``) and acknowledges a restored commit,
-        so the writer can never NACK a commit repair then restores (the
-        retry would land the same data at two versions). The only
-        residue is a microsecond double-occupancy window (rival writer
-        re-uses the version while the complete manifest sits
-        quarantined), which raises TornCommitError rather than dropping
-        either commit."""
-        if not os.path.isdir(self.log_dir):
-            return None
-        names = sorted(
-            f for f in os.listdir(self.log_dir) if MANIFEST_RE.match(f)
-        )
-        if not names:
-            return None
-        tail = os.path.join(self.log_dir, names[-1])
-        try:
-            with open(tail) as fh:
-                json.load(fh)
-            return None
-        except (OSError, ValueError):
-            pass
-        quarantine = f"{tail}.quarantine_{uuid.uuid4().hex[:8]}"
-        try:
-            if time.time() - os.path.getmtime(tail) <= self.torn_grace_seconds:
-                return None  # could still be a live writer's in-flight file
-            # rename, don't unlink: parse -> unlink is not atomic, and the
-            # stalled writer's fsync (and self-check ack) can land in
-            # between; the rename freezes the inode so it can be
-            # re-verified and restored if the write actually completed
-            os.rename(tail, quarantine)
-        except OSError:
-            return None
-        try:
-            with open(quarantine) as fh:
-                json.load(fh)
-        except (OSError, ValueError):
-            # confirmed torn after the rename barrier: safe to drop
-            try:
-                os.unlink(quarantine)
-            except OSError:
-                pass
-            return names[-1]
-        # the manifest is COMPLETE — the writer finished (and may have
-        # acknowledged) between the first parse and the rename. Restore
-        # it under its committed name; link-not-rename so a rival that
-        # already re-used the freed version number is never clobbered.
-        try:
-            os.link(quarantine, tail)
-        except FileExistsError:
-            raise TornCommitError(
-                f"{names[-1]} at {self.root}: a complete manifest was "
-                f"quarantined ({os.path.basename(quarantine)}) and its "
-                "version was re-committed by another writer before it "
-                "could be restored; resolve the duplicate manually"
-            ) from None
-        try:
-            os.unlink(quarantine)
-        except OSError:
-            pass
-        return None
-
     def _commit_manifest(self, manifest: dict, version: int) -> None:
+        """Publish ``manifest`` as ``version``: write a temp file, fsync
+        it, then hard-link it to the version's name. Version allocation
+        is read-then-increment, so two writers can both pick N+1; the
+        link is create-if-absent (EEXIST — a rename would silently
+        replace the winner's manifest), and the loser gets
+        ConcurrentCommitError and can re-derive against the new head.
+        The link publishes only complete, durable bytes, so every file
+        under a version name is a whole manifest. Any other link failure
+        raises OSError naming the root and the errno; the head is
+        unchanged either way and the loser's snapshot dir is an orphan
+        until vacuum."""
         os.makedirs(self.log_dir, exist_ok=True)
         tmp = os.path.join(self.log_dir, f".tmp_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        # Version allocation is read-then-increment, so two concurrent
-        # writers can both pick N+1. The commit must therefore be
-        # create-if-absent, not rename: os.link fails with EEXIST when the
-        # manifest is already there (rename would silently replace it and
-        # drop the winner's commit). The loser gets ConcurrentCommitError
-        # and can re-derive against the new head; its snapshot dir is an
-        # orphan until vacuum.
         final = os.path.join(self.log_dir, manifest_name(version))
         try:
+            with open(tmp, "w") as fh:
+                json.dump(manifest, fh)
+                fh.flush()
+                os.fsync(fh.fileno())
             try:
                 os.link(tmp, final)
             except FileExistsError:
-                self._raise_occupied(final, version)
-            except OSError:
-                # Filesystem without hard links (some NFS/object-store/
-                # overlay mounts): O_CREAT|O_EXCL open keeps the same
-                # create-if-absent guarantee with wider FS support. Unlike
-                # the link path the file IS visible before its content, so
-                # publish with ONE os.write + fsync (never incremental
-                # json.dump into the live fd) — a reader can then only ever
-                # observe empty-or-complete, and _manifests() treats a torn
-                # trailing manifest as uncommitted.
-                try:
-                    fd = os.open(final, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-                except FileExistsError:
-                    self._raise_occupied(final, version)
-                try:
-                    if self._test_stall_after_manifest_create is not None:
-                        self._test_stall_after_manifest_create()
-                    os.write(fd, json.dumps(manifest).encode())
-                    os.fsync(fd)
-                    # Post-fsync self-check: a writer stalled between the
-                    # O_EXCL create and this write can have its in-flight
-                    # (empty ⇒ unparseable) manifest removed by
-                    # repair_torn_tail() and the version reused by a rival
-                    # — without this re-stat the stalled writer would
-                    # finish writing to the removed inode and report
-                    # success: an acknowledged-but-lost commit. This check
-                    # NARROWS the window (a complete-and-acked manifest
-                    # could still race repair's parse→remove); repair's
-                    # quarantine-rename + re-verify closes the rest — a
-                    # write that completed in between is restored, never
-                    # dropped.
-                    if self._test_stall_after_manifest_write is not None:
-                        self._test_stall_after_manifest_write()
-                    st_fd = os.fstat(fd)
-                    try:
-                        st_path = os.stat(final)
-                    except FileNotFoundError:
-                        st_path = None
-                    if st_path is None or (
-                        st_path.st_dev,
-                        st_path.st_ino,
-                    ) != (st_fd.st_dev, st_fd.st_ino):
-                        # The manifest is not (or no longer) at its path.
-                        # Either repair_torn_tail unlinked it while this
-                        # writer stalled pre-write (commit lost — retry is
-                        # correct), or repair QUARANTINED it after the
-                        # write completed and is about to re-verify and
-                        # RESTORE it (commit LANDS — a retry would commit
-                        # the same data twice). Wait out repair's decision
-                        # before answering the caller.
-                        if not self._landed_after_repair(
-                            final, version, st_fd
-                        ):
-                            raise ConcurrentCommitError(
-                                f"version {version} at {self.root}: this "
-                                "writer's manifest was unlinked mid-commit "
-                                "(repair_torn_tail classified the stalled "
-                                "write as crashed); the commit did NOT "
-                                "land — re-read the head and retry"
-                            )
-                finally:
-                    os.close(fd)
+                raise ConcurrentCommitError(
+                    f"version {version} at {self.root} was committed by "
+                    "another writer; re-read the head and retry"
+                ) from None
+            except OSError as exc:
+                name = errno.errorcode.get(exc.errno, exc.errno)
+                raise OSError(
+                    exc.errno,
+                    f"cannot commit version {version} at {self.root}: "
+                    f"link(2) of the manifest failed with {name} (the "
+                    "manifest log needs a filesystem with hard links)",
+                ) from exc
         finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-        self._maybe_checkpoint(version)
-
-    def _landed_after_repair(self, final: str, version: int, st_fd) -> bool:
-        """Disambiguate the self-check's missing-manifest finding against
-        a concurrent repair_torn_tail (the double-commit window: a writer
-        whose complete manifest was quarantined would otherwise NACK,
-        retry, and land the same data at two versions once repair
-        restores the original). The quarantine protocol makes the
-        writer's view decidable by inode:
-
-        - ``final`` holds THIS writer's inode again → repair restored it
-          (restore links BEFORE removing the quarantine): the commit
-          landed — acknowledge success.
-        - a ``final.quarantine_*`` entry holds this writer's inode →
-          repair is mid-decision; since this writer's write+fsync already
-          completed, the re-verify will parse a complete manifest and
-          restore it — keep waiting (bounded by
-          ``repair_ack_grace_seconds``).
-        - NEITHER exists → repair (or a racer) unlinked the inode: the
-          commit is definitively lost — return False so the caller
-          retries.
-
-        A quarantine that outlives the grace (repair crashed mid-restore,
-        or its restore hit a rival's re-commit of the version and raised)
-        is the genuinely ambiguous case: raise TornCommitError loudly —
-        the data sits complete in the quarantine file and must be
-        resolved by an operator, not silently re-committed."""
-        deadline = time.time() + self.repair_ack_grace_seconds
-        ident = (st_fd.st_dev, st_fd.st_ino)
-        while True:
             try:
-                st = os.stat(final)
-                if (st.st_dev, st.st_ino) == ident:
-                    return True  # restored under its committed name
-            except OSError:
+                os.unlink(tmp)
+            except FileNotFoundError:
                 pass
-            held = False
-            for q in os.listdir(self.log_dir):
-                if not q.startswith(os.path.basename(final) + ".quarantine_"):
-                    continue
-                try:
-                    sq = os.stat(os.path.join(self.log_dir, q))
-                except OSError:
-                    continue
-                if (sq.st_dev, sq.st_ino) == ident:
-                    held = True
-                    break
-            if not held:
-                # repair decided. Restore publishes the link BEFORE the
-                # quarantine disappears, so one more stat of ``final``
-                # closes that ordering; otherwise the inode was unlinked.
-                try:
-                    st = os.stat(final)
-                    if (st.st_dev, st.st_ino) == ident:
-                        return True
-                except OSError:
-                    pass
-                return False
-            if time.time() >= deadline:
-                raise TornCommitError(
-                    f"version {version} at {self.root}: this writer's "
-                    "complete manifest was quarantined by "
-                    "repair_torn_tail and neither restored nor dropped "
-                    f"within {self.repair_ack_grace_seconds}s (repair "
-                    "crashed, or a rival re-committed the version and "
-                    "blocked the restore); the commit outcome is "
-                    "ambiguous — resolve the quarantined manifest "
-                    "manually before retrying"
-                )
-            time.sleep(0.02)
+        self._maybe_checkpoint(version)
 
     def _maybe_checkpoint(self, version: int) -> None:
         """Auto-checkpoint every ``checkpoint_interval`` commits. The
@@ -1227,7 +959,7 @@ class VersionedParquetTable:
     def vacuum(
         self,
         keep_last: int = 2,
-        orphan_grace_seconds: float | None = None,
+        orphan_grace_seconds: float = 3600.0,
         retain_hours: float | None = None,
     ) -> "VacuumResult":
         """Retire snapshot dirs older than the newest ``keep_last`` versions
@@ -1242,9 +974,9 @@ class VersionedParquetTable:
         hours" regardless of commit rate.
 
         Orphan dirs (referenced by NO manifest) are reclaimed only when
-        their newest file is older than ``orphan_grace_seconds`` (default:
-        the class attribute, 1h): an append writes its delta dir BEFORE
-        its manifest commits, so a young orphan may be an in-flight write —
+        their newest file is older than ``orphan_grace_seconds`` (default
+        1 h): an append writes its delta dir BEFORE its manifest commits,
+        so a young orphan may be an in-flight write —
         deleting it would let the manifest commit referencing a missing
         dir, and because append manifests inherit parent dirs the hole
         poisons every descendant version. Delta VACUUM's retention-window
@@ -1268,11 +1000,6 @@ class VersionedParquetTable:
 
         if keep_last < 1:
             raise ValueError(f"vacuum keep_last must be >= 1, got {keep_last}")
-        grace = (
-            self.orphan_grace_seconds
-            if orphan_grace_seconds is None
-            else orphan_grace_seconds
-        )
         ms = self._manifests()
         kept = ms[-keep_last:] if ms else []
         if retain_hours is not None and ms:
@@ -1310,7 +1037,7 @@ class VersionedParquetTable:
             if os.path.exists(mf):
                 os.remove(mf)
                 retired.append(m["version"])
-        cutoff = time.time() - grace
+        cutoff = time.time() - orphan_grace_seconds
         data = os.path.join(self.root, DATA)
         for d in os.listdir(data) if os.path.isdir(data) else []:
             path = os.path.join(data, d)

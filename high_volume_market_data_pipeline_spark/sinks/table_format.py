@@ -35,8 +35,13 @@ The format rule: a manifest whose ``format`` is not ``FORMAT`` (or that
 has none) raises ``ManifestFormatError``, naming the file and the format
 found. The check runs where manifests are parsed, in ``tail_manifests``
 and in ``chunks``' checkpoint walk, so every reader of the log meets it.
-It is a ``RuntimeError``: neither the torn-tail rule nor the checkpoint
-replay fallback (both on ``ValueError``) can swallow it.
+It is a ``RuntimeError``, so the checkpoint replay fallback (on
+``ValueError``) cannot swallow it.
+
+The parse rule: a manifest file that does not parse raises
+``RuntimeError`` naming the file, wherever it sits in the log. The writer
+publishes a manifest by hard-linking a complete, fsync'd temp file, so an
+unparseable one is damage, never a commit still in flight.
 
 The root rule: the log is kept with ``os`` calls, so ``local_log_dir``
 raises ``ValueError`` for a root with a URI scheme. The table and the
@@ -149,31 +154,25 @@ def tail_manifests(
     log_dir: str, floor: int, opened: Callable[[int], None] = _uncounted
 ) -> list[dict]:
     """Parse the loose manifest files with version > ``floor``,
-    ascending. A torn TRAILING manifest is a crashed commit on a
-    filesystem without hard links (the O_EXCL fallback makes the file
-    visible before its single write lands) — treated as never
-    committed so one torn commit cannot brick every later read of the
-    table. A torn manifest in the MIDDLE of the log means real
-    corruption: fail loudly."""
+    ascending. A file that does not parse raises (the parse rule in the
+    module docstring)."""
     names = sorted(
         f
         for f in os.listdir(log_dir)
         if MANIFEST_RE.match(f) and int(f[:8]) > floor
     )
     out: list[dict] = []
-    for i, f in enumerate(names):
+    for f in names:
+        path = os.path.join(log_dir, f)
         try:
-            with open(os.path.join(log_dir, f)) as fh:
+            with open(path) as fh:
                 m = json.load(fh)
-            opened(1)
-        except (json.JSONDecodeError, ValueError) as exc:
-            if i == len(names) - 1:
-                continue
+        except ValueError as exc:
             raise RuntimeError(
-                f"corrupt non-trailing manifest {f} at {log_dir}; "
-                "the commit log is damaged beyond a torn tail"
+                f"unparseable manifest {path}; the commit log is damaged"
             ) from exc
-        out.append(_checked(m, os.path.join(log_dir, f)))
+        opened(1)
+        out.append(_checked(m, path))
     return out
 
 
@@ -216,7 +215,7 @@ def chunks(
                 cp = json.load(fh)
             opened(1)
     except RuntimeError:
-        raise  # non-trailing corruption or another format: a replay
+        raise  # an unparseable manifest or another format: a replay
         # would meet it too
     except (OSError, ValueError, KeyError):
         yield -1, tail_manifests(log_dir, -1, opened)

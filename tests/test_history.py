@@ -396,40 +396,76 @@ def test_sketch_merge_commit_retries_on_collision(spark, tmp_path):
     assert est == direct  # union exactness: nobody's items were dropped
 
 
-def test_torn_trailing_manifest_is_skipped_not_fatal(spark, table):
-    """A crashed O_EXCL-fallback commit can leave a truncated trailing
-    manifest. Readers must treat it as never-committed (head = previous
-    version) instead of raising JSONDecodeError forever; a torn manifest
-    in the MIDDLE of the log is real corruption and must fail loudly."""
-    table.write(_df(spark, 3, "a"), "WRITE")
-    table.write(_df(spark, 5, "b"), "WRITE")
+def test_commit_fsyncs_manifest_before_link(table, monkeypatch):
+    """The manifest's bytes are durable before its version name exists:
+    the temp file is fsync'd, then hard-linked to the version name —
+    never linked first, which could leave an empty file under a
+    committed version after a power loss."""
+    table._commit_manifest(_fake_manifest(0), 0)
+    events = []
+    real_fsync, real_link = os.fsync, os.link
 
-    torn = os.path.join(table.log_dir, "00000002.json")
-    with open(torn, "w") as fh:
-        fh.write('{"version": 2, "timestamp"')  # truncated mid-write
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
 
-    assert table.latest_version() == 1  # torn tail ignored
-    assert table.read(spark).count() == 5
-    # Recovery: the next write claims the torn version number via the
-    # create-if-absent gate — with the torn file present that raises
-    # ConcurrentCommitError (a writer must not assume a torn tail is
-    # reclaimable; an admin removes it), which is loud, not corrupt.
-    from high_volume_market_data_pipeline_spark.sinks.history import (
-        ConcurrentCommitError,
+    def link(src, dst, *a, **k):
+        events.append(("link", os.stat(src).st_ino))
+        return real_link(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "link", link)
+    assert table.commit_ref("REF") == 1
+    links = [e for e in events if e[0] == "link"]
+    assert len(links) == 1
+    assert ("fsync", links[0][1]) in events[: events.index(links[0])]
+
+
+def test_commit_link_failure_names_root_and_keeps_head(table, monkeypatch):
+    """A manifest link that fails for any reason but EEXIST (here a
+    filesystem refusing hard links) raises, naming the root and the
+    errno; the head is unchanged and no temp manifest is left behind."""
+    import errno
+
+    table._commit_manifest(_fake_manifest(0), 0)
+
+    def refuse(*_a, **_k):
+        raise OSError(errno.EPERM, "Operation not permitted")
+
+    monkeypatch.setattr(os, "link", refuse)
+    with pytest.raises(OSError, match=re.escape(table.root)) as err:
+        table.commit_ref("REF")
+    assert err.value.errno == errno.EPERM and "EPERM" in str(err.value)
+    assert table.latest_version() == 0
+    assert not [f for f in os.listdir(table.log_dir) if f.startswith(".tmp_")]
+
+
+@pytest.mark.parametrize("where", ["trailing", "mid_log", "past_checkpoint"])
+def test_unparseable_manifest_raises(spark, table, where):
+    """Every manifest is published complete, so one that does not parse
+    is damage wherever it sits: the head, a read and the stream's log
+    walk all raise, naming the file — a trailing one is not skipped as
+    an uncommitted write."""
+    from high_volume_market_data_pipeline_spark.sinks.table_format import (
+        manifests_since,
     )
 
-    with pytest.raises(ConcurrentCommitError):
-        table.write(_df(spark, 7, "c"), "WRITE")
-    os.unlink(torn)
-    v = table.write(_df(spark, 7, "c"), "WRITE")
-    assert v == 2 and table.read(spark).count() == 7
-
-    # Mid-log corruption is NOT skippable.
-    mid = os.path.join(table.log_dir, "00000001.json")
-    with open(mid, "w") as fh:
-        fh.write("{nope")
-    with pytest.raises(RuntimeError, match="non-trailing"):
-        table.latest_version()
+    for v in range(3):
+        table._commit_manifest(_fake_manifest(v), v)
+    if where == "past_checkpoint":
+        table.checkpoint()
+        table._commit_manifest(_fake_manifest(3), 3)
+    v = {"trailing": 2, "mid_log": 1, "past_checkpoint": 3}[where]
+    bad = os.path.join(table.log_dir, f"{v:08d}.json")
+    with open(bad, "w") as fh:
+        fh.write(f'{{"version": {v}, "timestamp"')
+    for read in (
+        table.latest_version,
+        lambda: table.read(spark),
+        lambda: manifests_since(table.log_dir, 0),
+    ):
+        with pytest.raises(RuntimeError, match=f"unparseable.*{re.escape(bad)}"):
+            read()
 
 
 def test_append_commits_delta_files_only(spark, table):
@@ -652,11 +688,13 @@ def test_checkpoint_thousand_commit_log_constant_opens(spark, table):
     table.checkpoint()
     assert table.versions() == list(range(1000))
     assert table.last_log_files_opened <= 3
-    # a torn trailing manifest past the checkpoint stays tolerated
-    with open(os.path.join(table.log_dir, "00001000.json"), "w") as fh:
+    # an unparseable manifest past the checkpoint raises, naming the file
+    bad = os.path.join(table.log_dir, "00001000.json")
+    with open(bad, "w") as fh:
         fh.write('{"version": 1000, "time')
-    assert table.latest_version() == 999
-    os.unlink(os.path.join(table.log_dir, "00001000.json"))
+    with pytest.raises(RuntimeError, match=re.escape(bad)):
+        table.latest_version()
+    os.unlink(bad)
 
     # 100 MORE commits on top: every auto-checkpoint is INCREMENTAL —
     # each embeds exactly one interval's manifests (bounded bytes per
@@ -763,28 +801,6 @@ def test_vacuum_folds_checkpoint_and_never_resurrects(spark, table):
     assert [m["version"] for m in cp["manifests"]] == [10, 11]
 
 
-def test_stale_torn_manifest_raises_repair_needed(spark, table):
-    """A CAS commit landing on a STALE torn manifest (a crashed commit,
-    not live contention) must fail with the repair-needed error instead
-    of letting retry loops burn out blaming contention — and
-    repair_torn_tail() frees the version."""
-    from high_volume_market_data_pipeline_spark.sinks.history import (
-        TornCommitError,
-    )
-
-    table.write(_df(spark, 3, "a"), "WRITE")
-    assert table.repair_torn_tail() is None  # refuses a healthy tail
-    torn = os.path.join(table.log_dir, "00000001.json")
-    with open(torn, "w") as fh:
-        fh.write('{"version": 1, "timestamp"')
-    table.torn_grace_seconds = -1.0  # stale immediately, for the test
-    with pytest.raises(TornCommitError, match="repair_torn_tail"):
-        table.write(_df(spark, 5, "b"), "WRITE")
-    assert table.repair_torn_tail() == "00000001.json"
-    assert table.write(_df(spark, 5, "b"), "WRITE") == 1
-    assert table.read(spark).count() == 5
-
-
 def test_append_schema_evolution(spark, tmp_path):
     """merge_schema=False rejects column drift (a typo must not become an
     all-null column); merge_schema=True evolves: added columns read back
@@ -825,54 +841,6 @@ def test_append_schema_evolution(spark, tmp_path):
     )
     rows = {r["id"]: (r["s"], r["q"]) for r in t.read(spark).collect()}
     assert rows == {1: ("a", None), 2: ("b", 0.5), 3: (None, None), 5: ("e", 2.5)}
-
-
-def test_stalled_writer_self_check_never_loses_commit(spark, table, monkeypatch):
-    """The torn-commit race closed for real: a writer stalled between its
-    O_EXCL manifest create and the write+fsync gets its in-flight file
-    repaired away and its version reused by a rival — the stalled writer
-    must then raise ConcurrentCommitError from its post-fsync self-check,
-    NEVER report success for a commit that is not the one readers see."""
-    import re as _re
-
-    from high_volume_market_data_pipeline_spark.sinks.history import (
-        ConcurrentCommitError,
-    )
-
-    table.write(_df(spark, 2, "base"))
-
-    # force the O_EXCL fallback (the path with the create→write window)
-    monkeypatch.setattr(os, "link", _raise_oserror)
-
-    rival = VersionedParquetTable(table.root)
-    rival.torn_grace_seconds = 0.01
-    rival_df = _df(spark, 3, "rival")
-
-    def stall():
-        # while the writer is stalled: its freshly created (empty ⇒
-        # unparseable) manifest ages past the grace window, a repair
-        # unlinks it, and the rival commits the same version number
-        tail = sorted(
-            f
-            for f in os.listdir(table.log_dir)
-            if _re.match(r"^\d{8}\.json$", f)
-        )[-1]
-        os.utime(os.path.join(table.log_dir, tail), (1, 1))
-        assert rival.repair_torn_tail() == tail
-        assert rival.write(rival_df) == 1
-
-    table._test_stall_after_manifest_create = stall
-    with pytest.raises(ConcurrentCommitError, match="unlinked mid-commit"):
-        table.write(_df(spark, 5, "stalled"))
-
-    # the table head is the rival's commit, intact and readable
-    table._test_stall_after_manifest_create = None
-    assert table.latest_version() == 1
-    assert table.read(spark).count() == 3
-
-
-def _raise_oserror(*_a, **_k):
-    raise OSError("filesystem without hard links")
 
 
 def test_changes_across_schema_evolution(spark, tmp_path):
@@ -1000,12 +968,15 @@ def test_checkpoint_chain_damage_falls_back_to_replay(spark, table):
     assert table.versions() == list(range(25))
     assert sorted(manifests_since(table.log_dir, 0)) == list(range(25))
 
-    # a torn TRAILING manifest (crashed commit) is uncommitted to both
-    with open(os.path.join(table.log_dir, "00000025.json"), "w") as fh:
+    # an unparseable trailing manifest is damage, not a fallback case:
+    # both raise, naming the file
+    bad = os.path.join(table.log_dir, "00000025.json")
+    with open(bad, "w") as fh:
         fh.write('{"version": 25, "time')
-    assert table.versions() == list(range(25))
-    assert sorted(manifests_since(table.log_dir, 0)) == list(range(25))
-    assert max(manifests_since(table.log_dir, 1 << 62)) == 24
+    with pytest.raises(RuntimeError, match=re.escape(bad)):
+        table.versions()
+    with pytest.raises(RuntimeError, match=re.escape(bad)):
+        manifests_since(table.log_dir, 1 << 62)
 
 
 def test_vacuum_rejects_non_positive_keep_last(spark, table):
@@ -1124,59 +1095,6 @@ def test_concurrent_writers_with_incremental_checkpoints(spark, table):
     assert table.history(spark, limit=5).count() == 5
 
 
-def test_repair_quarantine_restores_completed_write(spark, table):
-    """The parse→remove TOCTOU in repair: a stalled writer's fsync can
-    land BETWEEN repair's unparseable-parse and its removal — and the
-    writer's post-fsync self-check may already have acknowledged the
-    commit. Repair therefore quarantines (renames) and re-verifies: a
-    manifest that is complete by then is restored under its committed
-    name, never dropped."""
-    import json as _json
-
-    table.write(_df(spark, 3, "a"), "WRITE")
-    torn = os.path.join(table.log_dir, "00000001.json")
-    with open(torn, "w") as fh:
-        fh.write("")  # in-flight: created, content not yet written
-    table.torn_grace_seconds = -1.0
-
-    real_rename = os.rename
-    good = _fake_manifest(
-        1, os.path.join(table.root, "_data", "v00000001_deadbeef")
-    )
-
-    def rename_then_complete(src, dst):
-        real_rename(src, dst)
-        if src == torn:
-            # the stalled writer's write+fsync lands on the same inode
-            # right after the rename barrier
-            with open(dst, "w") as fh:
-                _json.dump(good, fh)
-
-    import unittest.mock as mock
-
-    with mock.patch("os.rename", side_effect=rename_then_complete):
-        assert table.repair_torn_tail() is None  # restored, not repaired
-    with open(torn) as fh:
-        assert _json.load(fh)["version"] == 1  # back under its name
-    assert not [
-        f for f in os.listdir(table.log_dir) if ".quarantine_" in f
-    ]
-
-
-def test_repair_still_removes_confirmed_torn_tail(spark, table):
-    """The quarantine re-verify keeps the normal repair behavior: a file
-    that is still unparseable after the rename barrier is removed and
-    its version number freed."""
-    table.write(_df(spark, 3, "a"), "WRITE")
-    torn = os.path.join(table.log_dir, "00000001.json")
-    with open(torn, "w") as fh:
-        fh.write('{"version": 1, "timesta')
-    table.torn_grace_seconds = -1.0
-    assert table.repair_torn_tail() == "00000001.json"
-    assert not os.path.exists(torn)
-    assert table.write(_df(spark, 4, "b"), "WRITE") == 1
-
-
 def test_maybe_checkpoint_restores_counter_on_failure(spark, table,
                                                       monkeypatch):
     """last_log_files_opened is documented as 'files opened by the most
@@ -1198,99 +1116,6 @@ def test_maybe_checkpoint_restores_counter_on_failure(spark, table,
         # crossing the interval triggers the (failing) checkpoint
         table.write(_df(spark, 1, "t9"), "WRITE")
     assert table.last_log_files_opened == before
-
-
-def test_self_check_acks_commit_restored_by_repair(spark, table, monkeypatch):
-    """The NACK-then-restore double-commit window closed: a writer whose
-    COMPLETE manifest is quarantined by a repair racer between its fsync
-    and its self-check stat must WAIT OUT repair's decision and
-    acknowledge the restored commit — raising ConcurrentCommitError there
-    would make the caller retry and land the same data at two versions
-    once repair restores the original."""
-    import threading
-    import time as _time
-
-    table.write(_df(spark, 2, "base"))
-    real_link = os.link
-    monkeypatch.setattr(os, "link", _raise_oserror)  # force O_EXCL path
-
-    final = os.path.join(table.log_dir, "00000001.json")
-    quarantine = final + ".quarantine_test0001"
-
-    def stall():
-        # repair's first half: the complete manifest is quarantined...
-        os.rename(final, quarantine)
-
-        # ...and its second half (re-verify parses complete JSON →
-        # restore: link under the committed name, then drop the
-        # quarantine) lands while the writer's self-check is polling
-        def finish():
-            _time.sleep(0.2)
-            real_link(quarantine, final)
-            os.unlink(quarantine)
-
-        threading.Thread(target=finish, daemon=True).start()
-
-    table._test_stall_after_manifest_write = stall
-    try:
-        assert table.write(_df(spark, 3, "restored")) == 1  # ACK, no raise
-    finally:
-        table._test_stall_after_manifest_write = None
-    # exactly one commit of the data — no double-commit at version 2
-    assert table.latest_version() == 1
-    assert table.read(spark).count() == 3
-
-
-def test_self_check_raises_when_repair_drops_the_manifest(
-    spark, table, monkeypatch
-):
-    """The unlink side of the same window: no quarantine holds the
-    writer's inode and the committed name is gone → the commit is
-    definitively lost and the self-check reports it (retry is correct)."""
-    from high_volume_market_data_pipeline_spark.sinks.history import (
-        ConcurrentCommitError,
-    )
-
-    table.write(_df(spark, 2, "base"))
-    monkeypatch.setattr(os, "link", _raise_oserror)
-
-    final = os.path.join(table.log_dir, "00000001.json")
-    table._test_stall_after_manifest_write = lambda: os.unlink(final)
-    try:
-        with pytest.raises(ConcurrentCommitError, match="unlinked"):
-            table.write(_df(spark, 3, "dropped"))
-    finally:
-        table._test_stall_after_manifest_write = None
-    assert table.latest_version() == 0
-
-
-def test_self_check_ambiguous_quarantine_raises_torn(
-    spark, table, monkeypatch
-):
-    """A quarantine that outlives the grace window (repair crashed
-    mid-restore, or a rival re-committed the version and blocked the
-    restore) is genuinely ambiguous: the writer must raise
-    TornCommitError loudly — never ConcurrentCommitError, whose contract
-    invites a retry that could double-commit the quarantined data."""
-    from high_volume_market_data_pipeline_spark.sinks.history import (
-        TornCommitError,
-    )
-
-    table.write(_df(spark, 2, "base"))
-    monkeypatch.setattr(os, "link", _raise_oserror)
-    monkeypatch.setattr(table, "repair_ack_grace_seconds", 0.3)
-
-    final = os.path.join(table.log_dir, "00000001.json")
-    quarantine = final + ".quarantine_test0002"
-    table._test_stall_after_manifest_write = (
-        lambda: os.rename(final, quarantine)
-    )
-    try:
-        with pytest.raises(TornCommitError, match="ambiguous"):
-            table.write(_df(spark, 3, "stuck"))
-    finally:
-        table._test_stall_after_manifest_write = None
-        os.unlink(quarantine)
 
 
 def test_commit_ref_metadata_only(spark, table, tmp_path):
@@ -1425,9 +1250,9 @@ _READERS = {
 @pytest.mark.parametrize("reader", sorted(_READERS))
 def test_older_format_raises(spark, table, reader, shape, where):
     """A manifest in any other format raises the one format error, naming
-    the file and the format found: a trailing loose one is not skipped as
-    a torn commit, and one inside a checkpoint chunk does not fall back to
-    a replay of the (current-format) loose files."""
+    the file and the format found, whether it is the trailing loose file
+    or inside a checkpoint chunk (which does not fall back to a replay of
+    the current-format loose files)."""
     from high_volume_market_data_pipeline_spark.sinks.table_format import (
         ManifestFormatError,
     )

@@ -224,9 +224,9 @@ def test_older_format_fails_stream_schema(spark, tmp_path):
 @pytest.mark.parametrize("where", ["loose_tail", "checkpoint"])
 def test_older_format_fails_stream_planning(spark, tmp_path, where):
     """A manifest in another format that lands after the stream was
-    loaded fails the stream at planning: the trailing loose one is not
-    skipped as a torn commit, and one inside a checkpoint chunk does not
-    fall back to a replay."""
+    loaded fails the stream at planning, whether it is the trailing loose
+    file or inside a checkpoint chunk (which does not fall back to a
+    replay)."""
     register_table_stream(spark)
     t = VersionedParquetTable(str(tmp_path / "ptbl"))
     t.write(spark.createDataFrame([(0, "s")], "id long, s string"))
